@@ -1,65 +1,39 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+/** Headline bench: times every [[SparkEntry]] key (or only the keys named
+  * on the command line) under the [[Session]] posture, writes the per-key
+  * artifact and prints one short JSON line.
+  */
 object Bench {
 
-  /** Micro-anchor: four FROZEN single-shape queries (the BASELINE.md
-    * headline singles — Q1-style agg, 3-way join + agg, window rank top-3,
-    * group + top-10) timed FIRST each run and recorded in the artifact next
-    * to frozen reference timings. This box is snapshot-restored between
-    * rounds and its speed drifts 2-5× (round 7 measured a UNIFORM 2.17×
-    * per-query inflation down to fixed-overhead no-op queries), so a raw
-    * total cannot distinguish VM drift from a plan regression. The anchor
-    * ratio (measured / reference on identical frozen plans) captures pure
-    * box speed; `value_norm` = raw total ÷ ratio is the cross-round
-    * comparable number. The query TEXTS and the reference values must never
-    * change — comparability depends on both being frozen.
+  /** Box-speed probes: two FROZEN single-shape queries (a Q1-style agg and
+    * a group + top-10) with frozen reference timings (steady-state min-of-3
+    * at sf0.1 on local[4]). A shared host's speed drifts several-fold between
+    * runs and stalls for minutes within one, so a raw total cannot tell
+    * box drift from a plan regression. The probes are re-timed at suite
+    * start, after every [[ProbeEvery]] keys and after the last key, each
+    * time as summed measured / summed reference seconds; the median of
+    * that series is the box-speed estimate every normalized number
+    * divides by. Query texts and reference values must never change:
+    * cross-run comparability rests on both.
     */
-  private val anchorDefs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "anchor_q1_agg" -> ((s: SparkSession, d: String) => Tables.t(s, d, "lineitem")
+  private val probeDefs: Seq[(String, (SparkSession, String) => DataFrame, Double)] = Seq(
+    ("anchor_q1_agg", (s: SparkSession, d: String) => Tables.t(s, d, "lineitem")
       .groupBy("l_returnflag", "l_linestatus")
-      .agg(sum("l_quantity"), sum("l_extendedprice"), avg("l_discount"), count(lit(1)))),
-    "anchor_join3" -> ((s: SparkSession, d: String) => Tables.t(s, d, "lineitem")
-      .join(Tables.t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(Tables.t(s, d, "nation"), col("c_nationkey") === col("n_nationkey"))
-      .groupBy("n_name")
-      .agg(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))))),
-    "anchor_window_rank" -> ((s: SparkSession, d: String) => Tables.t(s, d, "orders")
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("o_custkey").orderBy(col("o_totalprice").desc, col("o_orderkey"))))
-      .where(col("rk") <= 3)),
-    "anchor_group_topk" -> ((s: SparkSession, d: String) => Tables.t(s, d, "lineitem")
+      .agg(sum("l_quantity"), sum("l_extendedprice"), avg("l_discount"), count(lit(1))),
+      0.193),
+    ("anchor_group_topk", (s: SparkSession, d: String) => Tables.t(s, d, "lineitem")
       .groupBy("l_partkey").agg(sum("l_quantity").as("q"))
-      .orderBy(col("q").desc, col("l_partkey")).limit(10)))
+      .orderBy(col("q").desc, col("l_partkey")).limit(10),
+      0.157))
 
-  /** Frozen anchor reference timings: steady-state min-of-3 on sf0.1,
-    * local[4], measured 2026-08-14 (round 8) on this box. Denominators of
-    * the drift ratio — do not re-measure.
-    */
-  private val anchorRef: Map[String, Double] = Map(
-    "anchor_q1_agg" -> 0.193,
-    "anchor_join3" -> 0.560,
-    "anchor_window_rank" -> 0.356,
-    "anchor_group_topk" -> 0.157)
+  private val ProbeEvery = 25
 
-  /** Bracket agreement predicate: >10% spread between the pre- and
-    * post-suite anchor ratios marks the measurement window as drifting.
-    */
-  def disagree(a: Double, b: Double): Boolean =
-    math.max(a, b) / math.min(a, b) > 1.10
-
-  /** v5 bracket reconciliation (pure, unit-tested in BenchProtocolSpec):
-    * while the two bracket ratios disagree and retries remain, take a fresh
-    * anchor measurement and replace whichever existing bracket is FARTHER
-    * from it in log-space (the outlier — e.g. a cold-start pre bracket on a
-    * box that settled). Returns the final pair plus retries used; callers
-    * recompute disagree() on the pair, so a box that never settles still
-    * publishes anchor_bracket_disagree=true.
-    */
-  /** Median of the probe-ratio series — the v5.1 headline denominator
-    * (robust to a one-sided stall at either edge of the run window).
+  /** Median of the probe-ratio series — the headline denominator. Samples
+    * spanning the whole run window make it robust to a one-sided stall at
+    * either edge of it.
     */
   def medianOf(xs: Seq[Double]): Double = {
     require(xs.nonEmpty, "median of empty probe series")
@@ -68,114 +42,25 @@ object Bench {
     if (n % 2 == 1) sorted(n / 2) else (sorted(n / 2 - 1) + sorted(n / 2)) / 2
   }
 
-  /** v5.2 re-measure acceptance (pure, unit-tested in BenchProtocolSpec):
-    * a flagged key's solo re-measure is accepted only when its own two
-    * bracketing probes agree within 25% (the same criterion that flags a
-    * segment). On accept, the published raw keeps the MIN over both
-    * measurement windows (stall noise is one-sided — min stays the
-    * steady-state estimator) and the clean window's probe mean replaces
-    * the polluted segment ratio for normalization.
-    */
-  def remeasureMerge(origRaw: Double, remRaw: Double,
-      p0: Double, p1: Double): Option[(Double, Double)] =
-    if (math.max(p0, p1) / math.min(p0, p1) <= 1.25)
-      Some((math.min(origRaw, remRaw), (p0 + p1) / 2))
-    else None
-
-  @annotation.tailrec
-  def reconcileBrackets(pre: Double, post: Double, remeasure: () => Double,
-      maxRetries: Int, used: Int = 0): (Double, Double, Int) =
-    if (!disagree(pre, post) || used >= maxRetries) (pre, post, used)
-    else {
-      val fresh = remeasure()
-      if (math.abs(math.log(pre / fresh)) > math.abs(math.log(post / fresh)))
-        reconcileBrackets(fresh, post, remeasure, maxRetries, used + 1)
-      else reconcileBrackets(pre, fresh, remeasure, maxRetries, used + 1)
-    }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Single-shot timings on a shared box swing ±30-60% with ambient load
-    // (BENCH_r01→r02 drift). Per-query MEDIAN over N repeats stabilizes the
-    // number; repeat=1 remains available for quick local iteration.
+    // Single-shot timings on a shared box swing ±30-60% with ambient load;
+    // the per-key minimum over repeats is the steady-state number.
     val repeat = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEAT", "3").toInt.max(1)
-    // Keys where the measured minimum is still >= SlowCutoff after the base
-    // repeats get topped up to `repeatSlow` samples: the round-8 artifact
-    // vs same-day re-measure spread reached 3.7x on unchanged plans
-    // (skyline_pareto 1.61 vs 0.44 s), i.e. for expensive keys the chance
-    // that all 3 base samples land in a stall window is material, and those
-    // are exactly the keys per-key forensics reads. Cheap keys (< 0.3 s)
-    // stay at the base repeat — their absolute error is bounded by the
-    // cutoff. Overridable for scale-rehearsal runs where every key is slow
-    // and the per-key number only feeds a log10 exponent.
+    // Keys whose minimum is still >= slowCutoff after the base repeats get
+    // topped up to repeatSlow samples: for expensive keys the chance that
+    // every base sample lands in a stall window is material, and those are
+    // the keys per-key forensics reads. Cheap keys stay at the base repeat;
+    // their absolute error is bounded by the cutoff.
     val repeatSlow = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEAT_SLOW", "5").toInt.max(repeat)
     val slowCutoff = 0.3
-    // All scratch IO (shuffle spill files, bounded-stream checkpoints and
-    // parquet sink staging) goes to tmpfs: the bench grades PLAN quality,
-    // and on this VM the /tmp fsync path swings 3-5× run to run, burying
-    // the signal (join_shuffle_sortmergle 0.38 s ↔ 2.19 s with identical
-    // plans). Scratch here is bounded-run-scoped — nothing needs
-    // durability — and sf0.1 scratch peaks well under 1 GiB.
-    // Pid-keyed (round 16): the fixed path let a second concurrent Bench
-    // process delete THIS process's live shuffle/blockmgr files at its own
-    // startup (observed as FileNotFoundException mid-stage in a rehearsal
-    // run). Each process owns its dir; stale dirs from dead pids are reaped
-    // here so crashes don't leak tmpfs.
-    val scratch = s"/dev/shm/graft_bench_scratch_${ProcessHandle.current().pid()}"
-    Option(new java.io.File("/dev/shm").listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("graft_bench_scratch_"))
-      .foreach { f =>
-        val pid = f.getName.stripPrefix("graft_bench_scratch_")
-        val dead = pid.toLongOption.forall(p =>
-          ProcessHandle.of(p).map[Boolean](_.isAlive).orElse(false) == false)
-        if (dead) org.apache.commons.io.FileUtils.deleteQuietly(f)
-      }
-    // legacy fixed-name dir from pre-round-16 builds (round-16 advisor: the
-    // prefix match above requires the trailing underscore, so the old path
-    // was never reclaimed — a permanent tmpfs leak on boxes that ran the
-    // old binary)
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File("/dev/shm/graft_bench_scratch"))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(scratch))
-    new java.io.File(scratch).mkdirs()
-    sys.props("java.io.tmpdir") = scratch
-    val spark = SparkSession.builder()
-      .config("spark.local.dir", scratch)
-      .withExtensions(graft.opt.AnnotationRewrite.inject)
-      // SPARK_GRAFT_MASTER: multi-process bench (local-cluster[w,c,mem]) —
-      // numbers are NOT comparable to local[N] artifacts (per-task RPC +
-      // shuffle-over-loopback costs); used for the multi-JVM gate only.
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Shuffle WIDTH must scale with data even though the bench box has
-      // few cores: with shuffle.partitions pinned to cpus, the 10×
-      // rehearsal put ~10× more bytes in each reduce partition and a whole
-      // family of join/agg keys drifted to exponents 1.11-1.16 from spill
-      // alone. A real cluster over-partitions and lets AQE coalesce —
-      // same here: a high INITIAL partition count (AQE shrinks it right
-      // back for small shuffles, so sf0.1 plans are unchanged in practice)
-      // keeps reduce partitions bounded as the input grows.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 16).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) — unreadable without this.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // reliable-ckpt hygiene (Ckpt.scala): free superseded checkpoint
-      // trees via the ContextCleaner; no-op outside GRAFT_RELIABLE_CKPT
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Peak-memory tracker (round-10 judge task #7): max per-TASK execution
-    // memory (TaskMetrics.peakExecutionMemory — the operator memory that
-    // OOMs an executor core first: hash tables, sort buffers, build sides)
-    // observed during each key's timed window, reported as "peak_mb" so a
-    // scale rehearsal can rank which key OOMs first another decade up.
-    // Listener delivery is async; the reset/read points sit outside the
-    // timed samples and a short drain wait bounds attribution error —
-    // adequate for ranking, not a byte-exact account.
+    val spark = Session(tmpfsScratch = true)
+    // Peak per-TASK execution memory (hash tables, sort buffers, build
+    // sides — what OOMs an executor core first) during each key's timed
+    // window, so a scale rehearsal can rank which key OOMs first. Listener
+    // delivery is async; reset/read sit outside the timed samples and a
+    // drain wait bounds attribution error — adequate for ranking, not a
+    // byte-exact account.
     val peakNow = new java.util.concurrent.atomic.AtomicLong(0L)
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
@@ -183,59 +68,26 @@ object Bench {
         if (m != null) { peakNow.accumulateAndGet(m.peakExecutionMemory, Math.max(_, _)); () }
       }
     })
-    // Warm-up pass (untimed): run EVERY query once before timing. A single
-    // warm-up query is not enough on a snapshot-restored VM: first-touch
-    // page faults land whenever the heap grows, which happens throughout
-    // the run, inflating even per-query medians (measured 211 s total cold
-    // vs ~70 s steady on the same box); the full pass also absorbs
-    // classloader/codegen and parquet-footer costs per query. Timed runs
-    // then measure the steady state a long-lived cluster actually runs at.
-    // Subset runs (CLI args) warm only the selected keys: warming all 208
-    // queries before timing 5 of them multiplies a scale-rehearsal run at
-    // sf1 by ~40x for no signal — the full driver run still warms everything.
     val selected =
       if (args.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (k, _) => args.contains(k) }
-    // GRAFT_BENCH_NOWARM=1 (scale-rehearsal only): skip the warm-up pass.
-    // For 100+ s rehearsal keys the cold-start share is amortized into
-    // noise and a second full execution doubles a multi-hour run for no
-    // signal; staged artifacts these keys need are built inside their first
-    // (timed) run — which is exactly the posture a fresh cluster job has.
-    // Never set for the headline bench: its sub-second keys DO need the
-    // steady-state discipline.
+    // Untimed warm-up of every selected key and probe: absorbs first-touch
+    // page faults of a growing heap, classloading, codegen and parquet
+    // footers, so timed runs measure the steady state a long-lived cluster
+    // runs at. GRAFT_BENCH_NOWARM=1 skips it for scale rehearsals, where
+    // 100+ s keys amortize the cold start and a second execution doubles a
+    // multi-hour run; never for the headline bench.
     if (!sys.env.get("GRAFT_BENCH_NOWARM").contains("1"))
-      (anchorDefs.map(_._2) ++ selected.values).foreach { fn =>
+      (probeDefs.map(_._2) ++ selected.values).foreach { fn =>
         try fn(spark, sfDir).count() catch { case _: Throwable => () }
       }
-    // A throwing query must NOT contribute a plausible-looking median
-    // (round-3 advisor finding): record ok=false and report the key as -1
-    // plus an "errors" count so a broken query is visible in the JSON.
-    // rows_out (round-15 judge task #9): the count each timed sample already
-    // computes is the key's OUTPUT cardinality — recorded per key so
-    // "time tracks emitted pairs" claims on construction-driven exponents
-    // (semdedup/simhash/lsh_threshold distinct-content stamps) are measured
-    // fields (pairs_out, s_per_pair via tools/distinct_exponents.py), not prose.
-    // time() RETURNS the count with each sample (round-15 advisor): the old
-    // shared mutable lastCount rested on the ordering invariant that no
-    // probe/anchor pass ran between a key's samples and the rows_out read —
-    // a reorder would silently attribute the probe query's cardinality to
-    // the key. A per-sample count has no ordering to get wrong.
-    //
-    // v5.3 (round 16): suite keys are timed by FULL-RESULT materialization
-    // (queryExecution.toRdd.count — executes the key's own physical plan,
-    // streaming every output row) instead of Dataset.count(). Under
-    // count(), Catalyst prunes all output columns, eliminates final sorts,
-    // and — via distinct-keys propagation — can remove cardinality-
-    // preserving joins entirely: dedup_incremental_minhash's count plan
-    // collapsed to `documents WHERE doc_id%10=5` (verified with
-    // GRAFT_PLANDUMP_COUNT=1), i.e. the bench was timing a plan that never
-    // ran the kernel. A user of these operators materializes the result,
-    // so full materialization is the honest unit — and the one comparable
-    // to BASELINE.md, which measured full query outputs. The four frozen
-    // ANCHORS and probes keep Dataset.count(): their reference values
-    // (anchorRef, round 8) were measured under count() and the drift ratio
-    // depends on both sides staying frozen.
-    def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+    // One sample: (seconds, ok, row count). Keys are timed by full-result
+    // materialization (toRdd.count executes the key's own physical plan):
+    // under Dataset.count() Catalyst prunes output columns, drops final
+    // sorts and can remove cardinality-preserving joins, i.e. time a plan
+    // that never runs the kernel. Probes keep count(), the action their
+    // reference values were measured with.
+    def time(fn: (SparkSession, String) => DataFrame,
         fullMat: Boolean = true): (Double, Boolean, Long) = {
       val t0 = System.nanoTime()
       var cnt = -1L
@@ -246,82 +98,34 @@ object Bench {
       } catch { case _: Throwable => false }
       ((System.nanoTime() - t0) / 1e9, ok, cnt)
     }
-    // Anchors BRACKET the suite (round-12 judge task #1: the driver's r12
-    // run inflated 31 keys >1.5× vs a same-code run at a near-identical
-    // single pre-suite anchor ratio — one global ratio measured once cannot
-    // see drift that arrives DURING the run). Each bracket takes
-    // max(repeat, 5) samples per anchor: everything downstream is DIVIDED
-    // by an anchor ratio, so anchor noise multiplies into every normalized
-    // number — and the four anchors are sub-second, so the extra samples
-    // cost < 5 s against a 100+ s run.
-    // ok flags from anchor/probe samples are PROPAGATED, not discarded
-    // (round-13 advisor): a throwing anchor's time-to-exception (often ms)
-    // would otherwise become the min sample and silently collapse the
-    // ratio, inflating every queries_norm value with no error surfaced —
-    // in a protocol that flags every other anomaly. A failed sample is
-    // excluded from the min and counted in anchor_errors/probe_errors; if
-    // ALL samples of an anchor fail the run aborts loudly (there is no
-    // denominator to normalize by).
-    val anchorErrors = new java.util.concurrent.atomic.AtomicInteger(0)
-    val probeErrors = new java.util.concurrent.atomic.AtomicInteger(0)
-    def minOk(samples: Seq[(Double, Boolean, Long)], errCounter: java.util.concurrent.atomic.AtomicInteger, what: String): Double = {
-      val (good, bad) = samples.partition(_._2)
-      errCounter.addAndGet(bad.size)
-      require(good.nonEmpty, s"bench $what: every sample threw — no valid timing denominator")
-      good.map(_._1).min
-    }
-    def anchorPass(): Seq[(String, Double)] = anchorDefs.map { case (name, fn) =>
-      name -> minOk(Seq.fill(math.max(repeat, 5))(time(fn, fullMat = false)), anchorErrors, s"anchor $name")
-    }
-    val anchorRefSum = anchorDefs.map(a => anchorRef(a._1)).sum
-    val anchorTimes = anchorPass()
-    val anchorRatio = anchorTimes.map(_._2).sum / anchorRefSum
-    // Interleaved fixed-overhead PROBE (the v4 drift tripwire): the two
-    // cheapest FROZEN anchors re-timed min-of-3 at suite position 0, after
-    // every ProbeEvery keys, and after the last key. Each suite key is then
-    // normalized by the MEAN of its two bracketing probe ratios — a local
-    // box-speed estimate — instead of one global ratio, so a stall window
-    // mid-run inflates only the keys inside it AND the artifact names them
-    // (probe_flagged) when the window's own probes disagree. Probe queries
-    // and their reference values are the frozen anchors' — nothing new to
-    // freeze, ~1 s per probe point, ~10 s across a 223-key run.
-    val ProbeEvery = 25
-    val probeDefs = Seq(anchorDefs.head, anchorDefs.last)
-    val probeRefSum = probeDefs.map(a => anchorRef(a._1)).sum
+    // A throwing probe's time-to-exception would become the min sample and
+    // silently collapse the ratio, so failed samples are excluded, and a
+    // probe with no good sample aborts the run: there is no denominator.
     def probeRatio(): Double =
-      probeDefs.map { case (name, fn) =>
-        minOk(Seq.fill(3)(time(fn, fullMat = false)), probeErrors, s"probe $name")
-      }.sum / probeRefSum
+      probeDefs.map { case (name, fn, _) =>
+        val good = Seq.fill(3)(time(fn, fullMat = false)).filter(_._2)
+        require(good.nonEmpty, s"bench probe $name: every sample threw — no valid timing denominator")
+        good.map(_._1).min
+      }.sum / probeDefs.map(_._3).sum
     val peaks = scala.collection.mutable.Map.empty[String, Double]
     val rowsOut = scala.collection.mutable.Map.empty[String, Long]
     val drainCapped = scala.collection.mutable.ArrayBuffer.empty[String]
     val probes = scala.collection.mutable.ArrayBuffer[Double](probeRatio())
     val orderedKeys = selected.toSeq
+    // MINIMUM of repeats: stalls only ever ADD time, so the min is the
+    // steady-state estimator and needs one clean repeat. A key with any
+    // failed sample reports -1 and counts in "errors".
     val results = orderedKeys.zipWithIndex.map { case ((name, fn), idx) =>
-      // MINIMUM of repeats, not median: this VM freezes for 1-2 minute
-      // windows (host-side; a stall poisoned all 3 repeats of text_langid
-      // to 71 s where a fresh JVM runs it in 1.7 s). Timing noise here is
-      // strictly one-sided — a stall only ever ADDS time — so min is the
-      // unbiased steady-state estimator and needs just one clean repeat.
       peakNow.set(0L)
       val base = Seq.fill(repeat)(time(fn))
       val samples =
         if (base.map(_._1).min >= slowCutoff && repeatSlow > repeat)
           base ++ Seq.fill(repeatSlow - repeat)(time(fn))
         else base
-      val best = samples.map(_._1).min
-      // the key's own samples carry its count — no shared state to race
       rowsOut(name) = samples.find(_._2).map(_._3).getOrElse(-1L)
-      // Drain-to-stability instead of a fixed 20 ms nap (round-11 advisor:
-      // late task-end events from a slow key could be credited to the NEXT
-      // key across a fixed drain). Require 3 consecutive stable 15 ms polls
-      // (round-12 advisor: a single unchanged poll can land inside a >15 ms
-      // gap of a bursty listener backlog), and record a cap hit in the
-      // artifact so an unstable drain is visible rather than silently
-      // credited to the next key. Sits entirely outside the timed samples.
-      // (round-13 advisor: the loop previously exited at 2 consecutive
-      // unchanged polls while this comment promised 3 — condition now
-      // matches the documented guarantee.)
+      // Drain the listener until the peak holds for 3 consecutive 15 ms
+      // polls, so a slow key's late task-end events are not credited to the
+      // next key; a drain that hits the cap is recorded, not hidden.
       var lastPeak = peakNow.get()
       var stable = 0
       var drainMs = 0
@@ -334,222 +138,53 @@ object Bench {
       peaks(name) = peakNow.get() / 1048576.0
       if ((idx + 1) % ProbeEvery == 0 || idx == orderedKeys.size - 1)
         probes += probeRatio()
-      name -> (if (samples.forall(_._2)) best else -1.0)
+      name -> (if (samples.forall(_._2)) samples.map(_._1).min else -1.0)
     }
-    // --- v5.2 flagged-key solo re-measure (round-15 judge task #2) ---
-    // The driver's own r15 run carried 50 probe-flagged keys: per-key data
-    // stamped through stall windows the protocol could DETECT but not fix,
-    // so forensics needed a manual quiet-box session. Now the run repairs
-    // itself: each flagged key is re-measured at the end of the run inside
-    // its OWN probe bracket; if those two adjacent probes agree (the same
-    // 25% criterion that flags a segment), the clean window's ratio
-    // replaces the key's polluted segment ratio and the raw keeps the
-    // min-estimator across both windows (stall noise is strictly one-sided,
-    // so min over measurement windows stays the steady-state estimator).
-    // Keys re-measured are listed in "remeasured"; keys whose re-measure
-    // never found an agreeing window (box still drifting, or wall budget
-    // exhausted — expensive keys first, they are the ones forensics reads)
-    // stay in "probe_flagged_final". A clean run pays zero extra cost.
-    def segFlagged(idx: Int): Boolean = {
-      val seg = idx / ProbeEvery
-      val a = probes(seg); val b = probes(math.min(seg + 1, probes.size - 1))
-      math.max(a, b) / math.min(a, b) > 1.25
-    }
-    val rawOverride = scala.collection.mutable.Map.empty[String, Double]
-    val ratioOverride = scala.collection.mutable.Map.empty[String, Double]
-    val remeasuredKeys = scala.collection.mutable.ArrayBuffer.empty[String]
-    val resultsMap = results.toMap
-    val flaggedIdx = orderedKeys.zipWithIndex
-      .filter { case ((_, _), idx) => segFlagged(idx) }
-      .filter { case ((name, _), _) => resultsMap.getOrElse(name, -1.0) >= 0 }
-      .sortBy { case ((name, _), _) => -resultsMap(name) }
-    // Budget raised 180 → 600 s and the queue is re-walked in passes
-    // (round-16 verdict task #2): the driver's r16 run exhausted 180 s with
-    // 20 of 50 flagged keys never re-measured — per-key values published
-    // untrusted. 600 s against a ~130 s suite is still bounded (the driver's
-    // wall cap is minutes), and a later PASS gives keys whose first
-    // re-measure window was itself drifting a second chance once the box
-    // settles. A clean run still pays zero: no flags → no passes.
-    val remeasureBudget = sys.env.getOrElse("SPARK_GRAFT_REMEASURE_BUDGET", "600").toDouble
-    var remeasureSpent = 0.0
-    var pass = 0
-    while (pass < 3 && remeasureSpent < remeasureBudget &&
-      flaggedIdx.exists { case ((n, _), _) => !remeasuredKeys.contains(n) }) {
-      flaggedIdx.foreach { case ((name, fn), _) =>
-        if (!remeasuredKeys.contains(name) && remeasureSpent < remeasureBudget) {
-          val t0 = System.nanoTime()
-          val p0 = probeRatio()
-          val base = Seq.fill(repeat)(time(fn))
-          val samples =
-            if (base.map(_._1).min >= slowCutoff && repeatSlow > repeat)
-              base ++ Seq.fill(repeatSlow - repeat)(time(fn))
-            else base
-          val p1 = probeRatio()
-          remeasureSpent += (System.nanoTime() - t0) / 1e9
-          val good = samples.filter(_._2)
-          if (good.nonEmpty)
-            remeasureMerge(resultsMap(name), good.map(_._1).min, p0, p1).foreach {
-              case (raw, ratio) =>
-                rawOverride(name) = raw
-                ratioOverride(name) = ratio
-                remeasuredKeys += name
-            }
-        }
-      }
-      pass += 1
-    }
-    val anchorTimesPost = anchorPass()
-    val anchorRatioPost = anchorTimesPost.map(_._2).sum / anchorRefSum
-    // value_norm divides by the MEAN of the two bracket ratios (v4 — one
-    // pre-suite ratio under-corrects any drift arriving mid-run).
-    // Bracket disagreement > 10% means the box was drifting across the
-    // measurement; v5 (round-15 judge task #5) RETRIES instead of
-    // publishing a number stamped through a drift window: re-measure the
-    // anchors (the suite raw times are what they are — the brackets only
-    // pick the denominator) and replace whichever bracket the fresh pass
-    // says was the outlier, up to 3 times. If the box never settles the
-    // artifact still says anchor_bracket_disagree=true — the flag is
-    // honest, the retry just gives a settling box a chance to be measured
-    // settled. Logic is pure (reconcileBrackets) and unit-tested.
-    val (anchorRatioFinal, anchorRatioPostFinal, anchorRetries) =
-      reconcileBrackets(anchorRatio, anchorRatioPost,
-        () => anchorPass().map(_._2).sum / anchorRefSum, maxRetries = 3)
-    val anchorRatioMean = (anchorRatioFinal + anchorRatioPostFinal) / 2
-    val bracketDisagree = disagree(anchorRatioFinal, anchorRatioPostFinal)
-    // per-key local ratio: mean of the probe before and after the key's
-    // ProbeEvery-sized segment
-    def keyRatio(idx: Int): Double = {
-      val seg = idx / ProbeEvery
-      (probes(seg) + probes(math.min(seg + 1, probes.size - 1))) / 2
-    }
-    // keys whose segment's bracketing probes disagree > 25% — the named
-    // poisoned-window list a cross-round comparison must consult before
-    // reading a per-key regression as a plan change (v5.2: re-measured
-    // in-run; consult probe_flagged_final for what REMAINS untrusted)
-    val probeFlagged = orderedKeys.zipWithIndex.collect {
-      case ((name, _), idx) if segFlagged(idx) => name.toString
-    }
-    def r3(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    // per-key raw after the re-measure pass: min over measurement windows
-    val resultsFinal = results.map { case (k, v) =>
-      k -> (if (v < 0) v else math.min(v, rawOverride.getOrElse(k, v)))
-    }
-    val qs = resultsFinal.map { case (k, v) => s"\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    // Per-key PROBE-NORMALIZED seconds (v4): each key divided by the mean of
-    // its segment's bracketing probe ratios — the number to read for
-    // cross-round per-key forensics (raw per-key values inherit the full box
-    // drift; a single global ratio inherits mid-run drift). Errors stay -1.
-    // v5.2: a successfully re-measured key divides by its OWN clean-window
-    // probe bracket instead of the polluted segment ratio.
-    val qsNorm = resultsFinal.zipWithIndex.map { case ((k, v), idx) =>
-      s"\"" + k + "\":" + r3(if (v < 0) v else v / ratioOverride.getOrElse(k, keyRatio(idx)))
-    }.mkString("{", ",", "}")
-    val errors = resultsFinal.count(_._2 < 0)
-    // A crashing query must never make the headline total look BETTER than a
-    // working build (round-4 advisor finding): each errored key contributes a
-    // penalty of max(30 s, slowest measured query) — data-derived so a future
-    // legitimately-slow query can't make a crashed build beat a working one
-    // (round-5 advisor finding).
-    val penalty = math.max(30.0, resultsFinal.map(_._2).filter(_ >= 0).maxOption.getOrElse(0.0))
-    val total = resultsFinal.map(_._2).filter(_ >= 0).sum + errors * penalty
-    // anchor block: per-anchor seconds, frozen refs' drift ratio per bracket,
-    // and the anchor-normalized total — the number comparable across rounds.
-    // ratio is only meaningful at the refs' scale (sf0.1); at other sf dirs
-    // it is reported but value_norm should be read with that caveat.
-    val anchorJson = anchorTimes.map { case (k, v) => s"\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", s""","ratio":${r3(anchorRatio)}}""")
-    val anchorPostJson = anchorTimesPost.map { case (k, v) => s"\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", s""","ratio":${r3(anchorRatioPost)}}""")
-    // v5.1 headline denominator: MEDIAN of the interleaved probe ratios.
-    // The probe series samples box speed 10+ times ACROSS the run window
-    // (position 0, every ProbeEvery keys, after the last key) with the same
-    // frozen queries/refs the anchors use, so its median is robust to a
-    // one-sided stall at either edge. The bracket mean is kept as
-    // value_norm_brackets: a same-code quad of runs measured ratios
-    // 0.93/0.79/0.71/0.61 from the 2-point brackets (one run's POST bracket
-    // hit a slow window the suite never saw — the retry then converged to
-    // the post-run box state and inflated value_norm to 128 while all 11
-    // interior probes sat at 0.80-0.88 ≈ norm 94), while probe medians for
-    // the same four runs spanned a far tighter band. Medians of ≥10 frozen
-    // samples spanning the window beat means of 2 at its edges.
     val probeMedian = medianOf(probes.toSeq)
+    def r3(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+    def obj[V](kvs: Seq[(String, V)])(f: V => String): String =
+      kvs.map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
+    def arr(xs: Seq[String]): String = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val errors = results.count(_._2 < 0)
+    // A crashing key must never make the total look BETTER than a working
+    // build: each errored key adds max(30 s, slowest measured key).
+    val penalty = math.max(30.0, results.map(_._2).filter(_ >= 0).maxOption.getOrElse(0.0))
+    val total = results.map(_._2).filter(_ >= 0).sum + errors * penalty
     val valueNorm = total / probeMedian
-    val valueNormBrackets = total / anchorRatioMean
-    // Measurement-protocol block (round-9 advisor finding): keys listed in
-    // "memoized" reuse a per-(session,dataset) artifact that the untimed
-    // warm-up pass built — their timed repeats measure post-artifact
-    // (probe/read-only) work. A cross-round per-key comparison must treat a
-    // timing change on these keys that coincides with a memoization change
-    // as a measurement-boundary change, not a plan change. "protocol"
-    // versions the estimator + warm-up + memoization discipline as a unit.
-    val memoJson = SparkEntry.memoized.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // "staged_oracle" (round-11 advisor): keys whose DuckDB oracle reads an
-    // artifact computed by the Spark kernel under test — the oracle verifies
-    // the downstream math independently, the kernel step is property-spec
-    // covered. Consumers weighing verification strength (and reading
-    // peak_mb, which for these keys reflects the post-staging read plan)
-    // need the list.
-    val stagedJson = SparkEntry.stagedOracle.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // v5 (round 15): bracket-disagree auto-retry (reconcileBrackets), per-key
-    // rows_out, stdout reduced to the single total-only line. Per-key timing
-    // estimator (warm-up + min-of-n + probe normalization) is UNCHANGED from
-    // v4, so per-key cross-round comparison v4↔v5 remains valid; only the
-    // headline denominator can differ (and only on runs v4 would have
-    // flagged anchor_bracket_disagree=true).
-    // v5.2 (round 16): probe-flagged keys are solo re-measured at end of run
-    // (see the re-measure block above); per-key values for NON-flagged keys
-    // are unchanged from v5.1, so cross-round per-key comparison stays valid
-    // — a flagged key's value now comes from a clean window instead of being
-    // published polluted.
-    // v5.3 (round 16): suite keys timed by full-result materialization
-    // (toRdd.count) instead of Dataset.count() — see time(). Per-key values
-    // are NOT comparable to v5.2-and-earlier artifacts for keys where
-    // count() pruned material work (final sorts, output projections, and in
-    // the worst case whole kernels — dedup_incremental_minhash's count plan
-    // had collapsed to a filtered doc_id scan). Anchors/probes keep count()
-    // so the drift denominator stays frozen.
-    val protocolName = "v5.3-fullmat"
-    val protocol = s""""protocol":"$protocolName",""" +
-      s""""memoized":$memoJson,"staged_oracle":$stagedJson"""
-    // per-key peak task execution memory (MB) — NOT normalized (memory
-    // does not drift with box speed); 0.0 = key ran entirely in codegen
-    // pipelines with no memory-consuming operator
-    val peakJson = results.map { case (k, _) =>
-      s"\"" + k + "\":" + r3(peaks.getOrElse(k, 0.0))
-    }.mkString("{", ",", "}")
-    val rowsJson = results.map { case (k, _) =>
-      s"\"" + k + "\":" + rowsOut.getOrElse(k, -1L)
-    }.mkString("{", ",", "}")
-    val probesJson = probes.map(r3).mkString("[", ",", "]")
-    val probeFlaggedJson = probeFlagged.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val remeasuredJson = remeasuredKeys.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val flaggedFinalJson = probeFlagged.filterNot(remeasuredKeys.contains)
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val drainCappedJson = drainCapped.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val full = s"""{"metric":"total","value":${r3(total)},"value_norm":${r3(valueNorm)},"anchor":$anchorJson,"anchor_post":$anchorPostJson,"anchor_ratio_final":[${r3(anchorRatioFinal)},${r3(anchorRatioPostFinal)}],"probe_median":${r3(probeMedian)},"value_norm_brackets":${r3(valueNormBrackets)},"anchor_retries":$anchorRetries,"anchor_bracket_disagree":$bracketDisagree,"anchor_errors":${anchorErrors.get()},"probe_errors":${probeErrors.get()},"probes":$probesJson,"probe_flagged":$probeFlaggedJson,"remeasured":$remeasuredJson,"probe_flagged_final":$flaggedFinalJson,"remeasure_spent_sec":${r3(remeasureSpent)},"remeasure_budget_sec":${r3(remeasureBudget)},"peak_drain_capped":$drainCappedJson,"unit":"sec","repeat":$repeat,"repeat_slow":$repeatSlow,"agg":"min","errors":$errors,$protocol,"queries":$qs,"queries_norm":$qsNorm,"peak_mb":$peakJson,"rows_out":$rowsJson,"sf":"$sfDir"}"""
-    // "agg"/"repeat" appear in BOTH artifacts: the round-5 estimator change
-    // (median -> min) moved the headline total, and a consumer reading only
-    // BENCH_total.json must be able to tell estimator change from plan change.
-    val totalOnly = s"""{"metric":"total","value":${r3(total)},"value_norm":${r3(valueNorm)},"anchor_ratio":${r3(anchorRatioMean)},"probe_median":${r3(probeMedian)},"value_norm_brackets":${r3(valueNormBrackets)},"anchor_retries":$anchorRetries,"anchor_bracket_disagree":$bracketDisagree,"anchor_errors":${anchorErrors.get()},"probe_errors":${probeErrors.get()},"flagged_n":${probeFlagged.size},"remeasured_n":${remeasuredKeys.size},"unit":"sec","n":${results.size},"repeat":$repeat,"agg":"min","errors":$errors,"protocol":"$protocolName","sf":"$sfDir"}"""
-    // Driver-parse posture (round-15 judge task #6 — BENCH_r01..r14 ALL
-    // landed parsed:null): the full per-query detail goes EXCLUSIVELY to
-    // BENCH_local.json — printing it put a ~3 KB line in the stdout tail the
-    // driver captures, crowding out / head-truncating the parseable line.
-    // Stdout carries exactly ONE short total-only JSON line, printed after
-    // spark.stop() so no shutdown logging follows it; build.sbt pairs this
-    // with outputStrategy=StdoutOutput (no "[info] " prefix) and
-    // showSuccess=false (no trailing "[success]" line), making it the
-    // genuine last line of the sbt process output.
-    // Subset runs (CLI args given) must not clobber the full-run artifact
-    // (round-4 advisor finding): they go to BENCH_subset.json instead.
-    // BENCH_total.json carries the parsed total on disk so no consumer ever
-    // depends on stdout tail truncation (round-5 judge finding).
+    // "memoized" keys reuse a per-(session, dataset) artifact the warm-up
+    // built, so their timed repeats measure post-artifact work; a timing
+    // change that coincides with a memoization change is a measurement-
+    // boundary change, not a plan change. "staged_oracle" keys have an
+    // oracle that reads an artifact the Spark kernel under test computed.
+    // "protocol" versions estimator + warm-up + memoization as a unit.
+    val protocolName = "v6-probe-median"
+    val full = s"""{"metric":"total","value":${r3(total)},"value_norm":${r3(valueNorm)},""" +
+      s""""probe_median":${r3(probeMedian)},"probes":${probes.map(r3).mkString("[", ",", "]")},""" +
+      s""""unit":"sec","n":${results.size},"repeat":$repeat,"repeat_slow":$repeatSlow,"agg":"min",""" +
+      s""""errors":$errors,"protocol":"$protocolName","memoized":${arr(SparkEntry.memoized)},""" +
+      s""""staged_oracle":${arr(SparkEntry.stagedOracle)},""" +
+      s""""queries":${obj(results)(r3)},""" +
+      s""""queries_norm":${obj(results)(v => r3(if (v < 0) v else v / probeMedian))},""" +
+      // not normalized: memory does not drift with box speed
+      s""""peak_mb":${obj(results.map { case (k, _) => k -> peaks.getOrElse(k, 0.0) })(r3)},""" +
+      s""""peak_drain_capped":${arr(drainCapped.toSeq)},""" +
+      s""""rows_out":${obj(results.map { case (k, _) => k -> rowsOut.getOrElse(k, -1L) })(_.toString)},""" +
+      s""""sf":"$sfDir"}"""
+    val totalOnly = s"""{"metric":"total","value":${r3(total)},"value_norm":${r3(valueNorm)},""" +
+      s""""probe_median":${r3(probeMedian)},"unit":"sec","n":${results.size},"repeat":$repeat,""" +
+      s""""agg":"min","errors":$errors,"protocol":"$protocolName","sf":"$sfDir"}"""
+    // The per-key detail goes only to the artifact: a long stdout line
+    // crowds the parseable one out of a captured stdout tail. Subset
+    // runs write BENCH_subset.json so they never clobber the full-run
+    // artifact; BENCH_total.json keeps the total on disk.
     val outFile = if (args.isEmpty) "BENCH_local.json" else "BENCH_subset.json"
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), full)
     if (args.isEmpty)
       java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_total.json"), totalOnly)
     spark.stop()
+    // Exactly one short JSON line, after spark.stop() so no shutdown log
+    // follows it; build.sbt's StdoutOutput and showSuccess=false make it
+    // the last line of the sbt process output.
     println(totalOnly)
   }
 }

@@ -21,7 +21,7 @@ import org.apache.spark.sql.types._
   *   MEASUREMENT-BOUNDARY property a cross-round per-key comparison must
   *   know about: the bench artifact lists these keys under "memoized" so a
   *   timing drop caused by moving work behind an artifact is never mistaken
-  *   for a plan improvement (round-9 advisor finding).
+  *   for a plan improvement.
   */
 final case class QueryDef(
     key: String,
@@ -42,12 +42,12 @@ object Tables {
     * caches file listing + schema, never data.)
     */
   // private[graft] so CoreCacheSpec can assert the supersede-eviction
-  // discipline (round-14 advisor: fingerprint-keyed entries must not leak
-  // one stale DataFrame per in-place regeneration)
+  // discipline (fingerprint-keyed entries must not leak one stale
+  // DataFrame per in-place regeneration)
   private[graft] val readCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
-  // Keyed on the CONTENT fingerprint, not the bare path (round 14 — the
+  // Keyed on the CONTENT fingerprint, not the bare path (the
   // invalidate-together discipline): a DataFrame's file index snapshots
   // names+sizes at creation, so in-place regeneration at the same path
   // within one JVM would otherwise serve a stale listing (FileNotFound at
@@ -62,8 +62,8 @@ object Tables {
     if (cached != null) cached
     else {
       // Evict superseded fingerprints of the same (session, dir, table) on
-      // miss (round-14 advisor: fingerprint-keyed entries otherwise leak one
-      // stale DataFrame per in-place regeneration within a JVM). fingerprint
+      // miss: fingerprint-keyed entries otherwise leak one stale
+      // DataFrame per in-place regeneration within a JVM. fingerprint
       // strings start "dir|"; golden()'s plain-path keys contain no "|" so
       // they can never match. Residual accepted bound: a same-size
       // regeneration inside one lastModified millisecond still fingerprints
@@ -84,9 +84,9 @@ object Tables {
     * Without this every timed repeat of a memoized key re-listed the
     * staged dir, re-read footers, and — via Tables.spread's
     * `df.rdd.getNumPartitions` on a FRESH Dataset each call — re-ran
-    * physical planning of the read (Dataset.rdd is lazy per OBJECT);
-    * round-14's sim_mrl_rerank regression (0.29→0.51 norm) was exactly
-    * this fixed cost landing inside the timed window. Same eviction
+    * physical planning of the read (Dataset.rdd is lazy per OBJECT) —
+    * a fixed cost inside the timed window that measured 0.29→0.51 norm s
+    * on sim_mrl_rerank. Same eviction
     * discipline as t(): a superseded fingerprint's entry is dropped on
     * miss.
     */
@@ -172,7 +172,7 @@ object Tables {
       (spark, s"$goldenDir/$name.parquet"),
       { case (s, p) => s.read.parquet(p) })
 
-  /** Dataset-aware golden resolution (round-11 FHIR scale rehearsal): a
+  /** Dataset-aware golden resolution (FHIR scale rehearsals): a
     * dataset dir may carry a `fhir/` subdir of FhirGenScale-replicated
     * resources — prefer it so every fhir_* key runs at the replicated
     * volume when benched against such a dir. The driver's sf dirs have no
@@ -193,8 +193,8 @@ object Tables {
     * (recursively for directories), so regenerating data IN PLACE at the
     * same path (the GenScale rehearsal flow) changes the fingerprint and
     * forces a re-stage — a bare-path marker silently keeps the stale
-    * staged artifact and lets BOTH engines agree on the wrong data
-    * (round-11 advisor finding). Missing files stamp as "absent" rather
+    * staged artifact and lets BOTH engines agree on the wrong data.
+    * Missing files stamp as "absent" rather
     * than throwing, so probing a marker never fails before the staging
     * code's own error surfaces.
     */
@@ -203,7 +203,7 @@ object Tables {
     // "absent" so marker probing never throws before staging's own error
     // surfaces; the directory's own name joins its stamp so renaming a
     // subdirectory (same file names/sizes/mtimes inside) still changes the
-    // fingerprint (round-12 advisor).
+    // fingerprint.
     def stamp(f: java.io.File): String =
       if (!f.exists) s"${f.getName}:absent"
       else if (f.isDirectory)
@@ -217,6 +217,13 @@ object Tables {
     d + "|" + java.lang.Long.toHexString(
       body.foldLeft(0xcbf29ce484222325L)((h, c) => (h ^ c) * 0x100000001b3L))
   }
+
+  /** Per-dataset staging dir `<java.io.tmpdir>/<name>_<hex hash of d>` for
+    * layouts a key writes once and then reads. Specs and oracle SQL compute
+    * the same path, so its form is part of the key's contract.
+    */
+  def stagingDir(name: String, d: String): String =
+    s"${sys.props("java.io.tmpdir")}/${name}_${Integer.toHexString(d.hashCode)}"
 }
 
 /** Hash-match helpers (SURVEY §7.4): double measures are cast to

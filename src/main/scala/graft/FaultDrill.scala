@@ -1,17 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Executor-loss fault drill (round-13 judge task #5): under REAL
-  * multi-process Spark (`local-cluster[2,4,3072]` — two separate executor
-  * JVMs), run a key once undisturbed, then re-run it while a watcher
-  * thread `kill -9`s one executor JVM mid-query, and assert the two
-  * results are hash-identical. This exercises the distributed failure
-  * class round 12's serialization gate did not: task retry, stage
-  * re-execution after FetchFailed (the killed executor's shuffle files
-  * are gone), and executor re-registration — the everyday failure mode
-  * of a 1000-executor cluster, where the scheduler must recompute lost
-  * work and the answer must not change.
+/** Executor-loss fault drill: under REAL multi-process Spark
+  * (`local-cluster[2,4,3072]` — two separate executor JVMs), run a key once
+  * undisturbed, then re-run it while a watcher thread `kill -9`s one executor
+  * JVM mid-query, and assert the two results are hash-identical. This
+  * exercises the distributed failure class a serialization gate does not:
+  * task retry, stage re-execution after FetchFailed (the killed executor's
+  * shuffle files are gone), and executor re-registration — the everyday
+  * failure mode of a 1000-executor cluster, where the scheduler must
+  * recompute lost work and the answer must not change.
   *
   * Run via spark-submit with the packaged jar (the BASELINE.md
   * multi-process recipe — a local[N] master would have nothing to kill):
@@ -53,20 +50,7 @@ object FaultDrill {
     val key = args.lift(0).getOrElse("join_shuffle_sortmerge")
     val d = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val maxAttempts = 5
-    val spark = SparkSession.builder()
-      .withExtensions(graft.opt.AnnotationRewrite.inject)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Reliable-ckpt drills (GRAFT_RELIABLE_CKPT=1) otherwise leak every
-      // round's checkpoint files for the life of the app (round-14 advisor:
-      // unbounded /tmp growth on long iterative runs) — let the
-      // ContextCleaner free checkpoint data when its RDD is GC'd. Must be
-      // set at context creation; harmless in localCheckpoint mode.
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     val fn = SparkEntry.queries(key)
 
     // Baseline: undisturbed run (also warms staged artifacts / memoized
@@ -84,17 +68,17 @@ object FaultDrill {
     while (attempt < maxAttempts && !killedDuringRun) {
       attempt += 1
       val taskStartSeen = new java.util.concurrent.atomic.AtomicBoolean(false)
-      // Recovery evidence (round-13 advisor: destroyForcibly() only SENDS
-      // the signal — the executor may die after the query's final collect
-      // returns, or after all of its tasks for this query already finished,
-      // in which case the run exercised nothing and a kill_landed=true
-      // verdict would be a false positive). A kill only counts when BOTH:
+      // Recovery evidence (destroyForcibly() only SENDS the signal — the
+      // executor may die after the query's final collect returns, or after
+      // all of its tasks for this query already finished, in which case the
+      // run exercised nothing and a kill_landed=true verdict would be a false
+      // positive). A kill only counts when BOTH:
       //   (a) the killed executor PROCESS was confirmed dead (onExit future
       //       completed) while the query was still running, and
       //   (b) the scheduler OBSERVED the loss before the run was marked
       //       done — a failed-task end event or an executor-removed event —
       //       i.e. the recompute/FetchFailed machinery actually engaged.
-      // Two evidence channels with different drain trust (round-15 advisor):
+      // Two evidence channels with different drain trust:
       // a FAILED-TASK end event can only come from a task that was in flight
       // when the loss hit — it is unambiguous in-query disturbance even when
       // delivered late on the async bus. An EXECUTOR-REMOVED event is not:
@@ -136,14 +120,14 @@ object FaultDrill {
       // capture the recovery evidence BEFORE declaring the run done — but
       // listener events are delivered on the async bus, so an event EMITTED
       // during the query can arrive milliseconds after the collect returns
-      // (round-14 advisor: a genuinely landed kill was discarded as
-      // unobserved → spurious retries). Bounded poll to let the bus drain;
+      // (without a drain, a genuinely landed kill reads as unobserved and
+      // forces a spurious retry). Bounded poll to let the bus drain;
       // the kill itself still only counts via killLanded = process confirmed
       // dead while the query ran, so this window cannot fabricate evidence
       // for a kill that landed after the query.
-      // snapshot executor-removed evidence BEFORE publishing queryDone
-      // (round-16 advisor): an event delivered on the async bus in the gap
-      // between queryDone.set(true) and a later read would count as
+      // snapshot executor-removed evidence BEFORE publishing queryDone: an
+      // event delivered on the async bus in the gap between
+      // queryDone.set(true) and a later read would count as
       // "observed before done" — the post-query-kill class this evidence
       // rule exists to exclude. Reading first is strictly conservative:
       // an event that raced the query's completion may be missed, never

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-rehearsal data generator: replicates the driver's sf tables K×
@@ -23,12 +22,12 @@ import org.apache.spark.sql.functions._
   * K× per group — the intended linear-total load, never all-pairs).
   * Dimension tables (region/nation) stay 1×, like real dims at scale.
   *
-  * DISTINCT-CONTENT MODE (round 13, arg 4 = "distinct"): string-identical
+  * DISTINCT-CONTENT MODE (arg 4 = "distinct"): string-identical
   * replication is collapse-absorbable — every dedup/sim kernel's
   * exact-dup collapse absorbs the replicas, so replicated rehearsals
   * measure the duplicate-heavy regime only and provably CANNOT see a
-  * quadratic term on distinct content (round-12 verdict). Distinct mode
-  * mutates payload content per replica (rep 0 stays verbatim):
+  * quadratic term on distinct content. Distinct mode mutates payload
+  * content per replica (rep 0 stays verbatim):
   *   - documents.text: deterministic token salting — replica r suffixes
   *     "~r" onto every token at position p where p % 8 == r % 8. Each
   *     5-gram window then contains a salted position in ~5/8 of windows,
@@ -51,14 +50,7 @@ object GenScale {
     val dst = args.lift(1).getOrElse("target/testdata_sf1")
     val k = args.lift(2).map(_.toInt).getOrElse(10)
     val distinct = args.lift(3).contains("distinct")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
 
     val keyCols = Map(
       "customer" -> Seq("c_custkey"),

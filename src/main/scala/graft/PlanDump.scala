@@ -1,48 +1,30 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc plan inspector: `runMain graft.PlanDump <key> [<key>…]` prints
-  * each key's EXECUTED physical plan (post-AQE, after one collect) at
-  * sf0.01 — the fast loop for checking a new operator's plan shape before
-  * pinning it in PlanSpec / PLANS.md (which cover the curated headline set).
+  * each key's EXECUTED physical plan (post-AQE, after one collect) under
+  * the bench's [[Session]] posture — the fast loop for checking a new
+  * operator's plan shape before pinning it in PlanSpec / PLANS.md (which
+  * cover the curated headline set).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     // GRAFT_PLANDUMP_DIR overrides the dataset (e.g. the GenScale sf1 dir —
     // AQE decisions are size-dependent, so a scale question needs the plan
-    // AT scale); GRAFT_PLANDUMP_BENCHPOSTURE=1 mirrors Bench's AQE
-    // over-partition posture so the dumped plan is the benched plan.
+    // AT scale)
     val dir = sys.env.getOrElse("GRAFT_PLANDUMP_DIR", "/root/testdata/sf0.01")
-    val bench = sys.env.get("GRAFT_PLANDUMP_BENCHPOSTURE").contains("1")
-    val b = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-    val spark = (if (bench)
-      b.config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "64")
-    else b).getOrCreate()
+    val spark = Session()
     spark.sparkContext.setLogLevel("ERROR")
     // GRAFT_PLANDUMP_FORMATTED=1 prints explain("formatted") (the PLANS.md
     // style: numbered operators + per-operator detail) instead of the
     // executed-plan tree.
     val formatted = sys.env.get("GRAFT_PLANDUMP_FORMATTED").contains("1")
-    // GRAFT_PLANDUMP_COUNT=1 dumps the plan of df.groupBy().count() instead
-    // of the full result — the action Bench actually times. The two can
-    // diverge: under count() Catalyst prunes every column and can collapse
-    // cardinality-preserving scaffolding, so "what the bench measures" is a
-    // question about THIS plan, not the collect plan.
-    val countMode = sys.env.get("GRAFT_PLANDUMP_COUNT").contains("1")
     for (k <- args) {
       println(s"======== $k ========")
-      val df0 = SparkEntry.queries(k)(spark, dir)
-      val df = if (countMode) df0.groupBy().count() else df0
+      val df = SparkEntry.queries(k)(spark, dir)
       df.collect() // materialize so AQE finalizes every stage
       if (formatted)
-        // 60k cap (r17): the 12k cap truncated wide plans (runlen's 3-join
-        // tree) before the operator details the dossier needs to cite.
+        // wide plans (multi-join trees) need the room to reach the
+        // per-operator details
         println(df.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted")).take(60000))
       else

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps formatted physical plans for the headline queries → PLANS.md.
   * Evidence artifact for the plan-shape claims (pushdown, pruning,
   * broadcast, top-k fusion, zero-shuffle bucketing, annotation rewrite).
@@ -12,15 +10,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .withExtensions(graft.opt.AnnotationRewrite.inject)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = Session()
     spark.sparkContext.setLogLevel("ERROR")
     val keys = Seq(
       "filter_predicate", "scan_projection_pushdown", "join_broadcast_hash",

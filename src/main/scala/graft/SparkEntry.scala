@@ -18,8 +18,9 @@ object SparkEntry {
     *     dedup_semdedup_cluster), the char-bigram LM
     *     (quality_perplexity_proxy), the top-1000 bigram set
     *     (text_bigram_coverage), the minhash near-pair table reused by the
-    *     component loop (dedup_cluster_components) and the converged labels
-    *     it feeds (dedup_corpus_filter);
+    *     component loop (dedup_cluster_components), the converged labels
+    *     it feeds (dedup_corpus_filter) and the learned bucket cuts of
+    *     agg_weighted_median;
     *   - done-marker-staged input layouts (a Spark write job runs once per
     *     JVM; repeats time only the read path, which IS the operator under
     *     test): manifest/lineage dirs, bloom/partitioned/bucketed layouts,
@@ -45,7 +46,7 @@ object SparkEntry {
     "stream_rate_limited_ingest", "stream_checkpoint_recovery",
     "stream_tumbling_window",
     "stream_sliding_window", "stream_session_window", "stream_chained_agg",
-    "stream_outer_join_nulls")
+    "stream_outer_join_nulls", "agg_weighted_median")
 
   /** Keys whose DuckDB oracle reads an artifact COMPUTED by the Spark
     * kernel under test (the staged-signature / staged-bound discipline):
@@ -53,9 +54,9 @@ object SparkEntry {
     * joins, exact integer/percentile arithmetic, error bounds vs DuckDB's
     * own exact counts — but the kernel step itself is covered by property
     * specs, not by a second engine. Flagged in the bench artifact so
-    * consumers can distinguish the two verification strengths (round-11
-    * advisor). Round 14 shrank the staged surfaces to the genuinely
-    * non-relational residue (SURVEY §5.7): phash stages raw 9×8 luma
+    * consumers can distinguish the two verification strengths. Staged
+    * surfaces are kept to the genuinely non-relational residue
+    * (SURVEY §5.7): phash stages raw 9×8 luma
     * grids and the oracle REFOLDS the dHash in SQL (only PNG decode stays
     * kernel-only — DuckDB has no image codec); the two k-means keys stage
     * ONLY centroids and the oracle re-derives argmin assignment, probe

@@ -1,34 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
-/** Diagnostic main (round-15 stream-overhead work): runs one stream key
-  * repeatedly and prints each micro-batch's durationMs breakdown from the
-  * StreamingQueryListener, so the fixed per-run cost can be attributed
-  * (triggerExecution vs walCommit vs stateStore commit vs addBatch) before
-  * touching any tuning knob. Not part of the driver contract.
+/** Diagnostic main: runs one stream key repeatedly under the bench's
+  * [[Session]] posture and prints each micro-batch's durationMs breakdown
+  * from the StreamingQueryListener, so the fixed per-run cost can be
+  * attributed (triggerExecution vs walCommit vs stateStore commit vs
+  * addBatch) before touching any tuning knob. Usage:
+  * `runMain graft.StreamProbe [<key> [<reps>]]`.
   */
 object StreamProbe {
   def main(args: Array[String]): Unit = {
     val key = args.lift(0).getOrElse("stream_tumbling_window")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
-    val scratch = "/dev/shm/graft_stream_probe"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(scratch))
-    new java.io.File(scratch).mkdirs()
-    sys.props("java.io.tmpdir") = scratch
-    val spark = SparkSession.builder()
-      .config("spark.local.dir", scratch)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(tmpfsScratch = true)
     spark.streams.addListener(new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
         println(s"[probe] started ${e.id} at ${System.nanoTime() / 1000000}ms")
@@ -41,11 +27,6 @@ object StreamProbe {
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
         println(s"[probe] terminated at ${System.nanoTime() / 1000000}ms")
     })
-    sys.env.get("PROBE_MAX_PART_BYTES")
-      .foreach(v => spark.conf.set("spark.sql.files.maxPartitionBytes", v))
-    if (sys.env.get("PROBE_ROCKSDB").contains("1"))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(
           sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{QueryDef, Tables}
+import graft.{Ckpt, QueryDef, Tables}
 
 /** Corpus-level curation operators (SURVEY §2.L addendum): statistics that
   * look across the whole documents table rather than within one row —
@@ -16,7 +16,7 @@ import graft.{QueryDef, Tables}
   *     which stays millions of rows at 100 TB — far under the fact side.
   *   - Scores are exact integers (micro-units, floor division) so ranking is
   *     bit-identical in Spark and DuckDB; no IEEE log/division ordering
-  *     hazards (graft-round2 lesson).
+  *     hazards.
   */
 object Corpus {
 
@@ -57,7 +57,7 @@ object Corpus {
     * contain spaces, they come from space-split words).
     */
   /** The trainer CTE chain (w0/s0, per-round p_r/b_r/s_r) shared by the
-    * train oracle and the round-13 apply oracle — b_r holds round r's
+    * train oracle and the apply oracle — b_r holds round r's
     * winning pair as a scalar-subquery-able one-row table.
     */
   private def bpeCtes: String = {
@@ -89,7 +89,7 @@ object Corpus {
       ") ORDER BY rank"
   }
 
-  /** Round-13 apply oracle: re-derives the merge list (the trainer chain's
+  /** Apply oracle: re-derives the merge list (the trainer chain's
     * b_r tables) from the base table, then encodes every document — the
     * per-word double-space segmentation, the SAME eight literal replaces in
     * rank order, token/symbol counts and the first-8-token stream (word
@@ -118,7 +118,7 @@ object Corpus {
     sb.toString
   }
 
-  /** Round-14 fertility oracle: re-derives the trainer chain's merges from
+  /** Fertility oracle: re-derives the trainer chain's merges from
     * the base table, encodes every word (the same replace chain as the
     * apply oracle, without positional bookkeeping), and aggregates the
     * tokenizer-evaluation ratios per language in exact integer micro-units.
@@ -161,7 +161,7 @@ object Corpus {
         concat(lit("  "),
           array_join(expr("filter(split(word, ''), x -> x != '')"), "  "),
           lit("  ")).as("seq"))
-    var (cur, ids) = Llm.ckpt(words)
+    var (cur, ids) = Ckpt(words)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
     for (r <- 1 to BpeMerges) {
       val best = cur
@@ -179,7 +179,7 @@ object Corpus {
       merges += ((r.toLong, pair, best(0).getLong(1)))
       if (r < BpeMerges) {
         val Array(a, b) = pair.split(" ", 2)
-        val (nxt, nids) = Llm.ckpt(cur.withColumn("seq",
+        val (nxt, nids) = Ckpt(cur.withColumn("seq",
           replace(col("seq"), lit(s" $a  $b "), lit(s" $a$b "))))
         cur = nxt
         ids = ids ++ nids
@@ -187,7 +187,7 @@ object Corpus {
     }
     // every job that reads the checkpoints has completed (ckpt is
     // eager, the argmax collects are the only consumers) — release now
-    Llm.release(s, ids)
+    Ckpt.release(s, ids)
     merges.toSeq
   }
 
@@ -271,7 +271,7 @@ object Corpus {
     // per round, the components-loop driver posture), apply the merge with
     // a literal replace over the double-space-delimited segmentation (see
     // [[bpeOracle]] for why that is exactly BPE's greedy merge), and
-    // localCheckpoint the new segmentation (Llm.ckpt: each round's plan
+    // localCheckpoint the new segmentation (Ckpt: each round's plan
     // reads the previous round twice — pair count + merge apply — so
     // without the cut the lineage doubles per round). All checkpoint
     // blocks are released after the loop: the output (rank, pair, freq)
@@ -286,7 +286,7 @@ object Corpus {
         trainBpeMerges(s, d).toDF("rank", "pair", "freq").orderBy("rank")
       }),
 
-    // Tokenizer family step 3 (round 13): APPLY the trained merges — encode
+    // Tokenizer family step 3: APPLY the trained merges — encode
     // every document with the 8-merge BPE the trainer produced, the step a
     // pipeline runs over the whole corpus once training converges. Per-word
     // segmentations use the trainer's double-space string representation,
@@ -329,7 +329,7 @@ object Corpus {
           .orderBy("doc_id")
       }),
 
-    // Tokenizer family step 4 (round 14): EVALUATE the trained tokenizer —
+    // Tokenizer family step 4: EVALUATE the trained tokenizer —
     // per-language fertility (encoded tokens per word) and compression
     // (chars per token), the standard multilingual tokenizer-quality
     // metrics (a tokenizer trained on one language's distribution encodes
@@ -437,7 +437,7 @@ object Corpus {
           "FROM (SELECT lang, string_split(text, ' ') AS w FROM documents)))) " +
           "GROUP BY lang ORDER BY lang"),
       (s, d) => {
-        // spread before the HOF pass (r17): documents is a single-split
+        // spread before the HOF pass: documents is a single-split
         // file at bench scales, so the gram/distinct kernels and the
         // map-side partial aggregate otherwise run on one core. No filter
         // sits between the spread and the aggregate, so nothing sinks the
@@ -496,9 +496,9 @@ object Corpus {
       (s, d) => {
         // spread: the regex tokenize + term-filter HOFs are per-row work —
         // parallelize off the single-row-group local scan.
-        // Ckpt.slot (r17): the per-doc (dl, tf1..tf3) table feeds BOTH the
+        // Ckpt.slot: the per-doc (dl, tf1..tf3) table feeds BOTH the
         // corpus-stats aggregate and the scoring join — without the
-        // checkpoint each consumer re-ran the regex tokenize over the whole
+        // checkpoint each consumer re-runs the regex tokenize over the whole
         // corpus (two full passes). The materialized table is 5 longs per
         // doc; the checkpoint executes inside the timed invocation and the
         // corpus is now scanned once. Solo gate measurement in

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{Q, QueryDef, Tables}
+import graft.{Ckpt, Q, QueryDef, Tables}
 import graft.udx.{BandExpr, Udx}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -29,13 +29,13 @@ object Llm {
   val ExactCosineMaxRows: Long = 10000L
 
   /** Per-source distinct-content cap for the declared-exact gram-pair
-    * kernels (dedup_ngram_jaccard / dedup_containment) — see the round-13
+    * kernels (dedup_ngram_jaccard / dedup_containment) — see the
     * quarantine note inside [[collapsedPairSim]].
     */
   val GramPairMaxReps: Long = 16384L
 
   /** Fixed staging path for the simhash signature table — a Spark-side
-    * PERFORMANCE artifact since round 12: the per-doc signature kernel
+    * PERFORMANCE artifact only: the per-doc signature kernel
     * runs once per (JVM, dataset) and the query's banding reads it, but
     * the ORACLE recomputes the md5-token-hash bit-vote signature from the
     * base table independently. Fixed path (no dataset hash) because the
@@ -46,16 +46,16 @@ object Llm {
     val SimhashSigDir = s"${sys.props("java.io.tmpdir")}/graft_simhash_sig"
 
   /** Fixed staging path for the sign-LSH bucket table — a Spark-side
-    * PERFORMANCE artifact since round 12 (the fold runs once per (JVM,
-    * dataset); the query's bucket join reads it). The ORACLE no longer
-    * reads it: the seed-42 planes inline into the SQL and DuckDB
-    * recomputes the sign fold from the base table (see [[LshPlanes]]).
+    * PERFORMANCE artifact only (the fold runs once per (JVM, dataset); the
+    * query's bucket join reads it). The ORACLE does not read it: the
+    * seed-42 planes inline into the SQL and DuckDB recomputes the sign
+    * fold from the base table (see [[LshPlanes]]).
     */
   val LshBucketDir = s"${sys.props("java.io.tmpdir")}/graft_lshbuckets"
 
   /** The 8 signed hyperplanes of the LSH fold — a FIXED, seed-42 ±1
     * pattern shared verbatim by the Spark kernel (inlined literal array)
-    * and, since round 12, by the DuckDB oracle (inlined [±1.0,…] lists in
+    * and the DuckDB oracle (inlined [±1.0,…] lists in
     * list_dot_product), so both engines compute the bucket fold
     * independently — the identical sequential double accumulation as the
     * cosine discipline (see cosCol/duckCos).
@@ -69,7 +69,7 @@ object Llm {
     import java.nio.file.{Files, Paths}
     // marker value is a CONTENT fingerprint, not the bare path — in-place
     // regeneration (GenScale rehearsal) must force a re-stage or both
-    // engines silently agree on stale data (round-11 advisor finding)
+    // engines silently agree on stale data
     val fp = Tables.fingerprint(d, "embeddings")
     val marker = Paths.get(LshBucketDir, "_dataset")
     if (Files.exists(marker) && Files.readString(marker) == fp) return
@@ -83,19 +83,18 @@ object Llm {
     Files.writeString(marker, fp)
   }
 
-  /** Fixed staging path for the PHYSICAL Matryoshka prefix column
-    * (round-13 judge task #6): sim_mrl_rerank's coarse pass previously
-    * sliced the full 64-dim column in-flight, so its claimed 4× IO
-    * reduction was semantic only — the scan still read every byte. The
-    * staged table carries ONLY (vec_id, emb16 = first 16 dims), written
-    * once per dataset fingerprint; the coarse top-20 ranking reads this
-    * table EXCLUSIVELY (PlanSpec pins its scan's ReadSchema), and the
-    * 64-dim base column is read solely by the O(20·|Q|) rerank join. At
+  /** Fixed staging path for the PHYSICAL Matryoshka prefix column:
+    * slicing the full 64-dim column in-flight would make sim_mrl_rerank's
+    * coarse-pass 4× IO reduction semantic only — the scan would still read
+    * every byte. The staged table carries ONLY (vec_id, emb16 = first 16
+    * dims), written once per dataset fingerprint; the coarse top-20 ranking
+    * reads this table EXCLUSIVELY (PlanSpec pins its scan's ReadSchema), and
+    * the 64-dim base column is read solely by the O(20·|Q|) rerank join. At
     * 100 TB this is the real MRL serving layout: the wide column stays in
     * cold storage and the funnel's first stage scans a ~4×-narrower file
-    * (measured bytes ratio in PLANS.md). A performance artifact only —
-    * the oracle derives the same prefix from the base table via
-    * embedding[1:16], so verification stays fully independent.
+    * (measured bytes ratio in PLANS.md). A performance artifact only — the
+    * oracle derives the same prefix from the base table via embedding[1:16],
+    * so verification stays fully independent.
     */
   private val MrlPrefixDir = s"${sys.props("java.io.tmpdir")}/graft_mrl_prefix"
   private[graft] def mrlPrefixDataDir: String = s"$MrlPrefixDir/data"
@@ -120,14 +119,14 @@ object Llm {
     */
   private def stageSimhashSigs(s: SparkSession, d: String): Unit = {
     import java.nio.file.{Files, Paths}
-    // content-fingerprint marker + kernel-version tag (round-12 fnv64 ->
-    // md5 switch must invalidate staged artifacts on unchanged data)
+    // content-fingerprint marker + kernel-version tag (a hash-kernel
+    // change must invalidate staged artifacts on unchanged data)
     val fp = "md5sim|" + Tables.fingerprint(d, "documents")
     val marker = Paths.get(SimhashSigDir, "_dataset")
     if (Files.exists(marker) && Files.readString(marker) == fp) return
     val simhashUdf = udf { (text: String) =>
       val cnt = new Array[Int](64)
-      // md5-derived per-token 64-bit hash (round 12): the first 8 digest
+      // md5-derived per-token 64-bit hash: the first 8 digest
       // bytes big-endian == the first 16 hex chars both engines parse, so
       // the DuckDB oracle recomputes the whole signature independently
       val md = java.security.MessageDigest.getInstance("MD5")
@@ -215,7 +214,7 @@ object Llm {
     * With sameLabelOnly the LABEL joins the shuffle key: tasks become
     * (label, block-pair), so vectors of different labels are never shuffled
     * into the same group (a label-blind key paid O(|task|²) label checks
-    * per task — the round-6 watch item) and a hot label spreads across its
+    * per task) and a hot label spreads across its
     * own B² tasks instead of melting one; grow B when a group outgrows two
     * blocks per executor.
     */
@@ -243,7 +242,7 @@ object Llm {
     // same-length, same-endpoint arrays.
     // Checkpointed once per run for the same four-consumer reason as
     // [[collapsedPairSim]].
-    val (grouped, ckptIds) = ckpt(Tables.t(s, d, "embeddings")
+    val (grouped, ckptIds) = Ckpt(Tables.t(s, d, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding"))
       .groupBy((if (sameLabelOnly) Seq(col("label").as("gl")) else Nil) ++
         Seq(xxhash64(col("embedding")).as("eh"),
@@ -256,7 +255,7 @@ object Llm {
         col("members")(0)("vec_id").as("gid"),
         col("members")(0)("label").as("glabel")))
     Option(collapseFinal.put((s, s"$d#cos#$sameLabelOnly#$tau"), (grouped, ckptIds)))
-      .foreach { case (_, oldIds) => release(s, oldIds) }
+      .foreach { case (_, oldIds) => Ckpt.release(s, oldIds) }
     // replicate each representative to the B block-pair groups it
     // participates in: its own block's diagonal pair plus one per other
     // block (normalized to p <= q, so each unordered pair meets in exactly
@@ -352,9 +351,8 @@ object Llm {
 
   private[llm] val shinglesFromW = s"array_distinct($gramsFromW)"
 
-  /** DuckDB BAND-THEN-VERIFY near-dup CTE chain (round 13 — replaces the
-    * brute-force all-pairs oracle, whose O(N²) list-intersections were
-    * intractable at sf0.1 and forced 3 keys out of the full-scale sweep):
+  /** DuckDB BAND-THEN-VERIFY near-dup CTE chain (a brute-force all-pairs
+    * oracle's O(N²) list-intersections are intractable at sf0.1):
     * recomputes the ENTIRE Spark pipeline from the base table — per-doc
     * distinct 5-gram strings, md5-derived signed-64 gram hashes, the
     * 64-perm HUGEINT signature fold (exact Udx.MinHashSig mirror, the
@@ -428,7 +426,7 @@ object Llm {
 
   private def minhashStateFresh(s: SparkSession, d: String): MinhashState = {
     val st = minhashStateUncached(s, d)
-    Option(minhashCache.put((s, d), st)).foreach(old => release(s, old.ids))
+    Option(minhashCache.put((s, d), st)).foreach(old => Ckpt.release(s, old.ids))
     st
   }
 
@@ -442,8 +440,8 @@ object Llm {
     // 5-gram on the fly (never materializing shingle strings), fold the hash
     // into the 64-perm MinHash signature, and keep the sorted distinct gram
     // hashes for exact verification. Narrow (no shuffle), one text scan —
-    // round 2 materialized + persisted full shingle-string arrays and
-    // re-joined them twice, which dominated the 18 s bench entry.
+    // materializing full shingle-string arrays and re-joining them twice
+    // measured 18 s.
     val base = docsSigGrams(s, d).toDF("doc_id", "sig", "gh")
     // Exact-dup collapse: one row per distinct gram set. The group key is
     // xxhash64 over the sorted gram hashes plus length/endpoint
@@ -451,7 +449,7 @@ object Llm {
     // ~10^10 distinct sets); sig is a pure function of the gram hash set so
     // first() is deterministic, and the partial-agg first/collect_list ship
     // one gram array per (group, partition) and 8-byte ids respectively.
-    val (grouped, gIds) = ckpt(base
+    val (grouped, gIds) = Ckpt(base
       .groupBy(xxhash64(col("gh")).as("k"), size(col("gh")).as("kn"),
         try_element_at(col("gh"), lit(1)).as("k0"),
         try_element_at(col("gh"), lit(-1)).as("k1"))
@@ -460,20 +458,20 @@ object Llm {
       .withColumn("gid", col("members")(0))
       .select(col("gid"), col("members"), col("sig"), col("gh")))
     // Band key = the RAW 2-perm slice (band, s1, s2) rather than a hash of
-    // it (round 13): an engine-specific hash (xxhash64) can only ADD
+    // it: an engine-specific hash (xxhash64) can only ADD
     // candidates via collisions, which a cross-engine banded oracle cannot
     // reproduce — raw slices make the candidate set a pure function of the
     // signatures, identical in both engines, at the cost of an 8-byte-wider
     // shuffle key.
-    // First-match-only candidate dedup (round 16, ports the round-15
-    // sim_join_lsh_threshold fix): each band row carries the PREFIX of the
+    // First-match-only candidate dedup (as in sim_join_lsh_threshold):
+    // each band row carries the PREFIX of the
     // raw signature strictly before its own band (avg 31 longs — half the
     // full 64-perm payload), and a pair is emitted only from its lowest
     // matching band: `first_match_band(pre, pre, 2) = -1` ⟺ no band < b
-    // also matched. Identical "shares ≥1 band" pair set as the old global
-    // `.distinct()` — but with ZERO dedup state (the distinct was a hash
-    // aggregate holding the full candidate-pair set, the round-14
-    // gate-config OOM class). The filter is a codegen long-compare loop
+    // also matched. Identical "shares ≥1 band" pair set as a global
+    // `.distinct()` — but with ZERO dedup state (a distinct is a hash
+    // aggregate holding the full candidate-pair set, which OOMs at the
+    // 32-thread/16 g gate config). The filter is a codegen long-compare loop
     // per candidate row, no allocation.
     BandExpr.register(s)
     val bands = grouped.select(col("gid"),
@@ -495,7 +493,7 @@ object Llm {
       }
       round6(inter.toDouble / (a.length + b.length - inter).toDouble)
     }
-    val (matched, mIds) = ckpt(cand
+    val (matched, mIds) = Ckpt(cand
       .join(grouped.select(col("gid").as("ga"), col("gh").as("gha")), "ga")
       .join(grouped.select(col("gid").as("gb"), col("gh").as("ghb")), "gb")
       .withColumn("jac", jacUdf(col("gha"), col("ghb")))
@@ -530,7 +528,7 @@ object Llm {
   /** md5-derived signed-64 hash of a string: first 8 digest bytes
     * big-endian — the same two's-complement value DuckDB computes as
     * `('0x' || substr(md5(x), 1, 16))::UBIGINT` re-centered at 2^63 (the
-    * round-12 cross-engine hash toolkit). Callers pass a per-partition
+    * cross-engine hash toolkit). Callers pass a per-partition
     * MessageDigest (digest() resets it after each call).
     */
   private[llm] def md5hash64(md: java.security.MessageDigest, s: String): Long = {
@@ -541,7 +539,7 @@ object Llm {
   /** (doc_id, minhash sig, sorted distinct 5-gram hashes) per document
     * with ≥5 tokens. split semantics match Spark/DuckDB `split(text, ' ')`
     * (interior AND trailing empties kept, hence the -1 limit). Gram hashes
-    * are the md5-derived signed-64 values (round 13 — was fnv64) so the
+    * are the md5-derived signed-64 values so the
     * DuckDB oracle can recompute the ENTIRE pipeline — hashes, 64-perm
     * signature, banding, exact Jaccard — from the base table, which is
     * what makes a band-then-verify (sf0.1-tractable) oracle possible.
@@ -635,7 +633,7 @@ object Llm {
   private def lshJoinThreshold(s: SparkSession, d: String): DataFrame = {
     val sp = s
     import sp.implicits._
-    val (grouped, ckptIds) = ckpt(lshJoinInput(s, d)
+    val (grouped, ckptIds) = Ckpt(lshJoinInput(s, d)
       .groupBy(xxhash64(col("emb")).as("eh"), size(col("emb")).as("en"),
         try_element_at(col("emb"), lit(1)).as("e0"),
         try_element_at(col("emb"), lit(-1)).as("e1"))
@@ -643,7 +641,7 @@ object Llm {
         first(col("emb")).as("emb"))
       .select(col("members"), col("emb"), col("members")(0).as("gid")))
     Option(collapseFinal.put((s, s"$d#lshjoin"), (grouped, ckptIds)))
-      .foreach { case (_, oldIds) => release(s, oldIds) }
+      .foreach { case (_, oldIds) => Ckpt.release(s, oldIds) }
     val nBands = LshJoinBands
     val nR = LshJoinR
     // Each rep carries ALL 16 band keys (one JVM pass over the planes);
@@ -676,21 +674,20 @@ object Llm {
       .select(col("gid"), col("keys"),
         explode(expr(s"sequence(0, ${nBands - 1})")).as("band"))
       .select(col("band"), expr("keys[band]").as("bkey"), col("gid"), col("keys"))
-    // FIRST-MATCH-ONLY candidate dedup (round-15 judge task #4): the old
-    // `.distinct()` was a hash aggregate holding EVERY candidate pair —
-    // ~2e-3·N² rows at the sf10-distinct regime — which is what exhausted
-    // execution memory under the 32-thread/16 g gate config. Emitting a
+    // FIRST-MATCH-ONLY candidate dedup: a `.distinct()` would be a hash
+    // aggregate holding EVERY candidate pair — ~2e-3·N² rows at the
+    // sf10-distinct regime — which exhausts execution memory under the
+    // 32-thread/16 g gate config. Emitting a
     // pair only from its LOWEST matching band (both sides carry all 16
     // keys; a pair whose earlier band also matches is dropped where it is
     // produced) yields the identical "shares ≥1 band" pair set with ZERO
     // dedup state: the band join streams, the filter is per-row, and peak
     // memory is bounded by one (band,bkey) SMJ buffer group (~N/4096 reps)
-    // regardless of candidate mass. Round 16: the per-candidate
-    // `NOT exists(zip_with(slice, slice))` HOF (two array slices + a
-    // zipped boolean array allocated PER CANDIDATE — the +37% s_per_pair
-    // rise at the sf10-distinct regime, BENCH_sf10.json) is replaced by
-    // the codegen [[graft.udx.FirstMatchBand]] loop: zero allocation,
-    // early exit at the join's own band.
+    // regardless of candidate mass. The check is the codegen
+    // [[graft.udx.FirstMatchBand]] loop — zero allocation, early exit at
+    // the join's own band — not a `NOT exists(zip_with(slice, slice))`
+    // HOF, which allocates two slices and a zipped array PER CANDIDATE
+    // (+37% s_per_pair at the sf10-distinct regime, BENCH_sf10.json).
     graft.udx.BandExpr.register(s)
     val cand = bandRows.as("x").join(bandRows.as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
@@ -802,7 +799,7 @@ object Llm {
       cacheKey: String): DataFrame = {
     import sp.implicits._
     val B = 4
-    val (grouped, ckptIds) = ckpt(docs.toDF("source", "doc_id", "grams")
+    val (grouped, ckptIds) = Ckpt(docs.toDF("source", "doc_id", "grams")
       // gh alone is a 64-bit birthday hazard at corpus scale (see the
       // cosine collapse): length + endpoint discriminators ride along in
       // the group key so a hash collision can only merge same-hash,
@@ -815,9 +812,9 @@ object Llm {
         first(col("grams")).as("grams"))
       .withColumn("gid", col("members")(0)))
     Option(collapseFinal.put((sp, cacheKey), (grouped, ckptIds)))
-      .foreach { case (_, oldIds) => release(sp, oldIds) }
-    // Round-13 quarantine (the distinct-content rehearsal stamped
-    // exponents 1.32/1.21 on the two callers — collapse only absorbs
+      .foreach { case (_, oldIds) => Ckpt.release(sp, oldIds) }
+    // Quarantine (the distinct-content rehearsal measured exponents
+    // 1.32/1.21 on the two callers — collapse only absorbs
     // string-identical replicas, so on DISTINCT content the rep kernel
     // pays O(max_source_reps²) by declared-exact design): fail fast past
     // the cap instead of silently melting at corpus scale, pointing at
@@ -898,7 +895,7 @@ object Llm {
     * like [[minhashCache]]: `dedup_cluster_components` always recomputes the
     * propagation loop (fresh — bench repeats stay honest) and swaps the
     * result in; `dedup_corpus_filter` reuses the converged labels instead
-    * of paying the whole loop a second time (the round-3 double-pay).
+    * of paying the whole loop a second time.
     * Entries are SELF-CONTAINED checkpoints (the expanded per-doc labels),
     * so a later minhash-state swap releasing `grouped`'s blocks cannot
     * orphan a cached label entry's lineage.
@@ -918,16 +915,10 @@ object Llm {
     // getPersistentRDDs until a driver GC) — the checkpoint's RDD ids are
     // captured at creation and freed here by id instead.
     Option(labelsCache.put((s, d), (labels, ids)))
-      .foreach { case (_, oldIds) => release(s, oldIds) }
+      .foreach { case (_, oldIds) => Ckpt.release(s, oldIds) }
     labels
   }
 
-  /** Eager localCheckpoint plus the ids of the persistent-RDD blocks it
-    * created, so superseded loop state can be released explicitly (see
-    * [[clusterLabelsFresh]]). Id-diffing is sound here because the
-    * propagation loop is the only persist activity while it runs (serial
-    * driver; the loop's child session shares the one SparkContext).
-    */
   /** Superseded-checkpoint registry for the collapse kernels, released by
     * id on the next run of the same call site (the triangle/labels
     * discipline: explicit release, never ContextCleaner GC, so repeated
@@ -939,21 +930,6 @@ object Llm {
     */
   private val collapseFinal =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, Seq[Int])]()
-
-  private[llm] def ckpt(df: DataFrame): (DataFrame, Seq[Int]) = {
-    // backend selected by GRAFT_RELIABLE_CKPT — see graft.Ckpt
-    val (out, ids) = graft.Ckpt(df)
-    if (sys.env.contains("GRAFT_CKPT_DEBUG"))
-      Console.err.println(s"[ckpt] +$ids from ${Thread.currentThread.getStackTrace()(3)}")
-    (out, ids)
-  }
-
-  private[llm] def release(s: SparkSession, ids: Seq[Int]): Unit = {
-    val live = s.sparkContext.getPersistentRDDs
-    if (sys.env.contains("GRAFT_CKPT_DEBUG"))
-      Console.err.println(s"[release] -$ids (live=${ids.map(live.contains)}) from ${Thread.currentThread.getStackTrace()(3)}")
-    ids.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
-  }
 
   /** Connected components over the near-dup pair graph: Spark-native
     * union-find via iterative min-label propagation with pointer doubling —
@@ -968,23 +944,22 @@ object Llm {
     * each round references the previous labels twice (neighbour-min join +
     * self-join), so without truncation the analyzed plan DOUBLES per round
     * and driver-side analysis/canonicalization goes exponential — that, not
-    * executor work, was the round-3 bench regression (a re-count of fully
-    * cached labels took 15 s of pure driver time by round 2). With
+    * executor work, is what it costs (a re-count of fully cached labels
+    * measured 15 s of pure driver time). With
     * truncation each round plans against a constant-size LogicalRDD. On a
     * real cluster you would use reliable `checkpoint()` (or a parquet
     * round-trip) instead for executor-loss tolerance. Superseded rounds'
     * blocks are released explicitly at round end, keeping live block count
-    * O(1) in rounds — round 5 left them to the ContextCleaner, which let
-    * blocks pile up across runs (bench +38% on this key) and made the
-    * hygiene test race driver GC.
+    * O(1) in rounds — left to the ContextCleaner they pile up across runs
+    * (+38% bench time on this key) and the hygiene test races driver GC.
     *
     * The loop runs on a CHILD session (`newSession`: shared context and
     * block manager, isolated SQL conf) pinned to 4 shuffle partitions —
     * each round is 4-5 shuffle stages over the tiny verified pair graph,
     * where 32 partitions would be pure task-launch overhead; at real scale
     * the cap tracks edge volume. The child session means the cap cannot
-    * bleed into a concurrently planned query in the caller's session
-    * (round-5 judge finding). Edges enter and labels leave the loop as
+    * bleed into a concurrently planned query in the caller's session.
+    * Edges enter and labels leave the loop as
     * checkpointed-RDD transplants, so callers never touch a child-session
     * Dataset.
     */
@@ -1006,10 +981,10 @@ object Llm {
     val loopS = s.newSession()
     loopS.conf.set("spark.sql.shuffle.partitions", "4")
     val undirected = gidPairs.union(gidPairs.select(col("j").as("i"), col("i").as("j")))
-    val (edges, edgeIds) = ckpt(loopS.createDataFrame(undirected.rdd, undirected.schema))
+    val (edges, edgeIds) = Ckpt(loopS.createDataFrame(undirected.rdd, undirected.schema))
     val allNodes = edges.select(col("i").as("node"))
       .union(loopS.createDataFrame(cliqueNodes.rdd, cliqueNodes.schema))
-    var (labels, labelIds) = ckpt(
+    var (labels, labelIds) = Ckpt(
       allNodes.distinct().withColumn("label", col("node")))
     // One propagation step composed LINEAGE-ONLY (no action, no ckpt):
     // neighbour-min + pointer doubling, `prev` carried through untouched.
@@ -1032,26 +1007,26 @@ object Llm {
     }
     var changed = 1L
     while (changed > 0) {
-      // TWO propagation rounds per Spark job (round-16 judge task #5): at
+      // TWO propagation rounds per Spark job: at
       // tiny data each round's cost is job submission + planning, not
       // executor work (decade-2 exponent −0.02), so composing two rounds
       // before the single materializing action halves the job count per
-      // propagated round — and one iteration now advances 2 neighbour hops
+      // propagated round — and one iteration advances 2 neighbour hops
       // + 2 pointer chases, so iterations to converge shrink too. AQE's
       // exchange reuse dedupes the shared subtree between the composed
       // steps' self-joins. Semantically a no-op: the fixed point of the
       // double step is exactly the fixed point of the single step.
-      val (updated, updatedIds) = ckpt(
+      val (updated, updatedIds) = Ckpt(
         step(step(labels.withColumn("prev", col("label"))))
           .select(col("node"), col("prev"), col("label")))
       changed = updated.where(col("label") < col("prev")).count()
       // the superseded labels are dead once `updated` is materialized:
       // free them before the next round
-      release(s, labelIds)
+      Ckpt.release(s, labelIds)
       labels = updated.select(col("node"), col("label"))
       labelIds = updatedIds
     }
-    release(s, edgeIds)
+    Ckpt.release(s, edgeIds)
     // transplant the converged (checkpoint-backed) gid labels into the
     // caller's session so downstream joins never mix Datasets across
     // sessions, then expand to per-doc labels through the membership table
@@ -1060,10 +1035,10 @@ object Llm {
     // minhash-state swap releasing `grouped`'s blocks.
     val gidLabels = s.createDataFrame(labels.rdd, labels.schema)
     val mem = st.grouped.select(col("gid"), explode(col("members")).as("m"))
-    val (expanded, expandedIds) = ckpt(gidLabels
+    val (expanded, expandedIds) = Ckpt(gidLabels
       .join(mem.select(col("gid").as("node"), col("m")), "node")
       .select(col("m").as("node"), col("label")))
-    release(s, labelIds)
+    Ckpt.release(s, labelIds)
     (expanded, expandedIds)
   }
 
@@ -1084,11 +1059,11 @@ object Llm {
     // aggregator) → exact-dup collapse (one rep per distinct gram set) →
     // 32 bands × 2 raw-slice keys over reps → candidate pairs via band
     // equi-join → exact Jaccard verification ≥ 0.5 → expansion back to id
-    // pairs (output-bounded). FULLY INDEPENDENT banded oracle (round 13 —
-    // was a brute-force pair scan, quadratic and sf0.1-intractable):
+    // pairs (output-bounded). FULLY INDEPENDENT banded oracle (a
+    // brute-force pair scan is quadratic and sf0.1-intractable):
     // DuckDB recomputes gram hashes, signatures, banding and the exact
     // verify from the base table ([[duckBandedNearPairs]]) — the oracle's
-    // complexity now matches the operator's, so the full-scale sweep can
+    // complexity matches the operator's, so the full-scale sweep can
     // include this key. Band recall at the planted-dup similarity (~0.9)
     // is 1 - (1-s²)³² ≈ 1 (identical sets always pair at Jaccard 1.0);
     // candidates are exactly verified in both engines.
@@ -1099,7 +1074,7 @@ object Llm {
           "SELECT i, j, jac FROM p WHERE jac >= 0.5 ORDER BY i, j"),
       (s, d) => minhashNearPairsFromState(s, minhashStateFresh(s, d)).orderBy("i", "j")),
 
-    // L2c — INCREMENTAL near-dup (round 14): a new ingest batch (doc_id %
+    // L2c — INCREMENTAL near-dup: a new ingest batch (doc_id %
     // 10 = 5 — a GenScale-stable split, 10⁹ ≡ 0 mod 10, chosen so the
     // batch demonstrably CONTAINS near-dup hits at the gate scale: an
     // all-novel output would let a broken kernel pass trivially) deduped
@@ -1149,7 +1124,7 @@ object Llm {
             first(col("gh")).as("gh"), first(col("sig")).as("sig"))
           .select(col("members")(0).as("gid"), col("members"),
             col("sig"), col("gh"))
-        // First-match-only candidate dedup (round 16, same discipline as
+        // First-match-only candidate dedup (same discipline as
         // dedup_minhash_near): both the batch probe and the persisted index
         // band rows carry the raw-signature prefix before their band; a
         // (batch doc, index group) candidate is emitted only from its
@@ -1292,12 +1267,12 @@ object Llm {
         val bands = grouped.select(col("gid"), col("sim"),
           explode(expr("transform(sequence(0, 3), p -> struct(p AS band, shiftright(sim, p*16) & 65535 AS bkey))")).as("bb"))
           .select(col("gid"), col("sim"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
-        // First-match-only candidate dedup (round 16): the 4 bands are
+        // First-match-only candidate dedup: the 4 bands are
         // 16-bit fields of the one `sim` long already on the band row, so
         // "an earlier band also matches" is pure bit arithmetic over
         // x.sim ^ y.sim — a pair is kept only where its LOWEST zero 16-bit
-        // xor group equals the join's own band. Identical pair set as the
-        // old `.distinct()` (which held every candidate pair in a hash
+        // xor group equals the join's own band. Identical pair set as
+        // a `.distinct()` (which holds every candidate pair in a hash
         // aggregate — peak_mb_distinct 258.5 at sf10, BENCH_sf10.json)
         // with zero state and zero extra shuffle payload.
         val repPairs = bands.as("x").join(bands.as("y"),
@@ -1521,15 +1496,15 @@ object Llm {
       Some(lshJoinOracle),
       (s, d) => lshJoinThreshold(s, d)),
 
-    // L4c — Matryoshka (MRL) coarse-search / fine-rerank funnel (round 13):
+    // L4c — Matryoshka (MRL) coarse-search / fine-rerank funnel:
     // rank ALL candidates by cosine over the FIRST 16 of 64 dims (the 4×
     // cheaper truncated prefix an MRL-trained embedding is built to make
     // meaningful), keep top-20 per query, exactly re-rank those 20 by
     // full-dim cosine, emit top-5 — the standard two-stage serving funnel
     // where the expensive metric touches only a constant-size candidate
     // set per query. The coarse pass reads a PHYSICALLY narrower staged
-    // prefix table (round 14 — see [[MrlPrefixDir]]; previously it sliced
-    // the wide column in-flight, so the 4× IO claim was semantic only);
+    // prefix table (see [[MrlPrefixDir]]; slicing the wide column
+    // in-flight would make the 4× IO claim semantic only);
     // the rerank is O(20) per query against the wide base column. Both
     // stages rank on round-6 sims under total orders (the cross-engine
     // tie discipline); the oracle derives the identical prefix from the
@@ -1939,7 +1914,7 @@ object Llm {
           "FROM pred JOIN documents d USING (doc_id) ORDER BY d.doc_id"),
       (s, d) => {
         val docs = Tables.t(s, d, "documents")
-        // spread before the token explode (r17): documents is a single-
+        // spread before the token explode: documents is a single-
         // split file at bench scales, so the explode + broadcast-join +
         // partial-agg stage otherwise runs on one core; spread is a no-op
         // on an already-wide scan.
@@ -1977,7 +1952,7 @@ object Llm {
           "CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS n_uniq FROM documents) " +
           "ORDER BY doc_id"),
       (s, d) => {
-        // Sort-first (r17, see text_repetition_filter): single HOF pass at
+        // Sort-first (see text_repetition_filter): single HOF pass at
         // explicit width above the range sort, instead of twice at scan
         // width below it.
         val toks = split(col("text"), " ")
@@ -2017,12 +1992,12 @@ object Llm {
           "FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents))) " +
           "ORDER BY doc_id"),
       (s, d) => {
-        // Sort-first (r17): range-sort the raw (doc_id, text) rows and run
+        // Sort-first: range-sort the raw (doc_id, text) rows and run
         // the gram/distinct HOFs once, post-sort, at explicit cluster
-        // width. The old kernel-then-orderBy shape paid the HOF pass twice
-        // (range-bound sampling re-executes a shuffle-free child) and ran
+        // width. A kernel-then-orderBy shape pays the HOF pass twice
+        // (range-bound sampling re-executes a shuffle-free child) and runs
         // it at scan width — documents ships as ONE parquet file, so that
-        // was a single core regardless of executor count (sf10: 70 s, all
+        // is a single core regardless of executor count (sf10: 70 s, all
         // in one straggler task). Sort above a Project is also the barrier
         // that keeps the optimizer from sinking the HOFs back into the
         // scan stage (the winnowGrams lesson, Pipeline.scala:53).
@@ -2054,7 +2029,7 @@ object Llm {
           "n_chars, CAST(length(text) AS BIGINT) = n_chars AS len_ok " +
           "FROM documents ORDER BY doc_id"),
       (s, d) =>
-        // Sort-first (r17): the regex token pass runs once, post-sort.
+        // Sort-first: the regex token pass runs once, post-sort.
         Tables.t(s, d, "documents")
           .select(col("doc_id"), col("text"), col("n_chars"))
           .repartitionByRange(s.sparkContext.defaultParallelism, col("doc_id"))
@@ -2077,12 +2052,12 @@ object Llm {
           "FROM (SELECT doc_id, text, unnest(range(1, length(text) - 6)) AS i FROM documents) " +
           "GROUP BY doc_id, text ORDER BY doc_id"),
       (s, d) =>
-        // min-digest codegen loop (round 16): the transform(sequence) HOF
-        // materialized ~40M interpreted md5-hex strings per sf0.1 pass
-        // (4.4 s under the v5.3 fullmat bench); the kernel takes the byte-
+        // min-digest codegen loop: a transform(sequence) HOF materializes
+        // ~40M interpreted md5-hex strings per sf0.1 pass (4.4 s under
+        // full-result timing); the kernel takes the byte-
         // lexicographic min DIGEST (hex is order-preserving) and hex-encodes
         // once per doc. Equality vs the HOF pinned in OpsSpec.
-        // Sort-first (r17): the per-char md5 digest loop runs once at
+        // Sort-first: the per-char md5 digest loop runs once at
         // explicit width above the range sort (the length filter stays
         // below it, at the scan).
         Tables.t(s, d, "documents")

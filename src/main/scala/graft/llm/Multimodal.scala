@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{QueryDef, Tables}
+import graft.{Ckpt, QueryDef, Tables}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column operators (driver mandate: decode / feature-extract /
@@ -41,8 +41,8 @@ object Multimodal {
     * the rest carry the raw UTF-8 text bytes. The kernels downstream see
     * only the bytes, and the DuckDB oracle recomputes the expected
     * dims/frames/pixels from doc_id, so correctness holds ONLY if the
-    * kernel actually decodes and demuxes the container (round-5 judge: wire
-    * ImageKernel into the query paths, not just a spec). Solid gray makes
+    * kernel actually decodes and demuxes the container (ImageKernel runs
+    * in the query path, not only in a spec). Solid gray makes
     * the pixel math oracle-exact: integer luma of (g,g,g) is
     * (299g+587g+114g)/1000 = g, so frame 0 (g = doc_id % 256) lands the
     * whole w×h image in luma bucket g·8/256 = g/32.
@@ -82,8 +82,8 @@ object Multimodal {
   private def stagePhash(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
     import java.nio.file.{Files, Paths}
     // content-fingerprint marker — see Llm.stageLshBuckets; kernel-version
-    // tag (see stageQuantHash): the round-14 grid-staging schema change
-    // must invalidate any hash-only staged table from earlier code
+    // tag (see stageQuantHash): a staging-schema change (grids beside the
+    // hash) must invalidate any staged table of an older schema
     val fp = "lumagrids1|" + Tables.fingerprint(d, "documents")
     val marker = Paths.get(PhashDir, "_dataset")
     if (Files.exists(marker) && Files.readString(marker) == fp) return
@@ -110,7 +110,7 @@ object Multimodal {
           // hash the DECODED container bytes: a broken decode path
           // changes every hash and collapses the group structure the
           // spec asserts. The 9×8 (sum, count) luma grids are staged
-          // BESIDE the hash (round-13 judge task #7): the oracle refolds
+          // BESIDE the hash: the oracle refolds
           // the hash from the raw grids in SQL, so the kernel's bit-fold
           // arithmetic is cross-engine checked — only the PNG decode +
           // area-average accumulation remain kernel-only (no second
@@ -341,8 +341,8 @@ object Multimodal {
     QueryDef(
       "multimodal_phash_neardup",
       Some(
-        // The oracle REFOLDS the hash from the staged raw 9×8 luma grids
-        // (round-13 judge task #7): bit k (k = cy·8+cx, MSB-first) set iff
+        // The oracle REFOLDS the hash from the staged raw 9×8 luma grids:
+        // bit k (k = cy·8+cx, MSB-first) set iff
         // sums[cy,cx]·cnts[cy,cx+1] > sums[cy,cx+1]·cnts[cy,cx] — the exact
         // integer cross-multiplication of ImageKernel.foldDHash, summed as
         // HUGEINT powers and mapped to the signed-64 value (the
@@ -379,11 +379,11 @@ object Multimodal {
         // hash alone, so all pair work runs over distinct hashes with
         // multiplicity carried as a weight; checkpointed for the five
         // pair-side consumers, previous invocation's blocks released by id
-        // (Llm.release discipline: explicit, never ContextCleaner GC).
+        // (Ckpt.release: explicit, never ContextCleaner GC).
         val hcnt = {
-          val (hc, idsC) = Llm.ckpt(hashed.groupBy("ph").agg(count(lit(1)).as("cnt")))
+          val (hc, idsC) = Ckpt(hashed.groupBy("ph").agg(count(lit(1)).as("cnt")))
           Option(phashState.put((s, d), (hc, idsC)))
-            .foreach { case (_, oldIds) => Llm.release(s, oldIds) }
+            .foreach { case (_, oldIds) => Ckpt.release(s, oldIds) }
           hc
         }
         val exact = hcnt.select(col("ph"), explode(expr("sequence(0, 3)")).as("blk"))
@@ -398,10 +398,10 @@ object Multimodal {
         // Within one block at most ONE probe variant can equal y's exact
         // value (the exact + 16 single-bit flips are pairwise distinct),
         // so duplicates arise only from multiple blocks matching — and the
-        // first-match-only discipline (round 16) removes them statelessly:
+        // first-match-only discipline removes them statelessly:
         // keep a candidate only where the LOWEST block with ham_blk ≤ 1
         // (pure bit_count arithmetic over x.ph ^ y.ph) is the join's own
-        // block. Same pair set as the old `.distinct()`, zero dedup state.
+        // block. Same pair set as a `.distinct()`, zero dedup state.
         val pairs = probe.as("x").join(exact.as("y"),
             col("x.blk") === col("y.blk") && col("x.v") === col("y.v") &&
               col("x.ph") < col("y.ph"))

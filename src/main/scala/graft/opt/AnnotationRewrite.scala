@@ -156,8 +156,8 @@ object AnnotationRewrite extends Rule[LogicalPlan] {
       s.experimental.extraOptimizations = s.experimental.extraOptimizations :+ AnnotationRewrite
     }
 
-  /** Session-builder integration (`SparkSession.builder.withExtensions
-    * (AnnotationRewrite.inject)`): registers the rule as an analyzer
+  /** Session-builder integration (`withExtensions(AnnotationRewrite.inject)`,
+    * as [[graft.Session]] builds every session): registers the rule as an analyzer
     * resolution rule, which runs BEFORE nested schema pruning — so the
     * numeric conjunct keeps `__<f>_numeric` alive in the pruned schema and
     * reaches the parquet scan as a pushed nested predicate. The rule is

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Q, QueryDef, Tables}
+import graft.{Ckpt, Q, QueryDef, Tables}
 
-/** Round-6 scale-pattern operators: the remaining physical/pipeline
+/** Scale-pattern operators: the physical/pipeline
   * techniques a 100 TB warehouse deployment leans on daily.
   *
   *  - SCD2 merge: CDC event runs → validity-interval dimension history
@@ -25,22 +25,6 @@ import graft.{Q, QueryDef, Tables}
   *    parquet, then union-merged — the batch twin of a streaming upsert.
   */
 object Advanced {
-
-  private def tmpPath(name: String, d: String): String =
-    s"${sys.props("java.io.tmpdir")}/${name}_${Integer.toHexString(d.hashCode)}"
-
-  /** Eager localCheckpoint plus the ids of the persistent-RDD blocks it
-    * created, so superseded loop state can be released explicitly (same
-    * discipline as the label-propagation loop in llm.Llm — blocks must not
-    * wait on nondeterministic ContextCleaner GC).
-    */
-  // backend selected by GRAFT_RELIABLE_CKPT — see graft.Ckpt
-  private def ckpt(df: DataFrame): (DataFrame, Seq[Int]) = graft.Ckpt(df)
-
-  private def release(s: SparkSession, ids: Seq[Int]): Unit = {
-    val live = s.sparkContext.getPersistentRDDs
-    ids.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
-  }
 
   /** One-slot registry of the final PageRank checkpoint per (session, dir):
     * a re-run releases the superseded run's blocks deterministically. The
@@ -491,7 +475,7 @@ object Advanced {
           "min(z) AS z_min, max(z) AS z_max " +
           "FROM z WHERE ck BETWEEN 32 AND 95 AND yb BETWEEN 1 AND 2"),
       (s, d) => {
-        val tmp = tmpPath("graft_zorder", d)
+        val tmp = Tables.stagingDir("graft_zorder", d)
         Tables.t(s, d, "orders")
           .select(
             col("o_orderkey"),
@@ -728,8 +712,8 @@ object Advanced {
         // The loosened recursion valve is scoped to a CHILD session (own
         // SQLConf + temp-view catalog, shared SparkContext): setting it on
         // the caller's session would leave the safety limit raised — up to
-        // Int.MaxValue — for every later query in a long-lived JVM
-        // (round-9 advisor finding). A finally-restore cannot work here:
+        // Int.MaxValue — for every later query in a long-lived JVM. A
+        // finally-restore cannot work here:
         // the conf is read at EXECUTION time, after this lazy plan is
         // returned.
         val cs = s.newSession()
@@ -762,7 +746,7 @@ object Advanced {
           s"CAST(CAST(sum(CAST(o_totalprice AS ${Q.D4})) AS ${Q.D6}) AS DOUBLE) AS sum_total " +
           "FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority"),
       (s, d) => {
-        val tmp = tmpPath("graft_aggstate", d)
+        val tmp = Tables.stagingDir("graft_aggstate", d)
         val o = Tables.t(s, d, "orders")
         def partial(slice: DataFrame): DataFrame = slice
           .groupBy("o_orderpriority")
@@ -814,7 +798,7 @@ object Advanced {
         // rounds consumes the big static side with zero exchange and zero
         // sort — only the small rank vector moves each round. At 100 TB the
         // adjacency is the table you must not re-shuffle six times.
-        val (adj, adjIds) = ckpt(
+        val (adj, adjIds) = Ckpt(
           undirected.join(deg, "src")
             .groupBy(col("src"),
               pmod(hash(col("dst")), greatest(lit(1L), expr("(outdeg + 4095) div 4096"))).as("chunk"))
@@ -823,7 +807,7 @@ object Advanced {
             .sortWithinPartitions("src"))
         // One checkpointed node set feeds BOTH the |V| count and rank⁰ —
         // the two derivations previously re-shuffled adj once each.
-        val (nodes, nodeIds) = ckpt(adj.select(col("src").as("id")).distinct())
+        val (nodes, nodeIds) = Ckpt(adj.select(col("src").as("id")).distinct())
         val nNodes = nodes.count()
         val init = prMass / nNodes
         val basePart = 15L * init / 100L
@@ -836,10 +820,10 @@ object Advanced {
             .select(col("dst").as("id"),
               (lit(basePart) + expr("(85 * contrib) div 100")).as("rank"))
         }
-        val (fin, finIds) = ckpt(chained)
-        release(s, adjIds ++ nodeIds)
+        val (fin, finIds) = Ckpt(chained)
+        Ckpt.release(s, adjIds ++ nodeIds)
         Option(prFinal.put((s, d), (fin, finIds)))
-          .foreach { case (_, oldIds) => release(s, oldIds) }
+          .foreach { case (_, oldIds) => Ckpt.release(s, oldIds) }
         fin.orderBy("id")
       }),
 
@@ -859,7 +843,7 @@ object Advanced {
           "FROM (SELECT year(o_orderdate) AS o_year, o_totalprice FROM orders) " +
           "WHERE o_year >= 1996 GROUP BY o_year ORDER BY o_year"),
       (s, d) => {
-        val tmp = tmpPath("graft_dpp", d)
+        val tmp = Tables.stagingDir("graft_dpp", d)
         Tables.t(s, d, "orders")
           .withColumn("o_year", year(col("o_orderdate")))
           .write.mode("overwrite").partitionBy("o_year").parquet(s"$tmp/fact")

@@ -25,7 +25,7 @@ object Aggs {
   private val sumQty = Q.out6(sum(Q.dec4(col("l_quantity"))))
 
   /** Fixed staging path for the quantile-sketch hash table — a Spark-side
-    * PERFORMANCE artifact since round 12: the md5-derived rank column is
+    * PERFORMANCE artifact only: the md5-derived rank column is
     * computable in BOTH engines, so the oracle mirrors the whole sketch
     * pipeline — per-group bottom-k, merge, percentile pick — directly
     * from the base table as exact integer/ORDER BY math. (Merged bottom-k
@@ -37,10 +37,10 @@ object Aggs {
   private val QuantHashDir = s"${sys.props("java.io.tmpdir")}/graft_quanthash"
 
   /** Fixed staging path for the HLL ESTIMATE tables — the staged-signature
-    * oracle pattern applied to a BOUND instead of a value (round-12 judge
-    * task): sketch estimates are engine-library internals no other engine
-    * reproduces, so the estimates themselves are staged once per (JVM,
-    * dataset) and the oracle check becomes exact math both engines share —
+    * oracle pattern applied to a BOUND instead of a value: sketch
+    * estimates are engine-library internals no other engine reproduces,
+    * so the estimates themselves are staged once per (JVM, dataset) and
+    * the oracle check becomes exact math both engines share —
     * |estimate − exact| ≤ bound · exact, with each engine computing
     * `exact` INDEPENDENTLY from the base table (DuckDB thus verifies the
     * sketch's declared accuracy contract against its own exact distinct
@@ -72,12 +72,12 @@ object Aggs {
     import java.nio.file.{Files, Paths}
     // content-fingerprint marker — see Llm.stageLshBuckets
     // marker carries a KERNEL VERSION tag beside the content fingerprint:
-    // a staging-code change (xxhash64 -> md5 ranks, round 12) must
+    // a staging-code change (such as the rank hash) must
     // invalidate staged artifacts even when the data is unchanged
     val fp = "md5rank|" + Tables.fingerprint(d, "customer")
     val marker = Paths.get(QuantHashDir, "_dataset")
     if (Files.exists(marker) && Files.readString(marker) == fp) return
-    // md5-derived signed-64 rank (round 12): both engines parse the first
+    // md5-derived signed-64 rank: both engines parse the first
     // 16 hex chars of md5(custkey-as-string) to the same unsigned value
     // and re-center at 2^63 in exact decimal math, so the ORACLE computes
     // h independently from the base table — the staged parquet is a
@@ -179,7 +179,7 @@ object Aggs {
             count(lit(1)).as("n"))
         // 10%/5% bounds in pure BIGINT arithmetic (10·|Δ| ≤ exact) — a
         // double 0.10·exact differs between engines when an estimate lands
-        // exactly on the bound (round-12 advisor), integer compares cannot
+        // exactly on the bound, integer compares cannot
         s.read.parquet(s"$HllEstDir/approx")
           .join(exact, "c_nationkey")
           .select(col("c_nationkey"), col("approx_cust"), col("n"),
@@ -219,15 +219,14 @@ object Aggs {
     // Mergeable QUANTILE sketch re-aggregation — the percentile twin of the
     // HLL pattern above: per-nation bottom-k sketches of account balances
     // (hash-ranked uniform samples, deterministic) merge to global quantile
-    // estimates WITHOUT touching the base table again; only K pairs per
-    // group shuffle. FULLY INDEPENDENT oracle (upgraded from staged,
-    // round 12): the rank hash is md5-derived — DuckDB parses the same
-    // 16 hex chars to the same signed-64 value and mirrors per-group
-    // bottom-256 → merged bottom-256 (≡ global bottom-256 by h, see
-    // [[stageQuantHash]]) → sorted-value percentile pick, all from the
-    // base table; every step exact ORDER BY math. OpsSpec additionally
-    // asserts merged ≡ direct and bounds the rank error. Key is memoized
-    // (staged input layout — a Spark-side performance artifact).
+    // estimates WITHOUT touching the base table again; only K pairs per group
+    // shuffle. FULLY INDEPENDENT oracle: the rank hash is md5-derived — DuckDB
+    // parses the same 16 hex chars to the same signed-64 value and mirrors
+    // per-group bottom-256 → merged bottom-256 (≡ global bottom-256 by h, see
+    // [[stageQuantHash]]) → sorted-value percentile pick, all from the base
+    // table; every step exact ORDER BY math. OpsSpec additionally asserts
+    // merged ≡ direct and bounds the rank error. Key is memoized (staged input
+    // layout — a Spark-side performance artifact).
     QueryDef(
       "agg_quantile_merge",
       Some(
@@ -483,22 +482,19 @@ object Aggs {
           s"CAST(CAST(min(tot) AS ${Q.D6}) AS DOUBLE) AS total_weight " +
           "FROM c GROUP BY rf ORDER BY rf"),
       (s, d) => {
-        // Crossing-bucket pruning (r18, guide §2.4/§8 "decide with small
-        // rows"): the r16 two-level scan still rolled the WHOLE (rf, v)
-        // vocabulary up and ran the intra-bucket cumulative window over
-        // every bucket — yet only the one bucket per group where the
-        // cumulative weight crosses tot/2 can contain the median. Pass 1
-        // aggregates raw fact rows straight to (rf, bucket) weight totals
-        // (96 groups — map-side combine collapses the shuffle); the ≤32-row
-        // per-rf window then finds each group's total, the prefix offsets,
-        // and the unique crossing bucket (2·offset < tot ≤ 2·(offset+btot)).
-        // Pass 2 re-scans the narrow fact columns, keeps ONLY crossing-
-        // bucket rows via a broadcast semi-join, and runs the (rf, v)
-        // rollup + cumulative window over that ~1/nBuckets slice. Values
-        // below the crossing point never satisfy 2·cum ≥ tot and values in
-        // later buckets are all larger than the crossing v, so the min()
-        // pick is unchanged — identical exact-DECIMAL crossing arithmetic,
-        // two cheap fact scans instead of a vocabulary-wide shuffle + sort.
+        // Crossing-bucket pruning: only the one bucket per group where the
+        // cumulative weight crosses tot/2 can contain the median, so the
+        // (rf, v) rollup and its cumulative window need not span the whole
+        // vocabulary. Pass 1 aggregates raw fact rows straight to
+        // (rf, bucket) weight totals (96 groups — map-side combine
+        // collapses the shuffle); the ≤32-row per-rf window then finds
+        // each group's total, the prefix offsets, and the unique crossing
+        // bucket (2·offset < tot ≤ 2·(offset+btot)). Pass 2 re-scans the
+        // narrow fact columns, keeps ONLY crossing-bucket rows via a
+        // broadcast semi-join, and runs the (rf, v) rollup + cumulative
+        // window over that ~1/nBuckets slice. Values below the crossing
+        // point never satisfy 2·cum ≥ tot and values in later buckets are
+        // all larger than the crossing v, so the min() pick is exact.
         val facts = Tables.t(s, d, "lineitem")
           .select(col("l_returnflag").as("rf"),
             Q.dec4(col("l_extendedprice")).as("v"), Q.dec4(col("l_quantity")).as("w"))
@@ -509,24 +505,23 @@ object Aggs {
         // downstream number is an exact prefix sum, so cut quality shifts
         // work, never results): memoized per (session, content fingerprint)
         // like the LM / IVF model artifacts, so timed repeats don't pay a
-        // second full pass just to re-learn the same 31 longs. Learned from
-        // the (rf, v) rollup exactly as in r16/r17, so the cut values —
-        // and with them every bucket boundary — are unchanged.
+        // second full pass just to re-learn the same 31 longs.
         val bounds = medianCutsCache.computeIfAbsent(
           (s, Tables.fingerprint(d, "lineitem")), _ =>
             facts.groupBy("rf", "v").agg(sum(col("w")).as("w"))
               .withColumn("vl", (col("v") * 10000).cast("long"))
               .agg(expr(s"percentile_approx(vl, array(${probs.mkString(", ")}), 10000)"))
-              .head().getSeq[Long](0))
+              // NULL on an empty table: no cuts, a single bucket
+              .head().getSeq[Long](0) match { case null => Seq.empty; case cuts => cuts })
         // bucket = #cuts below v, as a codegen'd comparison SUM (an
         // aggregate(typedlit) HOF here would run 31 interpreted lambda
-        // steps per row — the same cost class v5.3 exposed in the LM keys).
+        // steps per row).
         // NOT spread: the round-robin exchange pays a local sort of the
         // full fact table (sortBeforeRepartition) — measured slower than
         // the single-split partial agg it parallelizes (norm 1.40 → 1.77).
         val bucketed = facts.withColumn("bucket",
           bounds.map(b => when(col("vl") > b, lit(1)).otherwise(lit(0)))
-            .reduce(_ + _))
+            .reduceOption(_ + _).getOrElse(lit(0)))
         val wB = Window.partitionBy("rf").orderBy("bucket")
           .rowsBetween(Window.unboundedPreceding, -1)
         val wTot = Window.partitionBy("rf")
@@ -542,7 +537,7 @@ object Aggs {
           .select(col("rf").as("crf"),
             when(col("bucket") === 0, lit(Long.MinValue))
               .otherwise(element_at(bArr, col("bucket"))).as("lo"),
-            when(col("bucket") === nBuckets - 1, lit(Long.MaxValue))
+            when(col("bucket") === bounds.size, lit(Long.MaxValue))
               .otherwise(element_at(bArr, col("bucket") + 1)).as("hi"),
             col("offset"), col("tot"))
         val wIn = Window.partitionBy("rf").orderBy("v")

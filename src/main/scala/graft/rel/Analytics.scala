@@ -5,9 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, StringType}
 
-import graft.{Q, QueryDef, Tables}
+import graft.{Ckpt, Q, QueryDef, Tables}
 
-/** Round-6 analytics operators: exact-at-scale patterns that replace the
+/** Analytics operators: exact-at-scale patterns that replace the
   * "collect and compute on the driver" shortcuts a naive engine ships.
   *
   *  - Bitmap-exact distinct: COUNT(DISTINCT) as 64-bit bucket bitmaps —
@@ -33,21 +33,6 @@ import graft.{Q, QueryDef, Tables}
   *    to long form with a narrow Expand.
   */
 object Analytics {
-
-  private def tmpPath(name: String, d: String): String =
-    s"${sys.props("java.io.tmpdir")}/${name}_${Integer.toHexString(d.hashCode)}"
-
-  /** Eager localCheckpoint + created block ids, and the matching explicit
-    * release — same discipline as Advanced/Llm/Ivf: superseded blocks are
-    * freed by id, never left to nondeterministic ContextCleaner GC.
-    */
-  // backend selected by GRAFT_RELIABLE_CKPT — see graft.Ckpt
-  private def ckpt(df: DataFrame): (DataFrame, Seq[Int]) = graft.Ckpt(df)
-
-  private def release(s: SparkSession, ids: Seq[Int]): Unit = {
-    val live = s.sparkContext.getPersistentRDDs
-    ids.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
-  }
 
   /** One-slot registry of triangle-count checkpoint blocks per
     * (session, dir): a re-run releases the superseded run's blocks. The
@@ -149,10 +134,10 @@ object Analytics {
           "CAST(count(*) AS BIGINT) AS n_triangles " +
           "FROM e e1 JOIN e e2 ON e2.u = e1.v JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v"),
       (s, d) => {
-        // Edge build in TWO shuffles (round 11 — was distinct + per-order
-        // self-join + pair agg = three, with a sort-merge join in the
-        // middle): one groupBy(order) collects each order's distinct
-        // sorted supplier set (collect_set subsumes the old distinct), the
+        // Edge build in TWO shuffles (not distinct + per-order self-join +
+        // pair agg = three, with a sort-merge join in the middle): one
+        // groupBy(order) collects each order's distinct
+        // sorted supplier set (collect_set subsumes a distinct), the
         // pair explosion runs IN-PARTITION over that array (bounded by
         // order size, ~7 suppliers → ≤21 pairs — never supplier
         // popularity), and one pair agg applies the weight threshold.
@@ -169,7 +154,7 @@ object Analytics {
         // truncation Spark recomputes the whole build per consumer (~5×);
         // both intermediates are edge-cardinality (tiny next to facts), so
         // they checkpoint, and superseded blocks release deterministically.
-        val (edges, edgeIds) = ckpt(pairs
+        val (edges, edgeIds) = Ckpt(pairs
           .groupBy("u", "v")
           .agg(count(lit(1)).as("w"))
           .where(col("w") >= 4)
@@ -181,7 +166,7 @@ object Analytics {
         // deg is NODE-cardinality (suppliers), always ≪ the edge set —
         // broadcast both orientation joins rather than letting AQE discover
         // it per-run (saves the exchange + the runtime re-plan).
-        val (oriented, orientIds) = ckpt(edges
+        val (oriented, orientIds) = Ckpt(edges
           .join(broadcast(deg.select(col("node").as("u"), col("deg").as("du"))), "u")
           .join(broadcast(deg.select(col("node").as("v"), col("deg").as("dv"))), "v")
           .select(
@@ -194,7 +179,7 @@ object Analytics {
           .select(col("s.n").as("src"), col("t.n").as("dst"),
             col("t.dg").as("ddeg")))
         Option(triFinal.put((s, d), (Seq(edges, oriented), edgeIds ++ orientIds)))
-          .foreach { case (_, oldIds) => release(s, oldIds) }
+          .foreach { case (_, oldIds) => Ckpt.release(s, oldIds) }
         // wedges from each low corner: pairs of out-neighbours ordered by
         // (deg, id) so the closing edge is guaranteed oriented b→c
         val e1 = oriented.select(col("src"), col("dst").as("b"), col("ddeg").as("db"))
@@ -214,11 +199,11 @@ object Analytics {
         // was tried and REVERTED: encoder/boxing overhead made it 3×
         // slower than this codegen join + interpreted filter at BOTH
         // rehearsal scales.)
-        // Probe via Catalyst's BloomFilterMightContain (round 15 — the same
-        // codegen routing as dedup_incremental_bloom's task-#8 fix): the
+        // Probe via Catalyst's BloomFilterMightContain (the same codegen
+        // routing as dedup_incremental_bloom): the
         // sketch inserts xxhash64(b, c) longs, the expression probes
-        // mightContainLong on XxHash64(b, c) — bit-identical to the old
-        // scalar UDF, but vectorizable and inside the codegen stage that
+        // mightContainLong on XxHash64(b, c) — bit-identical to a scalar
+        // UDF, but vectorizable and inside the codegen stage that
         // GENERATES the wedges, so the pruned 73M-row stream never leaves
         // whole-stage codegen to call a deserialized closure per row.
         val bloomBytes = {
@@ -299,20 +284,19 @@ object Analytics {
           .select(col("user_id"), explode(expr("sequence(b0, b1)")).as("bucket"))
         val wp = Window.partitionBy(col("user_id")).orderBy(col("bucket"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        // "next non-null at or after this bucket" as a RUNNING last() over
-        // the DESCENDING order, never first() over a currentRow→
-        // unboundedFollowing frame: Spark evaluates unbounded-FOLLOWING
-        // frames by re-aggregating the whole tail for every row — O(n²)
-        // per partition (measured 51.9 s vs resample_ffill's 1.9 s on the
-        // identical 1.05M-row grid once bench v5.3 stopped count-pruning
-        // the window away). Running unbounded-PRECEDING frames stream in
-        // O(n); the reversed sort is the same single extra sort the
-        // following-frame plan already paid.
+        // "next non-null at or after this bucket" as a RUNNING last() over the
+        // DESCENDING order, never first() over a currentRow→
+        // unboundedFollowing frame: Spark evaluates unbounded-FOLLOWING frames
+        // by re-aggregating the whole tail for every row — O(n²) per partition
+        // (measured 51.9 s vs resample_ffill's 1.9 s on the identical
+        // 1.05M-row grid under full-result timing). Running
+        // unbounded-PRECEDING frames stream in O(n); the reversed sort is the
+        // same single extra sort the following-frame plan already paid.
         val wnRev = Window.partitionBy(col("user_id")).orderBy(col("bucket").desc)
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val obsBucket = when(col("obs").isNotNull, col("bucket"))
-        // Sort-count fix (round-16 verdict task #4). Three changes make the
-        // final global ORDER BY free: (1) the window stage runs on RANGE
+        // Three choices make the final global ORDER BY free: (1) the
+        // window stage runs on RANGE
         // partitioning by user_id — RangePartitioning(user_id) satisfies
         // the windows' ClusteredDistribution(user_id), and because equal
         // keys co-locate it ALSO satisfies OrderedDistribution(user_id, …)
@@ -359,7 +343,7 @@ object Analytics {
       (s, d) => {
         import java.nio.file.{Files, Paths}
         import scala.jdk.CollectionConverters._
-        val base = tmpPath("graft_manifest", d)
+        val base = Tables.stagingDir("graft_manifest", d)
         val dataDir = s"$base/data"
         val manifest = Paths.get(s"$base/manifest.txt")
         val done = Paths.get(s"$base/_done")
@@ -401,7 +385,7 @@ object Analytics {
       (s, d) => {
         import java.nio.file.{Files, Paths}
         import scala.jdk.CollectionConverters._
-        val base = tmpPath("graft_manifest_incr", d)
+        val base = Tables.stagingDir("graft_manifest_incr", d)
         val dataDir = s"$base/data"
         val m1 = Paths.get(s"$base/manifest_v1.txt")
         val m2 = Paths.get(s"$base/manifest_v2.txt")
@@ -573,7 +557,7 @@ object Analytics {
       (s, d) => {
         import java.nio.file.{Files, Paths}
         import scala.jdk.CollectionConverters._
-        val base = tmpPath("graft_stats_manifest", d)
+        val base = Tables.stagingDir("graft_stats_manifest", d)
         val dataDir = s"$base/data"
         val manifest = Paths.get(s"$base/manifest.tsv")
         val done = Paths.get(s"$base/_done")
@@ -798,7 +782,7 @@ object Analytics {
           "FROM lineitem GROUP BY l_returnflag ORDER BY file_group"),
       (s, d) => {
         import java.nio.file.{Files, Paths}
-        val tmp = tmpPath("graft_meta_lineage", d)
+        val tmp = Tables.stagingDir("graft_meta_lineage", d)
         val done = Paths.get(s"$tmp/_done")
         if (!Files.exists(done)) {
           // repartition on the partition key first → exactly one file per

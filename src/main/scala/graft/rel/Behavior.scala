@@ -3,7 +3,7 @@ package graft.rel
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Q, QueryDef, Tables}
+import graft.{Ckpt, Q, QueryDef, Tables}
 
 /** Behavioral event analytics (SURVEY §2 addendum): funnel conversion and
   * cohort retention over the events stream — the two queries every product
@@ -13,26 +13,13 @@ import graft.{Q, QueryDef, Tables}
   * (min-timestamp aggregates with map-side partials), so the expensive
   * shuffles are all keyed on user_id and AQE can reuse the partitioning;
   * nothing materializes per-event state. Time math is integer epoch-millis
-  * (`ts_ms`), exact in both engines (graft-round2 lesson: no IEEE hazards).
+  * (`ts_ms`), exact in both engines (no IEEE hazards).
   */
 object Behavior {
 
   /** 2024-01-01T00:00:00Z in epoch millis — the cohort grid origin. */
   private val epoch0 = 1704067200000L
   private val weekMs = 7L * 86400000L
-
-  /** Eager localCheckpoint + created block ids (same discipline as
-    * Advanced/Llm/Ivf); rfm releases its checkpoint before returning, so no
-    * one-slot registry is needed here.
-    */
-  // backend selected by GRAFT_RELIABLE_CKPT — see graft.Ckpt
-  private def ckpt(df: org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, Seq[Int]) = graft.Ckpt(df)
-
-  private def release(s: org.apache.spark.sql.SparkSession, ids: Seq[Int]): Unit = {
-    val live = s.sparkContext.getPersistentRDDs
-    ids.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
-  }
 
   /** The (metric, o_custkey) tuples sitting at the three exact ntile(4)
     * boundary ranks of `rollup` ordered by (metric, o_custkey), found
@@ -112,8 +99,8 @@ object Behavior {
           .join(c, "user_id").where(col("ts_ms") >= col("t2"))
           .groupBy("user_id").agg(min(col("ts_ms")).as("t3"))
         // One global aggregate over the union of per-stage user rows instead
-        // of joining three single-row counts: no join at all (the round-3
-        // form planned BroadcastNestedLoopJoin), and the stage indicator
+        // of joining three single-row counts: no join at all (the join form
+        // plans a BroadcastNestedLoopJoin), and the stage indicator
         // sums combine map-side. coalesce guards the empty-stage case where
         // sum yields NULL but the oracle's count yields 0.
         v.select(lit(1L).as("sv"), lit(0L).as("sc"), lit(0L).as("sp"))
@@ -190,8 +177,8 @@ object Behavior {
     // first (map-side-combinable min/count/sum — at 100 TB the quartile
     // input is customer-cardinality, orders of magnitude below fact rows).
     // The tiles are EXACT ntile(4) over (metric, custkey) order, but no
-    // global-sort window ever runs (the round-6 "No Partition Defined for
-    // Window" weak mark): quartileBounds finds the three boundary TUPLES
+    // global-sort window ever runs (no "No Partition Defined for Window"
+    // single-partition sort): quartileBounds finds the three boundary TUPLES
     // per metric with the 2-pass histogram technique (day grid for
     // recency, identity for frequency, 4096-wide value buckets for
     // monetary), and the main query assigns tiles by comparing each row
@@ -217,13 +204,13 @@ object Behavior {
           // cast-to-instant is the same epoch value DuckDB's epoch_ms sees
           .agg(max(unix_millis(col("o_orderdate").cast("timestamp"))).as("r"),
             count(lit(1)).as("f"), sum(Q.dec4(col("o_totalprice"))).as("m"))
-        val (rfm, ids) = ckpt(rollup)
+        val (rfm, ids) = Ckpt(rollup)
         val (rB, fB, mB) =
           try {
             (quartileBounds(rfm, "r", expr("CAST(r DIV 86400000 AS BIGINT)")),
               quartileBounds(rfm, "f", col("f")),
               quartileBounds(rfm, "m", (col("m") / 4096).cast("long")))
-          } finally release(s, ids)
+          } finally Ckpt.release(s, ids)
         // the returned plan recomputes the rollup from parquet (one scan,
         // map-side combine) so it stands alone after the checkpoint is gone
         rollup
@@ -253,7 +240,7 @@ object Behavior {
           "FROM g WHERE gap IS NOT NULL GROUP BY user_id ORDER BY user_id"),
       (s, d) => {
         val w = Window.partitionBy("user_id").orderBy(col("ts_ms"), col("event_id"))
-        // Range-partition into the window (r17 elision pattern): the
+        // Range-partition into the window (sort-elision pattern): the
         // downstream groupBy(user_id) is satisfied by the same clustering,
         // and the final ORDER BY user_id needs no exchange over
         // RangePartitioning(user_id) — 2 exchanges → 1.
@@ -322,7 +309,7 @@ object Behavior {
         val w = Window.partitionBy("user_id").orderBy(col("ts_ms"), col("event_id"))
           .rowsBetween(-9, 0)
         // Range-partition into the window (the resample sort-elision
-        // pattern, r17): the window's own (user_id, ts_ms, event_id) sort
+        // pattern): the window's own (user_id, ts_ms, event_id) sort
         // then satisfies the final presentation ORDER BY — global, because
         // RangePartitioning(user_id) prefixes its OrderedDistribution — so
         // the final sort AND its exchange vanish from the plan.

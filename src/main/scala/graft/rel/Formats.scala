@@ -23,9 +23,6 @@ import graft.{Q, QueryDef, Tables}
   */
 object Formats {
 
-  private def scratch(tag: String, d: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_${tag}_${Integer.toHexString(d.hashCode)}"
-
   /** FIXED staging path for the binaryFile ingestion corpus: the DuckDB
     * oracle's read_blob glob is a static literal, so the path cannot carry
     * the dataset hash — instead a marker file records which dataset staged
@@ -37,10 +34,10 @@ object Formats {
 
   /** Stage every 97th document's UTF-8 bytes as doc_<id>.bin — bounded
     * (≈ n/97 files), deterministic. Files are written EXECUTOR-SIDE via
-    * foreachPartition (round-12 judge task #6): a driver `.collect()` loop
-    * materialized the selected rows on the driver, which at corpus scale
-    * OOMs the staging step itself even though it is 1/97 of documents and
-    * never on the timed read path. Each task writes its own partition's
+    * foreachPartition: a driver `.collect()` loop would materialize the
+    * selected rows on the driver, which at corpus scale OOMs the staging
+    * step itself even though it is 1/97 of documents and never on the
+    * timed read path. Each task writes its own partition's
     * files; under local / local-cluster all executors share the host
     * filesystem, which is the same single-box assumption the fixed staging
     * path already makes.
@@ -90,8 +87,8 @@ object Formats {
           s"CAST(CAST(sum(CAST(l_extendedprice AS ${Q.D4})) AS ${Q.D6}) AS DOUBLE) AS sum_price " +
           "FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"),
       (s, d) => {
-        val tmp = scratch("csv", d)
-        // spread before write (r17): the text encode runs post-exchange at
+        val tmp = Tables.stagingDir("graft_csv", d)
+        // spread before write: the text encode runs post-exchange at
         // cluster width and produces one file per task — a real ingest
         // writes many files, and the read side then parallelizes for free.
         Tables.spread(s, Tables.t(s, d, "lineitem")
@@ -127,8 +124,8 @@ object Formats {
           "CAST(sum(CASE WHEN doc_id % 7 <> 0 THEN n_chars ELSE 0 END) AS BIGINT) AS sum_chars " +
           "FROM documents GROUP BY lang ORDER BY lang"),
       (s, d) => {
-        val tmp = scratch("csv_corrupt", d)
-        // no spread here (r17): the encode is a trivial concat and the
+        val tmp = Tables.stagingDir("graft_csv_corrupt", d)
+        // no spread here: the encode is a trivial concat and the
         // measured shuffle cost exceeded the parallel-write gain
         Tables.t(s, d, "documents")
           .select(concat_ws(",",
@@ -166,7 +163,7 @@ object Formats {
           s"CAST(CAST(sum(CAST(o_totalprice AS ${Q.D4})) AS ${Q.D6}) AS DOUBLE) AS sum_price " +
           "FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority"),
       (s, d) => {
-        val tmp = scratch("orc", d)
+        val tmp = Tables.stagingDir("graft_orc", d)
         Tables.t(s, d, "orders")
           .select("o_orderkey", "o_orderpriority", "o_totalprice")
           .write.mode("overwrite").orc(tmp)
@@ -196,8 +193,8 @@ object Formats {
           s"CAST(CAST(sum(CAST(o_totalprice AS ${Q.D4})) AS ${Q.D6}) AS DOUBLE) AS sum_price " +
           "FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority"),
       (s, d) => {
-        val tmp = scratch("xml", d)
-        // spread before write (r17): XML element serialization is the
+        val tmp = Tables.stagingDir("graft_xml", d)
+        // spread before write: XML element serialization is the
         // expensive half of this key — run it at cluster width, one file
         // per task (XML is not split-readable, so the many-file layout is
         // also what makes the re-read parallel).
@@ -332,7 +329,7 @@ object Formats {
           "CAST(sum((doc_id % 1048576) * len(text)) AS BIGINT) AS keyed_sum, " +
           "CAST(max(doc_id) AS BIGINT) AS max_id FROM documents"),
       (s, d) => {
-        val tmp = scratch("text", d)
+        val tmp = Tables.stagingDir("graft_text", d)
         Tables.t(s, d, "documents")
           .select(concat_ws("\t", col("doc_id"), col("text")).as("value"))
           .write.mode("overwrite").text(tmp)
@@ -368,7 +365,7 @@ object Formats {
           s"CAST(CAST(sum(CAST(o_totalprice AS ${Q.D4})) AS ${Q.D6}) AS DOUBLE) AS sum_total " +
           "FROM v GROUP BY o_orderstatus ORDER BY o_orderstatus"),
       (s, d) => {
-        val tmp = scratch("evolve", d)
+        val tmp = Tables.stagingDir("graft_evolve", d)
         val o = Tables.t(s, d, "orders")
         o.where(pmod(col("o_orderkey"), lit(2)) === 0)
           .select("o_orderkey", "o_orderstatus", "o_totalprice")

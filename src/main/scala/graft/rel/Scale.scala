@@ -69,7 +69,7 @@ object Scale {
           "FROM lineitem WHERE l_orderkey IN (7, 77, 777, 1207, 1399) " +
           "GROUP BY l_orderkey ORDER BY l_orderkey"),
       (s, d) => {
-        val tmp = s"${sys.props("java.io.tmpdir")}/graft_bloom_${Integer.toHexString(d.hashCode)}"
+        val tmp = Tables.stagingDir("graft_bloom", d)
         val done = java.nio.file.Paths.get(s"$tmp/_done")
         if (!java.nio.file.Files.exists(done)) {
           Tables.t(s, d, "lineitem").select("l_orderkey", "l_extendedprice")
@@ -103,10 +103,10 @@ object Scale {
           s"CAST(sum(CAST(o_totalprice AS ${Q.D4})) AS ${Q.D6})::DOUBLE AS sum_total " +
           "FROM orders GROUP BY 1 ORDER BY 1"),
       (s, d) => {
-        val tmp = s"${sys.props("java.io.tmpdir")}/graft_part_orders_${Integer.toHexString(d.hashCode)}"
+        val tmp = Tables.stagingDir("graft_part_orders", d)
         // repartition ON the partition key first: without it every input
-        // partition opens a writer per year → ~32×7 tiny files (the round-2
-        // bench's 5.6 s); with it each year directory gets one writer — the
+        // partition opens a writer per year → ~32×7 tiny files (measured
+        // 5.6 s); with it each year directory gets one writer — the
         // correct pattern for partitioned writes at any scale (add a salt
         // inside the repartition only when one partition value overflows a
         // single task).
@@ -134,7 +134,7 @@ object Scale {
           s"CAST(sum(CAST(o_totalprice AS ${Q.D4})) AS ${Q.D6})::DOUBLE AS sum_total " +
           "FROM orders WHERE year(o_orderdate) IN (1996, 1997) GROUP BY 1 ORDER BY 1"),
       (s, d) => {
-        val tmp = s"${sys.props("java.io.tmpdir")}/graft_prune_orders_${Integer.toHexString(d.hashCode)}"
+        val tmp = Tables.stagingDir("graft_prune_orders", d)
         // _done guard like the sibling bloom/bucketed layouts: bench repeats
         // must time the pruned READ, not re-pay the layout write+shuffle.
         // Spark's file listing ignores underscore-prefixed files, so the
@@ -190,7 +190,7 @@ object Scale {
         "SELECT CAST(count(*) AS BIGINT) AS n_rows, CAST(least(64, count(*)) AS BIGINT) AS files_small, " +
           "CAST(least(2, count(*)) AS BIGINT) AS files_compacted FROM documents"),
       (s, d) => {
-        val tmp = s"${sys.props("java.io.tmpdir")}/graft_compact_${Integer.toHexString(d.hashCode)}"
+        val tmp = Tables.stagingDir("graft_compact", d)
         def nFiles(p: String): Long =
           new java.io.File(p).listFiles().count(f => f.getName.endsWith(".parquet")).toLong
         Tables.t(s, d, "documents")

@@ -58,7 +58,7 @@ object Scans {
       "sink_parquet_roundtrip",
       Some("SELECT CAST(count(*) AS BIGINT) AS n_rows FROM lineitem"),
       (s, d) => {
-        val tmp = s"${sys.props("java.io.tmpdir")}/graft_roundtrip_${Integer.toHexString(d.hashCode)}"
+        val tmp = Tables.stagingDir("graft_roundtrip", d)
         Tables.t(s, d, "lineitem")
           .select("l_orderkey", "l_linenumber", "l_quantity", "l_shipdate")
           .write.mode("overwrite").parquet(tmp)

@@ -35,37 +35,27 @@ object Streams {
 
   /** Streaming-scoped shuffle-partition cap: every stateful operator keeps
     * one state-store instance per shuffle partition per micro-batch, so at
-    * harness scale 32 partitions means 32 store open/commit cycles for a few
-    * thousand rows — pure fixed overhead (the round-2 bench regression). At
-    * real scale this number is sized to state volume; here it is scoped down
-    * for the duration of one bounded query and restored after. 2, not 4:
-    * store open/commit cycles are the dominant per-micro-batch cost at
-    * harness state sizes, and halving the width measured 12-30% off the
-    * stateful stream keys with no semantic change (round 10). And 2, not
-    * 1: width 1 re-measured ~5% WORSE suite-wide (15.29 → 15.99 s over the
-    * 12 keys, back-to-back) — at width 2 the two store commits overlap on
-    * separate cores, so the remaining block cost is micro-batch machinery,
-    * not store width. Do not re-litigate without a paired measurement.
+    * harness scale a cpu-wide shuffle means one store open/commit cycle per
+    * partition for a few thousand rows — pure fixed overhead. At real scale
+    * this number is sized to state volume; here it is scoped down for the
+    * duration of one bounded query and restored after. 2, not 4: store
+    * open/commit cycles are the dominant per-micro-batch cost at harness
+    * state sizes, and halving the width measured 12-30% off the stateful
+    * stream keys with no semantic change. And 2, not 1: width 1 measured
+    * ~5% WORSE suite-wide (15.29 → 15.99 s over the 12 keys, back-to-back)
+    * — at width 2 the two store commits overlap on separate cores. Do not
+    * change without a paired measurement.
     */
-  private val StreamShufflePartitions =
-    sys.env.getOrElse("GRAFT_STREAM_WIDTH", "2")
-  /** A/B knobs for the stream-lifecycle floor (r18): each is a documented
-    * Spark conf scoped to the bounded query like the width cap. Defaults
-    * match the shipped posture; env overrides exist so paired solo
-    * measurements can decide them without rebuilding.
-    */
-  private val StreamScopedConfs: Seq[(String, String)] = Seq(
-    "spark.sql.shuffle.partitions" -> StreamShufflePartitions) ++
-    sys.env.get("GRAFT_STREAM_FORMAT_VALIDATION").map(v =>
-      "spark.sql.streaming.stateStore.formatValidation.enabled" -> v) ++
-    sys.env.get("GRAFT_STREAM_MAINT_SEC").map(v =>
-      "spark.sql.streaming.stateStore.maintenanceInterval" -> s"${v}s")
+  private val StreamShufflePartitions = "2"
   private def withStreamShuffle[T](s: SparkSession)(body: => T): T = {
-    val prevs = StreamScopedConfs.map { case (k, _) => k -> s.conf.getOption(k) }
-    StreamScopedConfs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally prevs.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
+    val key = "spark.sql.shuffle.partitions"
+    val prev = s.conf.getOption(key)
+    try {
+      s.conf.set(key, StreamShufflePartitions)
+      body
+    } finally prev match {
+      case Some(v) => s.conf.set(key, v)
+      case None => s.conf.unset(key)
     }
   }
 
@@ -176,7 +166,7 @@ object Streams {
     // The file stream source requires a directory; expose the split copy
     // (see splitEventsDir — 8 files, so the batch scan parallelizes) through
     // symlinks in a scratch dir, re-linked when the dataset fingerprint moves.
-    // Pid-keyed like graft_append_/graft_sent_ (round-15 advisor): the split
+    // Pid-keyed like graft_append_/graft_sent_: the split
     // dir the symlinks point INTO is pid-suffixed, so under a persistent
     // shared tmpdir a later JVM whose fingerprint matches the marker would
     // otherwise reuse links into an earlier process's reaped dir — dangling
@@ -407,10 +397,10 @@ object Streams {
         import org.apache.spark.sql.Row
         import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
         // The two input files are IMMUTABLE constants: stage them ONCE per
-        // JVM behind a done-marker (round 16 — the previous form re-ran two
-        // parquet write jobs plus a recursive delete inside EVERY timed
-        // repeat; only the checkpoint and sink must be fresh per run, the
-        // same split as runBoundedAppend). Each invocation gets a fresh run
+        // JVM behind a done-marker, so no timed repeat pays two parquet
+        // write jobs plus a recursive delete; only the checkpoint and sink
+        // must be fresh per run (the same split as runBoundedAppend). Each
+        // invocation gets a fresh run
         // dir whose in/ is populated by SYMLINKS — f1 before run 1, f2
         // added before run 2 — preserving the two-stage file visibility the
         // late-drop semantics depend on at zero Spark-job cost.
@@ -536,9 +526,9 @@ object Streams {
       (s, d) => withStreamShuffle(s) {
         val key = "spark.sql.streaming.stateStore.providerClass"
         val prev = s.conf.getOption(key)
-        s.conf.set(key,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         try {
+          s.conf.set(key,
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
           val sp = s
           import sp.implicits._
           val updated = streamEvents(s, d)
@@ -631,7 +621,7 @@ object Streams {
           .orderBy("user_id", "event_type")
       }),
 
-    // J11 — checkpoint crash-recovery (round-11 judge task #6): the
+    // J11 — checkpoint crash-recovery: the
     // property every production stream relies on and no other key
     // exercised — a query KILLED mid-stream resumes from its checkpoint
     // and still produces the exactly-once result. Two-phase run over a

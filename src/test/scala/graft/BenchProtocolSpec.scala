@@ -2,97 +2,31 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Unit tests for the pure pieces of the v5 bench protocol (round-15 judge
-  * task #5): bracket disagreement detection and the retry/reconcile loop
-  * that keeps a published value_norm from being stamped through a drift
-  * window. No SparkSession needed — remeasure is injected.
+/** The bench protocol's pure estimator, and the guarantee that the suite
+  * tests under the posture the bench times.
   */
 class BenchProtocolSpec extends AnyFunSuite {
-
-  test("disagree: >10% spread flags, <=10% does not, order-insensitive") {
-    assert(!Bench.disagree(1.0, 1.0))
-    assert(!Bench.disagree(1.0, 1.10))
-    assert(!Bench.disagree(1.10, 1.0))
-    assert(Bench.disagree(1.0, 1.11))
-    assert(Bench.disagree(0.5, 0.6))
-  }
-
-  test("agreeing brackets return untouched with zero remeasures") {
-    var calls = 0
-    val (a, b, used) = Bench.reconcileBrackets(0.95, 1.0, () => { calls += 1; 999.0 }, maxRetries = 3)
-    assert((a, b, used) === ((0.95, 1.0, 0)))
-    assert(calls === 0)
-  }
-
-  test("cold-start pre bracket replaced when fresh pass agrees with post") {
-    // pre=2.0 (measured through a cold window), post=1.0, box settled at ~1.0
-    var calls = 0
-    val (a, b, used) = Bench.reconcileBrackets(2.0, 1.0, () => { calls += 1; 1.02 }, maxRetries = 3)
-    assert(calls === 1)
-    assert(used === 1)
-    assert(a === 1.02 && b === 1.0)
-    assert(!Bench.disagree(a, b))
-  }
-
-  test("stalled post bracket replaced when fresh pass agrees with pre") {
-    val (a, b, used) = Bench.reconcileBrackets(1.0, 1.8, () => 0.98, maxRetries = 3)
-    assert(used === 1)
-    assert(a === 1.0 && b === 0.98)
-    assert(!Bench.disagree(a, b))
-  }
-
-  test("box that never settles exhausts retries and stays flagged") {
-    // alternating fresh ratios that never agree with either bracket
-    val seq = Iterator(3.0, 0.3, 3.0, 0.3)
-    val (a, b, used) = Bench.reconcileBrackets(1.0, 2.0, () => seq.next(), maxRetries = 3)
-    assert(used === 3)
-    assert(Bench.disagree(a, b))
-  }
-
-  test("converges in multiple steps when drift decays gradually") {
-    // fresh passes settle toward 1.0; both original brackets were off
-    val seq = Iterator(1.4, 1.05)
-    val (a, b, used) = Bench.reconcileBrackets(2.0, 1.0, () => seq.next(), maxRetries = 3)
-    assert(used <= 3)
-    assert(!Bench.disagree(a, b))
-  }
 
   test("medianOf: odd/even sizes; robust to one-sided edge stalls") {
     assert(Bench.medianOf(Seq(3.0)) === 3.0)
     assert(Bench.medianOf(Seq(1.0, 2.0)) === 1.5)
     assert(Bench.medianOf(Seq(2.0, 1.0, 3.0)) === 2.0)
-    // the v5.1 motivating case: 11 interior probes ~0.84, post-run window
-    // stalled — a 2-point bracket mean would land at ~0.61, the median stays
-    // in the run-window band
+    // a one-sided drift over the last probes of a run does not move the
+    // median out of the band the rest of the run sat in
     val probes = Seq(0.801, 0.838, 0.864, 0.805, 0.861, 0.869, 0.882, 0.867, 0.737, 0.707, 0.759)
     assert(math.abs(Bench.medianOf(probes) - 0.838) < 1e-9)
     intercept[IllegalArgumentException](Bench.medianOf(Nil))
   }
 
-  test("remeasureMerge: accepts only agreeing probe brackets; min-raw; clean-window ratio") {
-    // agreeing bracket (within 25%): accept — raw is the min over windows,
-    // ratio is the clean window's probe mean
-    val Some((mRaw, mRatio)) = Bench.remeasureMerge(5.0, 2.0, 0.8, 0.9)
-    assert(mRaw === 2.0 && math.abs(mRatio - 0.85) < 1e-12)
-    // the original sample can win the min (flag was spurious for the key
-    // itself): raw keeps the original, ratio still comes from the clean window
-    assert(Bench.remeasureMerge(1.5, 2.0, 1.0, 1.0) === Some((1.5, 1.0)))
-    // disagreeing bracket (the re-measure window itself drifted): reject —
-    // the key stays probe_flagged_final rather than gaining fake clean data
-    assert(Bench.remeasureMerge(5.0, 2.0, 0.6, 1.0) === None)
-    // boundary: exactly 25% spread still counts as agreement (same ≤
-    // criterion as segment flagging's strict >)
-    assert(Bench.remeasureMerge(3.0, 3.0, 1.0, 1.25).isDefined)
-  }
-
-  test("outlier choice is symmetric in log-space, not absolute distance") {
-    // pre=0.25, post=1.0, fresh=0.5: |log(0.25/0.5)|=log2 = |log(1.0/0.5)|
-    // tie goes to replacing post (the non-strict branch); next fresh=0.52
-    // then replaces pre (|log(0.25/0.52)| > |log(0.5/0.52)|) and agrees.
-    val seq = Iterator(0.5, 0.52)
-    val (a, b, used) = Bench.reconcileBrackets(0.25, 1.0, () => seq.next(), maxRetries = 3)
-    assert(used === 2)
-    assert((a, b) === ((0.52, 0.5)))
-    assert(!Bench.disagree(a, b))
+  test("SparkTestBase runs the timed Session posture: width, initial partitions, AQE, extensions") {
+    val spark = SparkTestBase.spark
+    val cpus = Session.cpus
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === cpus.toString)
+    assert(spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum") ===
+      (cpus * 16).toString)
+    assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
+    Session.confs.foreach { case (k, v) => assert(spark.conf.get(k) === v, k) }
+    assert(spark.sessionState.analyzer.extendedResolutionRules
+      .count(_ eq opt.AnnotationRewrite) === 1)
   }
 }

@@ -1523,4 +1523,11 @@ class OpsSpec extends AnyFunSuite {
     assert(got() == expected(),
       "post-regeneration scores diverged — stale model/listing served from a path-keyed cache")
   }
+
+  test("agg_weighted_median on an empty lineitem returns no rows instead of throwing") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_empty_lineitem").toString
+    spark.read.parquet(s"$sf/lineitem.parquet").limit(0)
+      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    assert(SparkEntry.queries("agg_weighted_median")(spark, dir).collect().isEmpty)
+  }
 }

@@ -2,27 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared session for the whole test run (spark_guide.md: one session
-  * per suite; sharing across suites keeps `sbt test` under the JVM-startup
-  * floor). Mirrors the Verify/Bench session config.
+/** One shared session for the whole test run (one session per JVM keeps
+  * `sbt test` near the JVM-startup floor), built by [[Session]] so specs
+  * pin plans under the posture the bench times.
   */
 object SparkTestBase {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(graft.opt.AnnotationRewrite.inject)
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // reliable-ckpt hygiene (Ckpt.scala): free superseded checkpoint
-      // trees via the ContextCleaner; no-op outside GRAFT_RELIABLE_CKPT
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session()
   val sf: String = "/root/testdata/sf0.001"
 }

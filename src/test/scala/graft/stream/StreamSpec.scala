@@ -48,8 +48,11 @@ class StreamSpec extends AnyFunSuite {
 
   test("streaming windowed counts equal the batch equivalent (J1 ≡ batch)") {
     val sf = SparkTestBase.sf
+    val width = spark.conf.get("spark.sql.shuffle.partitions")
     val streamed = graft.SparkEntry.queries("stream_tumbling_window")(spark, sf)
       .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
+    // the stream-scoped shuffle width must not leak into the session
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == width)
     val ev = graft.Tables.events(spark, sf)
     val batch = ev.groupBy(date_trunc("hour", col("ts_ts")).as("ws"), col("event_type"))
       .agg(count(lit(1)).as("n"))
