@@ -181,7 +181,7 @@ object Bench {
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), full)
     if (args.isEmpty)
       java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_total.json"), totalOnly)
-    spark.stop()
+    Session.stop(spark)
     // Exactly one short JSON line, after spark.stop() so no shutdown log
     // follows it; build.sbt's StdoutOutput and showSuccess=false make it
     // the last line of the sbt process output.

@@ -55,13 +55,24 @@ object Session {
     s
   }
 
+  /** Stop the session, then delete this process's tmpfs scratch dir (if
+    * [[apply]] made one): tmpfs is memory, and every staged layout of the
+    * run sits in it.
+    */
+  def stop(spark: SparkSession): Unit = {
+    spark.stop()
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(scratchDir))
+  }
+
+  private val prefix = "graft_bench_scratch_"
+  private def scratchDir = s"/dev/shm/$prefix${ProcessHandle.current().pid()}"
+
   /** Pid-keyed so a concurrent timing process never deletes this one's
     * live shuffle files; dirs of dead pids are reaped here so crashed runs
     * do not leak tmpfs. Also becomes `java.io.tmpdir`, where the operators
     * stage their layouts.
     */
   private def scratch(): String = {
-    val prefix = "graft_bench_scratch_"
     Option(new java.io.File("/dev/shm").listFiles()).getOrElse(Array.empty)
       .filter(_.getName.startsWith(prefix))
       .foreach { f =>
@@ -69,7 +80,7 @@ object Session {
           .exists(p => ProcessHandle.of(p).map[Boolean](_.isAlive).orElse(false))
         if (!alive) org.apache.commons.io.FileUtils.deleteQuietly(f)
       }
-    val dir = s"/dev/shm/$prefix${ProcessHandle.current().pid()}"
+    val dir = scratchDir
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     new java.io.File(dir).mkdirs()
     sys.props("java.io.tmpdir") = dir

@@ -42,6 +42,6 @@ object StreamProbe {
       val n = fn(spark, d).count()
       println(f"[probe] run $i total=${(System.nanoTime() - t0) / 1e9}%.3fs rows=$n")
     }
-    spark.stop()
+    Session.stop(spark)
   }
 }

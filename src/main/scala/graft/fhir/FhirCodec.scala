@@ -1,161 +1,275 @@
 package graft.fhir
 
-import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken}
+import java.io.ByteArrayOutputStream
+import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.collection.mutable.ArrayBuffer
+
+import com.fasterxml.jackson.core.{JsonEncoding, JsonFactory, JsonGenerator, JsonParser, JsonToken}
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, InternalFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, SpecializedGetters}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-/** SURVEY §2 A2/A3 — lossless FHIR JSON ↔ spec DataFrame codec
-  * (reference README.md:11-13).
+/** Lossless FHIR JSON ↔ spec DataFrame codec (SURVEY §2 A2/A3, reference
+  * README.md:11-13).
   *
-  * Encode parses NDJSON with `from_json` against a derived schema whose
-  * decimal fields are StringType — the parser copies the raw number token,
-  * so "36.5" vs "36.50" distinctions survive (README.md:347-348; SURVEY
-  * §7.4 trap 5). Decode strips `__*` annotation columns (README.md:304-306)
-  * and recursively prunes null leaves, all-null structs, and empty arrays so
-  * absent elements do not re-materialize as empty JSON objects (SURVEY §7.4
-  * trap 6 — golden files mark several structs required, so an absent complex
-  * element is a struct-of-nulls on disk).
+  * Both directions work on Spark's internal rows: encode parses each NDJSON
+  * line with Jackson straight into `GenericInternalRow`s, and decode writes
+  * JSON straight from the scanned `InternalRow`s. No external-`Row` encoder
+  * runs on either side, because generating and planning its serializer over
+  * a nested FHIR schema costs more than parsing a small file. The schema is
+  * compiled once, on the driver, into a tree of readers or writers
+  * (per-struct field-index tables, skip and decimal flags) that every line
+  * reuses. [[org.apache.spark.sql.InternalFrame]] turns the rows back into
+  * a DataFrame.
   */
 object FhirCodec {
 
-  /** FHIR NDJSON → spec DataFrame. A Jackson-based per-partition parser
-    * rather than `from_json`: Spark's JSON reader normalizes number tokens
-    * ("36.50" → "36.5"), which breaks the spec's lossless mandate for
-    * decimals stored as text (README.md:347-348). Jackson's `getText` on a
-    * number token returns the original characters, so the raw form survives.
-    * Runs distributed — one parser per partition, no driver involvement.
+  /** FHIR NDJSON → spec DataFrame. Jackson rather than Spark's JSON reader:
+    * Spark normalizes number tokens ("36.50" → "36.5"), which breaks the
+    * spec's lossless mandate for decimals stored as text (README.md:347-348),
+    * while Jackson's `getText` on a number token returns the original
+    * characters. A string-typed field whose value is an object or array
+    * (`spark.read.json` infers StringType when a field's JSON kinds conflict)
+    * stores the subtree's raw JSON text. Fields absent from the schema are
+    * skipped and blank lines yield no row; a line that is not a JSON object,
+    * a document cut short, or a missing non-nullable field fails the task.
+    * The result carries `schema` as given, nested `fhirType=decimal`
+    * metadata included, which is how decode knows to re-emit raw numbers.
     */
   def encode(spark: SparkSession, ndjson: Dataset[String], schema: StructType): DataFrame = {
-    val rows = ndjson.mapPartitions { it =>
+    val root = new StructIn(schema)
+    val rows = ndjson.queryExecution.toRdd.mapPartitions { lines =>
       val factory = new JsonFactory()
-      it.map { line =>
-        val p = factory.createParser(line)
-        try { p.nextToken(); parseValue(p, schema).asInstanceOf[Row] }
-        finally p.close()
-      }
-    }(Encoders.row(schema))
-    // Encoders.row drops nested field metadata (fhirType=decimal); re-apply
-    // the full schema so decode can re-emit decimals as raw JSON numbers.
-    rows.toDF().to(schema)
+      lines.flatMap(line => if (line.isNullAt(0)) None else parseLine(factory, root, line.getUTF8String(0)))
+    }
+    InternalFrame(spark, rows, schema)
   }
 
   def encode(ndjson: DataFrame, schema: StructType): DataFrame =
     encode(ndjson.sparkSession,
       ndjson.select(col(ndjson.columns.head).cast(StringType)).as(Encoders.STRING), schema)
 
-  private def parseValue(p: JsonParser, dt: DataType): Any = {
-    val tok = p.currentToken()
-    if (tok == JsonToken.VALUE_NULL) return null
-    dt match {
-      case st: StructType =>
-        if (tok != JsonToken.START_OBJECT) { p.skipChildren(); return null }
-        val values = new Array[Any](st.length)
-        val idx = st.fieldNames.zipWithIndex.toMap
-        var t = p.nextToken()
-        while (t != JsonToken.END_OBJECT) {
-          val name = p.currentName()
-          p.nextToken()
-          idx.get(name) match {
-            case Some(i) => values(i) = parseValue(p, st(i).dataType)
-            case None => p.skipChildren() // field absent from schema: ignore
-          }
-          t = p.nextToken()
-        }
-        Row.fromSeq(values.toIndexedSeq)
-      case at: ArrayType =>
-        if (tok != JsonToken.START_ARRAY) { p.skipChildren(); return null }
-        val buf = scala.collection.mutable.ArrayBuffer.empty[Any]
-        while (p.nextToken() != JsonToken.END_ARRAY) buf += parseValue(p, at.elementType)
-        buf.toSeq
-      case StringType => p.getText // raw token text — preserves "36.50"
-      case IntegerType => p.getIntValue
-      case LongType => p.getLongValue
-      case BooleanType => p.getBooleanValue
-      case DoubleType => p.getDoubleValue
-      case d: DecimalType =>
-        p.getDecimalValue.setScale(d.scale, java.math.RoundingMode.HALF_UP)
-      case other =>
-        throw new IllegalArgumentException(s"unsupported FHIR parse type: ${other.simpleString}")
+  private def parseLine(factory: JsonFactory, root: StructIn, text: UTF8String): Option[InternalRow] = {
+    val src = text.getByteBuffer
+    val p = factory.createParser(src.array, src.arrayOffset + src.position, src.remaining)
+    try p.nextToken() match {
+      case null => None
+      case JsonToken.START_OBJECT => Some(root.read(p, src))
+      case t => throw new IllegalArgumentException(s"NDJSON line is not a JSON object: starts with $t")
+    } finally p.close()
+  }
+
+  /** Next token, which inside a document is never the end of input: a
+    * parser that ran past a document's end would otherwise read `null`
+    * tokens forever.
+    */
+  private def next(p: JsonParser): JsonToken = {
+    val t = p.nextToken()
+    if (t == null) throw new IllegalArgumentException("NDJSON line ends inside a JSON document")
+    t
+  }
+
+  /** Reads the value at the parser's current token into its Catalyst form.
+    * `src` holds the line's bytes, for raw subtree text.
+    */
+  private sealed abstract class In extends Serializable {
+    def read(p: JsonParser, src: ByteBuffer): Any
+
+    final def value(p: JsonParser, src: ByteBuffer): Any =
+      if (p.currentToken == JsonToken.VALUE_NULL) null else read(p, src)
+  }
+
+  private def reader(dt: DataType): In = dt match {
+    case st: StructType => new StructIn(st)
+    case at: ArrayType => new ArrayIn(reader(at.elementType))
+    case StringType => StringIn
+    case IntegerType => new ScalarIn(_.getIntValue)
+    case LongType => new ScalarIn(_.getLongValue)
+    case BooleanType => new ScalarIn(_.getBooleanValue)
+    case DoubleType => new ScalarIn(_.getDoubleValue)
+    case d: DecimalType => new DecimalIn(d)
+    case other => new ScalarIn(_ =>
+      throw new IllegalArgumentException(s"unsupported FHIR parse type: ${other.simpleString}"))
+  }
+
+  private final class StructIn(st: StructType) extends In {
+    private val index = new java.util.HashMap[String, Integer]()
+    st.fieldNames.zipWithIndex.foreach { case (n, i) => index.put(n, i) }
+    private val fields = st.fields.map(f => reader(f.dataType))
+    private val required = st.fields.indices.filterNot(st(_).nullable).toArray
+
+    def read(p: JsonParser, src: ByteBuffer): InternalRow = {
+      if (p.currentToken != JsonToken.START_OBJECT) { p.skipChildren(); return null }
+      val values = new Array[Any](fields.length)
+      while (next(p) != JsonToken.END_OBJECT) {
+        val i = index.get(p.currentName)
+        next(p)
+        if (i == null) p.skipChildren() else values(i) = fields(i).value(p, src)
+      }
+      required.foreach { i =>
+        if (values(i) == null)
+          throw new IllegalArgumentException(s"required field '${st(i).name}' is null or absent")
+      }
+      new GenericInternalRow(values)
     }
   }
 
-  /** Spec DataFrame → FHIR NDJSON via a per-partition Jackson writer:
-    * `__*` annotation fields are skipped, null leaves / all-null structs /
-    * empty arrays are pruned (so required-struct encodings don't grow empty
-    * objects), and string fields carrying `fhirType=decimal` metadata (set
-    * by FhirSchema.deriveSchema) are re-emitted as raw JSON numbers —
-    * restoring the original FHIR number tokens exactly. Tables read from
-    * plain parquet have no such metadata and decode decimals as strings
-    * (the distinction is not recoverable from the parquet schema alone).
+  private final class ArrayIn(elem: In) extends In {
+    def read(p: JsonParser, src: ByteBuffer): Any = {
+      if (p.currentToken != JsonToken.START_ARRAY) { p.skipChildren(); return null }
+      val buf = ArrayBuffer.empty[Any]
+      while (next(p) != JsonToken.END_ARRAY) buf += elem.value(p, src)
+      new GenericArrayData(buf.toArray)
+    }
+  }
+
+  private object StringIn extends In {
+    def read(p: JsonParser, src: ByteBuffer): Any = p.currentToken match {
+      case JsonToken.START_OBJECT | JsonToken.START_ARRAY =>
+        // byte offsets count from the start of the parsed range
+        val from = p.currentTokenLocation.getByteOffset
+        p.skipChildren()
+        val until = p.currentLocation.getByteOffset
+        UTF8String.fromBytes(src.array, src.arrayOffset + src.position + from.toInt, (until - from).toInt)
+      case _ => UTF8String.fromString(p.getText) // raw token text: keeps "36.50"
+    }
+  }
+
+  private final class ScalarIn(get: JsonParser => Any) extends In {
+    def read(p: JsonParser, src: ByteBuffer): Any = get(p)
+  }
+
+  private final class DecimalIn(dt: DecimalType) extends In {
+    def read(p: JsonParser, src: ByteBuffer): Any = {
+      val d = Decimal(p.getDecimalValue)
+      if (!d.changePrecision(dt.precision, dt.scale)) // rounds half-up
+        throw new ArithmeticException(s"${p.getText} does not fit ${dt.simpleString}")
+      d
+    }
+  }
+
+  /** Spec DataFrame → FHIR NDJSON, one document per row in a one-column
+    * `value` Dataset. `__*` annotation fields are skipped (README.md:304-306);
+    * null leaves, all-null structs and empty arrays are pruned, so
+    * required-struct encodings don't grow empty objects (SURVEY §7.4 trap 6:
+    * golden files store an absent complex element as a struct of nulls);
+    * string fields carrying `fhirType=decimal` metadata (set by
+    * FhirSchema.deriveSchema) are re-emitted as raw JSON numbers, restoring
+    * the original number tokens exactly. Tables read from plain parquet have
+    * no such metadata and decode decimals as strings: the distinction is not
+    * recoverable from the parquet schema alone.
     */
   def decode(df: DataFrame): Dataset[String] = {
-    val schema = df.schema
-    df.map(row => writeDoc(row, schema))(Encoders.STRING)
+    val root = new StructOut(df.schema)
+    val docs = df.queryExecution.toRdd.mapPartitions { rows =>
+      val factory = new JsonFactory()
+      val buf = new ByteArrayOutputStream()
+      rows.map { row =>
+        buf.reset()
+        val gen = factory.createGenerator(buf, JsonEncoding.UTF8)
+        root.writeObject(gen, row)
+        gen.close()
+        InternalRow(UTF8String.fromBytes(buf.toByteArray))
+      }
+    }
+    InternalFrame(df.sparkSession, docs, DocSchema).as(Encoders.STRING)
   }
+
+  private val DocSchema = StructType(Seq(StructField("value", StringType)))
 
   private val RawNumber = """-?(0|[1-9]\d*)(\.\d+)?([eE][+-]?\d+)?""".r
 
-  private def writeDoc(row: Row, st: StructType): String = {
-    val sw = new java.io.StringWriter()
-    val gen = new JsonFactory().createGenerator(sw)
-    writeStruct(gen, row, st)
-    gen.close()
-    sw.toString
+  /** Writes the value at index `i` of a row or array as JSON. */
+  private sealed abstract class Out extends Serializable {
+    /** Anything here worth emitting? Drives null/empty pruning. */
+    def nonEmpty(c: SpecializedGetters, i: Int): Boolean = !c.isNullAt(i)
+    def write(g: JsonGenerator, c: SpecializedGetters, i: Int): Unit
   }
 
-  /** Anything here worth emitting? (drives null/empty pruning) */
-  private def nonEmpty(v: Any, dt: DataType): Boolean = (v, dt) match {
-    case (null, _) => false
-    case (r: Row, st: StructType) =>
-      st.fields.zipWithIndex.exists { case (f, i) =>
-        !f.name.startsWith("__") && nonEmpty(r.get(i), f.dataType)
-      }
-    case (s: scala.collection.Seq[_], at: ArrayType) =>
-      s.exists(e => nonEmpty(e, at.elementType))
-    case _ => true
+  /** `rawDecimal` applies to the strings of the field and of its arrays. */
+  private def writer(dt: DataType, rawDecimal: Boolean): Out = dt match {
+    case st: StructType => new StructOut(st)
+    case at: ArrayType => new ArrayOut(writer(at.elementType, rawDecimal))
+    case StringType => new StringOut(rawDecimal)
+    case IntegerType => new ScalarOut((g, c, i) => g.writeNumber(c.getInt(i)))
+    case LongType => new ScalarOut((g, c, i) => g.writeNumber(c.getLong(i)))
+    case BooleanType => new ScalarOut((g, c, i) => g.writeBoolean(c.getBoolean(i)))
+    case DoubleType => new ScalarOut((g, c, i) => g.writeNumber(c.getDouble(i)))
+    case d: DecimalType =>
+      new ScalarOut((g, c, i) => g.writeNumber(c.getDecimal(i, d.precision, d.scale).toJavaBigDecimal))
+    case other => new ScalarOut((_, _, _) =>
+      throw new IllegalArgumentException(s"unsupported decode type: ${other.simpleString}"))
   }
 
-  private def writeStruct(gen: com.fasterxml.jackson.core.JsonGenerator, r: Row, st: StructType): Unit = {
-    gen.writeStartObject()
-    st.fields.zipWithIndex.foreach { case (f, i) =>
-      val v = r.get(i)
-      if (!f.name.startsWith("__") && nonEmpty(v, f.dataType)) {
-        gen.writeFieldName(f.name)
-        writeValue(gen, v, f.dataType, FhirSchema.isDecimalField(f))
+  private final class StructOut(st: StructType) extends Out {
+    private val width = st.length
+    private val kept = st.fields.indices.filterNot(st(_).name.startsWith("__")).toArray
+    private val names = kept.map(st(_).name)
+    private val fields = kept.map { i => writer(st(i).dataType, FhirSchema.isDecimalField(st(i))) }
+
+    private def has(r: InternalRow): Boolean =
+      kept.indices.exists(k => fields(k).nonEmpty(r, kept(k)))
+
+    override def nonEmpty(c: SpecializedGetters, i: Int): Boolean =
+      !c.isNullAt(i) && has(c.getStruct(i, width))
+
+    def write(g: JsonGenerator, c: SpecializedGetters, i: Int): Unit =
+      writeObject(g, c.getStruct(i, width))
+
+    def writeObject(g: JsonGenerator, r: InternalRow): Unit = {
+      g.writeStartObject()
+      var k = 0
+      while (k < kept.length) {
+        if (fields(k).nonEmpty(r, kept(k))) {
+          g.writeFieldName(names(k))
+          fields(k).write(g, r, kept(k))
+        }
+        k += 1
       }
+      g.writeEndObject()
     }
-    gen.writeEndObject()
   }
 
-  private def writeValue(gen: com.fasterxml.jackson.core.JsonGenerator, v: Any,
-      dt: DataType, rawDecimal: Boolean): Unit = (v, dt) match {
-    case (r: Row, st: StructType) => writeStruct(gen, r, st)
-    case (s: scala.collection.Seq[_], at: ArrayType) =>
-      gen.writeStartArray()
-      // explicit JSON nulls preserve element-index alignment for FHIR
-      // parallel arrays (given/_given, README.md:252-297) — silently
-      // dropping null elements would shift siblings. Only trailing
-      // emptiness is pruned (whole-array emptiness never reaches here:
-      // writeStruct's nonEmpty check skips the field).
-      val lastKeep = s.lastIndexWhere(e => nonEmpty(e, at.elementType))
-      var i = 0
-      while (i <= lastKeep) {
-        if (nonEmpty(s(i), at.elementType)) writeValue(gen, s(i), at.elementType, rawDecimal)
-        else gen.writeNull()
-        i += 1
+  private final class ArrayOut(elem: Out) extends Out {
+    private def lastKept(a: ArrayData): Int = {
+      var j = a.numElements - 1
+      while (j >= 0 && !elem.nonEmpty(a, j)) j -= 1
+      j
+    }
+
+    override def nonEmpty(c: SpecializedGetters, i: Int): Boolean =
+      !c.isNullAt(i) && lastKept(c.getArray(i)) >= 0
+
+    def write(g: JsonGenerator, c: SpecializedGetters, i: Int): Unit = {
+      val a = c.getArray(i)
+      // explicit JSON nulls keep element indexes aligned for FHIR parallel
+      // arrays (given/_given, README.md:252-297): dropping null elements
+      // would shift the siblings, so only trailing emptiness is pruned
+      val last = lastKept(a)
+      g.writeStartArray()
+      var j = 0
+      while (j <= last) {
+        if (elem.nonEmpty(a, j)) elem.write(g, a, j) else g.writeNull()
+        j += 1
       }
-      gen.writeEndArray()
-    case (s: String, StringType) if rawDecimal && RawNumber.matches(s) => gen.writeRawValue(s)
-    case (s: String, _) => gen.writeString(s)
-    case (b: Boolean, _) => gen.writeBoolean(b)
-    case (i: Int, _) => gen.writeNumber(i)
-    case (l: Long, _) => gen.writeNumber(l)
-    case (d: Double, _) => gen.writeNumber(d)
-    case (d: java.math.BigDecimal, _) => gen.writeNumber(d)
-    case (other, t) =>
-      throw new IllegalArgumentException(s"unsupported decode value $other: ${t.simpleString}")
+      g.writeEndArray()
+    }
   }
 
+  private final class StringOut(rawDecimal: Boolean) extends Out {
+    def write(g: JsonGenerator, c: SpecializedGetters, i: Int): Unit = {
+      val s = c.getUTF8String(i).toString
+      if (rawDecimal && RawNumber.matches(s)) g.writeRawValue(s) else g.writeString(s)
+    }
+  }
+
+  private final class ScalarOut(put: (JsonGenerator, SpecializedGetters, Int) => Unit) extends Out {
+    def write(g: JsonGenerator, c: SpecializedGetters, i: Int): Unit = put(g, c, i)
+  }
 }

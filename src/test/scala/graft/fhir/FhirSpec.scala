@@ -3,13 +3,16 @@ package graft.fhir
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 /** SURVEY §5 layers 1-3: conformance clauses, golden files, round-trip.
   * Fixtures are the spec's own worked examples
   * (/root/reference/README.md:90-96, 116-124, 150-163, 325-327).
   */
-class FhirSpec extends AnyFunSuite {
+class FhirSpec extends AnyFunSuite with TimeLimits {
+  private implicit val signaler: Signaler = ThreadSignaler
   private lazy val spark = SparkTestBase.spark
   private def ds(lines: String*) = {
     import spark.implicits._
@@ -61,6 +64,69 @@ class FhirSpec extends AnyFunSuite {
     val v2 = FhirCodec.encode(spark, ds(json2), schema)
       .select(col("valueQuantity.value")).head().getString(0)
     assert(v2 == "36.50")
+    // the nested decimal marker rides on the encoded schema, so decode can
+    // re-emit the raw number
+    val vq = df.schema("valueQuantity").dataType.asInstanceOf[StructType]
+    assert(FhirSchema.isDecimalField(vq("value")), vq("value").metadata.json)
+    // a field the schema lacks is skipped, its siblings still land
+    val json3 = """{"resourceType":"Observation","note":[{"text":"x"}],"valueQuantity":{"value":1.0,"code":"kg","unit":"kg"}}"""
+    val r3 = FhirCodec.encode(spark, ds(json3), schema)
+      .select(col("valueQuantity.value"), col("valueQuantity.unit")).collect()
+    assert(r3.map(r => (r.getString(0), r.getString(1))).toSeq == Seq(("1.0", "kg")))
+    // empty NDJSON: no rows, no exception, the schema as given
+    val empty = FhirCodec.encode(spark, ds(), schema)
+    assert(empty.count() == 0)
+    assert(empty.schema == schema)
+    assert(FhirCodec.decode(empty).count() == 0)
+  }
+
+  test("encode: a field that is an object in one resource, an array in another and a string in a third keeps the raw JSON text") {
+    // spark.read.json infers StringType for `a`; the parser must consume the
+    // object/array subtree instead of leaving it for the enclosing struct,
+    // which would otherwise read past the end of the line
+    val docs = Seq(
+      """{"resourceType":"Basic","id":"1","a":"s","z":"1"}""",
+      """{"resourceType":"Basic","id":"2","a":{"b":1},"z":"2"}""",
+      """{"resourceType":"Basic","id":"3","a":["p","q"],"z":"3"}""")
+    val schema = FhirSchema.deriveSchema(spark, ds(docs: _*))
+    assert(schema("a").dataType == StringType)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("id"), col("a"), col("z").cast("long")).orderBy("id").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+    failAfter(2.minutes) {
+      val got = rows(FhirCodec.encode(spark, ds(docs: _*), schema))
+      assert(got == rows(spark.read.json(ds(docs: _*))))
+      assert(got == Seq(("1", "s", 1L), ("2", """{"b":1}""", 2L), ("3", """["p","q"]""", 3L)))
+    }
+  }
+
+  test("encode: blank lines yield no row; malformed lines fail the task") {
+    val schema = StructType(Seq(
+      StructField("a", StructType(Seq(StructField("b", StringType)))),
+      StructField("resourceType", StringType, nullable = false)))
+    val ok = """{"resourceType":"Basic","a":{"b":"x"}}"""
+    assert(FhirCodec.encode(spark, ds("", ok, "  "), schema).count() == 1)
+    failAfter(2.minutes) {
+      for (bad <- Seq(
+          """{"resourceType":"Basic","a":{"b":"x"""", // cut short
+          """["resourceType"]""",                      // not an object
+          """{"a":{"b":"x"}}"""))                       // required field absent
+        intercept[Exception](FhirCodec.encode(spark, ds(ok, bad), schema).collect())
+    }
+  }
+
+  test("codec plans run on internal rows: no object (de)serialization node in encode or decode") {
+    // fields in schema (alphabetical) order, so decode reproduces the line
+    val json = """{"id":"o1","resourceType":"Observation","valueQuantity":{"unit":"Cel","value":36.50}}"""
+    val schema = FhirSchema.deriveSchema(spark, ds(json))
+    val enc = FhirCodec.encode(spark, ds(json), schema)
+    val dec = FhirCodec.decode(enc)
+    assert(dec.collect().toSeq == Seq(json))
+    for ((name, qe) <- Seq("encode" -> enc.queryExecution, "decode" -> dec.queryExecution)) {
+      val plan = qe.executedPlan.toString
+      for (node <- Seq("SerializeFromObject", "DeserializeToObject", "MapPartitions"))
+        assert(!plan.contains(node), s"$name plan holds $node:\n$plan")
+    }
   }
 
   // --- A2∘A3 round-trip on golden files (README.md:11-13) ---
@@ -111,6 +177,16 @@ class FhirSpec extends AnyFunSuite {
     assert(ug.size() == 2, s"parallel array length: $decoded")
     assert(ug.get(0).isNull, s"leading null must survive: $decoded")
     assert(ug.get(1).at("/id").asText() == "g2")
+    // an explicit null inside a repeated primitive keeps its index through
+    // encode and decode; only trailing nulls are pruned
+    val json2 = """{"resourceType":"Patient","name":[{"given":["Jane",null,"J",null]}]}"""
+    val given = FhirCodec.encode(spark, ds(json2), schema)
+      .select(expr("name[0].given")).head().getSeq[String](0)
+    assert(given == Seq("Jane", null, "J", null))
+    val back = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(FhirCodec.decode(FhirCodec.encode(spark, ds(json2), schema)).head())
+      .at("/name/0/given")
+    assert(back.toString == """["Jane",null,"J"]""")
   }
 
   test("golden files: annotation placement is sibling-in-group (README.md:304-306)") {

@@ -48,25 +48,41 @@ class PropertySpec extends AnyFunSuite {
     n <- Gen.choose(-1000, 1000)
     b <- Gen.oneOf(true, false)
     tag1 <- genName; tag2 <- genName
+    gap <- Gen.oneOf("", "null,") // an explicit null inside the array
     extra <- genName
   } yield s"""{"resourceType":"Observation","id":${quote(id)},""" +
     s""""valueQuantity":{"value":$dec,"unit":"mg"},""" +
     s""""effectiveDateTime":${quote(date)},"sequence":$n,"active":$b,""" +
-    s""""category":[${quote(tag1)},${quote(tag2)}],"note":${quote(extra)}}"""
+    s""""category":[${quote(tag1)},$gap${quote(tag2)}],"note":${quote(extra)}}"""
 
   test("property: decode(encode(x)) reproduces the JSON tree, decimals exact") {
     import spark.implicits._
     val docs = samples(genResource, 40).toList
     val ds = spark.createDataset(docs)
     val schema = FhirSchema.deriveSchema(spark, ds)
-    val back = FhirCodec.decode(FhirCodec.encode(spark, ds, schema)).collect()
+    val encoded = FhirCodec.encode(spark, ds, schema)
+    val vq = encoded.schema("valueQuantity").dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
+    assert(FhirSchema.isDecimalField(vq("value")), "nested decimal marker lost on encode")
+    val back = FhirCodec.decode(encoded).collect()
     assert(back.length == docs.length)
+    assert(docs.exists(_.contains(",null,")), "generator never placed a null inside an array")
     val wanted = docs.map(mapper.readTree).map(t => t.get("id").asText() -> t).toMap
     back.foreach { j =>
       val tree = mapper.readTree(j)
       val orig = wanted(tree.get("id").asText())
       assert(tree == orig, s"round-trip drift:\n  in:  $orig\n  out: $tree")
     }
+    // a field the schema lacks is skipped; the rest of the document survives
+    val noNote = org.apache.spark.sql.types.StructType(schema.filterNot(_.name == "note"))
+    FhirCodec.decode(FhirCodec.encode(spark, ds, noNote)).collect().foreach { j =>
+      val tree = mapper.readTree(j)
+      val orig = wanted(tree.get("id").asText()).deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
+      orig.remove("note")
+      assert(tree == orig, s"unknown-field drift:\n  in:  $orig\n  out: $tree")
+    }
+    // empty NDJSON round-trips to no documents
+    assert(FhirCodec.decode(FhirCodec.encode(spark, spark.createDataset(Seq.empty[String]), schema))
+      .collect().isEmpty)
   }
 
   test("property: derive(a ++ b) == merge(derive(a), derive(b))") {
