@@ -22,13 +22,13 @@ object PlanDump {
       println(s"======== $k ========")
       val df = SparkEntry.queries(k)(spark, dir)
       df.collect() // materialize so AQE finalizes every stage
+      // printed whole: a wide object (de)serializer or join tree would
+      // otherwise push the scans out of the dump
       if (formatted)
-        // wide plans (multi-join trees) need the room to reach the
-        // per-operator details
         println(df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")).take(60000))
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
       else
-        println(df.queryExecution.executedPlan.toString.take(9000))
+        println(df.queryExecution.executedPlan.toString)
     }
     spark.stop()
   }

@@ -41,8 +41,11 @@ object Session {
 
   /** Build (or join) the session. `tmpfsScratch` puts all scratch IO —
     * shuffle files, stream checkpoints, staged layouts — on a tmpfs dir
-    * owned by this process: the timing mains grade plan quality, and a
-    * disk fsync path that swings several-fold run to run buries it.
+    * owned by this process, so the timing mains grade plan quality and
+    * not the page cache of a disk shared with other processes. The fixed
+    * cost per written file was never the disk (a 4 KB write + fsync takes
+    * about 0.7 ms): it was Hadoop's local filesystem starting `chmod` and
+    * `readlink` processes, which `LocalFs.scala` removes for every session.
     */
   def apply(tmpfsScratch: Boolean = false): SparkSession = {
     val b = SparkSession.builder()

@@ -38,13 +38,15 @@ object Streams {
     * harness scale a cpu-wide shuffle means one store open/commit cycle per
     * partition for a few thousand rows — pure fixed overhead. At real scale
     * this number is sized to state volume; here it is scoped down for the
-    * duration of one bounded query and restored after. 2, not 4: store
-    * open/commit cycles are the dominant per-micro-batch cost at harness
-    * state sizes, and halving the width measured 12-30% off the stateful
-    * stream keys with no semantic change. And 2, not 1: width 1 measured
-    * ~5% WORSE suite-wide (15.29 → 15.99 s over the 12 keys, back-to-back)
-    * — at width 2 the two store commits overlap on separate cores. Do not
-    * change without a paired measurement.
+    * duration of one bounded query and restored after. 2, not the session
+    * width (4 cores): even with store commits free of process spawns
+    * (LocalFs.scala), the session width lost 6 of 8 paired
+    * `stream_replay` runs, median `items_per_s` 18.1k → 16.0k (-11%),
+    * `pass_s` 1.68 → 1.88 s. And 2, not 1: width 1 measured ~5% WORSE
+    * suite-wide (15.29 → 15.99 s over the 12 keys, back-to-back, measured
+    * while commits still spawned processes) — at width 2 the two store
+    * commits overlap on separate cores. Do not change without a paired
+    * measurement.
     */
   private val StreamShufflePartitions = "2"
   private def withStreamShuffle[T](s: SparkSession)(body: => T): T = {
