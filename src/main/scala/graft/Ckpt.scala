@@ -38,25 +38,29 @@ object Ckpt {
   val reliable: Boolean = sys.env.contains("GRAFT_RELIABLE_CKPT")
   private val warnedNoCleaner = new java.util.concurrent.atomic.AtomicBoolean(false)
 
-  /** One-slot checkpoint registry: for query bodies whose plan
-    * consumes one derived table TWICE (a stats aggregate joined back
-    * against its own source — bm25, tf-idf), checkpointing the shared
-    * table executes its expensive pass ONCE per invocation instead of once
-    * per consumer. The slot pins the checkpointed Dataset and releases the
-    * PREVIOUS invocation's blocks (the graph_pagerank final-state
-    * discipline) — release must lag one invocation because the returned
-    * plan still references the blocks when the query function returns.
-    * The checkpoint itself is eager and runs inside the caller's timed
+  /** The one superseded-checkpoint registry, keyed (session, call-site
+    * key). [[slot]] checkpoints a Dataset, PINS it under its key together
+    * with its block ids, and releases the entry it supersedes by id — the
+    * previous invocation's. Release must lag one invocation because the
+    * returned plan still references the blocks when the query function
+    * returns, and the pin keeps the ContextCleaner from racing the
+    * explicit release once the caller drops its result (that race showed
+    * as nondeterministic live-block counts in the cache-hygiene tests).
+    * So repeated runs of a key hold one entry's blocks, never a growing
+    * pile. Callers are the kernels whose plan reads one derived table
+    * several times (collapse kernels, bm25, phash, triangles, PageRank):
+    * the checkpoint runs the expensive pass ONCE per invocation instead of
+    * once per consumer. It is eager and runs inside the caller's timed
     * window; nothing is reused across invocations.
     */
   private val slots = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), (Dataset[_], Seq[Int])]()
+    (SparkSession, String), (Dataset[_], Seq[Int])]()
 
   def slot[T](key: String, df: Dataset[T]): Dataset[T] = {
-    val sc = df.sparkSession.sparkContext
+    val s = df.sparkSession
     val (out, ids) = apply(df)
-    Option(slots.put((sc, key), (out, ids))).foreach { case (_, oldIds) =>
-      release(df.sparkSession, oldIds)
+    Option(slots.put((s, key), (out, ids))).foreach { case (_, oldIds) =>
+      release(s, oldIds)
     }
     out
   }

@@ -14,8 +14,8 @@ import org.apache.spark.sql.types._
   */
 /** @param memoized this key's timed bench repeats reuse an artifact built
   *   once per (session, dataset) — a memoized corpus artifact (IVF index,
-  *   bigram LM, top-pair set, near-dup pairs/labels) or a done-marker-staged
-  *   input layout (bucketed tables, manifest dirs, stream input staging).
+  *   bigram LM, top-pair set, near-dup pairs/labels) or a staged input
+  *   layout (`Tables.stage` dirs, bucketed catalog tables).
   *   Warm-up populates it, so repeats measure post-artifact (probe/read)
   *   work — the production posture for dataset-level artifacts, but a
   *   MEASUREMENT-BOUNDARY property a cross-round per-key comparison must
@@ -78,17 +78,40 @@ object Tables {
     }
   }
 
-  /** Cached reader for staged-artifact dirs (the `_dataset`-marker tables
-    * the memoized keys build in warm-up), keyed by the same content
-    * fingerprint the staging marker carries so a re-stage invalidates.
-    * Without this every timed repeat of a memoized key re-listed the
-    * staged dir, re-read footers, and — via Tables.spread's
-    * `df.rdd.getNumPartitions` on a FRESH Dataset each call — re-ran
-    * physical planning of the read (Dataset.rdd is lazy per OBJECT) —
-    * a fixed cost inside the timed window that measured 0.29→0.51 norm s
-    * on sim_mrl_rerank. Same eviction
-    * discipline as t(): a superseded fingerprint's entry is dropped on
-    * miss.
+  /** Write-once staging of a derived layout under `dir` — the one marker
+    * rule every staged artifact follows. If `dir/_done` already holds `fp`
+    * the layout is current and `build` is skipped. Otherwise `dir` is
+    * deleted, `build` writes it afresh, and `fp` goes to `dir/_done` LAST,
+    * so a build that throws leaves no marker and the next call rebuilds.
+    * `fp` is the [[fingerprint]] of every table the build reads, prefixed
+    * with a kernel tag where the staging code's output can change on
+    * unchanged data: in-place regeneration or a kernel change then
+    * re-stages instead of serving the stale layout. Spark listings and
+    * `*.parquet` globs both skip the underscore-prefixed marker, so it may
+    * sit inside a table dir. Returns `fp`, for a [[staged]] reader to key
+    * on. Query bodies run serially on the driver, so there is no lock.
+    */
+  def stage(dir: String, fp: String)(build: => Unit): String = {
+    import java.nio.file.{Files, Paths}
+    val marker = Paths.get(dir, "_done")
+    if (!(Files.exists(marker) && Files.readString(marker) == fp)) {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      build
+      Files.createDirectories(marker.getParent)
+      Files.writeString(marker, fp)
+    }
+    fp
+  }
+
+  /** Cached reader for a layout written by [[stage]], keyed by the `fp`
+    * that stage returned so a re-stage invalidates. Without this every
+    * timed repeat of a memoized key re-listed the staged dir, re-read
+    * footers, and — via Tables.spread's `df.rdd.getNumPartitions` on a
+    * FRESH Dataset each call — re-ran physical planning of the read
+    * (Dataset.rdd is lazy per OBJECT): a fixed cost inside the timed
+    * window that measured 0.29→0.51 norm s on sim_mrl_rerank. Same
+    * eviction discipline as t(): a superseded fingerprint's entry is
+    * dropped on miss.
     */
   def staged(spark: SparkSession, dataDir: String, markerFp: String): DataFrame = {
     val fp = dataDir + "@" + markerFp
@@ -188,15 +211,14 @@ object Tables {
   }
 
   /** Content fingerprint of one or more dataset table files — the marker
-    * value for done-marker-staged artifacts (`_dataset` files). Combines
-    * the dataset path with each source file's name/size/mtime stamp
-    * (recursively for directories), so regenerating data IN PLACE at the
-    * same path (the GenScale rehearsal flow) changes the fingerprint and
-    * forces a re-stage — a bare-path marker silently keeps the stale
-    * staged artifact and lets BOTH engines agree on the wrong data.
-    * Missing files stamp as "absent" rather
-    * than throwing, so probing a marker never fails before the staging
-    * code's own error surfaces.
+    * value [[stage]] compares. Combines the dataset path with each source
+    * file's name/size/mtime stamp (recursively for directories), so
+    * regenerating data IN PLACE at the same path (the GenScale rehearsal
+    * flow) changes the fingerprint and forces a re-stage — a bare-path
+    * marker silently keeps the stale staged artifact and lets BOTH engines
+    * agree on the wrong data. Missing files stamp as "absent" rather than
+    * throwing, so probing a marker never fails before the staging code's
+    * own error surfaces.
     */
   def fingerprint(d: String, tables: String*): String = {
     // listFiles() returns null on I/O or permission errors — treat like

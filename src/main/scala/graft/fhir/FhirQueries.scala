@@ -20,10 +20,9 @@ object FhirQueries {
     // A1 — schema derivation: decode the golden Patient table to NDJSON,
     // re-derive a spec schema from the JSON, emit (path, type) rows. The
     // golden file is immutable, so the derived leaf table is a fixed
-    // 51-row constant — oracled as a VALUES literal (round 6; was
-    // no-oracle/structural). FhirSpec additionally pins golden-file
-    // StructType equality, which the leaf serialization can't express
-    // (nullability, metadata markers).
+    // 51-row constant — oracled as a VALUES literal. FhirSpec additionally
+    // pins golden-file StructType equality, which the leaf serialization
+    // can't express (nullability, metadata markers).
     QueryDef(
       "fhir_schema_derive",
       Some(
@@ -146,7 +145,7 @@ object FhirQueries {
       (s, d) => {
         // decode runs ONCE: schema inference (spark.read.json) and the
         // re-encode both consume the checkpointed strings instead of each
-        // re-running scan+decode (round-8 task: multi-scan FHIR keys).
+        // re-running scan+decode.
         val ndjson = graft.Ckpt(FhirCodec.decode(Tables.golden(s, "Observation", d)))._1
         val schema = FhirSchema.deriveSchema(s, ndjson)
         val back = FhirCodec.encode(s, ndjson, schema)
@@ -169,14 +168,13 @@ object FhirQueries {
         // — a rehearsal dir and the golden dir must not share a staging.
         val tmp = s"${sys.props("java.io.tmpdir")}/graft_fhir_merge_" +
           s"${Integer.toHexString(d.hashCode)}_${ProcessHandle.current().pid()}"
-        // The two staged projections derive from an immutable golden file:
-        // write them once per JVM behind a done-marker so repeats pay only
-        // the mergeSchema READ — the operator under test (round-8 task).
-        val done = java.nio.file.Paths.get(tmp, "_done")
-        if (!java.nio.file.Files.exists(done)) {
+        // The two projections are staged once per Patient file, so repeats
+        // pay only the mergeSchema READ — the operator under test. The
+        // fingerprint covers both places golden() may resolve Patient to.
+        Tables.stage(tmp, Tables.fingerprint(s"$d/fhir", "Patient") + ";" +
+            Tables.fingerprint(Tables.goldenDir, "Patient")) {
           p.select("id", "gender").write.mode("overwrite").parquet(s"$tmp/a")
           p.select("id", "birthDate").write.mode("overwrite").parquet(s"$tmp/b")
-          java.nio.file.Files.writeString(done, "ok")
         }
         s.read.option("mergeSchema", "true").parquet(s"$tmp/a", s"$tmp/b")
           .select(col("id"), col("gender"), col("birthDate"))
@@ -193,8 +191,8 @@ object FhirQueries {
     // patterns). One row per (table, field) check; same regex text runs in
     // Spark rlike and DuckDB regexp_matches (both RE2-compatible subsets).
     // All of a table's rules fuse into ONE scan + ONE agg row (the
-    // dq_expectation_suite discipline — round 7 ran 17 separate
-    // scan+agg jobs over the same 3 files), then the agg row unpivots to
+    // dq_expectation_suite discipline — one scan+agg job per rule would be
+    // 17 jobs over the same 3 files), then the agg row unpivots to
     // the per-(table, field) shape via a literal struct-array explode.
     QueryDef(
       "fhir_conformance_check",
@@ -213,13 +211,13 @@ object FhirQueries {
             s"CAST(count(CASE WHEN NOT regexp_matches($field, '^($re)$$') THEN 1 END) AS BIGINT) AS n_bad " +
             s"FROM read_parquet('$G/$tbl.parquet')"
         } ++ Seq {
-          // UCUM linear-scale rule (round 13): quantity codes on a special
+          // UCUM linear-scale rule: quantity codes on a special
           // (logarithmic / pH) scale cannot be linear-canonicalized — A8
           // leaves their canonical group NULL; this rule COUNTS them so a
           // corpus full of dB/pH Observations is flagged, not silent.
           // SQL-escape embedded quotes: the UCUM special list includes the
           // homeopathic primes ([hp'_X]…) whose ' would otherwise terminate
-          // the literal and break the oracle's parse (round-14 find)
+          // the literal and break the oracle's parse
           val specials = UcumGrammar.specialLoneCodes
             .map(c => s"'${c.replace("'", "''")}'").mkString(", ")
           "SELECT 'Observation' AS tbl, 'valueQuantity.code' AS field, " +
@@ -597,7 +595,7 @@ object FhirQueries {
     QueryDef(
       "fhir_view_definition",
       Some(
-        // Oracle mirrors the view's FULL where list (round-16 advisor): the
+        // Oracle mirrors the view's FULL where list: the
         // maritalStatus.text.exists() predicate must appear here too, or the
         // oracle only agrees while the golden data happens to contain no
         // female patient with a null maritalStatus.text.
@@ -680,7 +678,7 @@ object FhirQueries {
       }),
 
     // A13c — ViewDefinition over ExplanationOfBenefit (the deepest golden
-    // file, 66 leaf columns): the round-17 evaluator slice in one view —
+    // file, 66 leaf columns): the evaluator's path functions in one view —
     // getResourceKey(), getReferenceKey(Patient) on a literal relative
     // reference, a %constant in a comparison where predicate, exists() on
     // a REPEATING element (size > 0, not isNotNull), a string-literal
@@ -743,7 +741,7 @@ object FhirQueries {
           .orderBy("eob_id", "item_seq", "amount_kind", "amount")
       }),
 
-    // A13d — ViewDefinition choice-type slice (round-17 slice 3) over the
+    // A13d — ViewDefinition choice-type slice over the
     // golden Observation file: `ofType(Type)` steps address the layout's
     // flattened choice columns (README.md:139-172 — value[x] ships as
     // valueQuantity / valueCodeableConcept / valueString), including a

@@ -27,13 +27,13 @@ object Ivf {
   private val NProbe = 2
   private val TopK = 3
 
-  /** The IVF index is a PERSISTED STORAGE ARTIFACT (round-11 judge task):
-    * centroids + assignments written to parquet under a directory keyed by
-    * an input FINGERPRINT (dataset dir + embeddings file names/sizes/
-    * mtimes), assignments partitioned by cluster id — so a probe reads
-    * nprobe partitions, a fresh session (or a fresh JVM) loads the index
-    * with zero k-means jobs, and a regenerated dataset at the same path
-    * (the GenScale rehearsal flow) misses the fingerprint and rebuilds.
+  /** The IVF index is a PERSISTED STORAGE ARTIFACT: centroids +
+    * assignments written to parquet under a directory keyed by the
+    * embeddings' [[Tables.fingerprint]], assignments partitioned by
+    * cluster id — so a probe reads nprobe partitions, a fresh session (or
+    * a fresh JVM) loads the index with zero k-means jobs, and a
+    * regenerated dataset at the same path (the GenScale rehearsal flow)
+    * misses the fingerprint and rebuilds.
     * The JVM memo below is only a per-(session, dataset) handle cache over
     * the loaded artifact (it saves re-collecting the k×dim centroid table
     * per invocation); the k-means build runs ONLY when no artifact exists
@@ -43,28 +43,14 @@ object Ivf {
   private val idxMemo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), (DataFrame, Array[Array[Double]])]()
 
-  /** Fingerprint of the embeddings input: path + per-file (name, size,
-    * mtime). Changing data at the same path changes the fingerprint, so
-    * stale artifacts are abandoned, never overwritten mid-read.
+  /** Index dir named by a hash of the embeddings' fingerprint: changed
+    * data at the same path gets a new dir, so stale artifacts are
+    * abandoned, never overwritten mid-read.
     */
-  private def srcFingerprint(d: String): String = {
-    // null-guarded listFiles + dir-name-in-stamp, like Tables.fingerprint
-    // (round-12 advisor finding applied to both stamp implementations)
-    def stamp(f: java.io.File): String =
-      if (!f.exists) s"${f.getName}:absent"
-      else if (f.isDirectory)
-        Option(f.listFiles()) match {
-          case Some(fs) =>
-            fs.sortBy(_.getName).map(stamp).mkString(s"${f.getName}[", ",", "]")
-          case None => s"${f.getName}:unlistable"
-        }
-      else s"${f.getName}:${f.length}:${f.lastModified}"
-    val src = new java.io.File(s"$d/embeddings.parquet")
-    Integer.toHexString((d + "|" + stamp(src)).hashCode)
+  private[graft] def indexDir(d: String): String = {
+    val fp = Integer.toHexString(Tables.fingerprint(d, "embeddings").hashCode)
+    s"${sys.props("java.io.tmpdir")}/graft_ivf_$fp"
   }
-
-  private[graft] def indexDir(d: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_ivf_${srcFingerprint(d)}"
 
   private def sqDist(a: Array[Double], b: Array[Double]): Double = {
     var acc = 0.0; var i = 0
@@ -81,12 +67,11 @@ object Ivf {
   private[graft] def index(s: SparkSession, d: String): (DataFrame, Array[Array[Double]]) = {
     // memo keyed on the fingerprinted index DIR, not the dataset path — a
     // path key would hand back a stale in-JVM handle after in-place data
-    // regeneration even though the artifact itself re-keys (round-11
-    // advisor: index/oracle-staging/memo must invalidate together)
+    // regeneration even though the artifact itself re-keys: index, oracle
+    // staging and memo must invalidate together
     val dir = indexDir(d)
     idxMemo.computeIfAbsent((s, dir), { case (ss, dd) =>
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dd, "_done")))
-        buildIndex(ss, d, dd)
+      Tables.stage(dd, Tables.fingerprint(d, "embeddings"))(buildIndex(ss, d, dd))
       loadIndex(ss, dd)
     })
   }
@@ -127,10 +112,10 @@ object Ivf {
       // Centroid update with MAP-SIDE COMBINING (MLlib's treeAggregate
       // shape): each partition folds its vectors into at most K running
       // (sum, n) partials, so the exchange carries O(partitions × K) rows
-      // instead of every vector — round 5 shipped all N vectors to K=8
-      // reducers via groupByKey.mapGroups, which makes the 8 hot reducers
-      // the whole job at 100× scale. reduceGroups keeps a partial
-      // aggregation stage before the K-row exchange.
+      // instead of every vector. Shipping all N vectors to K=8 reducers
+      // (groupByKey.mapGroups) would make the 8 hot reducers the whole job
+      // at 100× scale; reduceGroups keeps a partial aggregation stage
+      // before the K-row exchange.
       centroids = vecs
         .mapPartitions { it =>
           val cs = bc.value
@@ -175,7 +160,6 @@ object Ivf {
     centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("cluster", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "_done"), d)
   }
 
   /** Fixed staging path for the IVF oracle tables (the staged-signature
@@ -189,32 +173,27 @@ object Ivf {
     */
   private val IvfOracleDir = s"${sys.props("java.io.tmpdir")}/graft_ivf_oracle"
 
-  private def stageIvfOracle(s: SparkSession, d: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    // marker carries the SAME srcFingerprint that keys the index dir, so
-    // index artifact, staged oracle tables, and the session memo always
-    // invalidate together on in-place data regeneration (round-11 advisor).
-    // Round 14 (judge's staged-oracle-shrink direction, the phash grid
-    // treatment applied to k-means): ONLY the centroids stage now — the
-    // genuinely iterative Lloyd output. Assignment, nprobe probe selection
-    // and nAssign multi-assignment are all RE-DERIVED by the oracle from
-    // the centroids and the base table ([[duckAssignCtes]]), so the argmin
-    // arithmetic is cross-engine checked instead of trusted; kernel-version
-    // tag invalidates the pre-grid stagings.
-    val fp = "centroids1|" + srcFingerprint(d)
-    val marker = Paths.get(IvfOracleDir, "_dataset")
-    if (Files.exists(marker) && Files.readString(marker) == fp) return
-    val sp = s
-    import sp.implicits._
-    val (_, centroids) = index(s, d)
-    centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cluster", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$IvfOracleDir/centroids")
-    Files.writeString(marker, fp)
-  }
+  /** Stages ONLY the centroids — the genuinely iterative Lloyd output.
+    * Assignment, nprobe probe selection and nAssign multi-assignment are
+    * all RE-DERIVED by the oracle from the centroids and the base table
+    * ([[duckAssignCtes]]), so the argmin arithmetic is cross-engine
+    * checked instead of trusted. The fingerprint is the one that names the
+    * index dir, so index artifact, staged oracle tables and the session
+    * memo invalidate together on in-place data regeneration; the
+    * `centroids1` kernel tag names the centroids-only layout.
+    */
+  private def stageIvfOracle(s: SparkSession, d: String): String =
+    Tables.stage(IvfOracleDir, "centroids1|" + Tables.fingerprint(d, "embeddings")) {
+      val sp = s
+      import sp.implicits._
+      val (_, centroids) = index(s, d)
+      centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+        .toDF("cluster", "centroid")
+        .coalesce(1).write.mode("overwrite").parquet(s"$IvfOracleDir/centroids")
+    }
 
   /** DuckDB re-derivation of every k-means DOWNSTREAM arithmetic step from
-    * the staged centroids alone (round 14): squared distance computed as
+    * the staged centroids alone: squared distance computed as
     * `list_dot_product(diff, diff)` over the index-wise difference list —
     * the identical ascending subtract/multiply/add double fold as
     * [[sqDist]], so values are bit-identical — and ranks broken by cluster
@@ -238,8 +217,7 @@ object Ivf {
     s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b)))"
 
   val defs: Seq[QueryDef] = Seq(
-    // ORACLED via the staged CENTROIDS alone (round 14 — upgraded from
-    // round 11's staged assignment/probe tables): DuckDB re-derives the
+    // ORACLED via the staged CENTROIDS alone: DuckDB re-derives the
     // argmin assignment and the nprobe probe selection from the centroids
     // and the base table ([[duckAssignCtes]]) and then runs the identical
     // probe-cluster equi-join + 6-dp exact-cosine rank — only the Lloyd
@@ -304,15 +282,14 @@ object Ivf {
     // its τ=0.35 drop set at sf0.01.
     QueryDef(
       "dedup_semdedup_cluster",
-      // ORACLED (round 14, upgraded from the round-11 staged table): the
-      // nAssign=3 multi-assignment is RE-DERIVED from the staged centroids
-      // ([[duckAssignCtes]] rn <= 3), and DuckDB states the UNCOLLAPSED
-      // semantics directly — drop j iff some i < j shares a probe cluster
-      // and cosine(i, j) ≥ τ — which the collapsed Spark kernel provably
-      // equals (the memberDrops/repDrops case analysis above). Zero-norm
-      // pairs: the kernel scores them NaN (≥ τ false); DuckDB's 0/0 is
-      // NULL, equally excluded by the WHERE. OpsSpec keeps the recall-
-      // vs-exact bounds.
+      // ORACLED via the staged centroids: the nAssign=3 multi-assignment
+      // is RE-DERIVED from them ([[duckAssignCtes]] rn <= 3), and DuckDB
+      // states the UNCOLLAPSED semantics directly — drop j iff some i < j
+      // shares a probe cluster and cosine(i, j) ≥ τ — which the collapsed
+      // Spark kernel provably equals (the memberDrops/repDrops case
+      // analysis above). Zero-norm pairs: the kernel scores them NaN
+      // (≥ τ false); DuckDB's 0/0 is NULL, equally excluded by the WHERE.
+      // OpsSpec keeps the recall-vs-exact bounds.
       Some(
         s"WITH $duckAssignCtes, " +
           "ma AS (SELECT vec_id, cluster FROM rk WHERE rn <= 3), " +

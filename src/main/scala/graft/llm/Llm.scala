@@ -39,9 +39,8 @@ object Llm {
     * runs once per (JVM, dataset) and the query's banding reads it, but
     * the ORACLE recomputes the md5-token-hash bit-vote signature from the
     * base table independently. Fixed path (no dataset hash) because the
-    * query reads it within one process; a kernel-version-tagged
-    * content-fingerprint `_dataset` marker re-stages on data OR kernel
-    * change.
+    * query reads it within one process; its kernel-tagged fingerprint
+    * re-stages on data OR kernel change.
     */
     val SimhashSigDir = s"${sys.props("java.io.tmpdir")}/graft_simhash_sig"
 
@@ -65,23 +64,16 @@ object Llm {
     Seq.fill(8)(Seq.fill(64)(if (rnd.nextBoolean()) 1.0 else -1.0))
   }
 
-  private def stageLshBuckets(s: SparkSession, d: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    // marker value is a CONTENT fingerprint, not the bare path — in-place
-    // regeneration (GenScale rehearsal) must force a re-stage or both
-    // engines silently agree on stale data
-    val fp = Tables.fingerprint(d, "embeddings")
-    val marker = Paths.get(LshBucketDir, "_dataset")
-    if (Files.exists(marker) && Files.readString(marker) == fp) return
-    Tables.spread(s, Tables.t(s, d, "embeddings"))
-      .withColumn("hp", typedLit(LshPlanes))
-      .select(col("vec_id"), expr(
-        "CAST(aggregate(sequence(0, 7), 0, (acc, p) -> acc + CASE WHEN " +
-          "aggregate(zip_with(embedding, hp[p], (x, h) -> CAST(x AS DOUBLE) * h), CAST(0 AS DOUBLE), (a2, v) -> a2 + v) >= 0 " +
-          "THEN CAST(shiftleft(1, p) AS INT) ELSE 0 END) AS INT)").as("bucket"))
-      .write.mode("overwrite").parquet(s"$LshBucketDir/data")
-    Files.writeString(marker, fp)
-  }
+  private def stageLshBuckets(s: SparkSession, d: String): String =
+    Tables.stage(LshBucketDir, Tables.fingerprint(d, "embeddings")) {
+      Tables.spread(s, Tables.t(s, d, "embeddings"))
+        .withColumn("hp", typedLit(LshPlanes))
+        .select(col("vec_id"), expr(
+          "CAST(aggregate(sequence(0, 7), 0, (acc, p) -> acc + CASE WHEN " +
+            "aggregate(zip_with(embedding, hp[p], (x, h) -> CAST(x AS DOUBLE) * h), CAST(0 AS DOUBLE), (a2, v) -> a2 + v) >= 0 " +
+            "THEN CAST(shiftleft(1, p) AS INT) ELSE 0 END) AS INT)").as("bucket"))
+        .write.mode("overwrite").parquet(s"$LshBucketDir/data")
+    }
 
   /** Fixed staging path for the PHYSICAL Matryoshka prefix column:
     * slicing the full 64-dim column in-flight would make sim_mrl_rerank's
@@ -99,69 +91,60 @@ object Llm {
   private val MrlPrefixDir = s"${sys.props("java.io.tmpdir")}/graft_mrl_prefix"
   private[graft] def mrlPrefixDataDir: String = s"$MrlPrefixDir/data"
 
-  private def stageMrlPrefix(s: SparkSession, d: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    val fp = Tables.fingerprint(d, "embeddings")
-    val marker = Paths.get(MrlPrefixDir, "_dataset")
-    if (Files.exists(marker) && Files.readString(marker) == fp) return
-    Tables.t(s, d, "embeddings")
-      .select(col("vec_id"), slice(col("embedding"), 1, 16).as("emb16"))
-      .write.mode("overwrite").parquet(s"$MrlPrefixDir/data")
-    Files.writeString(marker, fp)
-  }
+  private def stageMrlPrefix(s: SparkSession, d: String): String =
+    Tables.stage(MrlPrefixDir, Tables.fingerprint(d, "embeddings")) {
+      Tables.t(s, d, "embeddings")
+        .select(col("vec_id"), slice(col("embedding"), 1, 16).as("emb16"))
+        .write.mode("overwrite").parquet(s"$MrlPrefixDir/data")
+    }
 
   /** Compute and stage the (doc_id, sim) signature table once per (JVM,
     * dataset): occurrence-weighted 64-bit simhash in a single-pass JVM
     * kernel (set-based saturates on a small shared vocabulary; the
     * nested-HOF form of this is ~100× slower than the primitive loop).
     * This is the only non-SQL step of dedup_simhash — everything after it
-    * (banding, Hamming verify) runs in BOTH engines over this table.
+    * (banding, Hamming verify) runs in BOTH engines over this table. The
+    * `md5sim` kernel tag re-stages when the hash kernel changes.
     */
-  private def stageSimhashSigs(s: SparkSession, d: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    // content-fingerprint marker + kernel-version tag (a hash-kernel
-    // change must invalidate staged artifacts on unchanged data)
-    val fp = "md5sim|" + Tables.fingerprint(d, "documents")
-    val marker = Paths.get(SimhashSigDir, "_dataset")
-    if (Files.exists(marker) && Files.readString(marker) == fp) return
-    val simhashUdf = udf { (text: String) =>
-      val cnt = new Array[Int](64)
-      // md5-derived per-token 64-bit hash: the first 8 digest
-      // bytes big-endian == the first 16 hex chars both engines parse, so
-      // the DuckDB oracle recomputes the whole signature independently
-      val md = java.security.MessageDigest.getInstance("MD5")
-      var start = 0
-      val n = text.length
-      var i = 0
-      while (i <= n) {
-        if (i == n || text.charAt(i) == ' ') {
-          if (i > start) {
-            md.reset()
-            val dig = md.digest(text.substring(start, i)
-              .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            var h = 0L
-            var k = 0
-            while (k < 8) { h = (h << 8) | (dig(k) & 0xffL); k += 1 }
-            var b = 0
-            while (b < 64) {
-              if (((h >>> b) & 1L) == 1L) cnt(b) += 1 else cnt(b) -= 1
-              b += 1
+  private def stageSimhashSigs(s: SparkSession, d: String): String =
+    Tables.stage(SimhashSigDir, "md5sim|" + Tables.fingerprint(d, "documents")) {
+      val simhashUdf = udf { (text: String) =>
+        val cnt = new Array[Int](64)
+        // md5-derived per-token 64-bit hash: the first 8 digest
+        // bytes big-endian == the first 16 hex chars both engines parse, so
+        // the DuckDB oracle recomputes the whole signature independently
+        val md = java.security.MessageDigest.getInstance("MD5")
+        var start = 0
+        val n = text.length
+        var i = 0
+        while (i <= n) {
+          if (i == n || text.charAt(i) == ' ') {
+            if (i > start) {
+              md.reset()
+              val dig = md.digest(text.substring(start, i)
+                .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+              var h = 0L
+              var k = 0
+              while (k < 8) { h = (h << 8) | (dig(k) & 0xffL); k += 1 }
+              var b = 0
+              while (b < 64) {
+                if (((h >>> b) & 1L) == 1L) cnt(b) += 1 else cnt(b) -= 1
+                b += 1
+              }
             }
+            start = i + 1
           }
-          start = i + 1
+          i += 1
         }
-        i += 1
+        var sim = 0L
+        var b = 0
+        while (b < 64) { if (cnt(b) > 0) sim |= (1L << b); b += 1 }
+        sim
       }
-      var sim = 0L
-      var b = 0
-      while (b < 64) { if (cnt(b) > 0) sim |= (1L << b); b += 1 }
-      sim
+      Tables.spread(s, Tables.t(s, d, "documents"))
+        .select(col("doc_id"), simhashUdf(col("text")).as("sim"))
+        .write.mode("overwrite").parquet(s"$SimhashSigDir/data")
     }
-    Tables.spread(s, Tables.t(s, d, "documents"))
-      .select(col("doc_id"), simhashUdf(col("text")).as("sim"))
-      .write.mode("overwrite").parquet(s"$SimhashSigDir/data")
-    Files.writeString(marker, fp)
-  }
 
   /** Cosine similarity over two array<float> columns, computed in double
     * with a sequential left fold — DuckDB's list_dot_product mirrors the
@@ -242,7 +225,7 @@ object Llm {
     // same-length, same-endpoint arrays.
     // Checkpointed once per run for the same four-consumer reason as
     // [[collapsedPairSim]].
-    val (grouped, ckptIds) = Ckpt(Tables.t(s, d, "embeddings")
+    val grouped = Ckpt.slot(s"$d#cos#$sameLabelOnly#$tau", Tables.t(s, d, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding"))
       .groupBy((if (sameLabelOnly) Seq(col("label").as("gl")) else Nil) ++
         Seq(xxhash64(col("embedding")).as("eh"),
@@ -254,8 +237,6 @@ object Llm {
       .select(col("members"), col("emb"),
         col("members")(0)("vec_id").as("gid"),
         col("members")(0)("label").as("glabel")))
-    Option(collapseFinal.put((s, s"$d#cos#$sameLabelOnly#$tau"), (grouped, ckptIds)))
-      .foreach { case (_, oldIds) => Ckpt.release(s, oldIds) }
     // replicate each representative to the B block-pair groups it
     // participates in: its own block's diagonal pair plus one per other
     // block (normalized to p <= q, so each unordered pair meets in exactly
@@ -633,15 +614,13 @@ object Llm {
   private def lshJoinThreshold(s: SparkSession, d: String): DataFrame = {
     val sp = s
     import sp.implicits._
-    val (grouped, ckptIds) = Ckpt(lshJoinInput(s, d)
+    val grouped = Ckpt.slot(s"$d#lshjoin", lshJoinInput(s, d)
       .groupBy(xxhash64(col("emb")).as("eh"), size(col("emb")).as("en"),
         try_element_at(col("emb"), lit(1)).as("e0"),
         try_element_at(col("emb"), lit(-1)).as("e1"))
       .agg(sort_array(collect_list(col("vec_id"))).as("members"),
         first(col("emb")).as("emb"))
       .select(col("members"), col("emb"), col("members")(0).as("gid")))
-    Option(collapseFinal.put((s, s"$d#lshjoin"), (grouped, ckptIds)))
-      .foreach { case (_, oldIds) => Ckpt.release(s, oldIds) }
     val nBands = LshJoinBands
     val nR = LshJoinR
     // Each rep carries ALL 16 band keys (one JVM pass over the planes);
@@ -799,7 +778,7 @@ object Llm {
       cacheKey: String): DataFrame = {
     import sp.implicits._
     val B = 4
-    val (grouped, ckptIds) = Ckpt(docs.toDF("source", "doc_id", "grams")
+    val grouped = Ckpt.slot(cacheKey, docs.toDF("source", "doc_id", "grams")
       // gh alone is a 64-bit birthday hazard at corpus scale (see the
       // cosine collapse): length + endpoint discriminators ride along in
       // the group key so a hash collision can only merge same-hash,
@@ -811,8 +790,6 @@ object Llm {
       .agg(sort_array(collect_list(col("doc_id"))).as("members"),
         first(col("grams")).as("grams"))
       .withColumn("gid", col("members")(0)))
-    Option(collapseFinal.put((sp, cacheKey), (grouped, ckptIds)))
-      .foreach { case (_, oldIds) => Ckpt.release(sp, oldIds) }
     // Quarantine (the distinct-content rehearsal measured exponents
     // 1.32/1.21 on the two callers — collapse only absorbs
     // string-identical replicas, so on DISTINCT content the rep kernel
@@ -821,18 +798,16 @@ object Llm {
     // the banded production siblings. The cap admits the gate scales and
     // the 10× distinct rehearsal (10⁴ reps/source ≈ 15 s); the count is
     // one tiny aggregate over the ALREADY-materialized (eager
-    // localCheckpoint) collapsed table. GRAFT_ALLOW_EXACT_GRAMS=1
-    // overrides for a deliberate exact baseline.
+    // localCheckpoint) collapsed table.
     val maxReps = grouped.groupBy(col("source")).count()
       .agg(max(col("count"))).collect()(0)
     val maxRepsL = if (maxReps.isNullAt(0)) 0L else maxReps.getLong(0)
-    require(maxRepsL <= GramPairMaxReps ||
-        sys.env.get("GRAFT_ALLOW_EXACT_GRAMS").contains("1"),
+    require(maxRepsL <= GramPairMaxReps,
       s"collapsedPairSim($outCol) is a declared-exact all-pairs kernel " +
         s"over distinct gram sets ($maxRepsL distinct contents in one " +
         s"source > $GramPairMaxReps cap); use the banded near-dup family " +
         "(dedup_minhash_near / dedup_simhash) or substring winnowing " +
-        "(dedup_substring_winnow) at scale, or set GRAFT_ALLOW_EXACT_GRAMS=1")
+        "(dedup_substring_winnow) at scale")
     val reps = grouped.select(col("source"), col("gid"), col("grams"))
       .as[(String, Long, Array[Long])]
       .flatMap { case (src, gid, grams) =>
@@ -918,18 +893,6 @@ object Llm {
       .foreach { case (_, oldIds) => Ckpt.release(s, oldIds) }
     labels
   }
-
-  /** Superseded-checkpoint registry for the collapse kernels, released by
-    * id on the next run of the same call site (the triangle/labels
-    * discipline: explicit release, never ContextCleaner GC, so repeated
-    * bench runs stay block-stable). The entry PINS the checkpointed
-    * DataFrame alongside the ids: once a query result is discarded nothing
-    * else references the checkpointed RDD, and the ContextCleaner would
-    * race the explicit release (observed as nondeterministic live-block
-    * counts in the hygiene spec — `release` finding its ids already gone).
-    */
-  private val collapseFinal =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, Seq[Int])]()
 
   /** Connected components over the near-dup pair graph: Spark-native
     * union-find via iterative min-label propagation with pointer doubling —
@@ -1245,11 +1208,9 @@ object Llm {
           "FROM b a JOIN b c ON a.band = c.band AND a.bkey = c.bkey AND a.doc_id < c.doc_id) " +
           "SELECT i, j, hamming FROM p WHERE hamming <= 3 ORDER BY i, j"),
       (s, d) => {
-        stageSimhashSigs(s, d)
         val sp2 = s
         import sp2.implicits._
-        val sims = Tables.staged(s, s"$SimhashSigDir/data",
-          "md5sim|" + Tables.fingerprint(d, "documents"))
+        val sims = Tables.staged(s, s"$SimhashSigDir/data", stageSimhashSigs(s, d))
         // Exact-dup collapse on the FULL 64-bit signature (the signature IS
         // the content key for simhash semantics: identical sig ⟺ Hamming 0,
         // so no secondary discriminator is needed — a "collision" is by
@@ -1392,8 +1353,7 @@ object Llm {
     // guard so no scale tooling (or user) reaches the O(D²) kernel by
     // accident: above ExactCosineMaxRows the require() fails fast with a
     // pointer to dedup_semdedup_cluster (Ivf.scala), which scopes the same
-    // verified kernel to k-means clusters. GRAFT_ALLOW_EXACT_COSINE=1
-    // overrides for a deliberate exact baseline run.
+    // verified kernel to k-means clusters.
     QueryDef(
       "dedup_embed_cosine",
       Some(
@@ -1403,12 +1363,10 @@ object Llm {
           "SELECT DISTINCT j AS drop_id FROM p WHERE sim >= 0.35 ORDER BY drop_id"),
       (s, d) => {
         val n = Tables.t(s, d, "embeddings").count()
-        require(n <= ExactCosineMaxRows ||
-            sys.env.get("GRAFT_ALLOW_EXACT_COSINE").contains("1"),
+        require(n <= ExactCosineMaxRows,
           s"dedup_embed_cosine is the declared-exact O(N^2) oracle fixture " +
             s"($n rows > $ExactCosineMaxRows cap); use dedup_semdedup_cluster " +
-            "at scale, or set GRAFT_ALLOW_EXACT_COSINE=1 for a deliberate " +
-            "exact baseline")
+            "at scale")
         cosinePairsFast(s, d, sameLabelOnly = false, tau = 0.35)
           .select(col("j").as("drop_id")).distinct()
           .orderBy("drop_id")
@@ -1460,12 +1418,10 @@ object Llm {
           "ORDER BY label, i, j"),
       (s, d) => {
         val n = Tables.t(s, d, "embeddings").count()
-        require(n <= ExactCosineMaxRows ||
-            sys.env.get("GRAFT_ALLOW_EXACT_COSINE").contains("1"),
+        require(n <= ExactCosineMaxRows,
           s"sim_join_threshold is the declared-exact label-blocked O(d^2) " +
             s"oracle fixture ($n rows > $ExactCosineMaxRows cap); use " +
-            "sim_join_lsh_threshold or dedup_semdedup_cluster at scale, or " +
-            "set GRAFT_ALLOW_EXACT_COSINE=1 for a deliberate exact baseline")
+            "sim_join_lsh_threshold or dedup_semdedup_cluster at scale")
         cosinePairsFast(s, d, sameLabelOnly = true, tau = 0.35)
           .select(col("label"), col("i"), col("j"), col("sim"))
           .orderBy("label", "i", "j")
@@ -1525,9 +1481,8 @@ object Llm {
       (s, d) => {
         // Coarse stage: scans ONLY the staged 16-dim prefix table — the
         // 64-dim column physically never enters this (data-sized) pass.
-        stageMrlPrefix(s, d)
-        val pfx = Tables.spread(s, Tables.staged(s, s"$MrlPrefixDir/data",
-          Tables.fingerprint(d, "embeddings")))
+        val pfx = Tables.spread(s,
+          Tables.staged(s, s"$MrlPrefixDir/data", stageMrlPrefix(s, d)))
         val q16 = pfx.where(col("vec_id") < 5)
           .select(col("vec_id").as("qid"), col("emb16").as("qe16"))
         val c16 = pfx.select(col("vec_id").as("cid"), col("emb16").as("ce16"))
@@ -1663,10 +1618,8 @@ object Llm {
           "FROM sims QUALIFY rn <= 3 ORDER BY qid, rn"
       },
       (s, d) => {
-        stageLshBuckets(s, d)
         val e = Tables.spread(s, Tables.t(s, d, "embeddings"))
-          .join(Tables.staged(s, s"$LshBucketDir/data",
-            Tables.fingerprint(d, "embeddings")), "vec_id")
+          .join(Tables.staged(s, s"$LshBucketDir/data", stageLshBuckets(s, d)), "vec_id")
         val probeMasks = (0 until 256).filter(m => Integer.bitCount(m) <= 2)
         val q = e.where(col("vec_id") < 5)
           .select(col("vec_id").as("qid"), col("embedding").as("qe"),

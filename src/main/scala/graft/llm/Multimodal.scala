@@ -60,68 +60,55 @@ object Multimodal {
   private val oraW = "16 + doc_id % 32"
   private val oraH = "16 + (doc_id * 7) % 32"
 
-  /** Superseded-checkpoint registry for the phash distinct-hash table (the
-    * Llm collapseFinal discipline): pins the current invocation's
-    * checkpointed table so the ContextCleaner cannot race the explicit
-    * by-id release that happens when the NEXT invocation replaces it.
-    */
-  private val phashState = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String),
-    (org.apache.spark.sql.DataFrame, Seq[Int])]()
-
   /** Fixed staging path for the decoded dHash table — the
     * scan_binaryfile_ingest / stageSimhashSigs discipline: the oracle's
-    * read_parquet glob is a static literal, a `_dataset` marker re-stages
-    * on dataset change, single-process assumption. This IS the 100 TB
+    * read_parquet glob is a static literal, [[Tables.stage]] re-stages on
+    * dataset change, single-process assumption. This IS the 100 TB
     * "persist the hash column once" artifact the kernel comment always
     * promised: decode runs once per (JVM, dataset); the banding + verify
     * (exact integer math) runs in BOTH engines over the staged table.
     */
   val PhashDir = s"${sys.props("java.io.tmpdir")}/graft_phash"
 
-  private def stagePhash(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    // content-fingerprint marker — see Llm.stageLshBuckets; kernel-version
-    // tag (see stageQuantHash): a staging-schema change (grids beside the
-    // hash) must invalidate any staged table of an older schema
-    val fp = "lumagrids1|" + Tables.fingerprint(d, "documents")
-    val marker = Paths.get(PhashDir, "_dataset")
-    if (Files.exists(marker) && Files.readString(marker) == fp) return
-    val sp = s
-    import sp.implicits._
-    // spread: PNG encode + decode + dHash per row is a pure JVM kernel
-    // — must not run on the single task of a one-row-group local scan
-    Tables.spread(s, Tables.t(s, d, "documents")
-        .select(col("doc_id"))).as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val g = id / 10
-          // slope pair (a, b) must stay distinct across groups at any
-          // corpus size: a bare (g%23, g%29) repeats every lcm = 667
-          // groups (6,670 docs — sf1-rehearsal territory), and dHash is
-          // seed-invariant, so repeats would alias as cross-group
-          // near-dups. Mixing g/667 into b pushes the first systematic
-          // repeat past 23·29·667 groups (~4.4M docs) while keeping b
-          // bounded in [3, 31].
-          val img = ImageKernel.gradientFrame(36, 32,
-            2 + (g % 23).toInt, 3 + ((g + g / 667) % 29).toInt,
-            ((g * 7) % 40).toInt, ((id % 10) * 3).toInt)
-          val bytes = ImageKernel.encodePng(img)
-          // hash the DECODED container bytes: a broken decode path
-          // changes every hash and collapses the group structure the
-          // spec asserts. The 9×8 (sum, count) luma grids are staged
-          // BESIDE the hash: the oracle refolds
-          // the hash from the raw grids in SQL, so the kernel's bit-fold
-          // arithmetic is cross-engine checked — only the PNG decode +
-          // area-average accumulation remain kernel-only (no second
-          // engine here has an image codec; documented in SURVEY §5.7).
-          val (sums, cnts) = ImageKernel.lumaGrid(ImageKernel.decode(bytes).get)
-          (id, ImageKernel.foldDHash(sums, cnts), sums, cnts)
-        }
-      }.toDF("doc_id", "ph", "sums", "cnts")
-      .write.mode("overwrite").parquet(s"$PhashDir/data")
-    Files.writeString(marker, fp)
-  }
+  /** The `lumagrids1` kernel tag names the staging schema (luma grids
+    * beside the hash): a table of an older schema must re-stage.
+    */
+  private def stagePhash(s: org.apache.spark.sql.SparkSession, d: String): String =
+    Tables.stage(PhashDir, "lumagrids1|" + Tables.fingerprint(d, "documents")) {
+      val sp = s
+      import sp.implicits._
+      // spread: PNG encode + decode + dHash per row is a pure JVM kernel
+      // — must not run on the single task of a one-row-group local scan
+      Tables.spread(s, Tables.t(s, d, "documents")
+          .select(col("doc_id"))).as[Long]
+        .mapPartitions { it =>
+          it.map { id =>
+            val g = id / 10
+            // slope pair (a, b) must stay distinct across groups at any
+            // corpus size: a bare (g%23, g%29) repeats every lcm = 667
+            // groups (6,670 docs — sf1-rehearsal territory), and dHash is
+            // seed-invariant, so repeats would alias as cross-group
+            // near-dups. Mixing g/667 into b pushes the first systematic
+            // repeat past 23·29·667 groups (~4.4M docs) while keeping b
+            // bounded in [3, 31].
+            val img = ImageKernel.gradientFrame(36, 32,
+              2 + (g % 23).toInt, 3 + ((g + g / 667) % 29).toInt,
+              ((g * 7) % 40).toInt, ((id % 10) * 3).toInt)
+            val bytes = ImageKernel.encodePng(img)
+            // hash the DECODED container bytes: a broken decode path
+            // changes every hash and collapses the group structure the
+            // spec asserts. The 9×8 (sum, count) luma grids are staged
+            // BESIDE the hash: the oracle refolds
+            // the hash from the raw grids in SQL, so the kernel's bit-fold
+            // arithmetic is cross-engine checked — only the PNG decode +
+            // area-average accumulation remain kernel-only (no second
+            // engine here has an image codec; documented in SURVEY §5.7).
+            val (sums, cnts) = ImageKernel.lumaGrid(ImageKernel.decode(bytes).get)
+            (id, ImageKernel.foldDHash(sums, cnts), sums, cnts)
+          }
+        }.toDF("doc_id", "ph", "sums", "cnts")
+        .write.mode("overwrite").parquet(s"$PhashDir/data")
+    }
 
   val defs: Seq[QueryDef] = Seq(
     // Frame sampling: GIF containers DEMUX for real — frame count from the
@@ -372,20 +359,13 @@ object Multimodal {
           "SELECT h.doc_id, lpad(hex(h.ph), 16, '0') AS phash, nn.n_neardup " +
           "FROM h JOIN nn ON h.ph = nn.ph ORDER BY doc_id"),
       (s, d) => {
-        stagePhash(s, d)
-        val hashed = Tables.staged(s, s"$PhashDir/data",
-          "lumagrids1|" + Tables.fingerprint(d, "documents"))
+        val hashed = Tables.staged(s, s"$PhashDir/data", stagePhash(s, d))
         // exact-dup collapse: the near-dup relation is a function of the
         // hash alone, so all pair work runs over distinct hashes with
         // multiplicity carried as a weight; checkpointed for the five
         // pair-side consumers, previous invocation's blocks released by id
-        // (Ckpt.release: explicit, never ContextCleaner GC).
-        val hcnt = {
-          val (hc, idsC) = Ckpt(hashed.groupBy("ph").agg(count(lit(1)).as("cnt")))
-          Option(phashState.put((s, d), (hc, idsC)))
-            .foreach { case (_, oldIds) => Ckpt.release(s, oldIds) }
-          hc
-        }
+        // (Ckpt.slot: explicit, never ContextCleaner GC).
+        val hcnt = Ckpt.slot(s"phash:$d", hashed.groupBy("ph").agg(count(lit(1)).as("cnt")))
         val exact = hcnt.select(col("ph"), explode(expr("sequence(0, 3)")).as("blk"))
           .withColumn("v", expr("shiftright(ph, 16 * blk) & 65535"))
         val probe = hcnt.select(col("ph"), explode(expr("sequence(0, 3)")).as("blk"))

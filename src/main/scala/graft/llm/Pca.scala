@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *      inlines as literal arrays into zip_with/aggregate HOFs — no UDF, no
   *      broadcast variable, no shuffle.
   *
-  * Round 11: ORACLED via the staged eigenvector matrix (see [[PcaDir]]) —
+  * ORACLED via the staged eigenvector matrix (see [[PcaDir]]) —
   * the eigensolve itself stays driver-side, but its OUTPUT is a staged
   * artifact both engines project from, so the projection is exact-checked.
   * OpsSpec keeps orthonormality, variance-optimality vs every coordinate
@@ -155,11 +155,7 @@ object Pca {
   private val PcaDir = s"${sys.props("java.io.tmpdir")}/graft_pca_evecs"
 
   private def stagedEvecs(s: SparkSession, d: String): Array[Array[Double]] = {
-    import java.nio.file.{Files, Paths}
-    // content-fingerprint marker — see Llm.stageLshBuckets
-    val fp = Tables.fingerprint(d, "embeddings")
-    val marker = Paths.get(PcaDir, "_dataset")
-    if (!(Files.exists(marker) && Files.readString(marker) == fp)) {
+    Tables.stage(PcaDir, Tables.fingerprint(d, "embeddings")) {
       val (cov, _) = covariance(s, d)
       val evecs = topEigenvectors(cov, K)
       val sp = s
@@ -167,7 +163,6 @@ object Pca {
       evecs.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
         .toDF("kidx", "v")
         .coalesce(1).write.mode("overwrite").parquet(s"$PcaDir/data")
-      Files.writeString(marker, fp)
     }
     s.read.parquet(s"$PcaDir/data").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))

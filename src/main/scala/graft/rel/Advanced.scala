@@ -1,6 +1,6 @@
 package graft.rel
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,14 +25,6 @@ import graft.{Ckpt, Q, QueryDef, Tables}
   *    parquet, then union-merged — the batch twin of a streaming upsert.
   */
 object Advanced {
-
-  /** One-slot registry of the final PageRank checkpoint per (session, dir):
-    * a re-run releases the superseded run's blocks deterministically. The
-    * entry pins the checkpointed DataFrame so the ContextCleaner cannot
-    * race the explicit release once the query result is discarded.
-    */
-  private val prFinal =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, Seq[Int])]()
 
   /** Total PageRank mass in fixed-point units (1 rank = 1e-12). All rank
     * math is BIGINT floor division — deterministic and associative, so the
@@ -820,10 +812,9 @@ object Advanced {
             .select(col("dst").as("id"),
               (lit(basePart) + expr("(85 * contrib) div 100")).as("rank"))
         }
-        val (fin, finIds) = Ckpt(chained)
+        // the final ranks stay pinned until the next run of this key
+        val fin = Ckpt.slot(s"pagerank:$d", chained)
         Ckpt.release(s, adjIds ++ nodeIds)
-        Option(prFinal.put((s, d), (fin, finIds)))
-          .foreach { case (_, oldIds) => Ckpt.release(s, oldIds) }
         fin.orderBy("id")
       }),
 

@@ -51,45 +51,34 @@ object Aggs {
     */
   private val HllEstDir = s"${sys.props("java.io.tmpdir")}/graft_hll_est"
 
-  private def stageHllEstimates(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    // content-fingerprint marker — see Llm.stageLshBuckets
-    val fp = Tables.fingerprint(d, "customer")
-    val marker = Paths.get(HllEstDir, "_dataset")
-    if (Files.exists(marker) && Files.readString(marker) == fp) return
-    val cust = Tables.t(s, d, "customer")
-    cust.groupBy("c_nationkey")
-      .agg(approx_count_distinct(col("c_custkey")).as("approx_cust"))
-      .write.mode("overwrite").parquet(s"$HllEstDir/approx")
-    cust.groupBy("c_nationkey")
-      .agg(expr("hll_sketch_agg(c_custkey)").as("sk"))
-      .agg(expr("CAST(hll_sketch_estimate(hll_union_agg(sk)) AS BIGINT)").as("est_total"))
-      .write.mode("overwrite").parquet(s"$HllEstDir/merge")
-    Files.writeString(marker, fp)
-  }
+  private def stageHllEstimates(s: org.apache.spark.sql.SparkSession, d: String): String =
+    Tables.stage(HllEstDir, Tables.fingerprint(d, "customer")) {
+      val cust = Tables.t(s, d, "customer")
+      cust.groupBy("c_nationkey")
+        .agg(approx_count_distinct(col("c_custkey")).as("approx_cust"))
+        .write.mode("overwrite").parquet(s"$HllEstDir/approx")
+      cust.groupBy("c_nationkey")
+        .agg(expr("hll_sketch_agg(c_custkey)").as("sk"))
+        .agg(expr("CAST(hll_sketch_estimate(hll_union_agg(sk)) AS BIGINT)").as("est_total"))
+        .write.mode("overwrite").parquet(s"$HllEstDir/merge")
+    }
 
-  private def stageQuantHash(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    // content-fingerprint marker — see Llm.stageLshBuckets
-    // marker carries a KERNEL VERSION tag beside the content fingerprint:
-    // a staging-code change (such as the rank hash) must
-    // invalidate staged artifacts even when the data is unchanged
-    val fp = "md5rank|" + Tables.fingerprint(d, "customer")
-    val marker = Paths.get(QuantHashDir, "_dataset")
-    if (Files.exists(marker) && Files.readString(marker) == fp) return
-    // md5-derived signed-64 rank: both engines parse the first
-    // 16 hex chars of md5(custkey-as-string) to the same unsigned value
-    // and re-center at 2^63 in exact decimal math, so the ORACLE computes
-    // h independently from the base table — the staged parquet is a
-    // Spark-side performance artifact only.
-    val u = "CAST(conv(substring(md5(CAST(c_custkey AS STRING)), 1, 16), 16, 10) AS DECIMAL(20,0))"
-    Tables.t(s, d, "customer")
-      .select(col("c_nationkey"),
-        expr(s"CAST($u - (CASE WHEN $u >= 9223372036854775808 THEN 18446744073709551616 ELSE 0 END) AS BIGINT)").as("h"),
-        col("c_acctbal").cast("double").as("v"))
-      .write.mode("overwrite").parquet(s"$QuantHashDir/data")
-    Files.writeString(marker, fp)
-  }
+  /** md5-derived signed-64 rank: both engines parse the first 16 hex
+    * chars of md5(custkey-as-string) to the same unsigned value and
+    * re-center at 2^63 in exact decimal math, so the ORACLE computes h
+    * independently from the base table — the staged parquet is a
+    * Spark-side performance artifact only. The `md5rank` kernel tag names
+    * the rank hash: a table ranked by any other hash must re-stage.
+    */
+  private def stageQuantHash(s: org.apache.spark.sql.SparkSession, d: String): String =
+    Tables.stage(QuantHashDir, "md5rank|" + Tables.fingerprint(d, "customer")) {
+      val u = "CAST(conv(substring(md5(CAST(c_custkey AS STRING)), 1, 16), 16, 10) AS DECIMAL(20,0))"
+      Tables.t(s, d, "customer")
+        .select(col("c_nationkey"),
+          expr(s"CAST($u - (CASE WHEN $u >= 9223372036854775808 THEN 18446744073709551616 ELSE 0 END) AS BIGINT)").as("h"),
+          col("c_acctbal").cast("double").as("v"))
+        .write.mode("overwrite").parquet(s"$QuantHashDir/data")
+    }
 
   val defs: Seq[QueryDef] = Seq(
     // E1 — TPC-H Q1 style hash aggregate (also the flagship `entry`).

@@ -1,6 +1,6 @@
 package graft.rel
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, StringType}
@@ -33,14 +33,6 @@ import graft.{Ckpt, Q, QueryDef, Tables}
   *    to long form with a narrow Expand.
   */
 object Analytics {
-
-  /** One-slot registry of triangle-count checkpoint blocks per
-    * (session, dir): a re-run releases the superseded run's blocks. The
-    * entry pins the checkpointed DataFrames so the ContextCleaner cannot
-    * race the explicit release once the query result is discarded.
-    */
-  private val triFinal =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (Seq[DataFrame], Seq[Int])]()
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -154,7 +146,7 @@ object Analytics {
         // truncation Spark recomputes the whole build per consumer (~5×);
         // both intermediates are edge-cardinality (tiny next to facts), so
         // they checkpoint, and superseded blocks release deterministically.
-        val (edges, edgeIds) = Ckpt(pairs
+        val edges = Ckpt.slot(s"triangle-edges:$d", pairs
           .groupBy("u", "v")
           .agg(count(lit(1)).as("w"))
           .where(col("w") >= 4)
@@ -166,7 +158,7 @@ object Analytics {
         // deg is NODE-cardinality (suppliers), always ≪ the edge set —
         // broadcast both orientation joins rather than letting AQE discover
         // it per-run (saves the exchange + the runtime re-plan).
-        val (oriented, orientIds) = Ckpt(edges
+        val oriented = Ckpt.slot(s"triangle-oriented:$d", edges
           .join(broadcast(deg.select(col("node").as("u"), col("deg").as("du"))), "u")
           .join(broadcast(deg.select(col("node").as("v"), col("deg").as("dv"))), "v")
           .select(
@@ -178,8 +170,6 @@ object Analytics {
               .otherwise(struct(col("u").as("n"), col("du").as("dg"))).as("t"))
           .select(col("s.n").as("src"), col("t.n").as("dst"),
             col("t.dg").as("ddeg")))
-        Option(triFinal.put((s, d), (Seq(edges, oriented), edgeIds ++ orientIds)))
-          .foreach { case (_, oldIds) => Ckpt.release(s, oldIds) }
         // wedges from each low corner: pairs of out-neighbours ordered by
         // (deg, id) so the closing edge is guaranteed oriented b→c
         val e1 = oriented.select(col("src"), col("dst").as("b"), col("ddeg").as("db"))
@@ -346,8 +336,7 @@ object Analytics {
         val base = Tables.stagingDir("graft_manifest", d)
         val dataDir = s"$base/data"
         val manifest = Paths.get(s"$base/manifest.txt")
-        val done = Paths.get(s"$base/_done")
-        if (!Files.exists(done)) {
+        Tables.stage(base, Tables.fingerprint(d, "orders")) {
           Tables.t(s, d, "orders").write.mode("overwrite")
             .partitionBy("o_orderstatus").parquet(dataDir)
           val snapshot = Seq("F", "O").flatMap { st =>
@@ -356,9 +345,7 @@ object Analytics {
               .filter(_.getFileName.toString.endsWith(".parquet"))
               .map(_.toString).toSeq.sorted
           }
-          Files.createDirectories(Paths.get(base))
           Files.writeString(manifest, snapshot.mkString("\n"))
-          Files.writeString(done, "ok")
         }
         val files = Files.readAllLines(manifest).asScala.toSeq
         s.read.option("basePath", dataDir).parquet(files: _*)
@@ -389,8 +376,7 @@ object Analytics {
         val dataDir = s"$base/data"
         val m1 = Paths.get(s"$base/manifest_v1.txt")
         val m2 = Paths.get(s"$base/manifest_v2.txt")
-        val done = Paths.get(s"$base/_done")
-        if (!Files.exists(done)) {
+        Tables.stage(base, Tables.fingerprint(d, "orders")) {
           Tables.t(s, d, "orders").write.mode("overwrite")
             .partitionBy("o_orderstatus").parquet(dataDir)
           def files(sts: Seq[String]) = sts.flatMap { st =>
@@ -399,11 +385,9 @@ object Analytics {
               .filter(_.getFileName.toString.endsWith(".parquet"))
               .map(_.toString).toSeq.sorted
           }
-          Files.createDirectories(Paths.get(base))
           // v1 froze when only F existed; v2 sees the appended O + P files
           Files.writeString(m1, files(Seq("F")).mkString("\n"))
           Files.writeString(m2, files(Seq("F", "O", "P")).mkString("\n"))
-          Files.writeString(done, "ok")
         }
         val v1 = Files.readAllLines(m1).asScala.toSet
         val delta = Files.readAllLines(m2).asScala.toSeq.filterNot(v1)
@@ -560,8 +544,7 @@ object Analytics {
         val base = Tables.stagingDir("graft_stats_manifest", d)
         val dataDir = s"$base/data"
         val manifest = Paths.get(s"$base/manifest.tsv")
-        val done = Paths.get(s"$base/_done")
-        if (!Files.exists(done)) {
+        Tables.stage(base, Tables.fingerprint(d, "lineitem")) {
           Tables.t(s, d, "lineitem")
             .select(col("l_orderkey"), col("l_shipdate"), col("l_quantity"))
             .repartitionByRange(8, col("l_shipdate"))
@@ -572,9 +555,7 @@ object Analytics {
             .agg(min(unix_millis(col("l_shipdate").cast("timestamp"))).as("lo"),
               max(unix_millis(col("l_shipdate").cast("timestamp"))).as("hi"))
             .collect().map(r => s"${r.getString(0)}\t${r.getLong(1)}\t${r.getLong(2)}")
-          Files.createDirectories(Paths.get(base))
           Files.writeString(manifest, stats.sorted.mkString("\n"))
-          Files.writeString(done, "ok")
         }
         val loMs = java.time.LocalDate.of(1997, 1, 1)
           .atStartOfDay(java.time.ZoneOffset.UTC).toInstant.toEpochMilli
@@ -781,18 +762,14 @@ object Analytics {
           s"CAST(CAST(sum(CAST(l_quantity AS ${Q.D4})) AS ${Q.D6}) AS DOUBLE) AS sum_qty " +
           "FROM lineitem GROUP BY l_returnflag ORDER BY file_group"),
       (s, d) => {
-        import java.nio.file.{Files, Paths}
         val tmp = Tables.stagingDir("graft_meta_lineage", d)
-        val done = Paths.get(s"$tmp/_done")
-        if (!Files.exists(done)) {
+        Tables.stage(tmp, Tables.fingerprint(d, "lineitem")) {
           // repartition on the partition key first → exactly one file per
           // l_returnflag directory, so row_index must cover 0..n-1
           Tables.t(s, d, "lineitem").select("l_returnflag", "l_quantity")
             .repartition(col("l_returnflag"))
             .write.mode("overwrite").partitionBy("l_returnflag")
             .parquet(s"$tmp/data")
-          Files.createDirectories(Paths.get(tmp))
-          Files.writeString(done, "ok")
         }
         s.read.parquet(s"$tmp/data")
           .where(col("_metadata.file_size") > 0 &&

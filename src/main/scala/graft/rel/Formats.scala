@@ -25,10 +25,11 @@ object Formats {
 
   /** FIXED staging path for the binaryFile ingestion corpus: the DuckDB
     * oracle's read_blob glob is a static literal, so the path cannot carry
-    * the dataset hash — instead a marker file records which dataset staged
-    * the current corpus and a mismatch triggers a re-stage (Verify/bench
-    * run one dataset at a time, and the oracle compare runs after the dump,
-    * so the fixed path always holds the right vintage when read).
+    * the dataset hash — instead the [[Tables.stage]] marker records which
+    * dataset staged the current corpus and a mismatch triggers a re-stage
+    * (Verify/bench run one dataset at a time, and the oracle compare runs
+    * after the dump, so the fixed path always holds the right vintage when
+    * read).
     */
   private val BinFilesDir = s"${sys.props("java.io.tmpdir")}/graft_binfiles"
 
@@ -40,38 +41,27 @@ object Formats {
     * timed read path. Each task writes its own partition's
     * files; under local / local-cluster all executors share the host
     * filesystem, which is the same single-box assumption the fixed staging
-    * path already makes.
+    * path already makes. Single-process assumption: the fixed path is
+    * shared, so two JVMs staging different datasets concurrently would
+    * race (Verify and Bench are never run concurrently).
     */
-  private def stageBinFiles(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    val dir = Paths.get(BinFilesDir)
-    // content-fingerprint marker — see Llm.stageLshBuckets
-    val fp = Tables.fingerprint(d, "documents")
-    val marker = dir.resolve("_dataset")
-    if (Files.exists(marker) && Files.readString(marker) == fp) return
-    // Single-process assumption: the fixed path is shared, so two JVMs
-    // staging different datasets concurrently would race (Verify and Bench
-    // are never run concurrently — see the bench protocol).
-    if (Files.exists(dir)) {
-      val listing = Files.list(dir)
-      try listing.forEach(p => Files.deleteIfExists(p))
-      finally listing.close()
-    }
-    Files.createDirectories(dir)
-    // capture the RESOLVED path: executor JVMs (local-cluster) carry their
-    // own java.io.tmpdir, so the closure must never re-derive BinFilesDir
-    val dirStr = dir.toAbsolutePath.toString
-    Tables.t(s, d, "documents")
-      .where(pmod(col("doc_id"), lit(97L)) === 0L)
-      .select(col("doc_id"), col("text"))
-      .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-        it.foreach { r =>
-          Files.write(Paths.get(dirStr, s"doc_${r.getLong(0)}.bin"),
-            r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  private def stageBinFiles(s: org.apache.spark.sql.SparkSession, d: String): String =
+    Tables.stage(BinFilesDir, Tables.fingerprint(d, "documents")) {
+      import java.nio.file.{Files, Paths}
+      val dir = Files.createDirectories(Paths.get(BinFilesDir))
+      // capture the RESOLVED path: executor JVMs (local-cluster) carry their
+      // own java.io.tmpdir, so the closure must never re-derive BinFilesDir
+      val dirStr = dir.toAbsolutePath.toString
+      Tables.t(s, d, "documents")
+        .where(pmod(col("doc_id"), lit(97L)) === 0L)
+        .select(col("doc_id"), col("text"))
+        .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
+          it.foreach { r =>
+            Files.write(Paths.get(dirStr, s"doc_${r.getLong(0)}.bin"),
+              r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          }
         }
-      }
-    Files.writeString(marker, fp)
-  }
+    }
 
   def defs: Seq[QueryDef] = Seq(
 

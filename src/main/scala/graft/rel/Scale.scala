@@ -70,8 +70,7 @@ object Scale {
           "GROUP BY l_orderkey ORDER BY l_orderkey"),
       (s, d) => {
         val tmp = Tables.stagingDir("graft_bloom", d)
-        val done = java.nio.file.Paths.get(s"$tmp/_done")
-        if (!java.nio.file.Files.exists(done)) {
+        Tables.stage(tmp, Tables.fingerprint(d, "lineitem")) {
           Tables.t(s, d, "lineitem").select("l_orderkey", "l_extendedprice")
             .coalesce(4)
             .write.mode("overwrite")
@@ -84,7 +83,6 @@ object Scale {
             .option("parquet.enable.dictionary#l_orderkey", "false")
             .option("parquet.block.size", (1 << 20).toString)
             .parquet(s"$tmp/data")
-          java.nio.file.Files.writeString(done, "ok")
         }
         s.read.parquet(s"$tmp/data")
           .where(col("l_orderkey").isin(7, 77, 777, 1207, 1399))
@@ -135,17 +133,13 @@ object Scale {
           "FROM orders WHERE year(o_orderdate) IN (1996, 1997) GROUP BY 1 ORDER BY 1"),
       (s, d) => {
         val tmp = Tables.stagingDir("graft_prune_orders", d)
-        // _done guard like the sibling bloom/bucketed layouts: bench repeats
-        // must time the pruned READ, not re-pay the layout write+shuffle.
-        // Spark's file listing ignores underscore-prefixed files, so the
-        // marker can live at the dataset root.
-        val done = java.nio.file.Paths.get(s"$tmp/_done")
-        if (!java.nio.file.Files.exists(done)) {
+        // staged like the sibling bloom/bucketed layouts: bench repeats
+        // must time the pruned READ, not re-pay the layout write+shuffle
+        Tables.stage(tmp, Tables.fingerprint(d, "orders")) {
           Tables.t(s, d, "orders")
             .withColumn("yr", year(col("o_orderdate")).cast("long"))
             .repartition(col("yr"))
             .write.mode("overwrite").partitionBy("yr").parquet(tmp)
-          java.nio.file.Files.writeString(done, "ok")
         }
         s.read.parquet(tmp)
           .where(col("yr").isin(1996L, 1997L))

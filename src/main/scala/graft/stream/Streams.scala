@@ -76,21 +76,16 @@ object Streams {
     * stream source is a directory of many files; staging the same rows as
     * 8 files restores the scan/partial-agg parallelism a production
     * micro-batch has, changing no value anywhere (batch0 at sf0.1:
-    * 356 ms → ~90 ms of stage wall). Memoized by content fingerprint;
-    * callers bake the fingerprint into their own done-markers so a
-    * re-staged split invalidates their symlinks.
+    * 356 ms → ~90 ms of stage wall). Staged under the events
+    * fingerprint; callers stage their symlinks under the same
+    * fingerprint, so a re-staged split re-links them.
     */
   private def splitEventsDir(s: SparkSession, dir: String): (String, String) = {
-    import java.nio.file.{Files, Paths}
     val base = s"${sys.props("java.io.tmpdir")}/graft_events_split_" +
       s"${Integer.toHexString(dir.hashCode)}_${ProcessHandle.current().pid()}"
-    val marker = Paths.get(base, "_dataset")
-    val fp = Tables.fingerprint(dir, "events")
-    if (!(Files.exists(marker) && Files.readString(marker) == fp)) {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+    val fp = Tables.stage(base, Tables.fingerprint(dir, "events")) {
       Tables.t(s, dir, "events").repartition(8)
         .write.mode("overwrite").parquet(s"$base/data")
-      Files.writeString(marker, fp)
     }
     (s"$base/data", fp)
   }
@@ -124,26 +119,22 @@ object Streams {
       s"${Integer.toHexString(dir.hashCode)}_${ProcessHandle.current().pid()}"
     val sch = Tables.t(s, dir, "events").schema
     // Input staging (events symlink + the sentinel parquet write — a Spark
-    // job) is IMMUTABLE per (name, dir): stage it once behind a done-marker
-    // and let bench repeats / warm-up reuse it. Only the checkpoint and the
-    // output sink must be fresh per run (AvailableNow over a reused
-    // checkpoint sees no new files and emits nothing), so those live under
-    // a per-run subdir; the previous run's subdir is deleted first to keep
-    // residue O(1). The marker sits at base level — the source glob is
-    // `in/*` and must never see a non-parquet marker file.
-    val done = Paths.get(base, "_in_done")
+    // job) is IMMUTABLE per (name, dir): stage it once and let bench
+    // repeats / warm-up reuse it. Only the checkpoint and the output sink
+    // must be fresh per run (AvailableNow over a reused checkpoint sees no
+    // new files and emits nothing), so those live under a per-run subdir;
+    // the previous run's subdir is deleted first to keep residue O(1). The
+    // marker sits at base level — the source glob is `in/*` and must never
+    // see a non-parquet marker file.
     val (splitDir, splitFp) = splitEventsDir(s, dir)
-    if (!(Files.exists(done) && Files.readString(done) == splitFp)) {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-      val inDir = Paths.get(base, "in")
-      Files.createDirectories(inDir)
+    Tables.stage(base, splitFp) {
+      val inDir = Files.createDirectories(Paths.get(base, "in"))
       linkSplitEvents(inDir, splitDir)
       import org.apache.spark.sql.Row
       val row = Row(-1L, Tables.tsSentinel(sch("ts").dataType, SentinelEpochSec),
         -1L, SentinelType, 0.0, "{}")
       s.createDataFrame(s.sparkContext.parallelize(Seq(row), 1), sch)
         .write.parquet(s"$base/in/s1")
-      Files.writeString(done, splitFp)
     }
     new java.io.File(base).listFiles((_, n) => n.startsWith("run_")).toSeq
       .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
@@ -179,14 +170,8 @@ object Streams {
     // marker lives BESIDE the `in/` glob target, never inside it (the
     // source glob must only ever see parquet files)
     val (splitDir, splitFp) = splitEventsDir(s, dir)
-    val done = streamDir.resolve("_in_done")
-    if (!(java.nio.file.Files.exists(done) &&
-          java.nio.file.Files.readString(done) == splitFp)) {
-      org.apache.commons.io.FileUtils.deleteQuietly(streamDir.toFile)
-      val inDir = streamDir.resolve("in")
-      java.nio.file.Files.createDirectories(inDir)
-      linkSplitEvents(inDir, splitDir)
-      java.nio.file.Files.writeString(done, splitFp)
+    Tables.stage(streamDir.toString, splitFp) {
+      linkSplitEvents(java.nio.file.Files.createDirectories(streamDir.resolve("in")), splitDir)
     }
     val sch = Tables.t(s, dir, "events").schema
     // The source path MUST be a glob (`dir/*`), not the bare dir: the
@@ -217,22 +202,16 @@ object Streams {
       s"${Integer.toHexString(dir.hashCode)}_${ProcessHandle.current().pid()}"
     val sch = Tables.t(s, dir, "events").schema
     // Staged input is immutable per (name, dir, types — encoded in `name`):
-    // reuse it across invocations behind a done-marker (see
-    // runBoundedAppend); the sink-side checkpoint is the caller's and is
-    // always fresh.
-    val done = Paths.get(base, "_in_done")
+    // reuse it across invocations (see runBoundedAppend); the sink-side
+    // checkpoint is the caller's and is always fresh.
     val (splitDir, splitFp) = splitEventsDir(s, dir)
-    if (!(Files.exists(done) && Files.readString(done) == splitFp)) {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-      val inDir = Paths.get(base, "in")
-      Files.createDirectories(inDir)
-      linkSplitEvents(inDir, splitDir)
+    Tables.stage(base, splitFp) {
+      linkSplitEvents(Files.createDirectories(Paths.get(base, "in")), splitDir)
       val sentTs = Tables.tsSentinel(sch("ts").dataType, SentinelEpochSec)
       val rows = types.map(t =>
         org.apache.spark.sql.Row(-1L, sentTs, -1L, t, 0.0, "{}"))
       s.createDataFrame(s.sparkContext.parallelize(rows, 1), sch)
         .write.parquet(s"$base/in/sentinels")
-      Files.writeString(done, splitFp)
     }
     () => Tables.withEventTime(s.readStream.schema(sch).parquet(s"$base/in/*"))
   }
@@ -266,9 +245,7 @@ object Streams {
         import java.nio.file.{Files, Paths}
         val base = s"${sys.props("java.io.tmpdir")}/graft_ratelimit_" +
           s"${Integer.toHexString(d.hashCode)}"
-        val done = Paths.get(s"$base/_done")
-        if (!Files.exists(done)) {
-          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+        Tables.stage(base, Tables.fingerprint(d, "events")) {
           Files.createDirectories(Paths.get(s"$base/in"))
           (0 until 4).foreach { g =>
             val stage = s"$base/stage$g"
@@ -282,7 +259,6 @@ object Streams {
             }
             Files.move(part, Paths.get(s"$base/in/f$g.parquet"))
           }
-          Files.writeString(done, "ok")
         }
         val sch = s.read.parquet(s"$base/in").schema
         val batches = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
@@ -399,17 +375,16 @@ object Streams {
         import org.apache.spark.sql.Row
         import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
         // The two input files are IMMUTABLE constants: stage them ONCE per
-        // JVM behind a done-marker, so no timed repeat pays two parquet
-        // write jobs plus a recursive delete; only the checkpoint and sink
-        // must be fresh per run (the same split as runBoundedAppend). Each
-        // invocation gets a fresh run
-        // dir whose in/ is populated by SYMLINKS — f1 before run 1, f2
-        // added before run 2 — preserving the two-stage file visibility the
-        // late-drop semantics depend on at zero Spark-job cost.
+        // JVM, so no timed repeat pays two parquet write jobs plus a
+        // recursive delete. They read no table, so their fingerprint is a
+        // constant tag. Only the checkpoint and sink must be fresh per run
+        // (the same split as runBoundedAppend). Each invocation gets a
+        // fresh run dir whose in/ is populated by SYMLINKS — f1 before run
+        // 1, f2 added before run 2 — preserving the two-stage file
+        // visibility the late-drop semantics depend on at zero Spark-job
+        // cost.
         val stage = s"${sys.props("java.io.tmpdir")}/graft_late_stage_${ProcessHandle.current().pid()}"
-        val done = Paths.get(stage, "_done")
-        if (!Files.exists(done)) {
-          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stage))
+        Tables.stage(stage, "late-rows1") {
           def mk(name: String, rows: Seq[String]): Unit =
             s.createDataFrame(
                 s.sparkContext.parallelize(
@@ -418,7 +393,6 @@ object Streams {
               .write.parquet(s"$stage/$name")
           mk("f1", Seq("2024-01-01 09:05:00", "2024-01-01 10:30:00"))
           mk("f2", Seq("2024-01-01 09:10:00", "2024-01-01 11:30:00", "2024-01-01 13:00:00"))
-          Files.writeString(done, "ok")
         }
         val base = s"${sys.props("java.io.tmpdir")}/graft_late_${ProcessHandle.current().pid()}"
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
@@ -656,9 +630,7 @@ object Streams {
         import sp.implicits._
         val base = s"${sys.props("java.io.tmpdir")}/graft_ckptrec4_" +
           s"${Integer.toHexString(d.hashCode)}"
-        val done = Paths.get(s"$base/_done")
-        if (!Files.exists(done)) {
-          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+        Tables.stage(base, Tables.fingerprint(d, "events")) {
           Files.createDirectories(Paths.get(s"$base/in"))
           (0 until 4).foreach { g =>
             val stage = s"$base/stage$g"
@@ -674,7 +646,6 @@ object Streams {
             }
             Files.move(part, Paths.get(s"$base/in/f$g.parquet"))
           }
-          Files.writeString(done, "ok")
         }
         val run = s"$base/run_${System.nanoTime()}"
         val sch = s.read.parquet(s"$base/in").schema

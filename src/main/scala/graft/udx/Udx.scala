@@ -141,31 +141,26 @@ object Udx {
   }
 
   /** Fixed staging path for the minhash token-hash table — a Spark-side
-    * PERFORMANCE artifact only since round 12: one (source, h) row per
-    * distinct token per document, where h is the md5-derived signed-64
-    * token hash (first 16 hex chars parsed unsigned, re-centered at 2^63
-    * in exact decimal math). Both engines compute the identical h, so the
-    * ORACLE rebuilds the token table from `documents` itself.
+    * PERFORMANCE artifact only: one (source, h) row per distinct token per
+    * document, where h is the md5-derived signed-64 token hash (first 16
+    * hex chars parsed unsigned, re-centered at 2^63 in exact decimal
+    * math). Both engines compute the identical h, so the ORACLE rebuilds
+    * the token table from `documents` itself. The `md5tok` kernel tag
+    * names that hash: tokens hashed any other way must re-stage.
     */
   private val MinhashTokDir = s"${sys.props("java.io.tmpdir")}/graft_minhash_toks"
 
-  private def stageMinhashToks(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    // content-fingerprint marker + kernel-version tag (round-12 xxhash64
-    // -> md5 switch must invalidate staged artifacts on unchanged data)
-    val fp = "md5tok|" + Tables.fingerprint(d, "documents")
-    val marker = Paths.get(MinhashTokDir, "_dataset")
-    if (Files.exists(marker) && Files.readString(marker) == fp) return
-    val u = "CAST(conv(substring(md5(tok), 1, 16), 16, 10) AS DECIMAL(20,0))"
-    Tables.t(s, d, "documents")
-      .select(col("source"), explode(array_distinct(split(col("text"), " "))).as("tok"))
-      .select(col("source"),
-        expr(s"CAST($u - (CASE WHEN $u >= 9223372036854775808 THEN 18446744073709551616 ELSE 0 END) AS BIGINT)").as("h"))
-      .write.mode("overwrite").parquet(s"$MinhashTokDir/data")
-    Files.writeString(marker, fp)
-  }
+  private def stageMinhashToks(s: org.apache.spark.sql.SparkSession, d: String): String =
+    Tables.stage(MinhashTokDir, "md5tok|" + Tables.fingerprint(d, "documents")) {
+      val u = "CAST(conv(substring(md5(tok), 1, 16), 16, 10) AS DECIMAL(20,0))"
+      Tables.t(s, d, "documents")
+        .select(col("source"), explode(array_distinct(split(col("text"), " "))).as("tok"))
+        .select(col("source"),
+          expr(s"CAST($u - (CASE WHEN $u >= 9223372036854775808 THEN 18446744073709551616 ELSE 0 END) AS BIGINT)").as("h"))
+        .write.mode("overwrite").parquet(s"$MinhashTokDir/data")
+    }
 
-  /** FULLY INDEPENDENT DuckDB mirror (upgraded from staged, round 12):
+  /** FULLY INDEPENDENT DuckDB mirror:
     * rebuilds the (source, h) token table from `documents` — split on
     * space, md5-derived signed-64 h — then the 64-permutation min fold:
     * per perm i, v = wrap64(a_i·h + b_i) with Java two's-complement
@@ -244,10 +239,11 @@ object Udx {
           .agg(round(geomean(col("p_retailprice")), 3).as("geomean"), count(lit(1)).as("n"))
           .orderBy("p_brand")),
 
-    // K3 — MinHash signature per document source, ORACLED (round 11) via
-    // the staged-hash pattern: the xxhash64 token hash is the only
-    // Spark-specific step, staged once per (JVM, dataset); DuckDB then
-    // reproduces each of the 64 affine permutations' wrapping 64-bit
+    // K3 — MinHash signature per document source, ORACLED independently:
+    // the md5 token hash is staged once per dataset fingerprint as a
+    // Spark-side performance artifact, DuckDB recomputes it from
+    // `documents` ([[minhashOracle]]) and reproduces each of the 64 affine
+    // permutations' wrapping 64-bit
     // arithmetic EXACTLY in HUGEINT — (a·h + b) fits in int128, reduce
     // mod 2^64, re-center to signed — and takes the same per-source mins
     // (probed value-for-value against Java wrap semantics before
@@ -277,11 +273,11 @@ object Udx {
           "last_day(CAST(o_orderdate AS DATE)), INTERVAL 1 DAY)) AS g FROM orders) " +
           "ORDER BY o_orderkey, day"),
       (s, d) =>
-        // Sort-first (r17, replacing the spread): range-sort the narrow
-        // (o_orderkey, o_orderdate) rows, then run the ~30x generate
-        // (4.5M output rows at sf0.1) ONCE above the sort at explicit
-        // width — the old explode-then-orderBy shape re-executed the
-        // generate for the range-bound sampling pass. o_orderkey is
+        // Sort-first: range-sort the narrow (o_orderkey, o_orderdate)
+        // rows, then run the ~30x generate (4.5M output rows at sf0.1)
+        // ONCE above the sort at explicit width — an explode-then-orderBy
+        // shape re-executes the generate for the range-bound sampling
+        // pass. o_orderkey is
         // unique and sequence() emits days ascending, so the exploded
         // output is exactly ORDER BY (o_orderkey, day).
         Tables.t(s, d, "orders")

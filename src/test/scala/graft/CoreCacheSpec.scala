@@ -3,10 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-/** Pins the round-15 read-cache eviction discipline (round-14 advisor
-  * finding): fingerprint-keyed entries for a (session, dir, table) — and
-  * staged-artifact entries for a (session, dataDir) — must be SUPERSEDED on
-  * regeneration, not accumulated, while still serving fresh data.
+/** Pins the read-cache eviction discipline — fingerprint-keyed entries for
+  * a (session, dir, table), and staged-artifact entries for a (session,
+  * dataDir), must be SUPERSEDED on regeneration, not accumulated, while
+  * still serving fresh data — and the marker rule of `Tables.stage`.
   */
 class CoreCacheSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -49,5 +49,39 @@ class CoreCacheSpec extends AnyFunSuite {
     assert(n == 1, s"superseded staged entry must be evicted: $n entries for $dataDir")
     // same fingerprint hits the cache (no re-read): the SAME DataFrame object
     assert(Tables.staged(spark, dataDir, "fpB") eq Tables.staged(spark, dataDir, "fpB"))
+  }
+
+  test("Tables.stage: a hit skips build; a new fp rebuilds clean; a failed build leaves no marker") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft_stage_spec").toString + "/layout"
+    val marker = Paths.get(dir, "_done")
+    var builds = 0
+    def stage(fp: String, file: String): String = Tables.stage(dir, fp) {
+      builds += 1
+      Files.createDirectories(Paths.get(dir))
+      Files.writeString(Paths.get(dir, file), fp)
+    }
+    assert(stage("fpA", "a.txt") == "fpA")
+    assert(stage("fpA", "a.txt") == "fpA")
+    assert(builds == 1, "a marker holding the same fp must skip build")
+    assert(Files.readString(marker) == "fpA")
+
+    stage("fpB", "b.txt")
+    assert(builds == 2, "a changed fp must rebuild")
+    assert(!Files.exists(Paths.get(dir, "a.txt")), "the superseded layout's files must be removed")
+    assert(Files.exists(Paths.get(dir, "b.txt")) && Files.readString(marker) == "fpB")
+
+    val err = intercept[IllegalStateException] {
+      Tables.stage(dir, "fpC") {
+        Files.createDirectories(Paths.get(dir))
+        Files.writeString(Paths.get(dir, "partial.txt"), "x")
+        throw new IllegalStateException("build failed")
+      }
+    }
+    assert(err.getMessage == "build failed")
+    assert(!Files.exists(marker), "a failed build must leave no marker")
+    stage("fpC", "c.txt")
+    assert(builds == 3, "the call after a failed build must rebuild")
+    assert(!Files.exists(Paths.get(dir, "partial.txt")) && Files.readString(marker) == "fpC")
   }
 }

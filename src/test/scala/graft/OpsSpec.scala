@@ -659,6 +659,20 @@ class OpsSpec extends AnyFunSuite {
     assert(afterSecond - afterFirst <= 0, s"$afterFirst -> $afterSecond persisted RDDs")
   }
 
+  test("cache hygiene: repeated PageRank, phash and bm25 runs do not accumulate persisted blocks") {
+    def persisted = spark.sparkContext.getPersistentRDDs.size
+    def sweep(): Unit =
+      Seq("graph_pagerank", "multimodal_phash_neardup", "rank_bm25_topk")
+        .foreach(run(_).count())
+    sweep()
+    val afterFirst = persisted
+    sweep()
+    val afterSecond = persisted
+    // each key's checkpoint sits in one Ckpt.slot entry: a repeat releases
+    // the superseded entry's blocks by id, so the live set cannot grow
+    assert(afterSecond - afterFirst <= 0, s"$afterFirst -> $afterSecond persisted RDDs")
+  }
+
   test("cluster loop isolation: parent session conf never mutates mid-loop") {
     // the label-propagation loop caps shuffle partitions on a CHILD session
     // (spark.newSession); poll the PARENT's conf from another thread for the
@@ -1522,6 +1536,43 @@ class OpsSpec extends AnyFunSuite {
     writeDocs(Seq("bbbbbbbbba", "bbabbbabbb", "babababa"))   // corpus B: opposite skew
     assert(got() == expected(),
       "post-regeneration scores diverged — stale model/listing served from a path-keyed cache")
+  }
+
+  test("scan_partition_prune re-stages its layout when orders.parquet is regenerated in place") {
+    // The staged partitioned layout is keyed on the orders fingerprint: a
+    // marker that ignores content would keep serving the first
+    // generation's layout after the rewrite below.
+    val dir = java.nio.file.Files.createTempDirectory("graft_restage").toString
+    val staging = Tables.stagingDir("graft_prune_orders", dir)
+    val src = Tables.t(spark, sf, "orders")
+    def regen(df: org.apache.spark.sql.DataFrame): Unit = {
+      df.coalesce(1).write.mode("overwrite").parquet(s"$dir/orders.parquet")
+      // distinct mtime, so a same-millisecond rewrite cannot alias the
+      // previous generation's fingerprint
+      new java.io.File(s"$dir/orders.parquet").listFiles()
+        .foreach(f => f.setLastModified(f.lastModified() + 2000))
+    }
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] =
+      df.collect().toSeq.map(r => (r.get(0).toString.toLong, r.getLong(1), r.getDouble(2)))
+    def direct(): Seq[(Long, Long, Double)] = rows(Tables.t(spark, dir, "orders")
+      .withColumn("yr", year(col("o_orderdate")).cast("long"))
+      .where(col("yr").isin(1996L, 1997L))
+      .groupBy("yr")
+      .agg(count(lit(1)).as("n"), Q.out6(sum(Q.dec4(col("o_totalprice")))).as("sum_total"))
+      .orderBy("yr"))
+    def viaKey(): Seq[(Long, Long, Double)] =
+      rows(SparkEntry.queries("scan_partition_prune")(spark, dir))
+    try {
+      regen(src)
+      assert(viaKey() == direct())
+      regen(src.where(col("o_orderkey") % 3 === 0))
+      val fresh = direct()
+      assert(fresh.nonEmpty)
+      assert(viaKey() == fresh, "stale staged layout served after in-place regeneration")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(staging))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
   }
 
   test("agg_weighted_median on an empty lineitem returns no rows instead of throwing") {
