@@ -4,11 +4,12 @@ import graft.Tables
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** FHIR scale-rehearsal generator: replicates the reference's golden
-  * resources K× so the fhir_* keys can run through the
-  * same decade rehearsals as the relational/LLM keys — the reference's own
-  * query-acceleration premise (README.md:301-309) otherwise never executes
-  * above its 100-row examples.
+/** FHIR scale-rehearsal generator: replicates the FHIR resources that
+  * `base` resolves to (`Tables.golden(s, name, base)`: its own `fhir/`
+  * tables when it has them, else the reference's golden files) K× so the
+  * fhir_* keys can run through the same decade rehearsals as the
+  * relational/LLM keys — the reference's own query-acceleration premise
+  * (README.md:301-309) otherwise never executes above its 100-row examples.
   *
   * The GenScale discipline, adapted to string identity (the golden ids are
   * Synthea-shaped uuids, not integers): every resource id gets a `-<rep>`
@@ -20,7 +21,7 @@ import org.apache.spark.sql.functions._
   * referential integrity and per-patient join fan-out are preserved
   * EXACTLY: each replica is a closed world. All other values (dates,
   * quantities, codings, extensions) repeat verbatim — value distributions
-  * are the golden ones, only identity shifts.
+  * are the base's, only identity shifts.
   *
   * Layout: `<dst>/fhir/{Patient,Observation,ExplanationOfBenefit}.parquet`
   * (Spark-written, so scans parallelize across part files), plus symlinks
@@ -35,8 +36,9 @@ object FhirGenScale {
     * given struct-typed reference columns' `reference` field.
     */
   private[fhir] def replicate(
-      s: SparkSession, name: String, k: Int, refCols: Seq[String]): org.apache.spark.sql.DataFrame = {
-    val df = Tables.golden(s, name)
+      s: SparkSession, name: String, k: Int, refCols: Seq[String],
+      base: String): org.apache.spark.sql.DataFrame = {
+    val df = Tables.golden(s, name, base)
     val reps = df.withColumn("__rep", explode(lit((0 until k).toArray)))
     val suffixed = refCols.foldLeft(
       reps.withColumn("id", concat(col("id"), lit("-"), col("__rep")))) { (acc, rc) =>
@@ -46,12 +48,12 @@ object FhirGenScale {
     suffixed.select(df.columns.map(col).toIndexedSeq: _*)
   }
 
-  def writeScaled(s: SparkSession, dst: String, k: Int): Unit = {
+  def writeScaled(s: SparkSession, dst: String, k: Int, base: String): Unit = {
     Seq(
       ("Patient", Seq.empty[String]),
       ("Observation", Seq("subject")),
       ("ExplanationOfBenefit", Seq("patient"))).foreach { case (name, refs) =>
-      replicate(s, name, k, refs)
+      replicate(s, name, k, refs, base)
         .write.mode("overwrite").parquet(s"$dst/fhir/$name.parquet")
     }
   }
@@ -61,7 +63,7 @@ object FhirGenScale {
     val k = args.lift(1).map(_.toInt).getOrElse(100)
     val base = args.lift(2).getOrElse("/root/testdata/sf0.1")
     val spark = graft.Session()
-    writeScaled(spark, dst, k)
+    writeScaled(spark, dst, k, base)
     // base-table symlinks: the bench anchors read lineitem/orders/customer/
     // nation from the same SF dir the fhir keys are pointed at
     val dstPath = java.nio.file.Paths.get(dst)

@@ -27,16 +27,18 @@ object Scans {
           min(col("l_shipdate")).as("min_ship"),
           max(col("l_shipdate")).as("max_ship"))),
 
-    // B2 — nested-column projection over a golden FHIR file: exercises
-    // nested schema pruning (reads 2 of 39 leaf columns).
+    // B2 — nested-column projection over the FHIR Observation table:
+    // exercises nested schema pruning (reads 3 of its 39 golden leaf
+    // columns). The table resolves through the dataset dir like every
+    // fhir_* key's.
     QueryDef(
       "scan_projection_pushdown",
       Some(
         "SELECT id, status, subject.reference AS subject_ref " +
           s"FROM read_parquet('${Tables.goldenDir}/Observation.parquet') " +
           "WHERE status = 'final' ORDER BY id"),
-      (s, _) =>
-        Tables.golden(s, "Observation")
+      (s, d) =>
+        Tables.golden(s, "Observation", d)
           .where(col("status") === "final")
           .select(col("id"), col("status"), col("subject.reference").as("subject_ref"))
           .orderBy("id")),

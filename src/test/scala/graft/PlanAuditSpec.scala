@@ -24,6 +24,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanAuditSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   private val sf = SparkTestBase.sf
+  // keys that read the FHIR resource tables plan over SparkTestBase.fhirSf;
+  // the rest keep sf, whose staged layouts the other specs share
+  private val fhirKeys =
+    fhir.FhirQueries.defs.map(_.key).toSet + "scan_projection_pushdown"
 
   /** Window nodes whose partition spec is EMPTY — Spark moves the whole
     * input to one partition for these ("No Partition Defined for Window"),
@@ -138,8 +142,9 @@ class PlanAuditSpec extends AnyFunSuite {
       k == "sink_partitioned_write" || k == "sink_parquet_roundtrip" ||
       k == "join_bucketed_colocated" // saveAsTable side effects; plan asserted in PlanSpec
     SparkEntry.queries.keys.toSeq.sorted.filterNot(skip).map { k =>
+      val d = if (fhirKeys(k)) SparkTestBase.fhirSf else sf
       val qe =
-        try SparkEntry.queries(k)(spark, sf).queryExecution
+        try SparkEntry.queries(k)(spark, d).queryExecution
         catch { case e: Throwable => fail(s"$k failed to plan: ${e.getMessage}") }
       (k, qe.executedPlan.toString, globalWindows(qe.executedPlan), scalaFuncNodes(qe.executedPlan))
     }

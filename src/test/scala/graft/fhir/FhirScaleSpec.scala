@@ -1,10 +1,10 @@
 package graft.fhir
 
-import graft.{SparkEntry, SparkTestBase}
+import graft.{SparkEntry, SparkTestBase, Tables}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Scale-invariants of the FhirGenScale replication (round-11): the
+/** Scale-invariants of the FhirGenScale replication: the
   * replicated corpus must preserve what the rehearsal relies on — closed
   * replica worlds (reference integrity, so join fan-out scales EXACTLY
   * K×), conformance-clean identity rewrites, and per-table cardinality.
@@ -15,18 +15,20 @@ import org.scalatest.funsuite.AnyFunSuite
 class FhirScaleSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   private val K = 5
-  private val base = "/root/testdata/sf0.001" // no fhir/ subdir → golden path
+  // FHIR tables resolve through Tables.golden(_, _, base): the golden files
+  // where present, else the ingested fixture's fhir/ subdir
+  private lazy val base = SparkTestBase.fhirSf
   private lazy val dst = {
     val d = s"${sys.props("java.io.tmpdir")}/graft_fhir_scale_test"
-    FhirGenScale.writeScaled(spark, d, K)
+    FhirGenScale.writeScaled(spark, d, K, base)
     d
   }
 
   test("replication: K× rows per table, ids unique, references resolve within replicas") {
     Seq("Patient", "Observation", "ExplanationOfBenefit").foreach { t =>
       val scaled = spark.read.parquet(s"$dst/fhir/$t.parquet")
-      val golden = spark.read.parquet(s"/root/reference/examples/$t.parquet")
-      assert(scaled.count() == K * golden.count(), s"$t row count")
+      val baseRows = Tables.golden(spark, t, base)
+      assert(scaled.count() == K * baseRows.count(), s"$t row count")
       assert(scaled.select("id").distinct().count() == scaled.count(), s"$t id uniqueness")
     }
     // closed world: every suffixed reference resolves to exactly one patient

@@ -1,13 +1,14 @@
 package graft.fhir
 
-import graft.{SparkTestBase, Tables}
+import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** SQL-on-FHIR v2 ViewDefinition evaluator (flattening subset, round-16):
-  * golden-file evaluation plus synthetic coverage of the semantics the
-  * golden data cannot differentiate (forEachOrNull on a missing element,
-  * where-filtering, Cartesian sibling selects).
+/** SQL-on-FHIR v2 ViewDefinition evaluator (flattening subset):
+  * evaluation over the FHIR tables of `SparkTestBase.golden` plus
+  * synthetic coverage of the semantics those tables cannot differentiate
+  * (forEachOrNull on a missing element, where-filtering, Cartesian
+  * sibling selects).
   */
 class ViewDefinitionSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -34,9 +35,9 @@ class ViewDefinitionSpec extends AnyFunSuite {
       ],
       "where": [{"path": "gender = 'female'"}]
     }"""
-    val got = ViewDefinition.evaluate(Tables.golden(spark, "Patient"), view)
+    val got = ViewDefinition.evaluate(SparkTestBase.golden("Patient"), view)
       .orderBy("patient_id", "family")
-    val expected = Tables.golden(spark, "Patient")
+    val expected = SparkTestBase.golden("Patient")
       .where(col("gender") === "female")
       .select(col("id").as("patient_id"),
         col("maritalStatus.text").as("marital"), explode(col("name")).as("nm"))
@@ -194,9 +195,9 @@ class ViewDefinitionSpec extends AnyFunSuite {
           {"forEach": "coding", "column": [{"path": "code", "name": "cat_code"}]}]}
       ]
     }"""
-    val got = ViewDefinition.evaluate(Tables.golden(spark, "Observation"), view)
+    val got = ViewDefinition.evaluate(SparkTestBase.golden("Observation"), view)
       .orderBy("obs_id", "cat_code")
-    val expected = Tables.golden(spark, "Observation")
+    val expected = SparkTestBase.golden("Observation")
       .select(col("id").as("obs_id"),
         element_at(col("code.coding"), 1).getField("code").as("obs_code"),
         explode(col("category")).as("cat"))
@@ -219,9 +220,9 @@ class ViewDefinitionSpec extends AnyFunSuite {
           {"path": "value.ofType(string)", "name": "vstr"}]}
       ]
     }"""
-    val got = ViewDefinition.evaluate(Tables.golden(spark, "Observation"), view)
+    val got = ViewDefinition.evaluate(SparkTestBase.golden("Observation"), view)
       .orderBy("obs_id")
-    val expected = Tables.golden(spark, "Observation")
+    val expected = SparkTestBase.golden("Observation")
       .select(col("id").as("obs_id"),
         col("valueQuantity.value").as("qty"),
         element_at(col("valueCodeableConcept.coding"), 1).getField("code").as("vcode"),
@@ -241,9 +242,10 @@ class ViewDefinitionSpec extends AnyFunSuite {
           {"path": "value.ofType(CodeableConcept).text", "name": "ct"}]}
       ]
     }"""
-    val got = ViewDefinition.evaluate(Tables.golden(spark, "Observation"), view)
-    // the golden BP components carry Quantity values, the survey components
-    // carry CodeableConcept text — both arms must be populated
+    val got = ViewDefinition.evaluate(SparkTestBase.golden("Observation"), view)
+    // BP readings carry Quantity values; survey answers (golden files) and
+    // posture (fixture) carry CodeableConcept text — both arms must be
+    // populated
     assert(got.where(col("cq").isNotNull).count() > 0)
     assert(got.where(col("ct").isNotNull).count() > 0)
   }
@@ -292,10 +294,10 @@ class ViewDefinitionSpec extends AnyFunSuite {
       ],
       "where": [{"path": "gender = 'female'"}]
     }"""
-    val plan = ViewDefinition.evaluate(Tables.golden(spark, "Patient"), view)
+    val plan = ViewDefinition.evaluate(SparkTestBase.golden("Patient"), view)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"flattening view must not shuffle:\n$plan")
-    // pruned scan: the wide golden schema must not be read whole — the scan
+    // pruned scan: the wide Patient schema must not be read whole — the scan
     // ReadSchema should mention name but not e.g. address or extension
     val read = plan.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
     assert(!read.contains("address"), s"scan not column-pruned: $read")
