@@ -38,31 +38,24 @@ object Ckpt {
   val reliable: Boolean = sys.env.contains("GRAFT_RELIABLE_CKPT")
   private val warnedNoCleaner = new java.util.concurrent.atomic.AtomicBoolean(false)
 
-  /** The one superseded-checkpoint registry, keyed (session, call-site
-    * key). [[slot]] checkpoints a Dataset, PINS it under its key together
-    * with its block ids, and releases the entry it supersedes by id — the
-    * previous invocation's. Release must lag one invocation because the
-    * returned plan still references the blocks when the query function
-    * returns, and the pin keeps the ContextCleaner from racing the
-    * explicit release once the caller drops its result (that race showed
-    * as nondeterministic live-block counts in the cache-hygiene tests).
-    * So repeated runs of a key hold one entry's blocks, never a growing
-    * pile. Callers are the kernels whose plan reads one derived table
-    * several times (collapse kernels, bm25, phash, triangles, PageRank):
-    * the checkpoint runs the expensive pass ONCE per invocation instead of
-    * once per consumer. It is eager and runs inside the caller's timed
-    * window; nothing is reused across invocations.
+  /** Checkpoints `df` and pins it in the [[Memo]] slot `ckpt:<key>`,
+    * whose release action frees the checkpoint's blocks by id, so storing
+    * this invocation's checkpoint releases the previous invocation's.
+    * Release lags one invocation because the returned plan still references
+    * the blocks when the query function returns, and the pin keeps the
+    * ContextCleaner from racing the explicit release once the caller drops
+    * its result (that race showed as nondeterministic live-block counts in
+    * the cache-hygiene tests). Repeated runs of a key therefore hold one
+    * entry's blocks. Callers are the kernels whose plan reads one derived
+    * table several times (collapse kernels, bm25, phash, triangles,
+    * PageRank): the checkpoint runs the expensive pass once per invocation
+    * instead of once per consumer. It is eager and runs inside the caller's
+    * timed window; nothing is reused across invocations.
     */
-  private val slots = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Dataset[_], Seq[Int])]()
-
   def slot[T](key: String, df: Dataset[T]): Dataset[T] = {
     val s = df.sparkSession
     val (out, ids) = apply(df)
-    Option(slots.put((s, key), (out, ids))).foreach { case (_, oldIds) =>
-      release(s, oldIds)
-    }
-    out
+    Memo.put(s, s"ckpt:$key", "", out, (_: Dataset[T]) => release(s, ids))
   }
 
   /** Unpersist the blocks `ids` (as returned by [[apply]]) that are still

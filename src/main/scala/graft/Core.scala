@@ -13,15 +13,15 @@ import org.apache.spark.sql.types._
   * oracle query ends in a total ORDER BY (SURVEY §7.4).
   */
 /** @param memoized this key's timed bench repeats reuse an artifact built
-  *   once per (session, dataset) — a memoized corpus artifact (IVF index,
-  *   bigram LM, top-pair set, near-dup pairs/labels) or a staged input
-  *   layout (`Tables.stage` dirs, bucketed catalog tables).
-  *   Warm-up populates it, so repeats measure post-artifact (probe/read)
-  *   work — the production posture for dataset-level artifacts, but a
-  *   MEASUREMENT-BOUNDARY property a cross-round per-key comparison must
-  *   know about: the bench artifact lists these keys under "memoized" so a
-  *   timing drop caused by moving work behind an artifact is never mistaken
-  *   for a plan improvement.
+  *   once per (session, dataset fingerprint) — a [[Memo]] entry (IVF index,
+  *   bigram LM, top-pair set, near-dup pairs/labels, median cuts, the
+  *   bucketed catalog tables) or a staged input layout (`Tables.stage`
+  *   dirs). Warm-up populates it, so repeats measure post-artifact
+  *   (probe/read) work — the production posture for dataset-level
+  *   artifacts, but a MEASUREMENT-BOUNDARY property a cross-round per-key
+  *   comparison must know about: the bench artifact lists these keys under
+  *   "memoized" so a timing drop caused by moving work behind an artifact
+  *   is never mistaken for a plan improvement.
   */
 final case class QueryDef(
     key: String,
@@ -35,47 +35,17 @@ final case class QueryDef(
 object Tables {
   val goldenDir = "/root/reference/examples"
 
-  /** Session-scoped table catalog: `spark.read.parquet` re-lists files and
-    * re-reads footers on every call, which at ~2 reads/query × ~100 queries
-    * is pure fixed overhead. A DataFrame is an immutable plan, so caching
-    * the reader result per (session, path) is safe. (Plans stay lazy — this
-    * caches file listing + schema, never data.)
+  /** Session-scoped table reader: `spark.read.parquet` re-lists files and
+    * re-reads footers on every call, a fixed cost paid by every query. A
+    * DataFrame is an immutable plan that snapshots the file listing, so the
+    * reader is memoized per (session, path) under the table's [[fingerprint]]:
+    * an in-place regeneration re-reads instead of serving the stale listing.
+    * The fingerprint is one stat per table file; the footer read and schema
+    * inference are what the memo saves. Plans stay lazy, so no data is held.
     */
-  // private[graft] so CoreCacheSpec can assert the supersede-eviction
-  // discipline (fingerprint-keyed entries must not leak one stale
-  // DataFrame per in-place regeneration)
-  private[graft] val readCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  // Keyed on the CONTENT fingerprint, not the bare path (the
-  // invalidate-together discipline): a DataFrame's file index snapshots
-  // names+sizes at creation, so in-place regeneration at the same path
-  // within one JVM would otherwise serve a stale listing (FileNotFound at
-  // best, wrong byte ranges at worst) while every fingerprint-keyed memo
-  // above it correctly re-derives. The fingerprint is one stat per table
-  // file (shallow, local-FS metadata) — the cache still avoids the footer
-  // read + schema inference that it exists for.
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val fp = fingerprint(dir, name) + "#" + name
-    val key = (spark, fp)
-    val cached = readCache.get(key)
-    if (cached != null) cached
-    else {
-      // Evict superseded fingerprints of the same (session, dir, table) on
-      // miss: fingerprint-keyed entries otherwise leak one stale
-      // DataFrame per in-place regeneration within a JVM. fingerprint
-      // strings start "dir|"; golden()'s plain-path keys contain no "|" so
-      // they can never match. Residual accepted bound: a same-size
-      // regeneration inside one lastModified millisecond still fingerprints
-      // identically — sub-ms in-place rewrites are not a flow any entrypoint
-      // performs (GenScale writes fresh files over seconds).
-      val prefix = dir + "|"
-      val suffix = "#" + name
-      readCache.keySet.removeIf { k =>
-        (k._1 eq spark) && k._2.startsWith(prefix) && k._2.endsWith(suffix) && k._2 != fp
-      }
-      readCache.computeIfAbsent(key, { case (s, _) => s.read.parquet(s"$dir/$name.parquet") })
-    }
+    val path = s"$dir/$name.parquet"
+    Memo.get(spark, path, fingerprint(dir, name))(spark.read.parquet(path))
   }
 
   /** Write-once staging of a derived layout under `dir` — the one marker
@@ -103,29 +73,14 @@ object Tables {
     fp
   }
 
-  /** Cached reader for a layout written by [[stage]], keyed by the `fp`
-    * that stage returned so a re-stage invalidates. Without this every
-    * timed repeat of a memoized key re-listed the staged dir, re-read
-    * footers, and — via Tables.spread's `df.rdd.getNumPartitions` on a
-    * FRESH Dataset each call — re-ran physical planning of the read
-    * (Dataset.rdd is lazy per OBJECT): a fixed cost inside the timed
-    * window that measured 0.29→0.51 norm s on sim_mrl_rerank. Same
-    * eviction discipline as t(): a superseded fingerprint's entry is
-    * dropped on miss.
+  /** Memoized reader for a layout written by [[stage]], keyed by the `fp`
+    * that stage returned so a re-stage re-reads. It keeps the timed repeats
+    * of a memoized key from re-listing the staged dir, re-reading footers
+    * and, through [[spread]]'s `df.rdd.getNumPartitions` on a fresh Dataset,
+    * re-planning the read.
     */
-  def staged(spark: SparkSession, dataDir: String, markerFp: String): DataFrame = {
-    val fp = dataDir + "@" + markerFp
-    val key = (spark, fp)
-    val cached = readCache.get(key)
-    if (cached != null) cached
-    else {
-      val prefix = dataDir + "@"
-      readCache.keySet.removeIf { k =>
-        (k._1 eq spark) && k._2.startsWith(prefix) && k._2 != fp
-      }
-      readCache.computeIfAbsent(key, { case (s, _) => s.read.parquet(dataDir) })
-    }
-  }
+  def staged(spark: SparkSession, dataDir: String, markerFp: String): DataFrame =
+    Memo.get(spark, dataDir, markerFp)(spark.read.parquet(dataDir))
 
   /** Parallelize an under-partitioned scan before a per-row compute kernel
     * (JVM mapPartitions, interpreted HOFs): local testdata tables are
@@ -188,27 +143,18 @@ object Tables {
     withEventTime(t(spark, dir, "events"))
   }
 
-  // Golden FHIR files are immutable; cache their readers like the sf tables
-  // (a dozen FHIR keys each re-listed + re-footer-read these 3 files).
-  def golden(spark: SparkSession, name: String): DataFrame =
-    readCache.computeIfAbsent(
-      (spark, s"$goldenDir/$name.parquet"),
-      { case (s, p) => s.read.parquet(p) })
+  def golden(spark: SparkSession, name: String): DataFrame = t(spark, goldenDir, name)
 
-  /** Dataset-aware golden resolution (FHIR scale rehearsals): a
-    * dataset dir may carry a `fhir/` subdir of FhirGenScale-replicated
-    * resources — prefer it so every fhir_* key runs at the replicated
-    * volume when benched against such a dir. The driver's sf dirs have no
-    * `fhir/`, so the correctness gate keeps reading the reference golden
-    * files (whose paths the static DuckDB oracles embed).
+  /** Dataset-aware golden resolution (FHIR scale rehearsals): a dataset dir
+    * may carry a `fhir/` subdir of FhirGenScale-replicated resources, and
+    * every fhir_* key then runs at the replicated volume. The driver's sf
+    * dirs have no `fhir/`, so the correctness gate reads the golden files,
+    * whose paths the static DuckDB oracles embed.
     */
-  def golden(spark: SparkSession, name: String, dir: String): DataFrame = {
-    if (dir == null) return golden(spark, name)
-    val scaled = s"$dir/fhir/$name.parquet"
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(scaled)))
-      readCache.computeIfAbsent((spark, scaled), { case (s, p) => s.read.parquet(p) })
+  def golden(spark: SparkSession, name: String, dir: String): DataFrame =
+    if (dir != null && java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/fhir/$name.parquet")))
+      t(spark, s"$dir/fhir", name)
     else golden(spark, name)
-  }
 
   /** Content fingerprint of one or more dataset table files — the marker
     * value [[stage]] compares. Combines the dataset path with each source
@@ -218,7 +164,8 @@ object Tables {
     * marker silently keeps the stale staged artifact and lets BOTH engines
     * agree on the wrong data. Missing files stamp as "absent" rather than
     * throwing, so probing a marker never fails before the staging code's
-    * own error surfaces.
+    * own error surfaces. A same-size rewrite inside one mtime tick
+    * fingerprints identically; no entry point rewrites a table that fast.
     */
   def fingerprint(d: String, tables: String*): String = {
     // listFiles() returns null on I/O or permission errors — treat like
@@ -246,6 +193,52 @@ object Tables {
     */
   def stagingDir(name: String, d: String): String =
     s"${sys.props("java.io.tmpdir")}/${name}_${Integer.toHexString(d.hashCode)}"
+}
+
+/** The one in-memory memo registry: every session-scoped value built
+  * from a dataset (table readers, trained models, learned cuts, checkpoint
+  * pins) lives here, keyed (session, slot). A slot names what is memoized
+  * and for which path; it holds exactly one entry, the `fp` the value was
+  * built for, the value and its release action. `fp` is the
+  * [[Tables.fingerprint]] of every table the build reads, so an in-place
+  * regeneration misses and rebuilds instead of serving a result computed
+  * from the old data, and the replaced entry's release runs at once, so a
+  * slot never holds more than one generation. Query bodies run serially on
+  * the driver, so there is no lock; a race can at worst build twice.
+  */
+object Memo {
+  private final case class Entry(fp: String, value: Any, release: () => Unit)
+  private val slots = new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Entry]()
+  private val keep: Any => Unit = _ => ()
+
+  /** The value stored under (`s`, `slot`) if it was built for `fp`;
+    * otherwise `build`'s value, which replaces the entry (see [[put]]).
+    * `build` runs outside any map call, so it may itself use the memo.
+    */
+  def get[T](s: SparkSession, slot: String, fp: String, release: T => Unit)(build: => T): T = {
+    val e = slots.get((s, slot))
+    if (e != null && e.fp == fp) e.value.asInstanceOf[T]
+    else put(s, slot, fp, build, release)
+  }
+
+  /** [[get]] for a value that holds nothing to release. */
+  def get[T](s: SparkSession, slot: String, fp: String)(build: => T): T =
+    get[T](s, slot, fp, keep)(build)
+
+  /** Stores `value` under (`s`, `slot`) whatever the slot held, then runs
+    * the release action of the entry it replaced; `release` runs in turn
+    * when this entry is replaced.
+    */
+  def put[T](s: SparkSession, slot: String, fp: String, value: T, release: T => Unit): T = {
+    Option(slots.put((s, slot), Entry(fp, value, () => release(value)))).foreach(_.release())
+    value
+  }
+
+  /** Test view: slot -> fp of the entries held for `s`. */
+  private[graft] def fingerprints(s: SparkSession): Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    slots.asScala.collect { case ((ss, slot), e) if ss eq s => slot -> e.fp }.toMap
+  }
 }
 
 /** Hash-match helpers (SURVEY §7.4): double measures are cast to

@@ -2,16 +2,34 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-/** Dumps formatted physical plans for the headline queries → PLANS.md.
-  * Evidence artifact for the plan-shape claims (pushdown, pruning,
-  * broadcast, top-k fusion, zero-shuffle bucketing, annotation rewrite).
+/** The plan dumper, under the bench's [[Session]] posture.
+  *   - `runMain graft.Plans <sfDir>` writes the formatted physical plans of
+  *     the headline queries to PLANS.md: the evidence for the plan-shape
+  *     claims (pushdown, pruning, broadcast, top-k fusion, zero-shuffle
+  *     bucketing, annotation rewrite).
+  *   - `runMain graft.Plans <sfDir> <key>…` prints each named key's
+  *     executed plan (post-AQE, after one collect), whole: a wide object
+  *     (de)serializer or join tree would otherwise push the scans out. It
+  *     is the fast loop for checking a plan shape before pinning it in
+  *     PlanSpec, and the dataset dir picks the scale, since AQE decisions
+  *     depend on size.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val out = if (args.length > 1) args(1) else "PLANS.md"
     val spark = Session()
     spark.sparkContext.setLogLevel("ERROR")
+    if (args.length > 1) args.tail.foreach { k =>
+      println(s"======== $k ========")
+      val df = SparkEntry.queries(k)(spark, sfDir)
+      df.collect() // materialize so AQE finalizes every stage
+      println(df.queryExecution.executedPlan.toString)
+    }
+    else writePlansMd(spark, sfDir)
+    spark.stop()
+  }
+
+  private def writePlansMd(spark: org.apache.spark.sql.SparkSession, sfDir: String): Unit = {
     val keys = Seq(
       "filter_predicate", "scan_projection_pushdown", "join_broadcast_hash",
       "join_shuffle_sortmerge", "agg_hash_group", "topk_order_limit",
@@ -80,8 +98,7 @@ object Plans {
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
       sb.append("```\n")
     }
-    Files.writeString(Paths.get(out), sb.toString)
-    println(s"[plans] wrote $out")
-    spark.stop()
+    Files.writeString(Paths.get("PLANS.md"), sb.toString)
+    println("[plans] wrote PLANS.md")
   }
 }

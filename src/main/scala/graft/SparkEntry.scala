@@ -11,27 +11,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SparkEntry {
 
   /** Keys whose timed bench repeats reuse an artifact built once per
-    * (session, dataset) during warm-up — see [[QueryDef.memoized]]. Two
-    * families:
-    *   - memoized corpus artifacts (computed Spark results held in a
-    *     per-session cache): the IVF index (sim_ann_ivf,
-    *     dedup_semdedup_cluster), the char-bigram LM
+    * (session, dataset fingerprint) during warm-up — see
+    * [[QueryDef.memoized]]. Two families:
+    *   - [[Memo]] entries (computed Spark results held per session under
+    *     the fingerprint of the tables they read): the IVF index
+    *     (sim_ann_ivf, dedup_semdedup_cluster), the char-bigram LM
     *     (quality_perplexity_proxy), the top-1000 bigram set
-    *     (text_bigram_coverage), the minhash near-pair table reused by the
+    *     (text_bigram_coverage), the minhash near-pair state reused by the
     *     component loop (dedup_cluster_components), the converged labels
-    *     it feeds (dedup_corpus_filter) and the learned bucket cuts of
-    *     agg_weighted_median;
+    *     it feeds (dedup_corpus_filter), the learned bucket cuts of
+    *     agg_weighted_median and the bucketed catalog tables
+    *     (join_bucketed_colocated);
     *   - staged input layouts (a Spark write job runs once per dataset
-    *     fingerprint, `Tables.stage`, or once per session for the bucketed
-    *     catalog tables; repeats time only the read path, which IS the
-    *     operator under test): manifest/lineage dirs, bloom/partitioned/
-    *     bucketed layouts, the fhir merge projections, the staged kernel
-    *     tables, and the stream input staging — every stream key whose
-    *     source is the staged split events copy (symlinks, plus sentinel
-    *     parquet where the key needs one), the rate-limit and recovery
-    *     file sets, and the late-data rows.
+    *     fingerprint, `Tables.stage`; repeats time only the read path,
+    *     which IS the operator under test): manifest/lineage dirs,
+    *     bloom/partitioned layouts, the fhir merge projections, the staged
+    *     kernel tables, and the stream input staging — every stream key
+    *     whose source is the staged split events copy (symlinks, plus
+    *     sentinel parquet where the key needs one), the rate-limit and
+    *     recovery file sets, and the late-data rows.
     * dedup_minhash_near is NOT here: it recomputes its pair pipeline fresh
-    * on every invocation and only swaps the cache for its siblings.
+    * on every invocation and only swaps the memo for its siblings.
     * Maintained centrally (the flag is a bench-protocol property, not plan
     * semantics); the require() below fails fast on a typo or key rename.
     */

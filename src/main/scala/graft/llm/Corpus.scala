@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Ckpt, QueryDef, Tables}
+import graft.{Ckpt, Memo, QueryDef, Tables}
 
 /** Corpus-level curation operators (SURVEY §2.L addendum): statistics that
   * look across the whole documents table rather than within one row —
@@ -19,13 +19,6 @@ import graft.{Ckpt, QueryDef, Tables}
   *     hazards.
   */
 object Corpus {
-
-  /** Top-1000 corpus bigram set memoized per (session, dataset) — a corpus
-    * artifact like [[Pipeline]]'s trained LM; per-doc coverage always
-    * re-runs.
-    */
-  private val topPairsCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), Array[String]]()
 
   /** BM25 sum over the three query terms — ONE string, spliced verbatim into
     * both the Spark projection and the DuckDB oracle so the IEEE double
@@ -191,16 +184,12 @@ object Corpus {
     merges.toSeq
   }
 
-  /** Per-dataset trained-merge artifact, fingerprint-keyed like the
-    * Pipeline LMs (in-place regeneration re-trains).
+  /** Per-dataset trained-merge artifact, memoized under the documents
+    * fingerprint like the Pipeline LMs (in-place regeneration re-trains).
     */
-  private val bpeMergeCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), Seq[(Long, String, Long)]]()
-
   private def bpeMergesCached(
       s: org.apache.spark.sql.SparkSession, d: String): Seq[(Long, String, Long)] =
-    bpeMergeCache.computeIfAbsent(
-      (s, Tables.fingerprint(d, "documents")), _ => trainBpeMerges(s, d))
+    Memo.get(s, s"bpe_merges:$d", Tables.fingerprint(d, "documents"))(trainBpeMerges(s, d))
 
   def defs: Seq[QueryDef] = Seq(
 
@@ -560,14 +549,14 @@ object Corpus {
           .select(col("doc_id"), explode(expr(
             "transform(sequence(1, size(w) - 1), " +
               "i -> concat(element_at(w, i), ' ', element_at(w, i + 1)))")).as("pair"))
-        // the top-1000 set is a corpus ARTIFACT (the bigramLmCache
-        // discipline): built once per (session, dataset), re-entered as a
+        // the top-1000 set is a corpus ARTIFACT (like the Pipeline LMs):
+        // memoized under the documents fingerprint, re-entered as a
         // 1000-row broadcast; the per-doc coverage pass always re-runs
-        val topArr = topPairsCache.computeIfAbsent((s, d), { case _ =>
+        val topArr = Memo.get(s, s"top_pairs:$d", Tables.fingerprint(d, "documents")) {
           pairs.groupBy("pair").agg(count(lit(1)).as("c"))
             .orderBy(col("c").desc, col("pair")).limit(1000)
             .collect().map(_.getString(0))
-        })
+        }
         val sp = s
         import sp.implicits._
         val top = topArr.toSeq.toDF("pair").select(col("pair"), lit(1L).as("hit"))

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{QueryDef, Tables}
+import graft.{Memo, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,22 +27,6 @@ object Ivf {
   private val NProbe = 2
   private val TopK = 3
 
-  /** The IVF index is a PERSISTED STORAGE ARTIFACT: centroids +
-    * assignments written to parquet under a directory keyed by the
-    * embeddings' [[Tables.fingerprint]], assignments partitioned by
-    * cluster id — so a probe reads nprobe partitions, a fresh session (or
-    * a fresh JVM) loads the index with zero k-means jobs, and a
-    * regenerated dataset at the same path (the GenScale rehearsal flow)
-    * misses the fingerprint and rebuilds.
-    * The JVM memo below is only a per-(session, dataset) handle cache over
-    * the loaded artifact (it saves re-collecting the k×dim centroid table
-    * per invocation); the k-means build runs ONLY when no artifact exists
-    * for the fingerprint. OpsSpec asserts the fresh-session load path
-    * plans no embeddings-scan jobs and that recall is unchanged.
-    */
-  private val idxMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, Array[Array[Double]])]()
-
   /** Index dir named by a hash of the embeddings' fingerprint: changed
     * data at the same path gets a new dir, so stale artifacts are
     * abandoned, never overwritten mid-read.
@@ -58,22 +42,25 @@ object Ivf {
     acc
   }
 
-  /** (vec_id, cluster) assignment DataFrame + final centroids — loaded from
-    * the persisted artifact, building (and persisting) it first if no
-    * artifact exists for the input fingerprint. graft-visible so the spec
-    * can assert the built geometry (cluster count past the floor) on a
-    * replicated corpus.
+  /** (vec_id, cluster) assignment DataFrame + final centroids. The IVF
+    * index is a PERSISTED STORAGE ARTIFACT: centroids + assignments written
+    * to parquet under [[indexDir]], assignments partitioned by cluster id —
+    * so a probe reads nprobe partitions, a fresh session (or a fresh JVM)
+    * loads the index with zero k-means jobs, and a regenerated dataset at
+    * the same path (the GenScale rehearsal flow) misses the fingerprint and
+    * rebuilds. The [[Memo]] slot over the loaded artifact saves
+    * re-collecting the k×dim centroid table per invocation. OpsSpec asserts
+    * the fresh-session load path plans no embeddings-scan jobs and that
+    * recall is unchanged. graft-visible so the spec can assert the built
+    * geometry (cluster count past the floor) on a replicated corpus.
     */
   private[graft] def index(s: SparkSession, d: String): (DataFrame, Array[Array[Double]]) = {
-    // memo keyed on the fingerprinted index DIR, not the dataset path — a
-    // path key would hand back a stale in-JVM handle after in-place data
-    // regeneration even though the artifact itself re-keys: index, oracle
-    // staging and memo must invalidate together
-    val dir = indexDir(d)
-    idxMemo.computeIfAbsent((s, dir), { case (ss, dd) =>
-      Tables.stage(dd, Tables.fingerprint(d, "embeddings"))(buildIndex(ss, d, dd))
-      loadIndex(ss, dd)
-    })
+    val fp = Tables.fingerprint(d, "embeddings")
+    Memo.get(s, s"ivf_index:$d", fp) {
+      val dir = indexDir(d)
+      Tables.stage(dir, fp)(buildIndex(s, d, dir))
+      loadIndex(s, dir)
+    }
   }
 
   /** Load the persisted index: k×dim centroid table (one tiny collect) +
@@ -324,8 +311,8 @@ object Ivf {
         // — provable without a single kernel comparison, and a rep-level
         // cross drop implies nothing further (that rep's members are already
         // dropped within-group). Without the collapse, a G-sized duplicate
-        // group pays G² comparisons inside its cluster — the second-decade
-        // (100×) rehearsal measured exponent 1.26 on replicated data. The
+        // group pays G² comparisons inside its cluster (exponent 1.26 on
+        // data replicated 100×). The
         // drop SET is exactly the uncollapsed operator's (pair-by-pair
         // case analysis: any cross pair's max is either a non-min member,
         // caught within-group, or a representative, caught by the rep pair).

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{Ckpt, Q, QueryDef, Tables}
+import graft.{Ckpt, Memo, Q, QueryDef, Tables}
 import graft.udx.{BandExpr, Udx}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -378,16 +378,17 @@ object Llm {
     * (`grouped`: gid = min member id, sorted members, rep signature + gram
     * hashes) and the verified near-dup pairs over REPRESENTATIVES only
     * (`matched`: ga < gb, exact Jaccard ≥ 0.5). Both are checkpointed and
-    * memoized per (session, dataset) so the clustering query doesn't
-    * recompute the text→signature→band pipeline. The pair query itself
-    * always recomputes (fresh) — bench repeats stay honest — and swaps the
-    * fresh state in, releasing the superseded checkpoint blocks by id.
+    * memoized in the [[Memo]] slot `minhash:<d>` under the documents
+    * fingerprint, so the clustering query doesn't recompute the
+    * text→signature→band pipeline. The pair query itself always recomputes
+    * (`fresh`) — bench repeats stay honest — and swaps the fresh state in;
+    * the replaced entry's checkpoint blocks are released by id.
     *
-    * Why collapse: the second-decade (sf1→sf10) rehearsal measured
-    * exponent 1.20 on the pair key and 1.30 on components — a G-member
-    * exact-dup group has identical signatures, so every band matched and
-    * the kernel verified G²/2 identical candidate pairs, then propagated
-    * labels over a G²-edge clique. Banding distinct gram sets makes
+    * Why collapse: uncollapsed, the pair key scales with exponent 1.20 and
+    * components with 1.30 from sf1 to sf10 — a G-member exact-dup group
+    * has identical signatures, so every band matches and the kernel
+    * verifies G²/2 identical candidate pairs, then propagates labels over
+    * a G²-edge clique. Banding distinct gram sets makes
     * candidate work scale with distinct content; the expansion back to id
     * pairs is bounded by the OUTPUT the all-pairs oracle semantics demand
     * anyway (identical sets are Jaccard 1.0 ≥ τ by definition).
@@ -395,20 +396,11 @@ object Llm {
   private final case class MinhashState(
       grouped: DataFrame, matched: DataFrame, ids: Seq[Int])
 
-  private val minhashCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), MinhashState]()
-
-  private def minhashState(s: SparkSession, d: String): MinhashState =
-    // plain get-or-compute, NOT computeIfAbsent: the compute path itself
-    // puts into the cache (swap + release), and a computeIfAbsent mapping
-    // function must not modify the map (ConcurrentHashMap "Recursive
-    // update" error). A benign race can at worst compute twice.
-    Option(minhashCache.get((s, d))).getOrElse(minhashStateFresh(s, d))
-
-  private def minhashStateFresh(s: SparkSession, d: String): MinhashState = {
-    val st = minhashStateUncached(s, d)
-    Option(minhashCache.put((s, d), st)).foreach(old => Ckpt.release(s, old.ids))
-    st
+  private def minhashState(s: SparkSession, d: String, fresh: Boolean): MinhashState = {
+    val (slot, fp) = (s"minhash:$d", Tables.fingerprint(d, "documents"))
+    val release = (st: MinhashState) => Ckpt.release(s, st.ids)
+    if (fresh) Memo.put(s, slot, fp, minhashStateUncached(s, d), release)
+    else Memo.get(s, slot, fp, release)(minhashStateUncached(s, d))
   }
 
   /** Word 5-gram Jaccard on 64-bit gram hashes, verified by a sorted-merge
@@ -866,32 +858,23 @@ object Llm {
     cross.unionByName(within).orderBy("source", "i", "j")
   }
 
-  /** Converged component labels memoized per (session, dataset), exactly
-    * like [[minhashCache]]: `dedup_cluster_components` always recomputes the
-    * propagation loop (fresh — bench repeats stay honest) and swaps the
-    * result in; `dedup_corpus_filter` reuses the converged labels instead
-    * of paying the whole loop a second time.
+  /** Converged component labels, memoized in the [[Memo]] slot
+    * `labels:<d>` like [[minhashState]]: `dedup_cluster_components` always
+    * recomputes the propagation loop (`fresh` — bench repeats stay honest)
+    * and swaps the result in; `dedup_corpus_filter` reuses the converged
+    * labels instead of paying the whole loop a second time.
     * Entries are SELF-CONTAINED checkpoints (the expanded per-doc labels),
     * so a later minhash-state swap releasing `grouped`'s blocks cannot
-    * orphan a cached label entry's lineage.
+    * orphan a memoized label entry's lineage. The replaced entry's
+    * checkpoint blocks are released by id: localCheckpoint blocks are not
+    * CacheManager entries, so DataFrame.unpersist() is a no-op on them, and
+    * the ContextCleaner frees them only at a nondeterministic driver GC.
     */
-  private val labelsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, Seq[Int])]()
-
-  private def clusterLabels(s: SparkSession, d: String): DataFrame =
-    Option(labelsCache.get((s, d))).map(_._1).getOrElse(clusterLabelsFresh(s, d))
-
-  private def clusterLabelsFresh(s: SparkSession, d: String): DataFrame = {
-    val (labels, ids) = clusterLabelsUncached(s, d)
-    // Release the superseded entry's checkpoint blocks DETERMINISTICALLY.
-    // localCheckpoint blocks are not CacheManager entries, so DataFrame
-    // .unpersist() is a no-op on them, and waiting for the ContextCleaner
-    // to GC the dropped reference is nondeterministic (blocks linger in
-    // getPersistentRDDs until a driver GC) — the checkpoint's RDD ids are
-    // captured at creation and freed here by id instead.
-    Option(labelsCache.put((s, d), (labels, ids)))
-      .foreach { case (_, oldIds) => Ckpt.release(s, oldIds) }
-    labels
+  private def clusterLabels(s: SparkSession, d: String, fresh: Boolean): DataFrame = {
+    val (slot, fp) = (s"labels:$d", Tables.fingerprint(d, "documents"))
+    val release = (l: (DataFrame, Seq[Int])) => Ckpt.release(s, l._2)
+    if (fresh) Memo.put(s, slot, fp, clusterLabelsUncached(s, d), release)._1
+    else Memo.get(s, slot, fp, release)(clusterLabelsUncached(s, d))._1
   }
 
   /** Connected components over the near-dup pair graph: Spark-native
@@ -933,11 +916,11 @@ object Llm {
     // rep-verified edges — because every exact-dup group is a clique whose
     // members provably share their gid's converged label (gid = min member,
     // so min-reachable-doc_id over the expanded graph = min-reachable-gid);
-    // propagating over the expanded clique edges did G² work per G-member
-    // group (second-decade exponent 1.30). Multi-member groups enter the
+    // propagating over the expanded clique edges does G² work per G-member
+    // group (exponent 1.30 from sf1 to sf10). Multi-member groups enter the
     // node set even without cross-group edges: their members pair WITHIN
     // the group, so the oracle's reach-graph contains them.
-    val st = minhashState(s, d)
+    val st = minhashState(s, d, fresh = false)
     val gidPairs = st.matched.select(col("ga").as("i"), col("gb").as("j"))
     val cliqueNodes = st.grouped
       .where(size(col("members")) >= 2).select(col("gid").as("node"))
@@ -1035,7 +1018,7 @@ object Llm {
       Some(
         s"WITH $duckBandedNearPairs " +
           "SELECT i, j, jac FROM p WHERE jac >= 0.5 ORDER BY i, j"),
-      (s, d) => minhashNearPairsFromState(s, minhashStateFresh(s, d)).orderBy("i", "j")),
+      (s, d) => minhashNearPairsFromState(s, minhashState(s, d, fresh = true)).orderBy("i", "j")),
 
     // L2c — INCREMENTAL near-dup: a new ingest batch (doc_id %
     // 10 = 5 — a GenScale-stable split, 10⁹ ≡ 0 mod 10, chosen so the
@@ -1149,7 +1132,7 @@ object Llm {
           "SELECT a AS doc_id, CAST(least(a, min(b)) AS BIGINT) AS cluster_rep " +
           "FROM reach GROUP BY a ORDER BY doc_id"),
       (s, d) =>
-        clusterLabelsFresh(s, d)
+        clusterLabels(s, d, fresh = true)
           .select(col("node").as("doc_id"), col("label").as("cluster_rep"))
           .orderBy("doc_id")),
 
@@ -1171,7 +1154,7 @@ object Llm {
       (s, d) => {
         // label = min reachable doc_id (incl. self), so non-representative
         // ⟺ label < node
-        val nonRep = clusterLabels(s, d).where(col("label") < col("node"))
+        val nonRep = clusterLabels(s, d, fresh = false).where(col("label") < col("node"))
           .select(col("node").as("doc_id"))
         Tables.t(s, d, "documents")
           .join(broadcast(nonRep), Seq("doc_id"), "left_anti")
@@ -1218,10 +1201,9 @@ object Llm {
         // over DISTINCT signatures only; member pairs expand back through
         // gid-keyed joins bounded by the output size, which the all-pairs
         // semantics demand anyway. Without this, a G-sized duplicate group
-        // re-verifies G² identical comparisons inside one band bucket — the
-        // second-decade (100×) rehearsal measured exponent 1.85 on
-        // replicated data; with it, verify work scales with distinct
-        // content (the collapsedPairSim discipline).
+        // re-verifies G² identical comparisons inside one band bucket
+        // (exponent 1.85 on data replicated 100×); with it, verify work
+        // scales with distinct content (the collapsedPairSim discipline).
         val grouped = sims.groupBy(col("sim"))
           .agg(sort_array(collect_list(col("doc_id"))).as("members"))
           .withColumn("gid", col("members")(0))

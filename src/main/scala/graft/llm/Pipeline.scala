@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{QueryDef, Tables}
+import graft.{Memo, QueryDef, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,21 +17,6 @@ import org.apache.spark.sql.functions._
   * re-partitioning, which sampleBy(seed) is not.
   */
 object Pipeline {
-
-  /** Trained char-bigram LM memoized per (session, dataset) — a corpus
-    * ARTIFACT like the IVF index (built once, broadcast to every scoring
-    * job); the per-doc scoring fold always re-runs.
-    */
-  private val bigramLmCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), (Int, Int, Array[Long])]()
-
-  /** Trained char-TRIGRAM LM with stupid-backoff, memoized per (session,
-    * dataset) like [[bigramLmCache]]: rank-compressed dense q3 array (A³
-    * cells for an A-char alphabet) plus the raw bigram/unigram counts the
-    * backoff branch folds from.
-    */
-  private val trigramLmCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), (Int, Int, Array[Int], Array[Long])]()
 
   /** Winnowing gram selection (Schleimer–Wilkerson–Aiken local fingerprinting)
     * over `doc_id`/`text` rows: hash every 40-char gram — md5, whose
@@ -799,16 +784,10 @@ object Pipeline {
         // The trained model is a DATASET artifact (the sim_ann_ivf
         // discipline): a production scorer trains the LM once and
         // broadcasts it to every scoring job, so the (minC, span, q)
-        // triple memoizes per (session, dataset) instead of re-exploding
-        // the corpus per invocation. Scoring below always re-runs.
-        // memo keyed on the CONTENT fingerprint, not the raw path:
-        // in-place regeneration at the same path must re-train the LM (the
-        // Ivf.index invalidate-together discipline)
-        val (minC, span, q) = bigramLmCache.computeIfAbsent(
-          (s, Tables.fingerprint(d, "documents")), { case (ss, _) =>
-          val dd = d
-          val cb = Tables.spread(ss,
-              Tables.t(ss, dd, "documents").where(length(col("text")) >= 2))
+        // triple is memoized under the documents fingerprint instead of
+        // re-exploding the corpus per invocation. Scoring always re-runs.
+        val (minC, span, q) = Memo.get(s, s"bigram_lm:$d", Tables.fingerprint(d, "documents")) {
+          val cb = Tables.spread(s, docs)
             .select(col("doc_id"), explode(expr(
               "transform(sequence(1, length(text) - 1), i -> substring(text, i, 2))")).as("bg"))
             .groupBy("bg").agg(count(lit(1)).as("nb"))
@@ -831,12 +810,11 @@ object Pipeline {
               nb * 1000000L / nu(bg.charAt(0))
           }
           (mn, sp, arr)
-        })
+        }
         val t = col("text")
         // one codegen byte loop per doc: the aggregate(sequence) HOF runs
-        // its lambda interpreted per char (7.2 s at sf0.1 under the v5.3
-        // fullmat bench); the kernel form is ~10x cheaper and pinned equal
-        // to the HOF in OpsSpec
+        // its lambda interpreted per char (7.2 s at sf0.1); the kernel form
+        // is ~10x cheaper and pinned equal to the HOF in OpsSpec
         val sumQ = graft.udx.TextExpr.gramScoreSum(
           s, "graft_lm2_score", t, q, null, minC, span, 2)
         docs
@@ -961,17 +939,18 @@ object Pipeline {
           "GROUP BY p.doc_id ORDER BY p.doc_id"),
       (s, d) => {
         val docs = Tables.t(s, d, "documents").where(length(col("text")) >= 3)
-        // fingerprint-keyed like [[bigramLmCache]]
-        val (minC, nRanks, rankArr, q3) = trigramLmCache.computeIfAbsent(
-          (s, Tables.fingerprint(d, "documents")), { case (ss, _) =>
-          val base = Tables.t(ss, d, "documents")
+        // the trained model (a rank-compressed dense q3 cube, A³ cells for
+        // an A-char alphabet, with the backoff branch folded in) is
+        // memoized like quality_perplexity_proxy's
+        val (minC, nRanks, rankArr, q3) = Memo.get(s, s"trigram_lm:$d", Tables.fingerprint(d, "documents")) {
+          val base = Tables.t(s, d, "documents")
           // one explode pass per model level; both are combinable counts
-          val tri = Tables.spread(ss, base.where(length(col("text")) >= 3))
+          val tri = Tables.spread(s, docs)
             .select(explode(expr(
               "transform(sequence(1, length(text) - 2), i -> substring(text, i, 3))")).as("tri"))
             .groupBy("tri").agg(count(lit(1)).as("n3"))
             .collect().map(r => (r.getString(0), r.getLong(1)))
-          val bg = Tables.spread(ss, base.where(length(col("text")) >= 2))
+          val bg = Tables.spread(s, base.where(length(col("text")) >= 2))
             .select(explode(expr(
               "transform(sequence(1, length(text) - 1), i -> substring(text, i, 2))")).as("bg"))
             .groupBy("bg").agg(count(lit(1)).as("nb"))
@@ -996,11 +975,11 @@ object Pipeline {
               else 400000L * nb(t3.substring(1, 3)) / cu1(t3.charAt(1))
           }
           (mn, a, rk, q)
-        })
+        }
         val t = col("text")
         // codegen byte loop with the rank-compressed cube: the
-        // triple-substr aggregate HOF took 10.8 s at sf0.1 under v5.3;
-        // kernel equality pinned in OpsSpec
+        // triple-substr aggregate HOF takes 10.8 s at sf0.1; kernel
+        // equality pinned in OpsSpec
         val sumQ = graft.udx.TextExpr.gramScoreSum(
           s, "graft_lm3_score", t, q3, rankArr, minC, nRanks, 3)
         docs

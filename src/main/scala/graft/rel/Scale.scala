@@ -1,6 +1,6 @@
 package graft.rel
 
-import graft.{Q, QueryDef, Tables}
+import graft.{Memo, Q, QueryDef, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -219,16 +219,29 @@ object Scale {
   def bucketedJoinFrame(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     val suffix = Integer.toHexString(d.hashCode)
     val (tl, to) = (s"graft_bkt_lineitem_$suffix", s"graft_bkt_orders_$suffix")
-    if (!s.catalog.tableExists(tl)) {
-      // the in-memory catalog forgets tables across JVMs but their warehouse
-      // directories persist — clear stale locations before recreating
-      val wh = new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-      Seq(tl, to).foreach(t =>
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$wh/$t")))
-      Tables.t(s, d, "lineitem").select("l_orderkey", "l_quantity")
-        .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable(tl)
-      Tables.t(s, d, "orders").select("o_orderkey", "o_orderpriority")
-        .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable(to)
+    // Staged once per content of lineitem and orders. The catalog is
+    // shared by every session of the context while the memo is per session,
+    // so a session's miss re-stages only when the staging marker names
+    // other data or another context: a rewrite under a live reader of
+    // another session would delete the files that reader listed. A rewrite
+    // drops both tables and their warehouse dirs first (the in-memory
+    // catalog forgets tables with its context, but their directories
+    // persist), and the refresh re-lists what another session may have
+    // rewritten since this one last read.
+    val fp = Tables.fingerprint(d, "lineitem", "orders")
+    Memo.get(s, s"bucketed_tables:$d", fp) {
+      Tables.stage(Tables.stagingDir("graft_bkt_marker", d), s"$fp|${s.sparkContext.applicationId}") {
+        val wh = new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
+        Seq(tl, to).foreach { t =>
+          s.sql(s"DROP TABLE IF EXISTS $t")
+          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$wh/$t"))
+        }
+        Tables.t(s, d, "lineitem").select("l_orderkey", "l_quantity")
+          .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable(tl)
+        Tables.t(s, d, "orders").select("o_orderkey", "o_orderpriority")
+          .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable(to)
+      }
+      Seq(tl, to).foreach(s.catalog.refreshTable)
     }
     // merge-hint both sides: at toy scale the planner would broadcast and
     // ignore bucketing; the point is the shuffle-free sort-merge join

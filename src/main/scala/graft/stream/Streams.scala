@@ -99,6 +99,18 @@ object Streams {
     }
   }
 
+  /** A fresh per-run path `<base>/<prefix><nanos>` under a staged base,
+    * after deleting the previous runs' `<prefix>*` dirs: a stream over a
+    * reused checkpoint sees no new files and emits nothing, so every run
+    * needs a fresh checkpoint, and deleting the last one keeps the residue
+    * at one run.
+    */
+  private def freshRunDir(base: String, prefix: String): String = {
+    new java.io.File(base).listFiles((_, n) => n.startsWith(prefix)).toSeq
+      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+    s"$base/$prefix${System.nanoTime()}"
+  }
+
   /** Bounded append-mode run of a windowed aggregation — the SAME plan you
     * would run unbounded (watermark evicts window state; the full result is
     * never re-emitted), unlike `complete` mode where state grows forever.
@@ -136,9 +148,7 @@ object Streams {
       s.createDataFrame(s.sparkContext.parallelize(Seq(row), 1), sch)
         .write.parquet(s"$base/in/s1")
     }
-    new java.io.File(base).listFiles((_, n) => n.startsWith("run_")).toSeq
-      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
-    val run = s"$base/run_${System.nanoTime()}"
+    val run = freshRunDir(base, "run_")
     // One AvailableNow run: the data batch advances the watermark past every
     // real window (thanks to the sentinel), and Spark's no-data micro-batch
     // (spark.sql.streaming.noDataMicroBatches.enabled, default on) then
@@ -268,7 +278,7 @@ object Streams {
           .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
             val n = df.count(); if (n > 0) batches.add(n); ()
           }
-          .option("checkpointLocation", s"$base/ckpt_${System.nanoTime()}")
+          .option("checkpointLocation", freshRunDir(base, "ckpt_"))
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
         val counts = { import scala.jdk.CollectionConverters._; batches.asScala.toSeq }
@@ -647,7 +657,7 @@ object Streams {
             Files.move(part, Paths.get(s"$base/in/f$g.parquet"))
           }
         }
-        val run = s"$base/run_${System.nanoTime()}"
+        val run = freshRunDir(base, "run_")
         val sch = s.read.parquet(s"$base/in").schema
         def phase(bombAt: Long) = {
           val counts = s.readStream.schema(sch)

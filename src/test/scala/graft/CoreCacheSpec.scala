@@ -3,23 +3,22 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-/** Pins the read-cache eviction discipline — fingerprint-keyed entries for
-  * a (session, dir, table), and staged-artifact entries for a (session,
-  * dataDir), must be SUPERSEDED on regeneration, not accumulated, while
-  * still serving fresh data — and the marker rule of `Tables.stage`.
+/** Pins the [[Memo]] lifecycle — a slot serves a hit as the same object,
+  * holds one entry whatever the number of regenerations, serves fresh data
+  * after one, and runs the replaced entry's release exactly once — and the
+  * marker rule of `Tables.stage`.
   */
 class CoreCacheSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
-  private def entriesFor(pred: String => Boolean): Int = {
-    import scala.jdk.CollectionConverters._
-    Tables.readCache.keySet.asScala.count(k => pred(k._2))
-  }
+  /** The entries the memo holds for this session under slots starting `prefix`. */
+  private def entries(prefix: String): Map[String, String] =
+    Memo.fingerprints(spark).filter(_._1.startsWith(prefix))
 
   test("Tables.t: in-place regeneration serves fresh data and evicts the stale entry") {
     val sp2 = spark
     import sp2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cache_spec").toString
+    val dir = SparkTestBase.tempDir("graft_cache_spec").toString
     def regen(rows: Seq[Long]): Unit = {
       rows.toDF("v").coalesce(1).write.mode("overwrite").parquet(s"$dir/tbl.parquet")
       // fingerprint uses (name, size, mtime); force a distinct mtime so a
@@ -29,31 +28,50 @@ class CoreCacheSpec extends AnyFunSuite {
     }
     regen(Seq(1L, 2L, 3L))
     assert(Tables.t(spark, dir, "tbl").count() == 3)
-    val after1 = entriesFor(k => k.startsWith(dir + "|") && k.endsWith("#tbl"))
+    val after1 = entries(dir)
     regen(Seq(1L, 2L, 3L, 4L, 5L))
     assert(Tables.t(spark, dir, "tbl").count() == 5, "stale listing served after in-place regen")
-    val after2 = entriesFor(k => k.startsWith(dir + "|") && k.endsWith("#tbl"))
-    assert(after1 == 1 && after2 == 1,
-      s"superseded fingerprint entry must be evicted, not accumulated: $after1 -> $after2")
+    val after2 = entries(dir)
+    assert(after1.size == 1 && after2.size == 1,
+      s"superseded fingerprint entry must be replaced, not accumulated: $after1 -> $after2")
+    assert(after2.values.head == Tables.fingerprint(dir, "tbl") && after1 != after2)
+    // same fingerprint hits the memo (no re-read): the SAME DataFrame object
+    assert(Tables.t(spark, dir, "tbl") eq Tables.t(spark, dir, "tbl"))
   }
 
   test("Tables.staged: marker-fingerprint change evicts the superseded reader") {
     val sp2 = spark
     import sp2.implicits._
-    val dataDir = java.nio.file.Files.createTempDirectory("graft_staged_spec").toString + "/data"
+    val dataDir = SparkTestBase.tempDir("graft_staged_spec").toString + "/data"
     Seq(10L).toDF("v").write.mode("overwrite").parquet(dataDir)
     assert(Tables.staged(spark, dataDir, "fpA").count() == 1)
     Seq(10L, 11L).toDF("v").write.mode("overwrite").parquet(dataDir)
     assert(Tables.staged(spark, dataDir, "fpB").count() == 2, "stale staged reader served")
-    val n = entriesFor(k => k.startsWith(dataDir + "@"))
-    assert(n == 1, s"superseded staged entry must be evicted: $n entries for $dataDir")
-    // same fingerprint hits the cache (no re-read): the SAME DataFrame object
+    val n = entries(dataDir)
+    assert(n == Map(dataDir -> "fpB"), s"superseded staged entry must be replaced: $n")
+    // same fingerprint hits the memo (no re-read): the SAME DataFrame object
     assert(Tables.staged(spark, dataDir, "fpB") eq Tables.staged(spark, dataDir, "fpB"))
+  }
+
+  test("Memo: get with a new fp and put each run the replaced entry's release exactly once") {
+    val slot = "memo_spec:release"
+    val released = scala.collection.mutable.ArrayBuffer.empty[String]
+    val release = (v: String) => { released += v; () }
+    var builds = 0
+    def get(fp: String): String = Memo.get(spark, slot, fp, release) { builds += 1; s"v-$fp" }
+    assert(get("a") == "v-a" && get("a") == "v-a")
+    assert(builds == 1 && released.isEmpty, "a hit must neither build nor release")
+    assert(get("b") == "v-b")
+    assert(builds == 2 && released.toSeq == Seq("v-a"), s"new fp: released $released")
+    assert(Memo.put(spark, slot, "b", "v-put", release) == "v-put")
+    assert(released.toSeq == Seq("v-a", "v-b"), s"put: released $released")
+    assert(get("b") == "v-put" && builds == 2, "put's entry must serve a hit on its fp")
+    assert(entries(slot) == Map(slot -> "b"))
   }
 
   test("Tables.stage: a hit skips build; a new fp rebuilds clean; a failed build leaves no marker") {
     import java.nio.file.{Files, Paths}
-    val dir = Files.createTempDirectory("graft_stage_spec").toString + "/layout"
+    val dir = SparkTestBase.tempDir("graft_stage_spec").toString + "/layout"
     val marker = Paths.get(dir, "_done")
     var builds = 0
     def stage(fp: String, file: String): String = Tables.stage(dir, fp) {

@@ -39,7 +39,7 @@ class LocalFsSpec extends AnyFunSuite {
   }
 
   private def withDir[T](body: JPath => T): T = {
-    val d = Files.createTempDirectory("localfs-spec")
+    val d = SparkTestBase.tempDir("localfs-spec")
     try body(d) finally FileUtils.deleteQuietly(d.toFile)
   }
 

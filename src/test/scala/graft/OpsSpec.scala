@@ -60,9 +60,9 @@ class OpsSpec extends AnyFunSuite {
     val q = SparkEntry.queries.keySet
     val o = SparkEntry.oracleSql.keySet
     assert(o.subsetOf(q))
-    // The last two estimate keys gained staged-BOUND oracles in round 12
-    // (DuckDB checks |estimate − exact| against its own exact counts), so
-    // every registered key now carries a DuckDB oracle.
+    // The estimate keys carry staged-BOUND oracles (DuckDB checks
+    // |estimate − exact| against its own exact counts), so every
+    // registered key carries a DuckDB oracle.
     assert((q -- o).isEmpty, s"uncovered no-oracle keys: ${q -- o}")
   }
 
@@ -99,7 +99,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("SURVEY §2 inventory and SparkEntry.queries agree key-for-key") {
-    // The judge audits SURVEY §2 line by line against the registry; a key
+    // SURVEY §2 is read line by line against the registry; a key
     // declared but unregistered (or registered but undeclared) is a silent
     // coverage hole. Keys appear in SURVEY tables as `backtick_quoted`
     // first cells; prose backtick mentions are filtered by requiring the
@@ -304,7 +304,7 @@ class OpsSpec extends AnyFunSuite {
     val dir = llm.Ivf.indexDir(sf)
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_done")),
       s"no persisted index at $dir")
-    // fresh session = fresh idxMemo key; the SparkContext is shared, so a
+    // fresh session = fresh Memo slot; the SparkContext is shared, so a
     // listener on it sees every job the load path runs
     val s2 = spark.newSession()
     val jobs = new java.util.concurrent.atomic.AtomicInteger
@@ -394,8 +394,8 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("first-match-only banding == global-distinct pair set (round-15 stateless dedup)") {
-    // the round-15 sim_join_lsh_threshold rewrite replaced `.distinct()`
-    // over band-join candidates with the lowest-matching-band filter; this
+    // sim_join_lsh_threshold dedups band-join candidates with the
+    // lowest-matching-band filter instead of a `.distinct()`; this
     // property test pins the equivalence on adversarial random key arrays
     // (independent of the embedding corpus): for every pair sharing >= 1
     // band key, the filtered join must emit it EXACTLY once, and no pair
@@ -543,9 +543,9 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("dedup_semdedup_cluster: recall bound survives k past the floor (50x corpus, k=10)") {
-    // The k ≈ N/10⁴ scaling claim, proven with data (round-8 verdict task):
-    // at every driver scale the floor pins k = 8, so the recall bound had
-    // only ever been measured on a fixed geometry. Replicating the sf0.1
+    // The k ≈ N/10⁴ scaling claim, proven with data: at every driver scale
+    // the floor pins k = 8, so the other recall checks see one fixed
+    // geometry. Replicating the sf0.1
     // embeddings 50× (ids shifted by rep·10⁹ — the GenScale discipline)
     // yields N = 100 000, which forces k = 10 > floor. The exact drop set
     // at that scale is DERIVED, not recomputed (all-pairs at N=10⁵ is off
@@ -564,8 +564,8 @@ class OpsSpec extends AnyFunSuite {
     // The staged 50x replica is keyed by an INPUT FINGERPRINT (total size +
     // max mtime of the source embeddings), not a bare name: a bare
     // /tmp/graft_semdedup_scale dir survives testdata regeneration, and a
-    // stale replica would silently compare mixed vintages (round-9 advisor
-    // finding). A regenerated source changes the fingerprint, so the stale
+    // stale replica would silently compare mixed vintages. A regenerated
+    // source changes the fingerprint, so the stale
     // dir is simply never looked at again.
     val srcFp = {
       import scala.jdk.CollectionConverters._
@@ -613,7 +613,7 @@ class OpsSpec extends AnyFunSuite {
       f"${drops.size}/${exactFull.size} drops, k=10, $secs%.1f s")
     // Locale.ROOT formatting: Scala's f-interpolator uses the JVM default
     // locale, and a comma-decimal locale would write 0,9750 — breaking
-    // json.loads downstream in scale_exponents.py (round-9 advisor finding).
+    // json.loads downstream in scale_exponents.py.
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("target/semdedup_scale.json"),
       String.format(java.util.Locale.ROOT,
@@ -629,7 +629,7 @@ class OpsSpec extends AnyFunSuite {
     def sweep(): Unit = {
       run("dedup_minhash_near").count()
       run("dedup_cluster_components").count()
-      // round-9 collapse kernels checkpoint their representative table once
+      // the collapse kernels checkpoint their representative table once
       // per run; a repeat must swap it in place, not accumulate
       run("dedup_ngram_jaccard").count()
       run("dedup_containment").count()
@@ -642,9 +642,9 @@ class OpsSpec extends AnyFunSuite {
     sweep()
     val afterSecond = persisted
     // superseded checkpoint blocks are released EXPLICITLY by id (not left
-    // to ContextCleaner GC — the round-5 order-dependent flake): a repeat
-    // swaps the pair cache and the final labels in place, so the live set
-    // may not grow by more than those 2 entries, deterministically
+    // to ContextCleaner GC, whose timing makes the count order-dependent):
+    // a repeat swaps the pair memo and the final labels in place, so the
+    // live set may not grow by more than those 2 entries, deterministically
     assert(afterSecond - afterFirst <= 2, s"$afterFirst -> $afterSecond persisted RDDs")
   }
 
@@ -984,7 +984,7 @@ class OpsSpec extends AnyFunSuite {
       windowedN.exceptAll(run("join_asof_nearest")).isEmpty,
       "join_asof_nearest pick diverged")
 
-    // Dup-event_id robustness (round-8 advisor finding): the as-of cores
+    // Dup-event_id robustness: the as-of cores
     // group by event_id ALONE, so an event_id occurring twice with
     // divergent ts values must still collapse to one row per event — and
     // that row must equal the window formulation extended with the same ts
@@ -1024,7 +1024,7 @@ class OpsSpec extends AnyFunSuite {
     java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   test("exact-dup collapse: gram kernels ≡ naive all-pairs on an adversarial corpus") {
-    // The round-9 collapse rewrite (verify distinct gram sets once, expand
+    // The exact-dup collapse (verify distinct gram sets once, expand
     // matches back through gid-keyed joins) must be OUTPUT-equivalent to
     // the naive per-pair definition. The sf corpora exercise it lightly,
     // so this drives the edge cases directly: duplicate groups of size 2
@@ -1133,7 +1133,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("join_theta_range: histogram arithmetic ≡ pair enumeration on sparse size domains") {
-    // The round-9 histogram form (n_pairs = c·(neighborhood−1), no pair
+    // The histogram form (n_pairs = c·(neighborhood−1), no pair
     // join) must match the pair-enumeration definition on distributions
     // the part table never exhibits: an isolated size with a single row
     // (zero pairs — the oracle emits NO row, not n_pairs=0), an isolated
@@ -1159,10 +1159,10 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("negative_sampling_pairs: bucket top-2 rewrite is exact at replica-offset id scale") {
-    // The round-9 rewrite (per-bucket top-2 agg + broadcast join, replacing
-    // the N²/32 candidate join) and the mod-before-multiply hash fix are
-    // both driven at the id range that broke the originals: ids offset by
-    // rep·10⁹, where the raw product hash overflowed BIGINT. Reference is
+    // The per-bucket top-2 agg + broadcast join (in place of an N²/32
+    // candidate join) and the mod-before-multiply hash are both driven at
+    // the id range that breaks the naive forms: ids offset by rep·10⁹,
+    // where a raw product hash overflows BIGINT. Reference is
     // the ring definition computed directly in the driver.
     import spark.implicits._
     val ids = (1L to 40L) ++ (1L to 40L).map(_ + 10000000000L)
@@ -1319,7 +1319,7 @@ class OpsSpec extends AnyFunSuite {
       1L -> "abcabcabcabc",
       2L -> "abcxyzqabc",     // xyz / yzq / zqa etc. occur exactly once
       3L -> "bcabcabca")
-    val dir = java.nio.file.Files.createTempDirectory("graft_tri_prop").toString
+    val dir = SparkTestBase.tempDir("graft_tri_prop").toString
     texts.toDF("doc_id", "text").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     // plain-Scala reference of the declared semantics
@@ -1353,10 +1353,10 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("text kernels == the HOF expressions they replaced (round-16 codegen loops)") {
-    // the v5.3 fullmat bench exposed the interpreted-HOF cost of the LM
-    // scorers and the fingerprint min; the byte-loop kernels must be
-    // value-identical to the old aggregate/transform forms on real corpus
-    // text (both run here side by side on the same rows)
+    // the byte-loop kernels replace interpreted HOFs that dominate the LM
+    // scorers and the fingerprint min; they must be value-identical to the
+    // aggregate/transform forms on real corpus text (both run here side by
+    // side on the same rows)
     val sp = spark
     import sp.implicits._
     val docs = Tables.t(spark, sf, "documents")
@@ -1413,7 +1413,7 @@ class OpsSpec extends AnyFunSuite {
       4L -> rand(60, r),
       5L -> twin,           // exact twins: longest = full length via the
       6L -> twin)           // collapse branch, no pair join involved
-    val dir = java.nio.file.Files.createTempDirectory("graft_runlen_prop").toString
+    val dir = SparkTestBase.tempDir("graft_runlen_prop").toString
     texts.toDF("doc_id", "text").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = SparkEntry.queries("dedup_substring_runlen")(sp, dir)
@@ -1433,7 +1433,7 @@ class OpsSpec extends AnyFunSuite {
       25L -> (0 until 40).map(i => s"u$i").mkString(" "), // batch: novel
       35L -> nearDup,        // batch: identical to batch 15 — batch-batch must NOT count
       8L -> base)            // index: exact dup of 7 (same gram set)
-    val dir = java.nio.file.Files.createTempDirectory("graft_incmh").toString
+    val dir = SparkTestBase.tempDir("graft_incmh").toString
     texts.toDF("doc_id", "text").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = SparkEntry.queries("dedup_incremental_minhash")(spark, dir)
@@ -1447,7 +1447,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("join_asof packed picks: digit-budget violation raises loudly, never a silent drop") {
-    // Round-13 judge task #1: with ANSI off, an out-of-budget component
+    // With ANSI off, an out-of-budget component
     // would NULL the packed CAST/multiply and max()/min() would silently
     // drop that candidate — a wrong pick with no error. The CASE guard must
     // raise instead. Driven synthetically: the real tables stay within
@@ -1482,10 +1482,10 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("Tables.fingerprint: rename + regeneration invalidation") {
-    // Round-13 judge task #8: the fingerprint must change when a
-    // subdirectory is renamed even though every file inside keeps its
-    // name/size/mtime, and when a table is regenerated in place.
-    val root = java.nio.file.Files.createTempDirectory("graft_fp").toString
+    // The fingerprint must change when a subdirectory is renamed even
+    // though every file inside keeps its name/size/mtime, and when a table
+    // is regenerated in place.
+    val root = SparkTestBase.tempDir("graft_fp").toString
     val tdir = new java.io.File(s"$root/documents.parquet/sub"); tdir.mkdirs()
     val f = new java.io.File(tdir, "part-0.bin")
     java.nio.file.Files.writeString(f.toPath, "payload")
@@ -1500,9 +1500,9 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("LM memo + reader cache: in-place dataset regeneration hits the miss path") {
-    // Round-13 judge task #4: the bigram LM memo is keyed on the content
-    // fingerprint, so regenerating documents.parquet IN PLACE within one
-    // JVM must re-train the model — a (session, path) key would serve
+    // The bigram LM memo is keyed on the content fingerprint, so
+    // regenerating documents.parquet IN PLACE within one JVM must re-train
+    // the model — a (session, path) key would serve
     // corpus A's model for corpus B's scoring pass. Proven end-to-end
     // through the public query: after regeneration the scores must equal
     // an independent cache-free formulation computed on corpus B; a stale
@@ -1510,7 +1510,7 @@ class OpsSpec extends AnyFunSuite {
     // (opposite bigram skew over the same alphabet keeps every lookup
     // in-range, so staleness corrupts values rather than erroring).
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_regen").toString
+    val dir = SparkTestBase.tempDir("graft_regen").toString
     def writeDocs(texts: Seq[String]): Unit =
       texts.zipWithIndex.map { case (t, i) => (i.toLong, t, "en", "synth", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -1542,7 +1542,7 @@ class OpsSpec extends AnyFunSuite {
     // The staged partitioned layout is keyed on the orders fingerprint: a
     // marker that ignores content would keep serving the first
     // generation's layout after the rewrite below.
-    val dir = java.nio.file.Files.createTempDirectory("graft_restage").toString
+    val dir = SparkTestBase.tempDir("graft_restage").toString
     val staging = Tables.stagingDir("graft_prune_orders", dir)
     val src = Tables.t(spark, sf, "orders")
     def regen(df: org.apache.spark.sql.DataFrame): Unit = {
@@ -1576,9 +1576,77 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("agg_weighted_median on an empty lineitem returns no rows instead of throwing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_empty_lineitem").toString
+    val dir = SparkTestBase.tempDir("graft_empty_lineitem").toString
     spark.read.parquet(s"$sf/lineitem.parquet").limit(0)
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     assert(SparkEntry.queries("agg_weighted_median")(spark, dir).collect().isEmpty)
+  }
+
+  test("text_bigram_coverage and the dedup label keys serve fresh results after documents.parquet is regenerated in place") {
+    // Their memos (top-1000 pair set, minhash state, converged labels) are
+    // keyed on the documents fingerprint: a path key would keep serving the
+    // first generation's artifact to the session that built it. The second
+    // generation upper-cases every text (a disjoint pair vocabulary) and
+    // shifts every doc_id (disjoint labels), so a stale artifact cannot
+    // reproduce the fresh session's result by accident.
+    val dir = SparkTestBase.tempDir("graft_regen_docs").toString
+    val src = Tables.t(spark, sf, "documents")
+    def regen(df: org.apache.spark.sql.DataFrame): Unit = {
+      df.coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      new java.io.File(s"$dir/documents.parquet").listFiles()
+        .foreach(f => f.setLastModified(f.lastModified() + 2000))
+    }
+    val keys = Seq("text_bigram_coverage", "dedup_cluster_components", "dedup_corpus_filter")
+    def rows(s: org.apache.spark.sql.SparkSession, k: String) =
+      SparkEntry.queries(k)(s, dir).collect().map(_.toSeq).toSeq
+    regen(src)
+    keys.foreach(rows(spark, _))
+    regen(src.withColumn("doc_id", col("doc_id") + 1000000L).withColumn("text", upper(col("text"))))
+    val fresh = spark.newSession()
+    val stale = keys.filter { k =>
+      val want = rows(fresh, k)
+      assert(want.nonEmpty, k)
+      rows(spark, k) != want
+    }
+    assert(stale.isEmpty, s"stale memo served after in-place regeneration: $stale")
+  }
+
+  test("join_bucketed_colocated re-stages its bucketed tables when orders.parquet is regenerated in place") {
+    // The catalog tables are staged under the lineitem + orders
+    // fingerprint: a check for the tables' existence alone would keep
+    // joining the first generation's tables after the rewrite below.
+    val dir = SparkTestBase.tempDir("graft_restage_bkt").toString
+    val suffix = Integer.toHexString(dir.hashCode)
+    Tables.t(spark, sf, "lineitem").write.parquet(s"$dir/lineitem.parquet")
+    val src = Tables.t(spark, sf, "orders")
+    def regen(df: org.apache.spark.sql.DataFrame): Unit = {
+      df.coalesce(1).write.mode("overwrite").parquet(s"$dir/orders.parquet")
+      new java.io.File(s"$dir/orders.parquet").listFiles()
+        .foreach(f => f.setLastModified(f.lastModified() + 2000))
+    }
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, Double)] =
+      df.collect().toSeq.map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+    def direct(): Seq[(String, Long, Double)] = rows(Tables.t(spark, dir, "lineitem")
+      .join(Tables.t(spark, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+      .groupBy("o_orderpriority")
+      .agg(count(lit(1)).as("n"), Q.out6(sum(Q.dec4(col("l_quantity")))).as("sum_qty"))
+      .orderBy("o_orderpriority"))
+    def viaKey(): Seq[(String, Long, Double)] =
+      rows(SparkEntry.queries("join_bucketed_colocated")(spark, dir))
+    try {
+      regen(src)
+      assert(viaKey() == direct())
+      regen(src.where(col("o_orderkey") % 3 === 0))
+      val fresh = direct()
+      assert(fresh.nonEmpty)
+      assert(viaKey() == fresh, "stale bucketed tables joined after in-place regeneration")
+      // the catalog is shared by every session of the context: a second
+      // session's staging must leave this session's reader intact
+      assert(rows(SparkEntry.queries("join_bucketed_colocated")(spark.newSession(), dir)) == fresh)
+      assert(viaKey() == fresh, "another session's staging broke this session's reader")
+    } finally {
+      Seq("lineitem", "orders").foreach(t => spark.sql(s"DROP TABLE IF EXISTS graft_bkt_${t}_$suffix"))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(Tables.stagingDir("graft_bkt_marker", dir)))
+    }
   }
 }

@@ -33,6 +33,15 @@ object SparkTestBase {
   def assumeGolden(): Unit = org.scalatest.Assertions.assume(goldenPresent,
     s"checks the spec's own golden files; Tables.goldenDir (${Tables.goldenDir}) is absent")
 
+  /** A fresh dir under `java.io.tmpdir`, deleted at JVM exit without
+    * following symlinks (the rule [[fhirSf]]'s fixture dir follows).
+    */
+  def tempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    sys.addShutdownHook(deleteTree(d))
+    d
+  }
+
   /** The paths the golden files carry a `__<leaf>_numeric` twin on
     * (FIXTURES.md §1); they carry no range or canonical annotation.
     */

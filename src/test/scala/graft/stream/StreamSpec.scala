@@ -59,4 +59,18 @@ class StreamSpec extends AnyFunSuite {
       .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
     assert(streamed == batch)
   }
+
+  test("rate-limited ingest and checkpoint recovery keep one run dir under their staged base") {
+    // Each run needs a fresh checkpoint; the previous run's dir is deleted
+    // first, so repeated runs leave one, not one per run.
+    val sf = SparkTestBase.sf
+    val hex = Integer.toHexString(sf.hashCode)
+    Seq(("stream_rate_limited_ingest", "graft_ratelimit_", "ckpt_"),
+        ("stream_checkpoint_recovery", "graft_ckptrec4_", "run_")).foreach { case (key, base, prefix) =>
+      (1 to 2).foreach(_ => graft.SparkEntry.queries(key)(spark, sf).collect())
+      val dir = new java.io.File(s"${sys.props("java.io.tmpdir")}/$base$hex")
+      val runs = dir.listFiles((_, n) => n.startsWith(prefix)).map(_.getName).toSeq
+      assert(runs.size == 1, s"$key left ${runs.size} $prefix dirs in $dir: $runs")
+    }
+  }
 }
