@@ -1,14 +1,32 @@
 package graft.fhir
 
-import java.time.{LocalDate, LocalDateTime, OffsetDateTime, ZoneOffset}
-import java.time.temporal.TemporalAdjusters
+import java.time.{LocalDate, LocalDateTime, ZoneOffset}
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.Resolver
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, BoundReference, Cast, EvalMode, Expression, GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{ArrayType, DataType, DecimalType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** SURVEY §2 A6/A7/A8 — the spec's query-acceleration annotations
   * (reference README.md:301-381).
+  *
+  * Each annotation has two paths that give the same schema and rows. On a
+  * frame that is exactly a codec parse (`FhirCodec.encode`, or an earlier
+  * annotation of one), `annotateRange`, `annotateNumeric` and
+  * `canonicalize` compute the annotated schema with a plain `StructType`
+  * rule and re-issue the parse over the same input lines: the codec fills
+  * each annotation slot while it reads the owning struct, so the ingest
+  * adds no plan node, no join and no extra read. Any other frame, e.g. a
+  * table at rest, gets the Catalyst rebuild (`withColumn` / `withField` /
+  * `transform`, a broadcast join for UCUM), which keeps column pruning and
+  * push-down and is the reference the codec path is tested against. A path
+  * the rule does not cover exactly (one that leaves structs, an ambiguous
+  * name, a non-string leaf) also takes the rebuild, so its errors are the
+  * rebuild's own.
   */
 object FhirAnnotations {
 
@@ -77,22 +95,83 @@ object FhirAnnotations {
     * at `path`, INSIDE its owning group (README.md:304-306: an annotation is
     * a sibling of the annotated element). Dotted paths descend structs and
     * LIST-of-struct elements alike — `item.servicedPeriod.start` annotates
-    * every array element's nested group via `transform` (README.md:337-342,
-    * 702-703). Uses the native codegen expressions (FhirDateTimeStart/End),
-    * so the whole rebuild stays inside WholeStageCodegen.
+    * every array element's nested group (README.md:337-342, 702-703). The
+    * rebuild uses the native codegen expressions (FhirDateTimeStart/End);
+    * the codec fills both slots from one [[bounds]] call.
     */
-  def annotateRange(df: DataFrame, path: String): DataFrame = {
-    FhirDateTimeExpr.register(df.sparkSession)
-    def start(c: Column) = call_function("fhir_dt_start", c)
-    def end(c: Column) = call_function("fhir_dt_end", c)
-    annotatePath(df, path)(
-      leaf =>
-        df.withColumn(s"__${leaf}_start", start(col(leaf)))
-          .withColumn(s"__${leaf}_end", end(col(leaf))),
-      (owner, leaf) =>
-        owner
-          .withField(s"__${leaf}_start", start(owner.getField(leaf)))
-          .withField(s"__${leaf}_end", end(owner.getField(leaf))))
+  def annotateRange(df: DataFrame, path: String): DataFrame =
+    reparse(df, path) { (leaf, _) =>
+      Option.when(leaf.dataType == StringType)(
+        Seq(StructField(s"__${leaf.name}_start", TimestampType), StructField(s"__${leaf.name}_end", TimestampType)))
+    }.getOrElse {
+      FhirDateTimeExpr.register(df.sparkSession)
+      def start(c: Column) = call_function("fhir_dt_start", c)
+      def end(c: Column) = call_function("fhir_dt_end", c)
+      annotatePath(df, path)(
+        leaf =>
+          df.withColumn(s"__${leaf}_start", start(col(leaf)))
+            .withColumn(s"__${leaf}_end", end(col(leaf))),
+        (owner, leaf) =>
+          owner
+            .withField(s"__${leaf}_start", start(owner.getField(leaf)))
+            .withField(s"__${leaf}_end", end(owner.getField(leaf))))
+    }
+
+  /** The codec parse behind `df`, re-issued with `slots(leaf, ownerNullable)`
+    * put beside the leaf at `path`; None unless `df` is exactly a codec
+    * parse, the path is one [[annotatedSchema]] covers and `slots` covers
+    * the leaf.
+    */
+  private def reparse(df: DataFrame, path: String)(
+      slots: (StructField, Boolean) => Option[Seq[StructField]]): Option[DataFrame] =
+    FhirCodec.parseInput(df).flatMap { lines =>
+      annotatedSchema(df.schema, path, df.sparkSession.sessionState.conf.resolver)(slots)
+        .map(FhirCodec.parse(df.sparkSession, lines, _))
+    }
+
+  /** The one field of `st` that `name` resolves to, when it has exactly
+    * that name.
+    */
+  private def uniqueField(st: StructType, name: String, resolver: Resolver): Option[StructField] =
+    st.fields.filter(f => resolver(f.name, name)) match {
+      case Array(f) if f.name == name => Some(f)
+      case _ => None
+    }
+
+  /** `schema` as the Catalyst rebuild of `path` leaves it, by a plain
+    * `StructType` rule: the leaf's owning struct gets `slots(leaf,
+    * ownerNullable)` appended, each replacing in place every field its name
+    * resolves to, as `withColumn` / `withField` do. `ownerNullable` is the
+    * nullability `getField` gives the leaf's owner. Every rebuilt struct or
+    * array on the way down becomes nullable where its owner is (a nested
+    * `withField` result is `owner.nullable || field.nullable`) and loses its
+    * metadata (a rebuilt field is a new `StructField`); an array keeps its
+    * `containsNull`. None where a segment is missing, resolves to more than
+    * one field or to a differently cased one, or is not a struct or an
+    * array of structs before the leaf.
+    */
+  private def annotatedSchema(schema: StructType, path: String, resolver: Resolver)(
+      slots: (StructField, Boolean) => Option[Seq[StructField]]): Option[StructType] = {
+    def field(st: StructType, name: String) = uniqueField(st, name, resolver)
+    def put(st: StructType, add: Seq[StructField]): StructType = add.foldLeft(st) { (s, n) =>
+      if (s.fields.exists(f => resolver(f.name, n.name)))
+        StructType(s.fields.map(f => if (resolver(f.name, n.name)) n else f))
+      else StructType(s.fields :+ n)
+    }
+    def within(st: StructType, owner: Boolean, segs: List[String]): Option[StructType] = segs match {
+      case leaf :: Nil => field(st, leaf).flatMap(slots(_, owner)).map(put(st, _))
+      case head :: tail => field(st, head).flatMap { f =>
+        val rebuilt = f.dataType match {
+          case ArrayType(e: StructType, containsNull) =>
+            within(e, containsNull, tail).map(ArrayType(_, containsNull))
+          case s: StructType => within(s, owner || f.nullable, tail)
+          case _ => None
+        }
+        rebuilt.map(dt => put(st, Seq(StructField(head, dt, owner || f.nullable))))
+      }
+      case Nil => None
+    }
+    within(schema, owner = false, path.split('.').toList)
   }
 
   /** Shared nested-path rebuild for annotation writers: applies `top` for a
@@ -132,17 +211,34 @@ object FhirAnnotations {
   // DECIMAL(38,6) twin of a decimal string, half-up (README.md:347-353;
   // golden behavior: "42.38090848315092" → 42.380908).
 
-  def numeric(c: Column): Column = c.cast(DecimalType(38, 6))
+  val NumericType: DecimalType = DecimalType(38, 6)
+
+  def numeric(c: Column): Column = c.cast(NumericType)
+
+  /** [[numeric]] as one Spark cast of input 0, for the codec: built on the
+    * driver, where it takes the session's ANSI eval mode, so its results and
+    * errors are the rebuild's.
+    */
+  private[fhir] def numericCast(spark: SparkSession, nullable: Boolean): Expression = {
+    val conf = spark.sessionState.conf
+    Cast(BoundReference(0, StringType, nullable), NumericType, Option(conf.sessionLocalTimeZone),
+      EvalMode.fromSQLConf(conf))
+  }
 
   /** Add `__<leaf>_numeric` beside the decimal element at `path`, inside
     * its owning group — same placement rule and path semantics as
     * annotateRange (structs and LIST elements both descend).
     */
   def annotateNumeric(df: DataFrame, path: String): DataFrame =
-    annotatePath(df, path)(
-      leaf => df.withColumn(s"__${leaf}_numeric", numeric(col(leaf))),
-      (owner, leaf) =>
-        owner.withField(s"__${leaf}_numeric", numeric(owner.getField(leaf))))
+    reparse(df, path) { (leaf, owner) =>
+      Option.when(leaf.dataType == StringType)(Seq(StructField(s"__${leaf.name}_numeric", NumericType,
+        numericCast(df.sparkSession, owner || leaf.nullable).nullable)))
+    }.getOrElse {
+      annotatePath(df, path)(
+        leaf => df.withColumn(s"__${leaf}_numeric", numeric(col(leaf))),
+        (owner, leaf) =>
+          owner.withField(s"__${leaf}_numeric", numeric(owner.getField(leaf))))
+    }
 
   // ---------------------------------------------------------------- A8
   // UCUM canonicalization (README.md:367-381): a broadcast conversion table
@@ -189,43 +285,109 @@ object FhirAnnotations {
       s"('$c', CAST($f AS DECIMAL(12,6)), CAST($o AS DECIMAL(18,6)), '$k')"
     }.mkString("(VALUES ", ", ", ") AS ucum(code, factor, off, canon)")
 
+  private val FactorType = DecimalType(12, 6)
+  private val OffsetType = DecimalType(18, 6)
+
   def ucumDf(spark: org.apache.spark.sql.SparkSession): DataFrame = {
     import spark.implicits._
     ucumTable.toDF("code", "factor_s", "off_s", "canon")
       .select(col("code"),
-        col("factor_s").cast(DecimalType(12, 6)).as("factor"),
-        col("off_s").cast(DecimalType(18, 6)).as("off"),
+        col("factor_s").cast(FactorType).as("factor"),
+        col("off_s").cast(OffsetType).as("off"),
         col("canon"))
   }
 
   /** canonical value = CAST(v18 * factor + off AS DECIMAL(38,6)). */
   def canonicalValue(valueStr: Column, factor: Column, off: Column): Column =
-    (valueStr.cast(DecimalType(18, 6)) * factor + off).cast(DecimalType(38, 6))
+    (valueStr.cast(DecimalType(18, 6)) * factor + off).cast(NumericType)
+
+  /** The `__<path>_canonical` group over the UCUM columns the rebuild joins
+    * in: null unless the code has a mapping and the value is present.
+    */
+  private def canonicalGroup(path: String): Column = {
+    val cv = canonicalValue(col(s"$path.value"), col("__ucum_factor"), col("__ucum_off"))
+    when(col("__ucum_canon").isNotNull && col(s"$path.value").isNotNull,
+      struct(
+        col("__ucum_canon").as("code"),
+        col(s"$path.system").as("system"),
+        col("__ucum_canon").as("unit"),
+        cv.cast("string").as("value"),
+        cv.as("__value_numeric")))
+  }
 
   /** Materialize the spec's `__<q>_canonical` sibling group for the Quantity
     * struct at top-level `path` (README.md:367-381; worked schema :711-717:
     * the group mirrors the Quantity's own shape — code/system/unit/value
     * string + `__value_numeric` DECIMAL(38,6) — holding the canonical unit
-    * and converted value). The UCUM conversion table is a broadcast
-    * dimension; rows without a mapping (or without a value) get a null
-    * group, mirroring a left join. `value` is the plain decimal text of the
+    * and converted value). In the rebuild the UCUM conversion table is a
+    * broadcast dimension; rows without a mapping (or without a value) get a
+    * null group, mirroring a left join. The codec evaluates the same group
+    * expression per row against a lookup of the same table
+    * ([[CanonicalSlot]]). `value` is the plain decimal text of the
     * converted number at scale 6 — a derived annotation, not a round-trip
     * of the source text.
     */
   def canonicalize(df: DataFrame, path: String): DataFrame = {
-    val u = ucumDf(df.sparkSession).select(
-      col("code").as("__ucum_code"), col("factor").as("__ucum_factor"),
-      col("off").as("__ucum_off"), col("canon").as("__ucum_canon"))
-    val cv = canonicalValue(col(s"$path.value"), col("__ucum_factor"), col("__ucum_off"))
-    df.join(broadcast(u), col(s"$path.code") === col("__ucum_code"), "left")
-      .withColumn(s"__${path}_canonical",
-        when(col("__ucum_canon").isNotNull && col(s"$path.value").isNotNull,
-          struct(
-            col("__ucum_canon").as("code"),
-            col(s"$path.system").as("system"),
-            col("__ucum_canon").as("unit"),
-            cv.cast("string").as("value"),
-            cv.as("__value_numeric"))))
-      .drop("__ucum_code", "__ucum_factor", "__ucum_off", "__ucum_canon")
+    // the rebuild puts the group at the top level whatever the path
+    val viaCodec =
+      if (path.contains('.')) None
+      else reparse(df, path)((q, _) => canonicalSlot(df.sparkSession, q).map(s => Seq(s.field)))
+    viaCodec.getOrElse {
+      val u = ucumDf(df.sparkSession).select(
+        col("code").as("__ucum_code"), col("factor").as("__ucum_factor"),
+        col("off").as("__ucum_off"), col("canon").as("__ucum_canon"))
+      df.join(broadcast(u), col(s"$path.code") === col("__ucum_code"), "left")
+        .withColumn(s"__${path}_canonical", canonicalGroup(path))
+        .drop("__ucum_code", "__ucum_factor", "__ucum_off", "__ucum_canon")
+    }
+  }
+
+  /** UCUM code → (canonical code, factor, offset) as the rebuild's join
+    * sees them: the same casts of [[ucumTable]]'s text.
+    */
+  private lazy val ucumUnits: Map[String, Array[Any]] = ucumTable.map { case (c, f, o, k) =>
+    c -> Array[Any](UTF8String.fromString(k), Cast(Literal(f), FactorType).eval(), Cast(Literal(o), OffsetType).eval())
+  }.toMap
+
+  /** The codec's rule for the `__<q>_canonical` slot of Quantity field `q`:
+    * [[canonicalGroup]], analyzed once on the driver against `q` and the
+    * three UCUM columns with the types and nullability the rebuild's left
+    * join gives them, then bound. None unless `q` is a struct with string
+    * `code` and `value` and a `system`, each resolving to exactly one field.
+    */
+  private[fhir] def canonicalSlot(spark: SparkSession, q: StructField): Option[CanonicalSlot] = q.dataType match {
+    case st: StructType =>
+      def one(name: String) = uniqueField(st, name, spark.sessionState.conf.resolver)
+      for {
+        code <- one("code") if code.dataType == StringType
+        value <- one("value") if value.dataType == StringType
+        _ <- one("system")
+      } yield {
+        val inputs = StructType(Seq(q,
+          StructField("__ucum_canon", StringType), StructField("__ucum_factor", FactorType),
+          StructField("__ucum_off", OffsetType)))
+        val frame = spark.createDataFrame(java.util.Collections.emptyList[Row](), inputs)
+        val group = frame.select(canonicalGroup(q.name).as(s"__${q.name}_canonical")).queryExecution.analyzed match {
+          case p: Project => BindReferences.bindReference(p.projectList.head, p.child.output)
+        }
+        new CanonicalSlot(StructField(group.name, group.dataType, group.nullable), group, st.fieldIndex("code"), ucumUnits)
+      }
+    case _ => None
+  }
+
+  /** Fills one `__<q>_canonical` slot from its Quantity struct: looks the
+    * code up in the UCUM units (no match, like the left join, leaves the
+    * UCUM inputs null) and evaluates the bound group expression.
+    */
+  private[fhir] final class CanonicalSlot(
+      val field: StructField, group: Expression, code: Int, units: Map[String, Array[Any]]) extends Serializable {
+    private val none = Array[Any](null, null, null)
+
+    def apply(quantity: InternalRow): Any = {
+      val unit =
+        if (quantity == null || quantity.isNullAt(code)) none
+        else units.getOrElse(quantity.getUTF8String(code).toString, none)
+      group.eval(new GenericInternalRow(Array[Any](quantity, unit(0), unit(1), unit(2))))
+    }
   }
 }

@@ -7,9 +7,12 @@ import scala.collection.mutable.ArrayBuffer
 
 import com.fasterxml.jackson.core.{JsonEncoding, JsonFactory, JsonGenerator, JsonParser, JsonToken}
 
+import org.apache.spark.{Partition, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, InternalFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, SpecializedGetters}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, SpecializedGetters}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
@@ -24,9 +27,22 @@ import org.apache.spark.unsafe.types.UTF8String
   * runs on either side, because generating and planning its serializer over
   * a nested FHIR schema costs more than parsing a small file. The schema is
   * compiled once, on the driver, into a tree of readers or writers
-  * (per-struct field-index tables, skip and decimal flags) that every line
-  * reuses. [[org.apache.spark.sql.InternalFrame]] turns the rows back into
-  * a DataFrame.
+  * (per-struct field-index tables, skip and decimal flags, annotation
+  * slots) that every line reuses. [[org.apache.spark.sql.InternalFrame]]
+  * turns the rows back into a DataFrame.
+  *
+  * The parse also fills every spec annotation slot its schema declares,
+  * while it reads the owning struct, by the rule `FhirAnnotations` applies
+  * in its Catalyst rebuild. A slot is a field of the owning struct named
+  * after a sibling, which is its source:
+  *   - `__<e>_start` / `__<e>_end`, `TIMESTAMP`, beside a string `<e>`: one
+  *     `FhirAnnotations.bounds` call fills both;
+  *   - `__<e>_numeric`, `DECIMAL(38,6)`, beside a string `<e>`: the Spark
+  *     cast `FhirAnnotations.numericCast`;
+  *   - `__<q>_canonical`, the canonical group's struct type, beside a
+  *     Quantity struct `<q>`: `FhirAnnotations.CanonicalSlot`.
+  * A slot is never read from the JSON. `FhirAnnotations` puts the slots in
+  * the schema and re-issues the parse through [[parse]].
   */
 object FhirCodec {
 
@@ -41,19 +57,42 @@ object FhirCodec {
     * a document cut short, or a missing non-nullable field fails the task.
     * The result carries `schema` as given, nested `fhirType=decimal`
     * metadata included, which is how decode knows to re-emit raw numbers.
+    * Its plan is a bare `LogicalRDD` over a [[ParseRDD]].
     */
-  def encode(spark: SparkSession, ndjson: Dataset[String], schema: StructType): DataFrame = {
-    val root = new StructIn(schema)
-    val rows = ndjson.queryExecution.toRdd.mapPartitions { lines =>
-      val factory = new JsonFactory()
-      lines.flatMap(line => if (line.isNullAt(0)) None else parseLine(factory, root, line.getUTF8String(0)))
-    }
-    InternalFrame(spark, rows, schema)
-  }
+  def encode(spark: SparkSession, ndjson: Dataset[String], schema: StructType): DataFrame =
+    parse(spark, ndjson.queryExecution.toRdd, schema)
 
   def encode(ndjson: DataFrame, schema: StructType): DataFrame =
     encode(ndjson.sparkSession,
       ndjson.select(col(ndjson.columns.head).cast(StringType)).as(Encoders.STRING), schema)
+
+  /** The codec parse of `lines` (one string column of NDJSON) into `schema`. */
+  private[fhir] def parse(spark: SparkSession, lines: RDD[InternalRow], schema: StructType): DataFrame =
+    InternalFrame(spark, new ParseRDD(lines, structIn(spark, schema)), schema)
+
+  /** The input lines of `df` when its plan is exactly a codec parse, so a
+    * caller can re-issue the parse with another schema at no extra read.
+    */
+  private[fhir] def parseInput(df: DataFrame): Option[RDD[InternalRow]] =
+    df.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd match {
+        case p: ParseRDD => Some(p.lines)
+        case _ => None
+      }
+      case _ => None
+    }
+
+  /** The one RDD a codec parse runs: each line of `lines` through `root`. */
+  private final class ParseRDD(val lines: RDD[InternalRow], root: StructIn) extends RDD[InternalRow](lines) {
+    override protected def getPartitions: Array[Partition] = lines.partitions
+
+    override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] = {
+      val factory = new JsonFactory()
+      lines.iterator(split, context).flatMap { line =>
+        if (line.isNullAt(0)) None else parseLine(factory, root, line.getUTF8String(0))
+      }
+    }
+  }
 
   private def parseLine(factory: JsonFactory, root: StructIn, text: UTF8String): Option[InternalRow] = {
     val src = text.getByteBuffer
@@ -85,9 +124,12 @@ object FhirCodec {
       if (p.currentToken == JsonToken.VALUE_NULL) null else read(p, src)
   }
 
-  private def reader(dt: DataType): In = dt match {
-    case st: StructType => new StructIn(st)
-    case at: ArrayType => new ArrayIn(reader(at.elementType))
+  /** The reader of `dt`. `spark` is only read here, on the driver, to build
+    * the annotation slots' rules; no reader keeps it.
+    */
+  private def reader(spark: SparkSession, dt: DataType): In = dt match {
+    case st: StructType => structIn(spark, st)
+    case at: ArrayType => new ArrayIn(reader(spark, at.elementType))
     case StringType => StringIn
     case IntegerType => new ScalarIn(_.getIntValue)
     case LongType => new ScalarIn(_.getLongValue)
@@ -98,11 +140,74 @@ object FhirCodec {
       throw new IllegalArgumentException(s"unsupported FHIR parse type: ${other.simpleString}"))
   }
 
-  private final class StructIn(st: StructType) extends In {
+  private def structIn(spark: SparkSession, st: StructType): StructIn = {
+    val fills = slots(spark, st)
+    val filled = fills.flatMap(_.targets).toSet
+    new StructIn(st, st.fields.indices.map(i => if (filled(i)) null else reader(spark, st(i).dataType)).toArray, fills)
+  }
+
+  /** The annotation slots `st` declares, each with its source sibling. */
+  private def slots(spark: SparkSession, st: StructType): Seq[Fill] = {
+    // the sibling a `__<e><suffix>` field is named after
+    def source(i: Int, suffix: String): Option[Int] = {
+      val name = st(i).name
+      if (name.length > 2 + suffix.length && name.startsWith("__") && name.endsWith(suffix))
+        Some(st.fieldNames.indexOf(name.substring(2, name.length - suffix.length))).filter(_ >= 0)
+      else None
+    }
+    def ofString(i: Int, suffix: String, dt: DataType): Option[Int] =
+      if (st(i).dataType == dt) source(i, suffix).filter(st(_).dataType == StringType) else None
+    def each[T](f: Int => Option[T]): Seq[T] = st.fields.indices.flatMap(f)
+    val starts = each(i => ofString(i, "_start", TimestampType).map(_ -> i)).toMap
+    val ends = each(i => ofString(i, "_end", TimestampType).map(_ -> i)).toMap
+    (starts.keySet ++ ends.keySet).toSeq.sorted.map(s => new RangeFill(s, starts.getOrElse(s, -1), ends.getOrElse(s, -1))) ++
+      each(i => ofString(i, "_numeric", FhirAnnotations.NumericType).map(
+        new NumericFill(_, i, FhirAnnotations.numericCast(spark, nullable = true)))) ++
+      each(i => source(i, "_canonical").flatMap { s =>
+        FhirAnnotations.canonicalSlot(spark, st(s)).filter(_.field.dataType == st(i).dataType)
+          .map(new CanonicalFill(s, i, _))
+      })
+  }
+
+  /** Computes annotation slots of a struct's values from their sources,
+    * after the struct's JSON fields are read.
+    */
+  private sealed abstract class Fill extends Serializable {
+    def targets: Seq[Int]
+    def apply(values: Array[Any]): Unit
+  }
+
+  private final class RangeFill(src: Int, start: Int, end: Int) extends Fill {
+    def targets: Seq[Int] = Seq(start, end).filter(_ >= 0)
+    def apply(values: Array[Any]): Unit = values(src) match {
+      case s: UTF8String => FhirAnnotations.bounds(s.toString).foreach { case (lo, hi) =>
+        if (start >= 0) values(start) = lo
+        if (end >= 0) values(end) = hi
+      }
+      case _ =>
+    }
+  }
+
+  private final class NumericFill(src: Int, dst: Int, cast: Expression) extends Fill {
+    private val in = new GenericInternalRow(1)
+    def targets: Seq[Int] = Seq(dst)
+    def apply(values: Array[Any]): Unit = {
+      in.update(0, values(src))
+      values(dst) = cast.eval(in)
+    }
+  }
+
+  private final class CanonicalFill(src: Int, dst: Int, slot: FhirAnnotations.CanonicalSlot) extends Fill {
+    def targets: Seq[Int] = Seq(dst)
+    def apply(values: Array[Any]): Unit = values(dst) = slot(values(src).asInstanceOf[InternalRow])
+  }
+
+  /** `fields(i)` is null for a slot, which `fills` computes. */
+  private final class StructIn(st: StructType, fields: Array[In], fills: Seq[Fill]) extends In {
     private val index = new java.util.HashMap[String, Integer]()
-    st.fieldNames.zipWithIndex.foreach { case (n, i) => index.put(n, i) }
-    private val fields = st.fields.map(f => reader(f.dataType))
-    private val required = st.fields.indices.filterNot(st(_).nullable).toArray
+    fields.indices.foreach(i => if (fields(i) != null) index.put(st(i).name, i))
+    private val required = fields.indices.filter(i => fields(i) != null && !st(i).nullable).toArray
+    private val fillAll = fills.toArray
 
     def read(p: JsonParser, src: ByteBuffer): InternalRow = {
       if (p.currentToken != JsonToken.START_OBJECT) { p.skipChildren(); return null }
@@ -116,6 +221,7 @@ object FhirCodec {
         if (values(i) == null)
           throw new IllegalArgumentException(s"required field '${st(i).name}' is null or absent")
       }
+      fillAll.foreach(_(values))
       new GenericInternalRow(values)
     }
   }
@@ -238,7 +344,7 @@ object FhirCodec {
 
   private final class ArrayOut(elem: Out) extends Out {
     private def lastKept(a: ArrayData): Int = {
-      var j = a.numElements - 1
+      var j = a.numElements() - 1
       while (j >= 0 && !elem.nonEmpty(a, j)) j -= 1
       j
     }

@@ -27,15 +27,23 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StructType, TimestampTyp
   */
 object FhirWriter {
 
+  /** Writes `df` as Parquet at `path` and leaves the session conf as it
+    * found it: the timestamp type it sets for the write is restored, or
+    * unset again when the session had not set it (`conf.get` would return
+    * the default, and setting that back would leave an explicit entry).
+    */
   def write(df: DataFrame, path: String, strictParquetTypes: Boolean = false): Unit = {
     val conf = df.sparkSession.conf
     val key = "spark.sql.parquet.outputTimestampType"
-    val prev = conf.get(key)
+    val prev = conf.getAll.get(key)
     val out = if (strictParquetTypes) floorAnnotationTimestamps(df) else df
     try {
       conf.set(key, if (strictParquetTypes) "INT96" else "TIMESTAMP_MICROS")
       out.write.mode("overwrite").parquet(path)
-    } finally conf.set(key, prev)
+    } finally prev match {
+      case Some(v) => conf.set(key, v)
+      case None => conf.unset(key)
+    }
   }
 
   /** Exact floor-to-ms (pmod keeps it exact pre-1970 too, unlike truncating

@@ -40,7 +40,7 @@ class PlanSpec extends AnyFunSuite {
     val p = plan("dedup_incremental_bloom")
     // BloomFilterMightContain's prettyName — the vectorizable built-in probe
     // InjectRuntimeFilter plants; the scalar-UDF ban is enforced by
-    // PlanAuditSpec's sweep (this key no longer appears in scalaFuncOk)
+    // PlanAuditSpec's sweep (this key is not in scalaFuncOk)
     assert(p.contains("might_contain"), s"bloom probe not planned as might_contain:\n$p")
   }
 
@@ -53,10 +53,10 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("D9/D9n: asof picks aggregate with HASH aggregates, never SortAggregate") {
-    // round 12: max_by/min_by(struct) planned as SortAggregate and sorted
-    // the whole join fan-out (decade exponent ~1.0); the packed-decimal
-    // rewrite must keep both picks HashAggregate-only — a regression to a
-    // struct-buffered aggregate reintroduces the fan-out sort silently.
+    // max_by/min_by(struct) plans as SortAggregate and sorts the whole
+    // join fan-out (decade exponent ~1.0); the packed-decimal rewrite keeps
+    // both picks HashAggregate-only — a regression to a struct-buffered
+    // aggregate reintroduces the fan-out sort silently.
     for (k <- Seq("join_asof", "join_asof_nearest")) {
       val p = plan(k)
       assert(p.contains("HashAggregate"), s"$k lost its hash aggregate:\n$p")
@@ -69,7 +69,7 @@ class PlanSpec extends AnyFunSuite {
     val p = plan("graph_triangle_count")
     // the closing-edge verify must HASH, never sort the Σ outdeg² wedge
     // stream (and never flip to broadcast at small scale — that poisons
-    // the decade exponent); round-11 plan, see Analytics.scala
+    // the decade exponent); the plan Analytics.scala describes
     assert(p.contains("ShuffledHashJoin") && p.contains("LeftSemi"),
       "closing-edge semi join is not a shuffled hash join")
     assert(!p.contains("SortMergeJoin"),
@@ -77,7 +77,7 @@ class PlanSpec extends AnyFunSuite {
     // (the broadcast orientation joins run eagerly inside the edge-build
     // checkpoint and are not part of this audited plan segment)
     // the wedge-side bloom prune must sit in the plan — as the CODEGEN
-    // might_contain expression since round 15, not a ScalaUDF
+    // might_contain expression, not a ScalaUDF
     assert(p.contains("might_contain"), "wedge-side bloom prune filter missing")
   }
 
@@ -357,8 +357,7 @@ class PlanSpec extends AnyFunSuite {
     // top-down, so the partial agg line sits BELOW its exchange
     assert(p.contains("partial_count"), "customer rollup has no map-side combine")
     assert(!p.contains("Join"), p.take(1200))
-    // the round-6 weak mark: tiles come from nine broadcast-literal boundary
-    // tuples, so the returned plan has NO window at all — in particular no
+    // tiles come from nine broadcast-literal boundary tuples, so the returned plan has NO window at all — in particular no
     // global single-partition ntile sort
     assert(!p.contains("Window"), s"tile assignment regressed to a window:\n${p.take(1200)}")
   }
@@ -506,10 +505,10 @@ class PlanSpec extends AnyFunSuite {
     val optimized = q.queryExecution.optimizedPlan.toString
     assert(optimized.contains("__birthDate_start"), optimized)
     assert(!optimized.toLowerCase.contains("cast(birthdate"), optimized)
-    // the typed predicate is pushable to the parquet scan; since round 2
-    // the rewrite runs at analysis (resolution rule), so the raw string
-    // column is pruned from the scan entirely and even the inferred
-    // IsNotNull lands on the typed annotation column
+    // the typed predicate is pushable to the parquet scan; the rewrite
+    // runs at analysis (a resolution rule), so the raw string column is
+    // pruned from the scan entirely and even the inferred IsNotNull lands
+    // on the typed annotation column
     val physical = q.queryExecution.executedPlan.toString
     assert(physical.contains("PushedFilters: [IsNotNull(__birthDate_start), GreaterThanOrEqual(__birthDate_start"),
       physical)
@@ -520,6 +519,54 @@ class PlanSpec extends AnyFunSuite {
       .select("id").collect().map(_.getString(0)).sorted
     val got = q.collect().map(_.getString(0)).sorted
     assert(got.sameElements(expected))
+  }
+
+  /** Spark jobs `body` runs, counted by job group. A marker job in its own
+    * group runs after it: the listener bus delivers in order, so once the
+    * marker is seen every job of `body` has been counted.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"graft_counted_${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet(); ()
+          case g if g == s"${group}_marker" => flushed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"${group}_marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never reached the listener")
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("one-pass ingest: an annotated codec frame runs as a bare Scan ExistingRDD and writes in one job") {
+    val path = java.nio.file.Paths.get(getClass.getResource("/fhir/Observation.ndjson").toURI).toString
+    val text = spark.read.textFile(path)
+    val enc = fhir.FhirCodec.encode(spark, text, fhir.FhirSchema.deriveSchema(spark, text))
+    val a = fhir.FhirAnnotations.canonicalize(
+      fhir.FhirAnnotations.annotateNumeric(
+        fhir.FhirAnnotations.annotateNumeric(
+          fhir.FhirAnnotations.annotateRange(enc, "effectiveDateTime"),
+          "valueQuantity.value"),
+        "component.valueQuantity.value"),
+      "valueQuantity")
+    val p = a.queryExecution.executedPlan.toString
+    assert(p.contains("Scan ExistingRDD"), p)
+    for (node <- Seq("Project", "BroadcastExchange", "BroadcastHashJoin"))
+      assert(!p.contains(node), s"annotated codec frame plans a $node:\n$p")
+    val dir = SparkTestBase.tempDir("graft_onepass_write_").resolve("Observation.parquet").toString
+    val jobs = jobsOf(fhir.FhirWriter.write(a, dir))
+    assert(jobs == 1, s"the annotated write ran $jobs jobs")
   }
 
   test("AnnotationRewrite: decimal-string predicate gains a typed __value_numeric pruning conjunct") {

@@ -315,6 +315,23 @@ class FhirSpec extends AnyFunSuite with TimeLimits {
     assert(us(s"$base/strict", "__t_start") == us(s"$base/native", "__t_start") - 456)
   }
 
+  test("FhirWriter: a write leaves the session conf as it found it") {
+    val key = "spark.sql.parquet.outputTimestampType"
+    val dir = SparkTestBase.tempDir("graft_writer_conf_").toString
+    val p = SparkTestBase.golden("Patient").select("id")
+    spark.conf.unset(key)
+    val unset = spark.conf.getAll
+    FhirWriter.write(p, s"$dir/a", strictParquetTypes = true)
+    FhirWriter.write(p, s"$dir/b")
+    assert(spark.conf.getAll == unset, s"$key after the writes: ${spark.conf.getAll.get(key)}")
+    try {
+      spark.conf.set(key, "TIMESTAMP_MILLIS")
+      val set = spark.conf.getAll
+      FhirWriter.write(p, s"$dir/c", strictParquetTypes = true)
+      assert(spark.conf.getAll == set)
+    } finally spark.conf.unset(key)
+  }
+
   // --- A6 range annotation: worked vector + partial precision ---
 
   test("range bounds: spec vector 2014-06-01T12:05Z (README.md:325-327)") {

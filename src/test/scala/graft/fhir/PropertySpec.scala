@@ -3,6 +3,9 @@ package graft.fhir
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 
 import graft.SparkTestBase
+import org.apache.spark.SparkThrowable
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions.col
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -118,6 +121,125 @@ class PropertySpec extends AnyFunSuite {
       assert(Math.floorMod(lo, 1000000L) == 0, s"$s start not second-aligned: $lo")
       assert(Math.floorMod(hi, 1000000L) == 999000, s"$s end not .999-aligned: $hi")
     }
+  }
+
+  // --- one-pass ingest: codec-filled annotations equal the Catalyst rebuild ---
+
+  /** The annotations the benchmark ingest writes, per resource: (kind, path). */
+  private val ingestAnnotations: Map[String, Seq[(String, String)]] = Map(
+    "Patient" -> Seq(
+      "range" -> "birthDate",
+      "numeric" -> "extension.valueDecimal",
+      "numeric" -> "address.extension.extension.valueDecimal"),
+    "Observation" -> Seq(
+      "range" -> "effectiveDateTime",
+      "numeric" -> "valueQuantity.value",
+      "numeric" -> "component.valueQuantity.value",
+      "canonical" -> "valueQuantity"),
+    "ExplanationOfBenefit" -> Seq(
+      "range" -> "billablePeriod.start",
+      "numeric" -> "item.net.value",
+      "numeric" -> "item.adjudication.amount.value",
+      "numeric" -> "payment.amount.value",
+      "numeric" -> "total.amount.value"))
+
+  private def annotate(df: DataFrame, steps: Seq[(String, String)]): DataFrame = steps.foldLeft(df) {
+    case (d, ("range", p)) => FhirAnnotations.annotateRange(d, p)
+    case (d, ("numeric", p)) => FhirAnnotations.annotateNumeric(d, p)
+    case (d, (_, p)) => FhirAnnotations.canonicalize(d, p)
+  }
+
+  private def encoded(lines: Dataset[String]): DataFrame =
+    FhirCodec.encode(spark, lines, FhirSchema.deriveSchema(spark, lines))
+
+  /** The same parse behind a `Project`: not a bare codec parse, so every
+    * annotation takes the Catalyst rebuild.
+    */
+  private def behindProject(df: DataFrame): DataFrame = df.select(df.columns.map(c => col(s"`$c`")): _*)
+
+  /** Distinct Spark row-metadata footers of the Parquet files `df` writes. */
+  private def footers(df: DataFrame): Set[String] = {
+    val dir = SparkTestBase.tempDir("graft_onepass_").resolve("t").toString
+    FhirWriter.write(df, dir)
+    new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.getPath), spark.sessionState.newHadoopConf()))
+      try r.getFooter.getFileMetaData.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata")
+      finally r.close()
+    }.toSet
+  }
+
+  /** Annotates `enc` both ways and checks that the codec path was taken and
+    * that schema, rows and written footers are the rebuild's. Returns the
+    * codec frame.
+    */
+  private def assertOnePassEqual(enc: DataFrame, steps: Seq[(String, String)]): DataFrame = {
+    val codec = annotate(enc, steps)
+    val catalyst = annotate(behindProject(enc), steps)
+    assert(FhirCodec.parseInput(codec).isDefined, "the annotated codec frame left the codec path")
+    assert(FhirCodec.parseInput(catalyst).isEmpty)
+    assert(codec.schema == catalyst.schema,
+      s"schema drift:\n${codec.schema.treeString}\nvs rebuild\n${catalyst.schema.treeString}")
+    assert(codec.exceptAll(catalyst).isEmpty && catalyst.exceptAll(codec).isEmpty, s"row drift on $steps")
+    val f = footers(codec)
+    assert(f.size == 1 && f == footers(catalyst), s"footer drift on $steps")
+    codec
+  }
+
+  private def fixture(resource: String): Dataset[String] =
+    spark.read.textFile(java.nio.file.Paths.get(getClass.getResource(s"/fhir/$resource.ndjson").toURI).toString)
+
+  test("one-pass ingest: codec-filled annotations equal the Catalyst rebuild on the generator and the fixture") {
+    import spark.implicits._
+    val gen = encoded(spark.createDataset(samples(genResource, 40)))
+    val genSteps = Seq("range" -> "effectiveDateTime", "numeric" -> "valueQuantity.value")
+    assertOnePassEqual(gen, genSteps)
+    // re-annotating a path replaces its slots in place
+    assertOnePassEqual(gen, genSteps ++ genSteps)
+    for ((r, steps) <- ingestAnnotations) {
+      val enc = encoded(fixture(r))
+      val codec = assertOnePassEqual(enc, steps)
+      assert(codec.count() == enc.count())
+    }
+    val obs = encoded(fixture("Observation"))
+    val twice = assertOnePassEqual(obs, Seq("canonical" -> "valueQuantity", "canonical" -> "valueQuantity"))
+    assert(twice.columns.count(_ == "__valueQuantity_canonical") == 1)
+    assert(twice.where(col("__valueQuantity_canonical").isNotNull).count() > 0)
+  }
+
+  test("one-pass ingest: an unparseable date gets null bounds on both paths") {
+    import spark.implicits._
+    val docs = Seq(
+      """{"resourceType":"Observation","id":"a","effectiveDateTime":"not a date"}""",
+      """{"resourceType":"Observation","id":"b","effectiveDateTime":"2020-02"}""",
+      """{"resourceType":"Observation","id":"c"}""")
+    val codec = assertOnePassEqual(encoded(spark.createDataset(docs)), Seq("range" -> "effectiveDateTime"))
+    val bounds = codec.select(col("id"), col("__effectiveDateTime_start").isNull, col("__effectiveDateTime_end").isNull)
+      .collect().map(r => r.getString(0) -> (r.getBoolean(1), r.getBoolean(2))).toMap
+    assert(bounds == Map("a" -> (true, true), "b" -> (false, false), "c" -> (true, true)))
+  }
+
+  test("one-pass ingest: malformed decimal text and a path off the structs fail alike on both paths") {
+    import spark.implicits._
+    val enc = encoded(spark.createDataset(Seq(
+      """{"resourceType":"Observation","id":"a","valueQuantity":{"value":1.5}}""",
+      """{"resourceType":"Observation","id":"b","valueQuantity":{"value":"12.5x"}}""")))
+    def failure(df: DataFrame): SparkThrowable = {
+      val e = intercept[Exception](FhirAnnotations.annotateNumeric(df, "valueQuantity.value").collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case t: SparkThrowable if t.getCondition != null => t }
+        .getOrElse(fail("no Spark error in the cause chain", e))
+    }
+    assume(spark.conf.get("spark.sql.ansi.enabled").toBoolean, "malformed decimal text fails only under ANSI casts")
+    val (codec, catalyst) = (failure(enc), failure(behindProject(enc)))
+    assert(codec.getCondition == "CAST_INVALID_INPUT", codec)
+    assert(codec.getCondition == catalyst.getCondition)
+    assert(codec.getMessageParameters == catalyst.getMessageParameters)
+    // `id` is a string: the path does not descend structs, at call time
+    def callFailure(df: DataFrame): Throwable = intercept[Exception](FhirAnnotations.annotateNumeric(df, "id.value"))
+    val (c, r) = (callFailure(enc), callFailure(behindProject(enc)))
+    assert(c.getClass == r.getClass && c.getMessage == r.getMessage, s"$c vs $r")
   }
 
   test("property: MinHash Jaccard estimate within statistical error bound") {
