@@ -58,6 +58,27 @@ object Session {
     s
   }
 
+  /** Runs `body` with each `(key, value)` set on `s`, then restores each
+    * key, or unsets it when the session had no explicit entry (`conf.get`
+    * would return the default, and setting that back would leave an
+    * explicit entry behind). It scopes only the work that runs inside
+    * `body`: a lazy DataFrame returned from `body` executes later, under
+    * the restored conf, which is why a loop that must plan under its own
+    * confs runs in a child session instead.
+    */
+  def withConf[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val prev = s.conf.getAll
+    try {
+      kvs.foreach { case (k, v) => s.conf.set(k, v) }
+      body
+    } finally kvs.foreach { case (k, _) =>
+      prev.get(k) match {
+        case Some(v) => s.conf.set(k, v)
+        case None => s.conf.unset(k)
+      }
+    }
+  }
+
   /** Stop the session, then delete this process's tmpfs scratch dir (if
     * [[apply]] made one): tmpfs is memory, and every staged layout of the
     * run sits in it.

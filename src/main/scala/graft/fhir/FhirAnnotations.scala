@@ -244,40 +244,31 @@ object FhirAnnotations {
   // UCUM canonicalization (README.md:367-381): a broadcast conversion table
   // code → (factor, offset, canonical code); canonical value =
   // value * factor + offset in exact decimal arithmetic.
-  // Non-terminating factors (°F) are fixed at 6 dp — documented approximation.
 
-  /** (code, factor, offset, canonicalCode). Beyond the spec's worked
+  /** Codes of the clinical conversion table. Beyond the spec's worked
     * examples (mass/length/temperature/time), the common clinical units a
     * real deployment hits: pressure (mm[Hg]/kPa → Pa), concentration
     * (mg/dL, g/dL → g/L), rates (/min, /h → /s), percent (→ unity),
-    * volume (mL → L), micro-mass, day/week. Factors non-terminating in
-    * decimal are fixed at 6 dp — documented approximation.
+    * volume (mL → L), micro-mass, day/week.
     */
-  val ucumTable: Seq[(String, String, String, String)] = Seq(
-    ("kg", "1000", "0", "g"),
-    ("g", "1", "0", "g"),
-    ("mg", "0.001", "0", "g"),
-    ("ug", "0.000001", "0", "g"),
-    ("cm", "0.01", "0", "m"),
-    ("mm", "0.001", "0", "m"),
-    ("m", "1", "0", "m"),
-    ("mm[Hg]", "133.322387", "0", "Pa"),
-    ("kPa", "1000", "0", "Pa"),
-    ("Pa", "1", "0", "Pa"),
-    ("Cel", "1", "273.15", "K"),
-    ("[degF]", "0.555556", "255.372222", "K"),
-    ("min", "60", "0", "s"),
-    ("h", "3600", "0", "s"),
-    ("d", "86400", "0", "s"),
-    ("wk", "604800", "0", "s"),
-    ("mg/dL", "0.01", "0", "g/L"),
-    ("g/dL", "10", "0", "g/L"),
-    ("g/L", "1", "0", "g/L"),
-    ("/min", "0.016667", "0", "/s"),
-    ("/h", "0.000278", "0", "/s"),
-    ("%", "0.01", "0", "1"),
-    ("mL", "0.001", "0", "L"),
-    ("L", "1", "0", "L"))
+  private val ucumCodes = Seq("kg", "g", "mg", "ug", "cm", "mm", "m", "mm[Hg]",
+    "kPa", "Pa", "Cel", "[degF]", "min", "h", "d", "wk", "mg/dL", "g/dL", "g/L",
+    "/min", "/h", "%", "mL", "L")
+
+  /** (code, factor, offset, canonicalCode), generated from
+    * [[UcumGrammar.canonicalExact]]: the one precision rule is that factor
+    * and offset are the exact values rounded once HALF_UP to 6 dp (the
+    * scale of the `DECIMAL(12,6)` / `DECIMAL(18,6)` columns they are cast
+    * to), so a non-terminating factor such as 1/60 or 5/9 reads 0.016667 /
+    * 0.555556.
+    */
+  val ucumTable: Seq[(String, String, String, String)] = ucumCodes.map { c =>
+    val (canon, f, o) = UcumGrammar.canonicalExact(c)
+      .getOrElse(sys.error(s"UCUM table code '$c' does not parse"))
+    def dp6(x: java.math.BigDecimal): String =
+      x.setScale(6, java.math.RoundingMode.HALF_UP).stripTrailingZeros.toPlainString
+    (c, dp6(f), dp6(o), canon)
+  }
 
   /** DuckDB VALUES literal mirroring ucumTable, for oracle SQL. */
   def ucumValuesSql: String =

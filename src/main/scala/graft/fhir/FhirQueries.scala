@@ -367,14 +367,14 @@ object FhirQueries {
           .orderBy("id")),
 
     // A8b — UCUM GRAMMAR canonicalization: where fhir_annotate_quantity_
-    // canonical consumes the curated 24-code table, this key converts via
+    // canonical consumes the 24-code clinical table, this key converts via
     // the full unit-expression PARSER (UcumGrammar: prefixed metric atoms,
     // exponents, quotients, 10*n powers, {annotations}) — covering the
-    // golden Observation codes the curated table must leave unconverted
+    // golden Observation codes the clinical table leaves unconverted
     // (fL, pg, 10*3/uL, 10*6/uL, kg/m2, {score}). The conversion table is
     // parser-GENERATED over a fixed vocabulary (the mechanism is the
     // grammar; the vocabulary is just the demonstration fixture), broadcast
-    // exactly like the curated table — at 100 TB the vocabulary stays
+    // exactly like the clinical table — at 100 TB the vocabulary stays
     // unit-cardinality metadata. Conversion arithmetic is one double
     // multiply-add rounded to 6 dp — no aggregation, so IEEE determinism
     // holds cross-engine with identical formula text.

@@ -27,22 +27,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StructType, TimestampTyp
   */
 object FhirWriter {
 
-  /** Writes `df` as Parquet at `path` and leaves the session conf as it
-    * found it: the timestamp type it sets for the write is restored, or
-    * unset again when the session had not set it (`conf.get` would return
-    * the default, and setting that back would leave an explicit entry).
+  /** Writes `df` as Parquet at `path`; the timestamp type is scoped to the
+    * write ([[graft.Session.withConf]]), so the session conf is left as it
+    * was found.
     */
   def write(df: DataFrame, path: String, strictParquetTypes: Boolean = false): Unit = {
-    val conf = df.sparkSession.conf
-    val key = "spark.sql.parquet.outputTimestampType"
-    val prev = conf.getAll.get(key)
     val out = if (strictParquetTypes) floorAnnotationTimestamps(df) else df
-    try {
-      conf.set(key, if (strictParquetTypes) "INT96" else "TIMESTAMP_MICROS")
+    graft.Session.withConf(df.sparkSession, "spark.sql.parquet.outputTimestampType" ->
+        (if (strictParquetTypes) "INT96" else "TIMESTAMP_MICROS")) {
       out.write.mode("overwrite").parquet(path)
-    } finally prev match {
-      case Some(v) => conf.set(key, v)
-      case None => conf.unset(key)
     }
   }
 

@@ -4,22 +4,22 @@ import java.math.{BigDecimal => JBD, MathContext, RoundingMode}
 
 /** UCUM unit-expression grammar (README.md:367-381 defines the
   * canonicalization MECHANISM; the unit algebra itself is the public UCUM
-  * specification, ucum.org §4-5). The curated `FhirAnnotations.ucumTable`
-  * covers 24 worked clinical codes; this parser covers the GRAMMAR — any
+  * specification, ucum.org §4-5). `FhirAnnotations.ucumTable` is its
+  * output for 24 clinical codes at 6 dp; the parser covers the GRAMMAR — any
   * product/quotient of prefixed metric atoms, integer exponents,
   * parenthesized terms, `10*n`/`10^n` power atoms, integer factors, and
-  * `{annotation}` comments — so codes the curated table must leave
+  * `{annotation}` comments — so codes the clinical table leaves
   * unconverted (the golden Observation data itself carries `fL`, `pg`,
   * `10*3/uL`, `10*6/uL`, `kg/m2`, `{score}`) canonicalize too.
   *
   * Canonical form: a dimension vector over the UCUM base units
   * (g, m, s, K, mol, A, cd — gram-based, as UCUM defines) plus a decimal
-  * factor; rendering prefers the clinical aliases the curated table
-  * established (Pa, N, J, W, L, g/L, mol/L, /s, /L, 1) and falls back to a
-  * systematic `g.m-2`-style base expression. Temperature OFFSETS exist only
-  * for the lone units Cel / [degF] (an offset inside a compound is
-  * meaningless); arbitrary units ([iU]) carry their own dimension and never
-  * cross-convert — both per the UCUM spec.
+  * factor; rendering prefers the clinical aliases (Pa, N, J, W, L, g/L,
+  * mol/L, /s, /L, 1) and falls back to a systematic `g.m-2`-style base
+  * expression. Temperature OFFSETS exist only for the lone units
+  * Cel / [degF] (an offset inside a compound is meaningless); arbitrary
+  * units ([iU]) carry their own dimension and never cross-convert — both
+  * per the UCUM spec.
   *
   * All arithmetic is exact BigDecimal except non-terminating quotients
   * (1/60, 5/9), computed at 30 significant digits; conversion tables emit
@@ -118,13 +118,13 @@ object UcumGrammar {
     * (canonicalCode, factor, offset) triple can represent them — a linear
     * "conversion" would be silently wrong for every value. `parse` /
     * `canonical` therefore return None for any expression containing one
-    * (round 13: an EXPLICIT classification, not an unknown-atom accident),
-    * which under A8's left-join contract leaves the `__<q>_canonical`
+    * (an EXPLICIT classification, not an unknown-atom accident), which
+    * under A8's left-join contract leaves the `__<q>_canonical`
     * group NULL — flagged, never mis-converted. [[classify]] distinguishes
     * this case from a genuinely unknown atom so conformance reporting can
     * name the reason.
     *
-    * Round 14: the set covers the FULL UCUM special-units table (ucum.org
+    * The set covers the FULL UCUM special-units table (ucum.org
     * §§21-23, "special units" rows), not just the bel/neper/pH family —
     * prism diopter `[p'diop]` (tan), slope `%[slope]` (100·tan),
     * the homeopathic potency series `[hp'_X/C/M/Q]` (decimal/centesimal
@@ -360,11 +360,11 @@ object UcumGrammar {
 
   private val baseOrder = Seq("g", "m", "s", "K", "mol", "A", "cd", "iU")
 
-  /** (canonicalCode, factor, offset) for a code, or None if unparseable.
-    * factor/offset as doubles — single decimal→IEEE rounding, identical in
-    * every engine.
+  /** (canonicalCode, factor, offset) for a code in exact decimal form, or
+    * None if unparseable. Non-terminating quotients carry 30 significant
+    * digits.
     */
-  def canonical(code: String): Option[(String, Double, Double)] =
+  def canonicalExact(code: String): Option[(String, JBD, JBD)] =
     parse(code).map { u =>
       val (cc, cf) = aliases.find(_._1 == u.dim) match {
         case Some((_, c, av)) => (c, u.factor.divide(av, mc))
@@ -375,8 +375,14 @@ object UcumGrammar {
           }.mkString(".")
           (sys, u.factor)
       }
-      (cc, cf.doubleValue, u.offset.doubleValue)
+      (cc, cf, u.offset)
     }
+
+  /** [[canonicalExact]] as doubles — single decimal→IEEE rounding,
+    * identical in every engine.
+    */
+  def canonical(code: String): Option[(String, Double, Double)] =
+    canonicalExact(code).map { case (cc, f, o) => (cc, f.doubleValue, o.doubleValue) }
 
   /** The demonstration vocabulary for the grammar-canonicalization query:
     * every quantity code present in the golden Observation data plus the

@@ -1,7 +1,9 @@
 package graft.stream
 
-import graft.{Q, QueryDef, Tables}
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import graft.{Q, QueryDef, Session, Tables}
+import java.nio.file.{Files, Path, Paths}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, ValueState}
 
@@ -13,6 +15,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Scale posture: all state is keyed (window × type, user) and bounded by
   * watermarks; sinks here are memory tables for the harness, but every plan
   * is the one you would run against a real source with a parquet/Kafka sink.
+  *
+  * Scratch: every file a stream key writes lives under one [[root]] per
+  * (dataset, JVM) — the staged inputs ([[eventSource]], [[userHashSource]],
+  * the late-data rows), each under its own `Tables.stage` marker, and one
+  * [[runDir]] per key for its checkpoint, sink or state.
   */
 object Streams {
 
@@ -33,6 +40,26 @@ object Streams {
     }
   }
 
+  /** Per-user running `(n, sum_e4)` through flatMapGroupsWithState, emitted
+    * as `(user_id, n, sum_e4)` after every batch. The sum is kept in exact
+    * 1e-4 units (Long), so state merge order cannot perturb the result.
+    */
+  private def runningCountSum(src: DataFrame): DataFrame = {
+    val sp = src.sparkSession
+    import sp.implicits._
+    src.select(col("user_id"), col("value")).as[(Long, Double)]
+      .groupByKey(_._1)
+      .flatMapGroupsWithState[(Long, Long), (Long, Long, Long)](
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (user: Long, rows: Iterator[(Long, Double)], state: GroupState[(Long, Long)]) =>
+          var (n, sum) = state.getOption.getOrElse((0L, 0L))
+          rows.foreach { case (_, v) => n += 1; sum += math.round(v * 10000) }
+          state.update((n, sum))
+          Iterator((user, n, sum))
+      }
+      .toDF("user_id", "n", "sum_e4")
+  }
+
   /** Streaming-scoped shuffle-partition cap: every stateful operator keeps
     * one state-store instance per shuffle partition per micro-batch, so at
     * harness scale a cpu-wide shuffle means one store open/commit cycle per
@@ -49,17 +76,8 @@ object Streams {
     * measurement.
     */
   private val StreamShufflePartitions = "2"
-  private def withStreamShuffle[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.getOption(key)
-    try {
-      s.conf.set(key, StreamShufflePartitions)
-      body
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
+  private def withStreamShuffle[T](s: SparkSession)(body: => T): T =
+    Session.withConf(s, "spark.sql.shuffle.partitions" -> StreamShufflePartitions)(body)
 
   /** Sentinel timestamp (2090-01-01, typed per the events schema at stage
     * time) used to push the watermark past every real window in a bounded
@@ -68,162 +86,130 @@ object Streams {
   private val SentinelEpochSec = 3786825600L
   private val SentinelType = "__wm__"
 
-  /** Stage a SPLIT copy of the events table (8 part files) once per
-    * dataset: driver testdata ships events as ONE single-row-group parquet
-    * file, so every micro-batch's scan ran as ONE task regardless of
-    * executor width (parquet splits at row-group granularity — lowering
-    * maxPartitionBytes just made empty splits; measured no-op). A real
-    * stream source is a directory of many files; staging the same rows as
-    * 8 files restores the scan/partial-agg parallelism a production
-    * micro-batch has, changing no value anywhere (batch0 at sf0.1:
-    * 356 ms → ~90 ms of stage wall). Staged under the events
-    * fingerprint; callers stage their symlinks under the same
-    * fingerprint, so a re-staged split re-links them.
+  private val roots = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** The one scratch root of the stream keys for dataset `dir` in this JVM,
+    * deleted at JVM exit. It is pid-keyed because the sources symlink into
+    * the split copy below it: a root shared with another process could hold
+    * links into that process's copy, which dangle once it exits. The root is
+    * a plain parent; each staged child keeps its own marker.
     */
-  private def splitEventsDir(s: SparkSession, dir: String): (String, String) = {
-    val base = s"${sys.props("java.io.tmpdir")}/graft_events_split_" +
-      s"${Integer.toHexString(dir.hashCode)}_${ProcessHandle.current().pid()}"
-    val fp = Tables.stage(base, Tables.fingerprint(dir, "events")) {
-      Tables.t(s, dir, "events").repartition(8)
-        .write.mode("overwrite").parquet(s"$base/data")
-    }
-    (s"$base/data", fp)
+  private def root(dir: String): String = {
+    val r = s"${Tables.stagingDir("graft_stream", dir)}_${ProcessHandle.current().pid()}"
+    if (roots.add(r)) sys.addShutdownHook(FileUtils.deleteQuietly(new java.io.File(r)))
+    r
   }
 
-  /** Symlink every part file of the split events copy into `inDir`. */
-  private def linkSplitEvents(inDir: java.nio.file.Path, splitDir: String): Unit = {
-    val parts = new java.io.File(splitDir)
-      .listFiles((_, n) => n.endsWith(".parquet")).sortBy(_.getName)
-    parts.zipWithIndex.foreach { case (f, i) =>
-      java.nio.file.Files.createSymbolicLink(inDir.resolve(s"ev$i.parquet"), f.toPath)
-    }
+  /** A fresh path for one run of `key`, after deleting the key's previous
+    * run dir: a stream over a reused checkpoint sees no new files and emits
+    * nothing, so each run needs an empty checkpoint, sink and state dir, and
+    * the delete keeps one per key. The path is new per run, so a state-store
+    * maintenance write of an earlier run never lands in a later run's
+    * checkpoint.
+    */
+  private def runDir(dir: String, key: String): String = {
+    val r = root(dir)
+    Option(new java.io.File(r).listFiles((_, n) => n.startsWith(s"run_${key}_")))
+      .foreach(_.foreach(FileUtils.deleteQuietly))
+    s"$r/run_${key}_${System.nanoTime()}"
   }
 
-  /** A fresh per-run path `<base>/<prefix><nanos>` under a staged base,
-    * after deleting the previous runs' `<prefix>*` dirs: a stream over a
-    * reused checkpoint sees no new files and emits nothing, so every run
-    * needs a fresh checkpoint, and deleting the last one keeps the residue
-    * at one run.
+  /** Symlinks every part file of `from` into `to` as `<prefix><i>.parquet`. */
+  private def link(from: String, to: Path, prefix: String): Unit = {
+    Files.createDirectories(to)
+    new java.io.File(from).listFiles((_, n) => n.endsWith(".parquet")).sortBy(_.getName)
+      .zipWithIndex.foreach { case (f, i) =>
+        Files.createSymbolicLink(to.resolve(s"$prefix$i.parquet"), f.toPath)
+      }
+  }
+
+  /** The file-stream source over `events`, plus one sentinel row (user_id
+    * -1, 2090-01-01) per type in `sentinels`.
+    *
+    * The events table is staged once per root as a SPLIT copy of 8 part
+    * files: driver testdata ships events as ONE single-row-group parquet
+    * file, so every micro-batch's scan would run as ONE task regardless of
+    * executor width (parquet splits at row-group granularity, and lowering
+    * maxPartitionBytes only makes empty splits). A real stream source is a
+    * directory of many files; the split copy restores the scan and
+    * partial-agg parallelism a production micro-batch has and changes no
+    * value (batch0 at sf0.1: 356 ms → ~90 ms of stage wall). Each source dir
+    * symlinks the split copy's files and holds its sentinel file, staged
+    * under the split's fingerprint, so a re-staged split re-links it.
+    *
+    * A `__wm__` sentinel pushes the watermark of a bounded append-mode run
+    * past every real window. Sentinels with REAL event types survive
+    * per-side `event_type` filters (which Catalyst pushes below the
+    * watermark node), so they advance both sides' watermarks of a
+    * stream-stream join. Callers drop sentinel rows from their results.
+    *
+    * The source path is a glob over the entries of `in/`, not the bare
+    * dir: a non-glob listing skips nested directories such as the sentinel
+    * file's. The `_done` marker sits beside `in/`, never inside the glob.
     */
-  private def freshRunDir(base: String, prefix: String): String = {
-    new java.io.File(base).listFiles((_, n) => n.startsWith(prefix)).toSeq
-      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
-    s"$base/$prefix${System.nanoTime()}"
+  private def eventSource(s: SparkSession, dir: String, sentinels: Seq[String]): DataFrame = {
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val r = root(dir)
+    val ev = Tables.t(s, dir, "events")
+    val split = s"$r/split"
+    val splitFp = Tables.stage(split, Tables.fingerprint(dir, "events")) {
+      ev.repartition(8).write.parquet(s"$split/data")
+    }
+    val src = s"$r/src" + sentinels.map("_" + _).mkString
+    Tables.stage(src, splitFp) {
+      link(s"$split/data", Paths.get(src, "in"), "ev")
+      val ts = Tables.tsSentinel(ev.schema("ts").dataType, SentinelEpochSec)
+      if (sentinels.nonEmpty)
+        s.createDataFrame(s.sparkContext.parallelize(
+            sentinels.map(t => Row(-1L, ts, -1L, t, 0.0, "{}")), 1), ev.schema)
+          .write.parquet(s"$src/in/sentinels")
+    }
+    Tables.withEventTime(s.readStream.schema(ev.schema).parquet(s"$src/in/*"))
+  }
+
+  /** The events table as 4 files by `user_id % 4`, read one file per
+    * micro-batch (`maxFilesPerTrigger` 1): a deterministic 4-batch stream.
+    * Staged once per root under the events fingerprint.
+    */
+  private def userHashSource(s: SparkSession, dir: String): DataFrame = {
+    val base = s"${root(dir)}/byuser"
+    Tables.stage(base, Tables.fingerprint(dir, "events")) {
+      Files.createDirectories(Paths.get(s"$base/in"))
+      (0 until 4).foreach { g =>
+        Tables.events(s, dir).drop("ts_ts")
+          .where(pmod(col("user_id"), lit(4)) === g)
+          .coalesce(1).write.parquet(s"$base/stage$g")
+        val part = new java.io.File(s"$base/stage$g").listFiles((_, n) => n.endsWith(".parquet")).head
+        Files.move(part.toPath, Paths.get(s"$base/in/f$g.parquet"))
+      }
+    }
+    s.readStream.schema(s.read.parquet(s"$base/in").schema)
+      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
   }
 
   /** Bounded append-mode run of a windowed aggregation — the SAME plan you
     * would run unbounded (watermark evicts window state; the full result is
     * never re-emitted), unlike `complete` mode where state grows forever.
     *
-    * Append mode only emits a window once the watermark passes its end, so a
-    * far-future sentinel row rides along with the bounded input to push the
-    * watermark past every real window; the trigger's closing no-data
-    * micro-batch then evicts and emits them all to the parquet sink.
-    * Sentinel groups are filtered by their marker key
+    * Append mode only emits a window once the watermark passes its end, so
+    * the `__wm__` sentinel rides along with the bounded input to push the
+    * watermark past every real window. One AvailableNow run suffices: the
+    * data batch advances the watermark, and the trigger's closing no-data
+    * micro-batch (`spark.sql.streaming.noDataMicroBatches.enabled`, on by
+    * default) evicts and emits every closed window to the parquet sink.
+    * Callers filter the sentinel groups by their marker key
     * (`event_type='__wm__'` / `user_id=-1`).
     */
   private def runBoundedAppend(
-      s: SparkSession, dir: String, name: String)(
+      s: SparkSession, dir: String, key: String)(
       agg: DataFrame => DataFrame): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_append_${name}_" +
-      s"${Integer.toHexString(dir.hashCode)}_${ProcessHandle.current().pid()}"
-    val sch = Tables.t(s, dir, "events").schema
-    // Input staging (events symlink + the sentinel parquet write — a Spark
-    // job) is IMMUTABLE per (name, dir): stage it once and let bench
-    // repeats / warm-up reuse it. Only the checkpoint and the output sink
-    // must be fresh per run (AvailableNow over a reused checkpoint sees no
-    // new files and emits nothing), so those live under a per-run subdir;
-    // the previous run's subdir is deleted first to keep residue O(1). The
-    // marker sits at base level — the source glob is `in/*` and must never
-    // see a non-parquet marker file.
-    val (splitDir, splitFp) = splitEventsDir(s, dir)
-    Tables.stage(base, splitFp) {
-      val inDir = Files.createDirectories(Paths.get(base, "in"))
-      linkSplitEvents(inDir, splitDir)
-      import org.apache.spark.sql.Row
-      val row = Row(-1L, Tables.tsSentinel(sch("ts").dataType, SentinelEpochSec),
-        -1L, SentinelType, 0.0, "{}")
-      s.createDataFrame(s.sparkContext.parallelize(Seq(row), 1), sch)
-        .write.parquet(s"$base/in/s1")
-    }
-    val run = freshRunDir(base, "run_")
-    // One AvailableNow run: the data batch advances the watermark past every
-    // real window (thanks to the sentinel), and Spark's no-data micro-batch
-    // (spark.sql.streaming.noDataMicroBatches.enabled, default on) then
-    // evicts + emits the closed windows before the trigger terminates —
-    // verified empirically, so no second run is needed.
-    val src = Tables.withEventTime(
-      s.readStream.schema(sch).parquet(s"$base/in/*"))
-    val q = agg(src).writeStream.outputMode("append").format("parquet")
+    val run = runDir(dir, key)
+    agg(eventSource(s, dir, Seq(SentinelType)))
+      .writeStream.outputMode("append").format("parquet")
       .option("path", s"$run/out")
       .option("checkpointLocation", s"$run/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
     s.read.parquet(s"$run/out")
-  }
-
-  private def streamEvents(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // The file stream source requires a directory; expose the split copy
-    // (see splitEventsDir — 8 files, so the batch scan parallelizes) through
-    // symlinks in a scratch dir, re-linked when the dataset fingerprint moves.
-    // Pid-keyed like graft_append_/graft_sent_: the split
-    // dir the symlinks point INTO is pid-suffixed, so under a persistent
-    // shared tmpdir a later JVM whose fingerprint matches the marker would
-    // otherwise reuse links into an earlier process's reaped dir — dangling
-    // targets breaking every stream key.
-    val streamDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"),
-      s"graft_stream_${Integer.toHexString(dir.hashCode)}_${ProcessHandle.current().pid()}")
-    // marker lives BESIDE the `in/` glob target, never inside it (the
-    // source glob must only ever see parquet files)
-    val (splitDir, splitFp) = splitEventsDir(s, dir)
-    Tables.stage(streamDir.toString, splitFp) {
-      linkSplitEvents(java.nio.file.Files.createDirectories(streamDir.resolve("in")), splitDir)
-    }
-    val sch = Tables.t(s, dir, "events").schema
-    // The source path MUST be a glob (`dir/*`), not the bare dir: the
-    // events table is a single FILE in driver testdata but a DIRECTORY of
-    // part-files in Spark-written rehearsal data, and a non-glob listing
-    // skips nested directories — the bounded stream then sees ZERO files
-    // and every downstream result is silently empty (found by the sf1
-    // rehearsal: the foreach-batch upsert NPE'd on its never-created state
-    // dir). The glob expands to the symlinks and lists through them either way.
-    Tables.withEventTime(s.readStream.schema(sch).parquet(s"$streamDir/in/*"))
-  }
-
-  /** Scratch file-stream source: events.parquet symlinked beside sentinel
-    * rows carrying REAL event types (user_id = -1, year-2090 timestamps) —
-    * unlike the `__wm__` sentinel, these survive per-side `event_type`
-    * filters (which Catalyst pushes below the watermark node), so they
-    * advance BOTH sides' watermarks past every real row. That is what lets
-    * a bounded outer stream-stream join emit its unmatched-row nulls: an
-    * outer join only releases an unmatched buffered row once the watermark
-    * proves no future match can arrive. Callers filter `user_id = -1`
-    * artifacts from the sink.
-    */
-  private def streamEventsWithTypedSentinels(
-      s: SparkSession, dir: String, name: String, types: Seq[String]): () => DataFrame = {
-    import java.nio.file.{Files, Paths}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_sent_${name}_" +
-      s"${Integer.toHexString(dir.hashCode)}_${ProcessHandle.current().pid()}"
-    val sch = Tables.t(s, dir, "events").schema
-    // Staged input is immutable per (name, dir, types — encoded in `name`):
-    // reuse it across invocations (see runBoundedAppend); the sink-side
-    // checkpoint is the caller's and is always fresh.
-    val (splitDir, splitFp) = splitEventsDir(s, dir)
-    Tables.stage(base, splitFp) {
-      linkSplitEvents(Files.createDirectories(Paths.get(base, "in")), splitDir)
-      val sentTs = Tables.tsSentinel(sch("ts").dataType, SentinelEpochSec)
-      val rows = types.map(t =>
-        org.apache.spark.sql.Row(-1L, sentTs, -1L, t, 0.0, "{}"))
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), sch)
-        .write.parquet(s"$base/in/sentinels")
-    }
-    () => Tables.withEventTime(s.readStream.schema(sch).parquet(s"$base/in/*"))
   }
 
   /** Run a bounded streaming query into a memory sink and return the table. */
@@ -241,8 +227,7 @@ object Streams {
     // caps each micro-batch at one file, so a backlog of K files drains in
     // K bounded batches instead of one giant catch-up batch that OOMs the
     // state store — the knob that makes restarting a 100 TB file-fed
-    // pipeline after downtime survivable. The events table is split into 4
-    // deterministic user-hash files; the oracle's group count IS the
+    // pipeline after downtime survivable. The oracle's group count IS the
     // expected batch count, so equality proves the limiter actually split
     // the run (without it, AvailableNow drains everything in one batch).
     QueryDef(
@@ -252,35 +237,13 @@ object Streams {
           "SELECT CAST(count(*) AS BIGINT) AS n_batches, CAST(sum(n) AS BIGINT) AS total_rows, " +
           "CAST(max(n) AS BIGINT) AS max_batch_rows FROM g ORDER BY n_batches"),
       (s, d) => withStreamShuffle(s) {
-        import java.nio.file.{Files, Paths}
-        val base = s"${sys.props("java.io.tmpdir")}/graft_ratelimit_" +
-          s"${Integer.toHexString(d.hashCode)}"
-        Tables.stage(base, Tables.fingerprint(d, "events")) {
-          Files.createDirectories(Paths.get(s"$base/in"))
-          (0 until 4).foreach { g =>
-            val stage = s"$base/stage$g"
-            Tables.events(s, d).drop("ts_ts")
-              .where(pmod(col("user_id"), lit(4)) === g)
-              .coalesce(1).write.mode("overwrite").parquet(stage)
-            val part = {
-              import scala.jdk.CollectionConverters._
-              Files.list(Paths.get(stage)).iterator().asScala
-                .find(_.getFileName.toString.endsWith(".parquet")).get
-            }
-            Files.move(part, Paths.get(s"$base/in/f$g.parquet"))
-          }
-        }
-        val sch = s.read.parquet(s"$base/in").schema
         val batches = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-        val q = s.readStream.schema(sch)
-          .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-          .writeStream
-          .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        userHashSource(s, d).writeStream
+          .foreachBatch { (df: Dataset[Row], _: Long) =>
             val n = df.count(); if (n > 0) batches.add(n); ()
           }
-          .option("checkpointLocation", freshRunDir(base, "ckpt_"))
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          .option("checkpointLocation", runDir(d, "stream_rate_limited_ingest"))
+          .trigger(Trigger.AvailableNow()).start().awaitTermination()
         val counts = { import scala.jdk.CollectionConverters._; batches.asScala.toSeq }
         val sp = s
         import sp.implicits._
@@ -300,7 +263,7 @@ object Streams {
           "FROM (SELECT CAST(date_trunc('hour', CAST(ts AS TIMESTAMP)) AS TIMESTAMP) AS ws, " +
           "event_type, value FROM events) GROUP BY ws, event_type ORDER BY ws, event_type"),
       (s, d) => withStreamShuffle(s) {
-        runBoundedAppend(s, d, "j1") { src =>
+        runBoundedAppend(s, d, "stream_tumbling_window") { src =>
           src.withWatermark("ts_ts", "10 minutes")
             .groupBy(window(col("ts_ts"), "1 hour").as("w"), col("event_type"))
             .agg(count(lit(1)).as("n"), Q.out6(sum(Q.dec4(col("value")))).as("sum_val"))
@@ -319,7 +282,7 @@ object Streams {
           "time_bucket(INTERVAL '30 minutes', CAST(ts AS TIMESTAMP)) - INTERVAL 30 MINUTE]) AS ws " +
           "FROM events) GROUP BY ws, event_type ORDER BY ws, event_type"),
       (s, d) => withStreamShuffle(s) {
-        runBoundedAppend(s, d, "j2") { src =>
+        runBoundedAppend(s, d, "stream_sliding_window") { src =>
           src.withWatermark("ts_ts", "10 minutes")
             .groupBy(window(col("ts_ts"), "1 hour", "30 minutes").as("w"), col("event_type"))
             .agg(count(lit(1)).as("n"))
@@ -344,7 +307,7 @@ object Streams {
           "CAST(count(*) AS BIGINT) AS n FROM g GROUP BY user_id, sess " +
           "ORDER BY user_id, s_start"),
       (s, d) => withStreamShuffle(s) {
-        runBoundedAppend(s, d, "j3") { src =>
+        runBoundedAppend(s, d, "stream_session_window") { src =>
           src.withWatermark("ts_ts", "10 minutes")
             .groupBy(session_window(col("ts_ts"), "5 minutes").as("w"), col("user_id"))
             .agg(count(lit(1)).as("n"))
@@ -363,8 +326,7 @@ object Streams {
         "SELECT event_id, CAST(epoch_ms(ts) AS BIGINT) AS ts_ms, event_type, value " +
           "FROM events ORDER BY event_id"),
       (s, d) => withStreamShuffle(s) {
-        val once = streamEvents(s, d)
-        val twice = once.union(streamEvents(s, d))
+        val twice = eventSource(s, d, Nil).union(eventSource(s, d, Nil))
           .withWatermark("ts_ts", "10 minutes")
           .dropDuplicatesWithinWatermark("event_id")
           .select(col("event_id"), col("ts_ms"),
@@ -381,58 +343,39 @@ object Streams {
       "stream_late_data_drop",
       Some("SELECT TIMESTAMP '2024-01-01 09:00:00' AS ws, CAST(1 AS BIGINT) AS n"),
       (s, d) => withStreamShuffle(s) {
-        import java.nio.file.{Files, Paths}
-        import org.apache.spark.sql.Row
         import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
-        // The two input files are IMMUTABLE constants: stage them ONCE per
-        // JVM, so no timed repeat pays two parquet write jobs plus a
-        // recursive delete. They read no table, so their fingerprint is a
-        // constant tag. Only the checkpoint and sink must be fresh per run
-        // (the same split as runBoundedAppend). Each invocation gets a
-        // fresh run dir whose in/ is populated by SYMLINKS — f1 before run
-        // 1, f2 added before run 2 — preserving the two-stage file
-        // visibility the late-drop semantics depend on at zero Spark-job
-        // cost.
-        val stage = s"${sys.props("java.io.tmpdir")}/graft_late_stage_${ProcessHandle.current().pid()}"
-        Tables.stage(stage, "late-rows1") {
-          def mk(name: String, rows: Seq[String]): Unit =
+        // The two input files are constants read from no table, so they are
+        // staged once per root under a constant tag; the run dir's `in/`
+        // gains symlinks to f1 before run 1 and to f2 before run 2, which
+        // gives the two-stage file visibility the late-drop semantics need
+        // without a Spark job per run.
+        val rows = s"${root(d)}/late_rows"
+        Tables.stage(rows, "late-rows1") {
+          def mk(name: String, ts: String*): Unit =
             s.createDataFrame(
-                s.sparkContext.parallelize(
-                  rows.map(t => Row(java.sql.Timestamp.valueOf(t))), 1),
+                s.sparkContext.parallelize(ts.map(t => Row(java.sql.Timestamp.valueOf(t))), 1),
                 StructType(Seq(StructField("t", TimestampType))))
-              .write.parquet(s"$stage/$name")
-          mk("f1", Seq("2024-01-01 09:05:00", "2024-01-01 10:30:00"))
-          mk("f2", Seq("2024-01-01 09:10:00", "2024-01-01 11:30:00", "2024-01-01 13:00:00"))
+              .write.parquet(s"$rows/$name")
+          mk("f1", "2024-01-01 09:05:00", "2024-01-01 10:30:00")
+          mk("f2", "2024-01-01 09:10:00", "2024-01-01 11:30:00", "2024-01-01 13:00:00")
         }
-        val base = s"${sys.props("java.io.tmpdir")}/graft_late_${ProcessHandle.current().pid()}"
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-        val inDir = Paths.get(base, "in")
-        Files.createDirectories(inDir)
-        def link(name: String): Unit = {
-          val parts = new java.io.File(s"$stage/$name")
-            .listFiles((_, n) => n.endsWith(".parquet")).sortBy(_.getName)
-          parts.zipWithIndex.foreach { case (f, i) =>
-            Files.createSymbolicLink(inDir.resolve(s"$name-$i.parquet"), f.toPath)
-          }
-        }
-        def runOnce(): Unit = {
-          // memory sink cannot recover a checkpoint; the parquet sink can
-          val q = s.readStream.schema("t TIMESTAMP").parquet(s"$base/in/*")
+        val run = runDir(d, "stream_late_data_drop")
+        // memory sink cannot recover a checkpoint; the parquet sink can
+        def runWith(file: String): Unit = {
+          link(s"$rows/$file", Paths.get(run, "in"), s"$file-")
+          s.readStream.schema("t TIMESTAMP").parquet(s"$run/in/*")
             .withWatermark("t", "10 minutes")
             .groupBy(window(col("t"), "1 hour").as("w"))
             .agg(count(lit(1)).as("n"))
             .select(col("w.start").as("ws"), col("n"))
             .writeStream.outputMode("append").format("parquet")
-            .option("path", s"$base/out")
-            .option("checkpointLocation", s"$base/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
+            .option("path", s"$run/out")
+            .option("checkpointLocation", s"$run/ckpt")
+            .trigger(Trigger.AvailableNow()).start().awaitTermination()
         }
-        link("f1")
-        runOnce() // watermark now durably 10:20
-        link("f2")
-        runOnce() // 09:10 is late → dropped; 09:00 window closes with n=1
-        s.read.parquet(s"$base/out")
+        runWith("f1") // watermark now durably 10:20
+        runWith("f2") // 09:10 is late → dropped; 09:00 window closes with n=1
+        s.read.parquet(s"$run/out")
           .where(col("ws") === lit("2024-01-01 09:00:00").cast("timestamp"))
           .orderBy("ws")
       }),
@@ -450,11 +393,11 @@ object Streams {
           "AND c.user_id = p.user_id AND c.ts BETWEEN p.ts - INTERVAL 2 HOUR AND p.ts " +
           "ORDER BY p_id, c_id"),
       (s, d) => withStreamShuffle(s) {
-        val purchases = streamEvents(s, d).where(col("event_type") === "purchase")
+        val purchases = eventSource(s, d, Nil).where(col("event_type") === "purchase")
           .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
             col("ts_ts").as("p_ts"), col("ts_ms").as("p_ms"))
           .withWatermark("p_ts", "1 hour")
-        val clicks = streamEvents(s, d).where(col("event_type") === "click")
+        val clicks = eventSource(s, d, Nil).where(col("event_type") === "click")
           .select(col("event_id").as("c_id"), col("user_id").as("c_user"), col("ts_ts").as("c_ts"))
           .withWatermark("c_ts", "3 hours")
         val joined = purchases.join(clicks,
@@ -481,13 +424,12 @@ object Streams {
           "AND c.user_id = p.user_id AND c.ts BETWEEN p.ts - INTERVAL 2 HOUR AND p.ts " +
           "WHERE p.event_type = 'purchase' ORDER BY p_id, c_id"),
       (s, d) => withStreamShuffle(s) {
-        val src = streamEventsWithTypedSentinels(
-          s, d, "lojoin", Seq("purchase", "click"))
-        val purchases = src().where(col("event_type") === "purchase")
+        val sentinels = Seq("purchase", "click")
+        val purchases = eventSource(s, d, sentinels).where(col("event_type") === "purchase")
           .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
             col("ts_ts").as("p_ts"), col("ts_ms").as("p_ms"))
           .withWatermark("p_ts", "1 hour")
-        val clicks = src().where(col("event_type") === "click")
+        val clicks = eventSource(s, d, sentinels).where(col("event_type") === "click")
           .select(col("event_id").as("c_id"), col("user_id").as("c_user"), col("ts_ts").as("c_ts"))
           .withWatermark("c_ts", "3 hours")
         val joined = purchases.join(clicks,
@@ -510,29 +452,22 @@ object Streams {
       Some(
         "SELECT user_id, max(value) AS max_val FROM events GROUP BY user_id ORDER BY user_id"),
       (s, d) => withStreamShuffle(s) {
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
-        try {
-          s.conf.set(key,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        Session.withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
           val sp = s
           import sp.implicits._
-          val updated = streamEvents(s, d)
+          val updated = eventSource(s, d, Nil)
             .select(col("user_id"), col("value"))
             .as[(Long, Double)]
             .groupByKey(_._1)
             .transformWithState(new RunningMax, TimeMode.None(), OutputMode.Append())
             .toDF("user_id", "max_val")
           runToTable(updated, "graft_tws", "append").orderBy("user_id")
-        } finally prev match {
-          case Some(v) => s.conf.set(key, v)
-          case None => s.conf.unset(key)
         }
       }),
 
     // J6 — arbitrary stateful aggregation: per-user running (count, sum)
-    // via flatMapGroupsWithState. Sum kept in exact 1e-4 units (Long) so
-    // state merge order cannot perturb the result.
+    // via flatMapGroupsWithState.
     QueryDef(
       "stream_stateful_count",
       Some(
@@ -540,24 +475,8 @@ object Streams {
           "CAST(sum(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) AS sum_e4 " +
           "FROM events GROUP BY user_id ORDER BY user_id"),
       (s, d) => withStreamShuffle(s) {
-        val sp = s
-        import sp.implicits._
-        val updated = streamEvents(s, d)
-          .select(col("user_id"), col("value"))
-          .as[(Long, Double)]
-          .groupByKey(_._1)
-          .flatMapGroupsWithState[(Long, Long), (Long, Long, Long)](
-            OutputMode.Append, GroupStateTimeout.NoTimeout) {
-            (user: Long, rows: Iterator[(Long, Double)], state: GroupState[(Long, Long)]) =>
-              val (n0, s0) = state.getOption.getOrElse((0L, 0L))
-              var n = n0
-              var sum = s0
-              rows.foreach { case (_, v) => n += 1; sum += math.round(v * 10000) }
-              state.update((n, sum))
-              Iterator((user, n, sum))
-          }
-          .toDF("user_id", "n", "sum_e4")
-        runToTable(updated, "graft_j6", "append").orderBy("user_id")
+        runToTable(runningCountSum(eventSource(s, d, Nil)), "graft_j6", "append")
+          .orderBy("user_id")
       }),
 
     // J7 — foreachBatch upsert sink: the production pattern for
@@ -574,12 +493,11 @@ object Streams {
           "FROM events QUALIFY row_number() OVER (PARTITION BY user_id, event_type " +
           "ORDER BY ts DESC, event_id DESC) = 1 ORDER BY user_id, event_type"),
       (s, d) => {
-        val stateBase = s"${sys.props("java.io.tmpdir")}/graft_upsert_${Integer.toHexString(d.hashCode)}_${ProcessHandle.current().pid()}"
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stateBase))
+        val stateBase = runDir(d, "stream_foreach_batch_upsert")
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("user_id"), col("event_type"))
           .orderBy(col("ts").desc, col("event_id").desc)
-        val q = streamEvents(s, d)
+        eventSource(s, d, Nil)
           .select(col("user_id"), col("event_type"), col("event_id"), col("ts"),
             col("ts_ms"), col("value"))
           .writeStream
@@ -593,8 +511,7 @@ object Streams {
               .where(col("rn") === 1).drop("rn")
               .write.mode("overwrite").parquet(s"$stateBase/v$batchId")
           }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          .trigger(Trigger.AvailableNow()).start().awaitTermination()
         // listFiles() is null when NO micro-batch ran (source saw zero
         // files) — surface that as a diagnosis, not an opaque NPE.
         val versions = Option(new java.io.File(stateBase).listFiles())
@@ -607,27 +524,23 @@ object Streams {
           .orderBy("user_id", "event_type")
       }),
 
-    // J11 — checkpoint crash-recovery: the
-    // property every production stream relies on and no other key
-    // exercised — a query KILLED mid-stream resumes from its checkpoint
-    // and still produces the exactly-once result. Two-phase run over a
-    // 4-file staged input with maxFilesPerTrigger=1 (4 micro-batches —
-    // the minimum that commits two batches before the crash AND leaves
-    // two to drain after it; measured cost is dominated by the two-query
-    // checkpoint/state machinery, not batch count, so fewer files only
-    // trims the tail): phase 1 carries a deterministic foreachBatch bomb at
-    // batch 2, so batches 0-1 commit (offsets + state store v2 + sink)
-    // and the query dies; phase 2 restarts the SAME plan from the SAME
-    // checkpoint without the bomb and drains batches 2-3. The running (n, sum)
-    // state must survive the crash: per-user totals emitted after resume
-    // continue from phase-1 state, and the oracle equality over the
-    // max-n collapse proves no batch was lost or double-counted. The
-    // bomb throws BEFORE the sink write, and the collapse key (n) is
-    // monotone per user, so even a replayed batch (committed state, lost
-    // sink write — the at-least-once sink window) re-emits identical
-    // rows that max() absorbs. Input staging is done-marker memoized;
-    // checkpoint + sink are fresh per invocation (recovery IS the
-    // operator under test).
+    // J11 — checkpoint crash-recovery: a query KILLED mid-stream resumes
+    // from its checkpoint and still produces the exactly-once result. Two
+    // phases over the 4-batch user-hash source (the minimum that commits
+    // two batches before the crash AND leaves two to drain after it; the
+    // cost is the two-query checkpoint/state machinery, not batch count):
+    // phase 1 carries a deterministic foreachBatch bomb at batch 2, so
+    // batches 0-1 commit (offsets + state store v2 + sink) and the query
+    // dies; phase 2 restarts the SAME plan from the SAME checkpoint without
+    // the bomb and drains batches 2-3. The running (n, sum) state must
+    // survive the crash: per-user totals emitted after resume continue from
+    // phase-1 state, and the oracle equality over the max-n collapse proves
+    // no batch was lost or double-counted. The bomb throws BEFORE the sink
+    // write, and the collapse key (n) is monotone per user, so even a
+    // replayed batch (committed state, lost sink write — the at-least-once
+    // sink window) re-emits identical rows that max() absorbs. The
+    // checkpoint and sink are fresh per invocation: recovery IS the
+    // operator under test.
     QueryDef(
       "stream_checkpoint_recovery",
       Some(
@@ -635,56 +548,16 @@ object Streams {
           "CAST(sum(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) AS sum_e4 " +
           "FROM events GROUP BY user_id ORDER BY user_id"),
       (s, d) => withStreamShuffle(s) {
-        import java.nio.file.{Files, Paths}
-        val sp = s
-        import sp.implicits._
-        val base = s"${sys.props("java.io.tmpdir")}/graft_ckptrec4_" +
-          s"${Integer.toHexString(d.hashCode)}"
-        Tables.stage(base, Tables.fingerprint(d, "events")) {
-          Files.createDirectories(Paths.get(s"$base/in"))
-          (0 until 4).foreach { g =>
-            val stage = s"$base/stage$g"
-            Tables.events(s, d).drop("ts_ts")
-              .where(pmod(col("user_id"), lit(4)) === g)
-              .coalesce(1).write.mode("overwrite").parquet(stage)
-            val part = {
-              import scala.jdk.CollectionConverters._
-              val listing = Files.list(Paths.get(stage))
-              try listing.iterator().asScala
-                .find(_.getFileName.toString.endsWith(".parquet")).get
-              finally listing.close()
-            }
-            Files.move(part, Paths.get(s"$base/in/f$g.parquet"))
+        val counts = runningCountSum(userHashSource(s, d))
+        val run = runDir(d, "stream_checkpoint_recovery")
+        def phase(bombAt: Long) = counts.writeStream
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
+            if (batchId == bombAt)
+              throw new IllegalStateException("graft-injected-crash")
+            batch.write.mode("append").parquet(s"$run/out")
           }
-        }
-        val run = freshRunDir(base, "run_")
-        val sch = s.read.parquet(s"$base/in").schema
-        def phase(bombAt: Long) = {
-          val counts = s.readStream.schema(sch)
-            .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-            .select(col("user_id"), col("value"))
-            .as[(Long, Double)]
-            .groupByKey(_._1)
-            .flatMapGroupsWithState[(Long, Long), (Long, Long, Long)](
-              OutputMode.Append, GroupStateTimeout.NoTimeout) {
-              (user: Long, rows: Iterator[(Long, Double)], state: GroupState[(Long, Long)]) =>
-                val (n0, s0) = state.getOption.getOrElse((0L, 0L))
-                var n = n0
-                var sum = s0
-                rows.foreach { case (_, v) => n += 1; sum += math.round(v * 10000) }
-                state.update((n, sum))
-                Iterator((user, n, sum))
-            }
-            .toDF("user_id", "n", "sum_e4")
-          counts.writeStream
-            .foreachBatch { (batch: DataFrame, batchId: Long) =>
-              if (batchId == bombAt)
-                throw new IllegalStateException("graft-injected-crash")
-              batch.write.mode("append").parquet(s"$run/out")
-            }
-            .option("checkpointLocation", s"$run/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-        }
+          .option("checkpointLocation", s"$run/ckpt")
+          .trigger(Trigger.AvailableNow()).start()
         val crashed =
           try { phase(2L).awaitTermination(); false }
           catch {
@@ -722,7 +595,7 @@ object Streams {
           "CAST(sum(hn) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS n_hours " +
           "FROM h GROUP BY 1, 2 ORDER BY ws4, event_type"),
       (s, d) => withStreamShuffle(s) {
-        runBoundedAppend(s, d, "jchain") { src =>
+        runBoundedAppend(s, d, "stream_chained_agg") { src =>
           src.withWatermark("ts_ts", "10 minutes")
             .groupBy(window(col("ts_ts"), "1 hour").as("w"), col("event_type"))
             .agg(count(lit(1)).as("hn"))

@@ -4,7 +4,7 @@ import graft.fhir.{FhirAnnotations, UcumGrammar}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** UCUM grammar parser: worked examples over the full expression grammar,
-  * consistency with the curated conversion table it generalizes, and
+  * the clinical conversion table generated from it, and
   * coverage of every quantity code in the golden Observation data (where
   * the golden files are present).
   */
@@ -71,15 +71,25 @@ class UcumSpec extends AnyFunSuite {
     assert(off == 0.0)
   }
 
-  test("grammar reproduces the curated clinical table (6 dp approximations)") {
-    FhirAnnotations.ucumTable.foreach { case (code, fS, oS, curCanon) =>
-      val (cc, cf, co) = canon(code)
-      assert(cc == curCanon, s"$code: canon $cc != curated $curCanon")
-      val (curF, curO) = (fS.toDouble, oS.toDouble)
-      val tolF = math.max(5e-7, 5e-7 * math.abs(curF))
-      assert(math.abs(cf - curF) <= tolF,
-        s"$code: factor $cf vs curated $curF (6 dp)")
-      assert(math.abs(co - curO) <= 5e-7, s"$code: offset $co vs curated $curO")
+  test("clinical table: grammar factors and offsets rounded once to 6 dp") {
+    val table = FhirAnnotations.ucumTable.map { case (c, f, o, k) => c -> (k, f, o) }.toMap
+    assert(FhirAnnotations.ucumTable.size == 24 && table.size == 24)
+    // the non-terminating factors and the mercury column, exactly
+    assert(table("/min") == (("/s", "0.016667", "0")))
+    assert(table("/h") == (("/s", "0.000278", "0")))
+    assert(table("[degF]") == (("K", "0.555556", "255.372222")))
+    assert(table("mm[Hg]") == (("Pa", "133.322387", "0")))
+    assert(table("Cel") == (("K", "1", "273.15")))
+    assert(table("wk") == (("s", "604800", "0")))
+    // every row lies within half a unit of the 6th place of its exact value
+    val halfUlp = new java.math.BigDecimal("0.0000005")
+    FhirAnnotations.ucumTable.foreach { case (code, f, o, k) =>
+      val (cc, ef, eo) = UcumGrammar.canonicalExact(code).get
+      assert(cc == k, s"$code: canon $cc != table $k")
+      assert(ef.subtract(new java.math.BigDecimal(f)).abs.compareTo(halfUlp) <= 0,
+        s"$code: factor $f vs exact $ef")
+      assert(eo.subtract(new java.math.BigDecimal(o)).abs.compareTo(halfUlp) <= 0,
+        s"$code: offset $o vs exact $eo")
     }
   }
 

@@ -60,17 +60,39 @@ class StreamSpec extends AnyFunSuite {
     assert(streamed == batch)
   }
 
-  test("rate-limited ingest and checkpoint recovery keep one run dir under their staged base") {
-    // Each run needs a fresh checkpoint; the previous run's dir is deleted
-    // first, so repeated runs leave one, not one per run.
+  test("sweep: every stream key twice: same rows, conf, one root") {
+    // Each key runs twice on the same dataset: the second run must reuse
+    // the staged inputs and start from a fresh run dir, so both give the
+    // same rows; the session conf must come back unchanged; and the stream
+    // root must hold the split copy once beside the other staged inputs,
+    // with one run dir per key that writes a checkpoint, sink or state.
     val sf = SparkTestBase.sf
-    val hex = Integer.toHexString(sf.hashCode)
-    Seq(("stream_rate_limited_ingest", "graft_ratelimit_", "ckpt_"),
-        ("stream_checkpoint_recovery", "graft_ckptrec4_", "run_")).foreach { case (key, base, prefix) =>
-      (1 to 2).foreach(_ => graft.SparkEntry.queries(key)(spark, sf).collect())
-      val dir = new java.io.File(s"${sys.props("java.io.tmpdir")}/$base$hex")
-      val runs = dir.listFiles((_, n) => n.startsWith(prefix)).map(_.getName).toSeq
-      assert(runs.size == 1, s"$key left ${runs.size} $prefix dirs in $dir: $runs")
+    val keys = graft.stream.Streams.defs.map(_.key)
+    assert(keys.size == 13, keys)
+    def run(key: String): Seq[String] = {
+      val before = spark.conf.getAll
+      val rows = graft.SparkEntry.queries(key)(spark, sf).collect().map(_.toString).sorted.toSeq
+      val after = spark.conf.getAll
+      val changed = (before.toSet diff after.toSet) ++ (after.toSet diff before.toSet)
+      assert(changed.isEmpty, s"$key changed the session conf: $changed")
+      rows
     }
+    keys.foreach { key =>
+      val first = run(key)
+      assert(first.nonEmpty, s"$key returned no rows")
+      assert(run(key) == first, s"$key: the second run differs from the first")
+    }
+    val root = new java.io.File(
+      s"${graft.Tables.stagingDir("graft_stream", sf)}_${ProcessHandle.current().pid()}")
+    val (runs, staged) = root.list().toSeq.partition(_.startsWith("run_"))
+    assert(staged.toSet == Set("split", "src", "src___wm__", "src_purchase_click", "byuser", "late_rows"),
+      s"staged children of $root: $staged")
+    val runKeys = Seq("stream_rate_limited_ingest", "stream_tumbling_window",
+      "stream_sliding_window", "stream_session_window", "stream_late_data_drop",
+      "stream_foreach_batch_upsert", "stream_checkpoint_recovery", "stream_chained_agg")
+    runKeys.foreach { k =>
+      assert(runs.count(_.startsWith(s"run_${k}_")) == 1, s"$k run dirs in $root: $runs")
+    }
+    assert(runs.size == runKeys.size, s"run dirs in $root: $runs")
   }
 }
