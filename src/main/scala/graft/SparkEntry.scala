@@ -25,11 +25,17 @@ object SparkEntry {
     *   - staged input layouts (a Spark write job runs once per dataset
     *     fingerprint, `Tables.stage`; repeats time only the read path,
     *     which IS the operator under test): manifest/lineage dirs,
-    *     bloom/partitioned layouts, the fhir merge projections, the staged
+    *     bloom/partitioned layouts, the fhir merge projections (keyed on
+    *     the Patient table `Tables.fhirDir` resolves), the staged
     *     kernel tables, and the stream input staging — every stream key
     *     whose source is the staged split events copy (symlinks, plus
     *     sentinel parquet where the key needs one), the rate-limit and
     *     recovery file sets, and the late-data rows.
+    * The FHIR tables every fhir_* and opt_* key reads resolve through
+    * `Tables.fhirDir`: `<d>/fhir`, else the golden files, else the NDJSON
+    * fixture, which is staged only where the golden files are absent, once
+    * per fixture content and before any timed repeat; no key is flagged
+    * for it.
     * dedup_minhash_near is NOT here: it recomputes its pair pipeline fresh
     * on every invocation and only swaps the memo for its siblings.
     * Maintained centrally (the flag is a bench-protocol property, not plan

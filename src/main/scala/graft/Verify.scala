@@ -1,5 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -19,21 +22,27 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // Jackson escapes every control char, so a tab or CR in an oracle
+    // cannot make the driver's json.load fail and zero the correctness result
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .writeValueAsString(oracleSql(spark, sfDir).asJava)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+  }
+
+  /** [[SparkEntry.oracleSql]] with each FHIR table's golden path (the form
+    * `Tables.fhirScan` writes) replaced by the table `Tables.fhirDir`
+    * resolves for `sfDir`, so Spark and DuckDB read the same files. Where
+    * the golden files exist nothing changes. A Spark-written table is a
+    * dir of part files, which DuckDB reads through a glob.
+    */
+  def oracleSql(spark: SparkSession, sfDir: String): Map[String, String] = {
+    val fhirPath = (java.util.regex.Pattern.quote(Tables.goldenDir) + """/(\w+)\.parquet""").r
+    SparkEntry.oracleSql.map { case (k, sql) =>
+      k -> fhirPath.replaceAllIn(sql, m => {
+        val p = s"${Tables.fhirDir(spark, sfDir, m.group(1))}/${m.group(1)}.parquet"
+        Regex.quoteReplacement(if (Files.isDirectory(Paths.get(p))) s"$p/*.parquet" else p)
+      })
+    }
   }
 }

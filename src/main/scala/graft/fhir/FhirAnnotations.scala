@@ -104,7 +104,6 @@ object FhirAnnotations {
       Option.when(leaf.dataType == StringType)(
         Seq(StructField(s"__${leaf.name}_start", TimestampType), StructField(s"__${leaf.name}_end", TimestampType)))
     }.getOrElse {
-      FhirDateTimeExpr.register(df.sparkSession)
       def start(c: Column) = call_function("fhir_dt_start", c)
       def end(c: Column) = call_function("fhir_dt_end", c)
       annotatePath(df, path)(

@@ -1,6 +1,5 @@
 package graft.fhir
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{AbstractDataType, DataType, StringType, TimestampType}
@@ -51,14 +50,4 @@ case class FhirDateTimeStart(child: Expression) extends FhirDateTimeBound {
 case class FhirDateTimeEnd(child: Expression) extends FhirDateTimeBound {
   override protected def helperName: String = "endMicrosBoxed"
   override protected def withNewChildInternal(newChild: Expression): Expression = copy(newChild)
-}
-
-object FhirDateTimeExpr {
-  /** Session-scoped SQL registration: fhir_dt_start(col) / fhir_dt_end(col). */
-  def register(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fhir_dt_start", exprs => FhirDateTimeStart(exprs.head), "internal")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fhir_dt_end", exprs => FhirDateTimeEnd(exprs.head), "internal")
-  }
 }

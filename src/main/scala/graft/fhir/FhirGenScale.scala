@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** FHIR scale-rehearsal generator: replicates the FHIR resources that
-  * `base` resolves to (`Tables.golden(s, name, base)`: its own `fhir/`
-  * tables when it has them, else the reference's golden files) K× so the
+  * `base` resolves to (`Tables.fhirDir`: its own `fhir/` tables when it
+  * has them, else the golden files, else the staged fixture) K× so the
   * fhir_* keys can run through the same decade rehearsals as the
   * relational/LLM keys — the reference's own query-acceleration premise
   * (README.md:301-309) otherwise never executes above its 100-row examples.
@@ -26,9 +26,10 @@ import org.apache.spark.sql.functions._
   * Layout: `<dst>/fhir/{Patient,Observation,ExplanationOfBenefit}.parquet`
   * (Spark-written, so scans parallelize across part files), plus symlinks
   * to every base table of `<base>` in `<dst>` so the bench anchors (and any
-  * mixed key) resolve against the same dir. Never compare replicated-run
-  * VALUES to the golden-path DuckDB oracles — the oracle paths are static
-  * golden literals; FhirScaleSpec asserts the scale-invariants instead.
+  * mixed key) resolve against the same dir. Verify points each FHIR
+  * oracle at the tables `Tables.fhirDir` resolves, so over such a dir the
+  * oracles read the replicated tables; FhirScaleSpec asserts the
+  * scale-invariants.
   */
 object FhirGenScale {
 
@@ -38,7 +39,7 @@ object FhirGenScale {
   private[fhir] def replicate(
       s: SparkSession, name: String, k: Int, refCols: Seq[String],
       base: String): org.apache.spark.sql.DataFrame = {
-    val df = Tables.golden(s, name, base)
+    val df = Tables.fhir(s, name, base)
     val reps = df.withColumn("__rep", explode(lit((0 until k).toArray)))
     val suffixed = refCols.foldLeft(
       reps.withColumn("id", concat(col("id"), lit("-"), col("__rep")))) { (acc, rc) =>

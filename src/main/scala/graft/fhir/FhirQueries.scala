@@ -1,20 +1,22 @@
 package graft.fhir
 
 import graft.{Q, QueryDef, Tables}
+import graft.Tables.fhirScan
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-/** SURVEY §2.A — the reference's own surface as queries over its golden
-  * files (/root/reference/examples). sfDir selects the VOLUME: when the
-  * dataset dir carries a `fhir/` subdir of FhirGenScale-replicated
-  * resources, every key runs at that scale; the driver's sf dirs don't, so
-  * the correctness gate reads the fixed-location golden fixtures the
-  * static DuckDB oracles embed.
+/** SURVEY §2.A — the reference's own surface as queries over the FHIR
+  * resource tables of the dataset dir, read where `Tables.fhirDir` resolves
+  * them: a `fhir/` subdir of FhirGenScale-replicated resources runs every
+  * key at that scale; otherwise the golden files, else the staged NDJSON
+  * fixture. The oracles name the golden files (`Tables.fhirScan`), and
+  * Verify rewrites them to the resolved tables.
   */
 object FhirQueries {
 
-  private val G = Tables.goldenDir
+  /** opt_annotation_rewrite's annotated Patient, one dir per JVM. */
+  private lazy val annotatedDir = Tables.tempDir("graft_annotated_patient")
 
   val defs: Seq[QueryDef] = Seq(
     // A1 — schema derivation: decode the golden Patient table to NDJSON,
@@ -61,7 +63,7 @@ object FhirQueries {
           "('telecom[].value', 'string'), ('text.div', 'string'), " +
           "('text.status', 'string')) AS t(path, dtype) ORDER BY path"),
       (s, d) => {
-        val ndjson = FhirCodec.decode(Tables.golden(s, "Patient", d))
+        val ndjson = FhirCodec.decode(Tables.fhir(s, "Patient", d))
         val schema = FhirSchema.deriveSchema(s, ndjson)
         import s.implicits._
         FhirSchema.leaves(schema).toDF("path", "dtype").orderBy("path")
@@ -126,9 +128,9 @@ object FhirQueries {
       "fhir_decode",
       Some(
         "SELECT id, resourceType = 'Patient' AS rt_ok " +
-          s"FROM read_parquet('$G/Patient.parquet') ORDER BY id"),
+          s"FROM ${fhirScan("Patient")} ORDER BY id"),
       (s, d) =>
-        FhirCodec.decode(Tables.golden(s, "Patient", d))
+        FhirCodec.decode(Tables.fhir(s, "Patient", d))
           .toDF("value")
           .select(
             get_json_object(col("value"), "$.id").as("id"),
@@ -141,12 +143,12 @@ object FhirQueries {
       "fhir_roundtrip",
       Some(
         s"SELECT CAST(count(*) AS BIGINT) AS n_rows, CAST(count(DISTINCT id) AS BIGINT) AS nd_ids " +
-          s"FROM read_parquet('$G/Observation.parquet')"),
+          s"FROM ${fhirScan("Observation")}"),
       (s, d) => {
         // decode runs ONCE: schema inference (spark.read.json) and the
         // re-encode both consume the checkpointed strings instead of each
         // re-running scan+decode.
-        val ndjson = graft.Ckpt(FhirCodec.decode(Tables.golden(s, "Observation", d)))._1
+        val ndjson = graft.Ckpt(FhirCodec.decode(Tables.fhir(s, "Observation", d)))._1
         val schema = FhirSchema.deriveSchema(s, ndjson)
         val back = FhirCodec.encode(s, ndjson, schema)
         back.agg(count(lit(1)).as("n_rows"), countDistinct(col("id")).as("nd_ids"))
@@ -158,21 +160,18 @@ object FhirQueries {
       "fhir_schema_merge",
       Some(
         s"SELECT * FROM (SELECT id, gender, CAST(NULL AS VARCHAR) AS birthDate " +
-          s"FROM read_parquet('$G/Patient.parquet') UNION ALL " +
-          s"SELECT id, CAST(NULL AS VARCHAR) AS gender, birthDate FROM read_parquet('$G/Patient.parquet')) " +
+          s"FROM ${fhirScan("Patient")} UNION ALL " +
+          s"SELECT id, CAST(NULL AS VARCHAR) AS gender, birthDate FROM ${fhirScan("Patient")}) " +
           "ORDER BY id, gender NULLS FIRST, birthDate NULLS FIRST"),
       (s, d) => {
-        val p = Tables.golden(s, "Patient", d)
-        // tmp path carries the dataset hash: with dataset-aware golden
-        // resolution the staged projections are no longer invariant per JVM
-        // — a rehearsal dir and the golden dir must not share a staging.
-        val tmp = s"${sys.props("java.io.tmpdir")}/graft_fhir_merge_" +
-          s"${Integer.toHexString(d.hashCode)}_${ProcessHandle.current().pid()}"
-        // The two projections are staged once per Patient file, so repeats
+        val dir = Tables.fhirDir(s, d, "Patient")
+        val p = Tables.t(s, dir, "Patient")
+        // The two projections are staged once per Patient table, so repeats
         // pay only the mergeSchema READ — the operator under test. The
-        // fingerprint covers both places golden() may resolve Patient to.
-        Tables.stage(tmp, Tables.fingerprint(s"$d/fhir", "Patient") + ";" +
-            Tables.fingerprint(Tables.goldenDir, "Patient")) {
+        // fingerprint names the resolved table, so a rehearsal dir and the
+        // golden files never share a staging.
+        val tmp = Tables.stagingDir("graft_fhir_merge", d)
+        Tables.stage(tmp, Tables.fingerprint(dir, "Patient")) {
           p.select("id", "gender").write.mode("overwrite").parquet(s"$tmp/a")
           p.select("id", "birthDate").write.mode("overwrite").parquet(s"$tmp/b")
         }
@@ -203,13 +202,13 @@ object FhirQueries {
             "CAST(count(resourceType) AS BIGINT) AS n_checked, " +
             "CAST(count(*) - count(resourceType) + CASE WHEN count(DISTINCT resourceType) = 1 THEN 0 ELSE 1 END " +
             s"+ count(CASE WHEN resourceType NOT IN ($vs) THEN 1 END) AS BIGINT) AS n_bad " +
-            s"FROM read_parquet('$G/$n.parquet')"
+            s"FROM ${fhirScan(n)}"
         } ++ FhirConformance.checks.map { case (tbl, field, typ) =>
           val re = FhirConformance.regex(typ)
           s"SELECT '$tbl' AS tbl, '$field' AS field, '$typ' AS fhir_type, " +
             s"CAST(count($field) AS BIGINT) AS n_checked, " +
             s"CAST(count(CASE WHEN NOT regexp_matches($field, '^($re)$$') THEN 1 END) AS BIGINT) AS n_bad " +
-            s"FROM read_parquet('$G/$tbl.parquet')"
+            s"FROM ${fhirScan(tbl)}"
         } ++ Seq {
           // UCUM linear-scale rule: quantity codes on a special
           // (logarithmic / pH) scale cannot be linear-canonicalized — A8
@@ -224,7 +223,7 @@ object FhirQueries {
             "'ucum-linear-scale' AS fhir_type, " +
             "CAST(count(valueQuantity.code) AS BIGINT) AS n_checked, " +
             s"CAST(count(CASE WHEN valueQuantity.code IN ($specials) THEN 1 END) AS BIGINT) AS n_bad " +
-            s"FROM read_parquet('$G/Observation.parquet')"
+            s"FROM ${fhirScan("Observation")}"
         }).mkString("SELECT * FROM (", " UNION ALL ", ") ORDER BY tbl, field"),
       ),
       (s, d) =>
@@ -262,7 +261,7 @@ object FhirQueries {
                   lit("ucum-linear-scale").as("fhir_type"),
                   col("nc_ucum").as("n_checked"), col("nb_ucum").as("n_bad")))
                  else Nil))
-          Tables.golden(s, tbl, d)
+          Tables.fhir(s, tbl, d)
             .agg(aggCols.head, aggCols.tail: _*)
             .select(explode(array(entries: _*)).as("r"))
             .select(lit(tbl).as("tbl"), col("r.field").as("field"),
@@ -279,10 +278,9 @@ object FhirQueries {
           "CAST(birthDate AS TIMESTAMP) + INTERVAL 1 DAY - INTERVAL 1 MILLISECOND AS bd_end, " +
           "timezone('UTC', CAST(deceasedDateTime AS TIMESTAMPTZ)) AS dd_start, " +
           "timezone('UTC', CAST(deceasedDateTime AS TIMESTAMPTZ)) + INTERVAL 999 MILLISECOND AS dd_end " +
-          s"FROM read_parquet('$G/Patient.parquet') ORDER BY id"),
+          s"FROM ${fhirScan("Patient")} ORDER BY id"),
       (s, d) => {
-        FhirDateTimeExpr.register(s)
-        val p = FhirAnnotations.annotateRange(Tables.golden(s, "Patient", d), "birthDate")
+        val p = FhirAnnotations.annotateRange(Tables.fhir(s, "Patient", d), "birthDate")
         p.select(
           col("id"), col("birthDate"),
           col("__birthDate_start").as("bd_start"),
@@ -306,12 +304,12 @@ object FhirQueries {
           "timezone('UTC', CAST(e.billablePeriod.start AS TIMESTAMPTZ)) + INTERVAL 999 MILLISECOND AS bp_end, " +
           "timezone('UTC', CAST(it.servicedPeriod.start AS TIMESTAMPTZ)) AS sp_start, " +
           "timezone('UTC', CAST(it.servicedPeriod.start AS TIMESTAMPTZ)) + INTERVAL 999 MILLISECOND AS sp_end " +
-          s"FROM read_parquet('$G/ExplanationOfBenefit.parquet') e, unnest(e.item) AS t(it) " +
+          s"FROM ${fhirScan("ExplanationOfBenefit")} e, unnest(e.item) AS t(it) " +
           "ORDER BY id, seq"),
       (s, d) => {
         val a = FhirAnnotations.annotateRange(
           FhirAnnotations.annotateRange(
-            Tables.golden(s, "ExplanationOfBenefit", d), "billablePeriod.start"),
+            Tables.fhir(s, "ExplanationOfBenefit", d), "billablePeriod.start"),
           "item.servicedPeriod.start")
         a.select(col("id"),
             col("billablePeriod.__start_start").as("bp_start"),
@@ -333,9 +331,9 @@ object FhirQueries {
           "CAST(valueQuantity.value AS DECIMAL(38,6))::DOUBLE AS val_num, " +
           "valueQuantity.__value_numeric::DOUBLE AS file_num, " +
           "CAST(valueQuantity.value AS DECIMAL(38,6)) = valueQuantity.__value_numeric AS matches " +
-          s"FROM read_parquet('$G/Observation.parquet') WHERE valueQuantity.value IS NOT NULL ORDER BY id"),
+          s"FROM ${fhirScan("Observation")} WHERE valueQuantity.value IS NOT NULL ORDER BY id"),
       (s, d) =>
-        Tables.golden(s, "Observation", d)
+        Tables.fhir(s, "Observation", d)
           .where(col("valueQuantity.value").isNotNull)
           .select(
             col("id"),
@@ -352,11 +350,11 @@ object FhirQueries {
       Some(
         "SELECT id, valueQuantity.code AS code, valueQuantity.value AS val_str, ucum.canon AS canon_code, " +
           "CAST(CAST(valueQuantity.value AS DECIMAL(18,6)) * ucum.factor + ucum.off AS DECIMAL(38,6))::DOUBLE AS canon_value " +
-          s"FROM read_parquet('$G/Observation.parquet') LEFT JOIN ${FhirAnnotations.ucumValuesSql} " +
+          s"FROM ${fhirScan("Observation")} LEFT JOIN ${FhirAnnotations.ucumValuesSql} " +
           "ON valueQuantity.code = ucum.code WHERE valueQuantity.value IS NOT NULL ORDER BY id"),
       (s, d) =>
         // the materialized sibling group (README.md:711-717), read back flat
-        FhirAnnotations.canonicalize(Tables.golden(s, "Observation", d), "valueQuantity")
+        FhirAnnotations.canonicalize(Tables.fhir(s, "Observation", d), "valueQuantity")
           .where(col("valueQuantity.value").isNotNull)
           .select(
             col("id"),
@@ -383,7 +381,7 @@ object FhirQueries {
       Some(
         "SELECT id, valueQuantity.code AS code, ucum.canon AS canon_code, " +
           "round(CAST(valueQuantity.value AS DOUBLE) * ucum.factor + ucum.off, 6) AS canon_value " +
-          s"FROM read_parquet('$G/Observation.parquet') LEFT JOIN ${UcumGrammar.vocabValuesSql} " +
+          s"FROM ${fhirScan("Observation")} LEFT JOIN ${UcumGrammar.vocabValuesSql} " +
           "ON valueQuantity.code = ucum.code WHERE valueQuantity.value IS NOT NULL " +
           "ORDER BY id, code"),
       (s, d) => {
@@ -394,7 +392,7 @@ object FhirQueries {
         // LEFT join: a code outside the vocabulary passes through with null
         // canon_code/canon_value ("left unconverted") rather than vanishing
         // — the oracle mirrors with LEFT JOIN.
-        Tables.golden(s, "Observation", d)
+        Tables.fhir(s, "Observation", d)
           .where(col("valueQuantity.value").isNotNull)
           .join(broadcast(vocab), col("valueQuantity.code") === col("ucode"), "left")
           .select(
@@ -414,15 +412,16 @@ object FhirQueries {
     QueryDef(
       "opt_annotation_rewrite",
       Some(
-        "SELECT id, birthDate FROM read_parquet('" + G + "/Patient.parquet') " +
+        s"SELECT id, birthDate FROM ${fhirScan("Patient")} " +
           "WHERE CAST(birthDate AS TIMESTAMP) >= TIMESTAMP '1990-01-01' ORDER BY id"),
       (s, d) => {
         graft.opt.AnnotationRewrite.install(s)
         // materialize a spec table carrying its annotation columns — the
         // rule targets tables at rest, where __birthDate_start is a real
-        // parquet column with min/max stats
-        val tmp = s"${sys.props("java.io.tmpdir")}/graft_annotated_patient_${ProcessHandle.current().pid()}"
-        FhirAnnotations.annotateRange(Tables.golden(s, "Patient", d), "birthDate")
+        // parquet column with min/max stats; the write stays inside the key
+        // (it is part of the timed ingest-and-query work)
+        val tmp = annotatedDir
+        FhirAnnotations.annotateRange(Tables.fhir(s, "Patient", d), "birthDate")
           .write.mode("overwrite").parquet(tmp)
         s.read.parquet(tmp)
           .where(col("birthDate").cast("timestamp") >= lit("1990-01-01").cast("timestamp"))
@@ -439,12 +438,12 @@ object FhirQueries {
       "opt_numeric_rewrite",
       Some(
         "SELECT id, valueQuantity.value AS val_str " +
-          s"FROM read_parquet('$G/Observation.parquet') " +
+          s"FROM ${fhirScan("Observation")} " +
           "WHERE CAST(valueQuantity.value AS DOUBLE) >= 40.0 " +
           "AND CAST(valueQuantity.value AS DOUBLE) < 80.0 ORDER BY id"),
       (s, d) => {
         graft.opt.AnnotationRewrite.install(s)
-        Tables.golden(s, "Observation", d)
+        Tables.fhir(s, "Observation", d)
           .where(col("valueQuantity.value").cast("double") >= 40.0 &&
             col("valueQuantity.value").cast("double") < 80.0)
           .select(col("id"), col("valueQuantity.value").as("val_str"))
@@ -461,11 +460,11 @@ object FhirQueries {
       Some(
         "SELECT id, code.text AS code_text, valueQuantity.value AS val_str, " +
           "valueQuantity.__value_numeric::DOUBLE AS val_num " +
-          s"FROM read_parquet('$G/Observation.parquet') " +
+          s"FROM ${fhirScan("Observation")} " +
           "WHERE len(list_filter(code.coding, c -> c.\"system\" = 'http://loinc.org' AND c.code = '29463-7')) > 0 " +
           "ORDER BY id"),
       (s, d) =>
-        Tables.golden(s, "Observation", d)
+        Tables.fhir(s, "Observation", d)
           .where(expr("exists(code.coding, c -> c.system = 'http://loinc.org' AND c.code = '29463-7')"))
           .select(col("id"), col("code.text").as("code_text"),
             col("valueQuantity.value").as("val_str"),
@@ -482,22 +481,21 @@ object FhirQueries {
       Some(
         "WITH t AS (" +
           "SELECT subject.reference AS ref, 'observation' AS kind, " +
-          s"timezone('UTC', CAST(effectiveDateTime AS TIMESTAMPTZ)) AS at FROM read_parquet('$G/Observation.parquet') " +
+          s"timezone('UTC', CAST(effectiveDateTime AS TIMESTAMPTZ)) AS at FROM ${fhirScan("Observation")} " +
           "UNION ALL SELECT patient.reference, 'claim', " +
-          s"timezone('UTC', CAST(billablePeriod.start AS TIMESTAMPTZ)) FROM read_parquet('$G/ExplanationOfBenefit.parquet')) " +
+          s"timezone('UTC', CAST(billablePeriod.start AS TIMESTAMPTZ)) FROM ${fhirScan("ExplanationOfBenefit")}) " +
           "SELECT p.id AS patient_id, t.kind AS kind, t.at AS at, " +
           "CAST(row_number() OVER (PARTITION BY p.id ORDER BY t.at, t.kind) AS BIGINT) AS seq " +
-          s"FROM t JOIN read_parquet('$G/Patient.parquet') p ON t.ref = 'Patient/' || p.id " +
+          s"FROM t JOIN ${fhirScan("Patient")} p ON t.ref = 'Patient/' || p.id " +
           "ORDER BY patient_id, seq"),
       (s, d) => {
-        FhirDateTimeExpr.register(s)
-        val obs = Tables.golden(s, "Observation", d)
+        val obs = Tables.fhir(s, "Observation", d)
           .select(col("subject.reference").as("ref"), lit("observation").as("kind"),
             expr("fhir_dt_start(effectiveDateTime)").as("at"))
-        val eob = Tables.golden(s, "ExplanationOfBenefit", d)
+        val eob = Tables.fhir(s, "ExplanationOfBenefit", d)
           .select(col("patient.reference").as("ref"), lit("claim").as("kind"),
             expr("fhir_dt_start(billablePeriod.start)").as("at"))
-        val p = Tables.golden(s, "Patient", d)
+        val p = Tables.fhir(s, "Patient", d)
         val t = obs.unionByName(eob)
         val w = Window.partitionBy(col("patient_id")).orderBy(col("at"), col("kind"))
         t.join(broadcast(p), t("ref") === concat(lit("Patient/"), p("id")))
@@ -514,9 +512,9 @@ object FhirQueries {
         "SELECT id, CASE WHEN multipleBirthBoolean IS NOT NULL THEN 'boolean' " +
           "WHEN multipleBirthInteger IS NOT NULL THEN 'integer' END AS choice_type, " +
           "coalesce(CAST(multipleBirthBoolean AS VARCHAR), CAST(multipleBirthInteger AS VARCHAR)) AS choice_value " +
-          s"FROM read_parquet('$G/Patient.parquet') ORDER BY id"),
+          s"FROM ${fhirScan("Patient")} ORDER BY id"),
       (s, d) =>
-        Tables.golden(s, "Patient", d).select(
+        Tables.fhir(s, "Patient", d).select(
           col("id"),
           when(col("multipleBirthBoolean").isNotNull, "boolean")
             .when(col("multipleBirthInteger").isNotNull, "integer").as("choice_type"),
@@ -531,12 +529,12 @@ object FhirQueries {
       "fhir_reference_resolve",
       Some(
         "SELECT o.id AS obs_id, p.id AS patient_id, p.gender " +
-          s"FROM read_parquet('$G/Observation.parquet') o " +
-          s"JOIN read_parquet('$G/Patient.parquet') p ON o.subject.reference = 'Patient/' || p.id " +
+          s"FROM ${fhirScan("Observation")} o " +
+          s"JOIN ${fhirScan("Patient")} p ON o.subject.reference = 'Patient/' || p.id " +
           "ORDER BY obs_id"),
       (s, d) => {
-        val o = Tables.golden(s, "Observation", d)
-        val p = Tables.golden(s, "Patient", d)
+        val o = Tables.fhir(s, "Observation", d)
+        val p = Tables.fhir(s, "Patient", d)
         o.join(broadcast(p), o("subject.reference") === concat(lit("Patient/"), p("id")))
           .select(o("id").as("obs_id"), p("id").as("patient_id"), p("gender"))
           .orderBy("obs_id")
@@ -548,11 +546,11 @@ object FhirQueries {
       "fhir_unnest",
       Some(
         "WITH n AS (SELECT id, unnest(name) AS nm FROM " +
-          s"read_parquet('$G/Patient.parquet')) " +
+          s"${fhirScan("Patient")}) " +
           "SELECT id, nm.family AS family, unnest(nm.given) AS given FROM n " +
           "ORDER BY id, family NULLS FIRST, given"),
       (s, d) =>
-        Tables.golden(s, "Patient", d)
+        Tables.fhir(s, "Patient", d)
           .select(col("id"), explode(col("name")).as("nm"))
           .select(col("id"), col("nm.family").as("family"), explode(col("nm.given")).as("given"))
           .orderBy(col("id"), col("family").asc_nulls_first, col("given"))),
@@ -565,11 +563,11 @@ object FhirQueries {
         "SELECT id, geo.lat::DOUBLE AS lat, geo.lon::DOUBLE AS lon FROM (" +
           "SELECT id, {'lat': list_filter(g.extension, x -> x.url = 'latitude')[1].__valueDecimal_numeric, " +
           "'lon': list_filter(g.extension, x -> x.url = 'longitude')[1].__valueDecimal_numeric} AS geo " +
-          s"FROM (SELECT id, unnest(address) AS a FROM read_parquet('$G/Patient.parquet')), " +
+          s"FROM (SELECT id, unnest(address) AS a FROM ${fhirScan("Patient")}), " +
           "unnest(list_filter(a.extension, e -> e.url = 'http://hl7.org/fhir/StructureDefinition/geolocation')) AS t(g)) " +
           "WHERE geo.lat IS NOT NULL ORDER BY id, lat, lon"),
       (s, d) =>
-        Tables.golden(s, "Patient", d)
+        Tables.fhir(s, "Patient", d)
           .select(col("id"), explode(col("address")).as("a"))
           .select(col("id"),
             explode(expr(
@@ -599,7 +597,7 @@ object FhirQueries {
         // maritalStatus.text.exists() predicate must appear here too, or the
         // oracle only agrees while the golden data happens to contain no
         // female patient with a null maritalStatus.text.
-        s"WITH p AS (SELECT * FROM read_parquet('$G/Patient.parquet') " +
+        s"WITH p AS (SELECT * FROM ${fhirScan("Patient")} " +
           "WHERE gender = 'female' AND maritalStatus.\"text\" IS NOT NULL), " +
           "n AS (SELECT id, unnest(name) AS nm FROM p), " +
           "t AS (SELECT id, unnest(telecom) AS tc FROM p) " +
@@ -631,7 +629,7 @@ object FhirQueries {
             {"path": "gender = 'female'"},
             {"path": "maritalStatus.text.exists()"}]
         }"""
-        ViewDefinition.evaluate(Tables.golden(s, "Patient", d), view)
+        ViewDefinition.evaluate(Tables.fhir(s, "Patient", d), view)
           .orderBy("patient_id", "family_name", "name_use", "first_given",
             "telecom_system", "telecom_value")
       }),
@@ -645,7 +643,7 @@ object FhirQueries {
     QueryDef(
       "fhir_view_definition_obs",
       Some(
-        s"WITH o AS (SELECT * FROM read_parquet('$G/Observation.parquet') WHERE status = 'final'), " +
+        s"WITH o AS (SELECT * FROM ${fhirScan("Observation")} WHERE status = 'final'), " +
           "c AS (SELECT id, unnest(category) AS cat FROM o), " +
           "cc AS (SELECT id, unnest(cat.coding) AS cd FROM c) " +
           "SELECT o.id AS obs_id, o.status AS status, o.subject.reference AS subject_ref, " +
@@ -673,7 +671,7 @@ object FhirQueries {
           ],
           "where": [{"path": "status = 'final'"}]
         }"""
-        ViewDefinition.evaluate(Tables.golden(s, "Observation", d), view)
+        ViewDefinition.evaluate(Tables.fhir(s, "Observation", d), view)
           .orderBy("obs_id", "cat_code", "cat_system")
       }),
 
@@ -689,7 +687,7 @@ object FhirQueries {
     QueryDef(
       "fhir_view_definition_eob",
       Some(
-        s"WITH e AS (SELECT * FROM read_parquet('$G/ExplanationOfBenefit.parquet') " +
+        s"WITH e AS (SELECT * FROM ${fhirScan("ExplanationOfBenefit")} " +
           "WHERE created > '2000-01-01' AND len(item) > 0), " +
           "i AS (SELECT id, unnest(item) AS it FROM e), " +
           "u AS (SELECT id, it.\"sequence\" AS item_seq, it.productOrService.\"text\" AS service, " +
@@ -736,7 +734,7 @@ object FhirQueries {
         }"""
         // decimal money columns surface as DOUBLE (the repo's Q.out6
         // posture — both engines cast the same decimal, so bit-identical)
-        ViewDefinition.evaluate(Tables.golden(s, "ExplanationOfBenefit", d), view)
+        ViewDefinition.evaluate(Tables.fhir(s, "ExplanationOfBenefit", d), view)
           .withColumn("amount", col("amount").cast("double"))
           .orderBy("eob_id", "item_seq", "amount_kind", "amount")
       }),
@@ -753,7 +751,7 @@ object FhirQueries {
     QueryDef(
       "fhir_view_definition_choice",
       Some(
-        s"WITH o AS (SELECT * FROM read_parquet('$G/Observation.parquet') " +
+        s"WITH o AS (SELECT * FROM ${fhirScan("Observation")} " +
           "WHERE valueString IS NULL AND len(meta.profile) > 0), " +
           "base AS (SELECT id AS obs_id, valueQuantity.\"value\" AS qty_value, " +
           "valueQuantity.unit AS qty_unit, " +
@@ -788,7 +786,7 @@ object FhirQueries {
             {"path": "value.ofType(string).exists().not()"},
             {"path": "meta.profile.empty().not()"}]
         }"""
-        ViewDefinition.evaluate(Tables.golden(s, "Observation", d), view)
+        ViewDefinition.evaluate(Tables.fhir(s, "Observation", d), view)
           .orderBy("obs_id", "comp_code", "comp_qty", "comp_text")
       })
   )

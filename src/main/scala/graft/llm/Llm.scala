@@ -1,7 +1,7 @@
 package graft.llm
 
 import graft.{Ckpt, Memo, Q, QueryDef, Tables}
-import graft.udx.{BandExpr, Udx}
+import graft.udx.Udx
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -446,7 +446,6 @@ object Llm {
     // aggregate holding the full candidate-pair set, which OOMs at the
     // 32-thread/16 g gate config). The filter is a codegen long-compare loop
     // per candidate row, no allocation.
-    BandExpr.register(s)
     val bands = grouped.select(col("gid"),
       explode(expr("transform(sequence(0, 31), b -> struct(b AS band, element_at(sig, b*2+1) AS s1, element_at(sig, b*2+2) AS s2, slice(sig, 1, b*2) AS pre))")).as("bb"))
       .select(col("gid"), col("bb.band").as("band"), col("bb.s1").as("s1"),
@@ -659,7 +658,6 @@ object Llm {
     // the join's own band — not a `NOT exists(zip_with(slice, slice))`
     // HOF, which allocates two slices and a zipped array PER CANDIDATE
     // (+37% s_per_pair at the sf10-distinct regime, BENCH_sf10.json).
-    graft.udx.BandExpr.register(s)
     val cand = bandRows.as("x").join(bandRows.as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
           col("x.gid") < col("y.gid"))
@@ -900,11 +898,11 @@ object Llm {
     * (+38% bench time on this key) and the hygiene test races driver GC.
     *
     * The loop runs on a CHILD session (`newSession`: shared context and
-    * block manager, isolated SQL conf) pinned to 4 shuffle partitions —
-    * each round is 4-5 shuffle stages over the tiny verified pair graph,
-    * where 32 partitions would be pure task-launch overhead; at real scale
-    * the cap tracks edge volume. The child session means the cap cannot
-    * bleed into a concurrently planned query in the caller's session.
+    * block manager, isolated SQL conf) pinned to the session width
+    * (`Session.cpus` shuffle partitions) — each round is 4-5 shuffle stages
+    * over the tiny verified pair graph, where more partitions than cores
+    * would be pure task-launch overhead. The child session means the cap
+    * cannot bleed into a concurrently planned query in the caller's session.
     * Edges enter and labels leave the loop as
     * checkpointed-RDD transplants, so callers never touch a child-session
     * Dataset.
@@ -925,7 +923,7 @@ object Llm {
     val cliqueNodes = st.grouped
       .where(size(col("members")) >= 2).select(col("gid").as("node"))
     val loopS = s.newSession()
-    loopS.conf.set("spark.sql.shuffle.partitions", "4")
+    loopS.conf.set("spark.sql.shuffle.partitions", graft.Session.cpus.toString)
     val undirected = gidPairs.union(gidPairs.select(col("j").as("i"), col("i").as("j")))
     val (edges, edgeIds) = Ckpt(loopS.createDataFrame(undirected.rdd, undirected.schema))
     val allNodes = edges.select(col("i").as("node"))
@@ -1075,7 +1073,6 @@ object Llm {
         // band rows carry the raw-signature prefix before their band; a
         // (batch doc, index group) candidate is emitted only from its
         // lowest matching band — no candidate `.distinct()` state.
-        BandExpr.register(s)
         val bandExpr = "transform(sequence(0, 31), b -> struct(b AS band, " +
           "element_at(sig, b*2+1) AS s1, element_at(sig, b*2+2) AS s2, " +
           "slice(sig, 1, b*2) AS pre))"

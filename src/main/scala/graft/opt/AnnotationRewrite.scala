@@ -1,6 +1,7 @@
 package graft.opt
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -157,13 +158,24 @@ object AnnotationRewrite extends Rule[LogicalPlan] {
     }
 
   /** Session-builder integration (`withExtensions(AnnotationRewrite.inject)`,
-    * as [[graft.Session]] builds every session): registers the rule as an analyzer
+    * as [[graft.Session]] and the perfbench harness build every session):
+    * registers the rule as an analyzer
     * resolution rule, which runs BEFORE nested schema pruning — so the
     * numeric conjunct keeps `__<f>_numeric` alive in the pruned schema and
     * reaches the parquet scan as a pushed nested predicate. The rule is
     * idempotent (replacement leaves nothing to re-match; augmentation is
-    * guarded), so running it per analyzer-fixpoint pass is safe.
+    * guarded), so running it per analyzer-fixpoint pass is safe. It also
+    * registers the SQL functions that bind no runtime data, so each session
+    * (child sessions included) holds them from the start; functions that
+    * bind a model or a filter register per call instead.
     */
-  def inject(e: org.apache.spark.sql.SparkSessionExtensions): Unit =
+  def inject(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     e.injectResolutionRule(_ => AnnotationRewrite)
+    Seq[(String, Seq[Expression] => Expression)](
+      "fhir_dt_start" -> (xs => graft.fhir.FhirDateTimeStart(xs.head)),
+      "fhir_dt_end" -> (xs => graft.fhir.FhirDateTimeEnd(xs.head)),
+      "first_match_band" -> graft.udx.BandExpr.build).foreach { case (name, build) =>
+      e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(getClass.getName, name), build))
+    }
+  }
 }

@@ -35,10 +35,10 @@ object Scans {
       "scan_projection_pushdown",
       Some(
         "SELECT id, status, subject.reference AS subject_ref " +
-          s"FROM read_parquet('${Tables.goldenDir}/Observation.parquet') " +
+          s"FROM ${Tables.fhirScan("Observation")} " +
           "WHERE status = 'final' ORDER BY id"),
       (s, d) =>
-        Tables.golden(s, "Observation", d)
+        Tables.fhir(s, "Observation", d)
           .where(col("status") === "final")
           .select(col("id"), col("status"), col("subject.reference").as("subject_ref"))
           .orderBy("id")),

@@ -1,6 +1,5 @@
 package graft.udx
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -16,11 +15,11 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   * are ignored.
   *
   * Why an expression and not a HOF: this predicate runs once per band-join
-  * CANDIDATE row — the hottest row count in every banded dedup kernel. The
-  * round-15 `NOT exists(zip_with(slice(...), slice(...), ...))` form
-  * allocates two sliced arrays plus a zipped boolean array per candidate;
-  * at the sf10-distinct regime that allocation showed up as a 37% per-pair
-  * cost rise (BENCH_sf10.json, s_per_pair 36.9 → 50.4 µs). This expression
+  * CANDIDATE row — the hottest row count in every banded dedup kernel. A
+  * `NOT exists(zip_with(slice(...), slice(...), ...))` form allocates two
+  * sliced arrays plus a zipped boolean array per candidate; at the
+  * sf10-distinct regime that allocation costs 37% per pair
+  * (BENCH_sf10.json, s_per_pair 36.9 → 50.4 µs). This expression
   * is a fused long-compare loop inside WholeStageCodegen: zero allocation,
   * early exit at the first matching band, and the common candidate case
   * (the join's own band matches first) exits after `band` iterations.
@@ -29,9 +28,9 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   * equality `x.band = y.band` plus slice equality, keeping only candidates
   * with `first_match_band(x.keys, y.keys, stride) = x.band` yields exactly
   * one surviving row per (x, y) pair that shares ≥1 band — the classic
-  * stateless replacement for a global candidate `.distinct()`, which had
-  * to HOLD the full candidate-pair set in a hash aggregate (the round-14
-  * gate-config OOM class).
+  * stateless replacement for a global candidate `.distinct()`, which has
+  * to HOLD the full candidate-pair set in a hash aggregate and runs out of
+  * memory at the 32-thread/16 g gate config.
   */
 case class FirstMatchBand(left: Expression, right: Expression, stride: Int)
     extends BinaryExpression {
@@ -85,35 +84,16 @@ case class FirstMatchBand(left: Expression, right: Expression, stride: Int)
 }
 
 object BandExpr {
-  // Sessions already holding the registration — the builder closes over no
-  // runtime data (unlike TextExpr's model-carrying expressions), so one
-  // registration per session is complete and re-registering only spams a
-  // SimpleFunctionRegistry replace-WARN into every bench/verify tail
-  // (round-16 verdict task #5). Weak keys: a stopped session's entry must
-  // not pin the SessionState graph.
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  /** Session-scoped SQL registration: first_match_band(xs, ys, stride).
-    * stride must be an integer literal (it shapes the generated code).
-    * Idempotent per session.
+  /** Builder of the SQL function first_match_band(xs, ys, stride), which
+    * every session gets through `AnnotationRewrite.inject`. stride must be
+    * an integer literal (it shapes the generated code).
     */
-  def register(s: SparkSession): Unit = {
-    if (registered.putIfAbsent(s, java.lang.Boolean.TRUE) == null)
-      registerAlways(s)
+  def build(exprs: Seq[Expression]): Expression = {
+    val stride = exprs(2) match {
+      case Literal(v: Int, IntegerType) => v
+      case other => throw new IllegalArgumentException(
+        s"first_match_band stride must be an int literal, got $other")
+    }
+    FirstMatchBand(exprs(0), exprs(1), stride)
   }
-
-  private def registerAlways(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "first_match_band",
-      exprs => {
-        val stride = exprs(2) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"first_match_band stride must be an int literal, got $other")
-        }
-        FirstMatchBand(exprs(0), exprs(1), stride)
-      },
-      "internal")
 }

@@ -75,7 +75,7 @@ class OpsSpec extends AnyFunSuite {
       s"staged keys without an oracle: ${staged -- SparkEntry.oracleSql.keySet}")
     // ...and must be bench-memoized: staging runs once per (JVM, dataset),
     // so timed repeats measure post-staging work — exactly what the
-    // memoized flag tells a cross-round comparison.
+    // memoized flag tells a comparison across commits.
     assert(staged.subsetOf(memo), s"staged but not memoized: ${staged -- memo}")
   }
 
@@ -412,7 +412,6 @@ class OpsSpec extends AnyFunSuite {
       .select(col("gid"), col("keys"),
         explode(expr(s"sequence(0, ${nBands - 1})")).as("band"))
       .select(col("band"), expr("keys[band]").as("bkey"), col("gid"), col("keys"))
-    graft.udx.BandExpr.register(spark)
     val firstMatch = bandRows.as("x").join(bandRows.as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
           col("x.gid") < col("y.gid"))
@@ -437,7 +436,6 @@ class OpsSpec extends AnyFunSuite {
     // exactly like the stride-1 test above.
     val sp2 = spark
     import sp2.implicits._
-    graft.udx.BandExpr.register(spark)
     val rnd = new scala.util.Random(7)
     val nBands = 8
     val rows = (0L until 50L).map(g => (g, Array.fill(nBands * 2)(rnd.nextInt(3).toLong)))
@@ -466,7 +464,6 @@ class OpsSpec extends AnyFunSuite {
   test("FirstMatchBand expression: eval + codegen, strides, empty prefix") {
     val sp2 = spark
     import sp2.implicits._
-    graft.udx.BandExpr.register(spark)
     val df = Seq(
       (Array(1L, 2L, 3L), Array(9L, 2L, 3L)),      // stride1 -> 1
       (Array(1L, 2L, 3L), Array(4L, 5L, 6L)),      // stride1 -> -1
@@ -497,8 +494,8 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("gram-pair kernels: per-source distinct-content guard fails fast (round 13)") {
-    // the r13 distinct-content rehearsal stamped exponents 1.32/1.21 on
-    // the two declared-exact gram kernels — past the per-source cap they
+    // the distinct-content rehearsal measures exponents 1.32/1.21 on the
+    // two declared-exact gram kernels — past the per-source cap they
     // must fail BEFORE paying the O(reps²) kernel, naming the banded
     // siblings; the guard counts the collapsed table, so the fixture's
     // 16385 distinct one-source texts trip it in one tiny aggregate

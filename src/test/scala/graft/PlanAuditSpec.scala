@@ -24,11 +24,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanAuditSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   private val sf = SparkTestBase.sf
-  // keys that read the FHIR resource tables plan over SparkTestBase.fhirSf;
-  // the rest keep sf, whose staged layouts the other specs share
-  private val fhirKeys =
-    fhir.FhirQueries.defs.map(_.key).toSet + "scan_projection_pushdown"
-
   /** Window nodes whose partition spec is EMPTY — Spark moves the whole
     * input to one partition for these ("No Partition Defined for Window"),
     * the first shape to die at scale. Tree walk instead of string parse:
@@ -64,10 +59,10 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   // The allowlists must contain ONLY keys whose executed plan contains the
-  // shape TODAY (round-5 judge: stale entries mask future regressions) —
-  // D8/D9/D10 were pruned once they became explode+equi / equi+residual,
-  // and nothing plans a true CartesianProduct anymore (D7's explicit cross
-  // join broadcasts its tiny side, so it executes as BNLJ-cross).
+  // shape TODAY (a stale entry would mask a future regression). D8/D9/D10
+  // plan as explode+equi / equi+residual joins, and nothing plans a true
+  // CartesianProduct (D7's explicit cross join broadcasts its tiny side,
+  // so it executes as BNLJ-cross).
   private val cartesianOk = Set.empty[String]
   private val bnljOk = Set(
     // D7 — explicit cross join by definition; the 5-row side broadcasts
@@ -84,7 +79,7 @@ class PlanAuditSpec extends AnyFunSuite {
   // key → max allowed unpartitioned-window count. Bounded at EXACTLY the
   // count the design calls for (one tiny second-level scan each): a second
   // global window appearing in either plan would ride in unnoticed if the
-  // allowlist were a plain key set (round-7 advisor finding).
+  // allowlist were a plain key set.
   private val globalWindowOk = Map(
     // skyline_pareto's boundary carry: the window input is the per-block
     // Pareto frontier meet — ≤ 8 rows by construction (one row per block),
@@ -119,22 +114,15 @@ class PlanAuditSpec extends AnyFunSuite {
     "agg_freq_topk" -> Set("ScalaAggregator"),
     // broadcast-object kernel with no expression equivalent: IVF centroid
     // probe (driver-held k-means state).
-    // dedup_incremental_bloom no longer appears here: round 15 routed its
-    // probe through Catalyst's BloomFilterMightContain (codegen'd, the
-    // InjectRuntimeFilter expression) — asserted positively in PlanSpec.
     "sim_ann_ivf" -> Set("ScalaUDF"))
-    // graph_triangle_count's wedge-side bloom prune no longer appears here:
-    // round 15 routed it through BloomFilterMightContain (codegen), same as
-    // dedup_incremental_bloom — asserted positively in PlanSpec.
-    // dedup_simhash's bit-vote UDF no longer appears here: since the
-    // round-11 staged-signature oracle the kernel runs inside the
-    // done-marker staging write, and the audited query plan (banding +
-    // Hamming verify off the staged parquet) is pure builtins.
-    // dedup_minhash_near's sorted-merge Jaccard verify UDF no longer
-    // appears here: since the round-10 exact-dup collapse it runs inside
-    // the eagerly-checkpointed minhash state build, and the audited query
-    // plan (membership expansion off the checkpoint) is pure builtins.
-    // OpsSpec's brute-force equivalence test pins the verify kernel.
+    // Not listed, because their plans carry no such node: the bloom probes
+    // of dedup_incremental_bloom and graph_triangle_count run through
+    // Catalyst's codegen'd BloomFilterMightContain (asserted in PlanSpec);
+    // dedup_simhash's bit-vote kernel runs inside the done-marker staging
+    // write, and dedup_minhash_near's Jaccard verify inside the eagerly
+    // checkpointed minhash state build, so both audited query plans are
+    // pure builtins (OpsSpec's brute-force equivalence test pins the
+    // verify kernel).
 
   private lazy val audited: Seq[(String, String, Seq[String], Seq[String])] = {
     val skip = (k: String) => k.startsWith("stream_") ||
@@ -142,9 +130,8 @@ class PlanAuditSpec extends AnyFunSuite {
       k == "sink_partitioned_write" || k == "sink_parquet_roundtrip" ||
       k == "join_bucketed_colocated" // saveAsTable side effects; plan asserted in PlanSpec
     SparkEntry.queries.keys.toSeq.sorted.filterNot(skip).map { k =>
-      val d = if (fhirKeys(k)) SparkTestBase.fhirSf else sf
       val qe =
-        try SparkEntry.queries(k)(spark, d).queryExecution
+        try SparkEntry.queries(k)(spark, sf).queryExecution
         catch { case e: Throwable => fail(s"$k failed to plan: ${e.getMessage}") }
       (k, qe.executedPlan.toString, globalWindows(qe.executedPlan), scalaFuncNodes(qe.executedPlan))
     }

@@ -18,7 +18,7 @@ class PlanSpec extends AnyFunSuite {
     SparkEntry.queries(key)(spark, d).queryExecution.executedPlan.toString
 
   test("B2: nested schema pruning reaches the golden-file scan") {
-    val p = plan("scan_projection_pushdown", SparkTestBase.fhirSf)
+    val p = plan("scan_projection_pushdown")
     // wide nested Observation table (39 leaves in the golden file), 3
     // projected leaves: the scan must not read the rest
     assert(p.contains("ReadSchema"))
@@ -148,8 +148,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("A6 expression participates in WholeStageCodegen") {
-    fhir.FhirDateTimeExpr.register(spark)
-    val patients = SparkTestBase.golden("Patient")
+    val patients = SparkTestBase.fhir("Patient")
     val df = patients.selectExpr("id", "fhir_dt_start(birthDate) AS s")
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("*(1)"), s"expression fell out of WholeStageCodegen:\n$p")
@@ -496,7 +495,7 @@ class PlanSpec extends AnyFunSuite {
   test("AnnotationRewrite: string-date predicate becomes annotation predicate") {
     opt.AnnotationRewrite.install(spark)
     val tmp = s"${sys.props("java.io.tmpdir")}/graft_plan_annotated"
-    fhir.FhirAnnotations.annotateRange(SparkTestBase.golden("Patient"), "birthDate")
+    fhir.FhirAnnotations.annotateRange(SparkTestBase.fhir("Patient"), "birthDate")
       .write.mode("overwrite").parquet(tmp)
     val table = spark.read.parquet(tmp)
     val q = table
@@ -571,7 +570,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("AnnotationRewrite: decimal-string predicate gains a typed __value_numeric pruning conjunct") {
     opt.AnnotationRewrite.install(spark)
-    val obs = SparkTestBase.golden("Observation")
+    val obs = SparkTestBase.fhir("Observation")
     val q = obs
       .where(col("valueQuantity.value").cast("double") >= 40.0)
       .select("id")
@@ -763,8 +762,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("sim_mrl_rerank: coarse stage scans ONLY the staged 16-dim prefix table") {
-    // Round-13 judge task #6: the funnel's IO win must be physical, not
-    // semantic. (a) Structurally, every leaf under the coarse top-20
+    // The funnel's IO win must be physical, not semantic. (a) Structurally, every leaf under the coarse top-20
     // window (the data-sized pass) is the staged prefix relation — the
     // wide embeddings.parquet feeds only the bounded rerank join.
     // (b) The prefix scan's ReadSchema carries emb16, never the 64-dim

@@ -103,7 +103,7 @@ class UcumSpec extends AnyFunSuite {
     SparkTestBase.assumeGolden()
     val spark = SparkTestBase.spark
     import org.apache.spark.sql.functions.col
-    val codes = Tables.golden(spark, "Observation")
+    val codes = Tables.t(spark, Tables.goldenDir, "Observation")
       .where(col("valueQuantity.value").isNotNull)
       .select(col("valueQuantity.code")).distinct()
       .collect().map(_.getString(0)).toSet
@@ -170,13 +170,13 @@ class UcumSpec extends AnyFunSuite {
 
   test("fhir_ucum_grammar_canonical: vocabulary broadcasts; golden rows all convert") {
     val spark = SparkTestBase.spark
-    val df = SparkEntry.queries("fhir_ucum_grammar_canonical")(spark, SparkTestBase.fhirSf)
+    val df = SparkEntry.queries("fhir_ucum_grammar_canonical")(spark, SparkTestBase.sf)
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin"), p.take(800))
     // every value-bearing golden row joins a vocabulary code — the grammar
     // covers codes the curated table leaves unconverted
     import org.apache.spark.sql.functions.col
-    val total = SparkTestBase.golden("Observation")
+    val total = SparkTestBase.fhir("Observation")
       .where(col("valueQuantity.value").isNotNull).count()
     assert(df.count() == total, "grammar canonicalization dropped golden rows")
   }

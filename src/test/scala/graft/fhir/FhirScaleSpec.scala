@@ -15,11 +15,11 @@ import org.scalatest.funsuite.AnyFunSuite
 class FhirScaleSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   private val K = 5
-  // FHIR tables resolve through Tables.golden(_, _, base): the golden files
-  // where present, else the ingested fixture's fhir/ subdir
-  private lazy val base = SparkTestBase.fhirSf
+  // FHIR tables resolve through Tables.fhirDir: the golden files where
+  // present, else the staged NDJSON fixture
+  private val base = SparkTestBase.sf
   private lazy val dst = {
-    val d = s"${sys.props("java.io.tmpdir")}/graft_fhir_scale_test"
+    val d = SparkTestBase.tempDir("graft_fhir_scale_").toString
     FhirGenScale.writeScaled(spark, d, K, base)
     d
   }
@@ -27,7 +27,7 @@ class FhirScaleSpec extends AnyFunSuite {
   test("replication: K× rows per table, ids unique, references resolve within replicas") {
     Seq("Patient", "Observation", "ExplanationOfBenefit").foreach { t =>
       val scaled = spark.read.parquet(s"$dst/fhir/$t.parquet")
-      val baseRows = Tables.golden(spark, t, base)
+      val baseRows = Tables.fhir(spark, t, base)
       assert(scaled.count() == K * baseRows.count(), s"$t row count")
       assert(scaled.select("id").distinct().count() == scaled.count(), s"$t id uniqueness")
     }

@@ -10,8 +10,8 @@ import org.scalatest.time.SpanSugar._
 /** SURVEY §5 layers 1-3: conformance clauses, golden files, round-trip.
   * Fixtures are the spec's own worked examples
   * (/root/reference/README.md:90-96, 116-124, 150-163, 325-327) and the
-  * FHIR tables of `SparkTestBase.golden`: the golden files where present,
-  * else the ingested NDJSON fixture. Claims about the golden files' own
+  * FHIR tables of `SparkTestBase.fhir`: the golden files where present,
+  * else the staged NDJSON fixture. Claims about the golden files' own
   * bytes cancel without them.
   */
 class FhirSpec extends AnyFunSuite with TimeLimits {
@@ -202,7 +202,7 @@ class FhirSpec extends AnyFunSuite with TimeLimits {
   }
 
   test("annotateRange: nested struct and LIST paths place siblings in-group (README.md:304-306,702-703)") {
-    val eob = SparkTestBase.golden("ExplanationOfBenefit")
+    val eob = SparkTestBase.fhir("ExplanationOfBenefit")
     val a = FhirAnnotations.annotateRange(
       FhirAnnotations.annotateRange(eob, "billablePeriod.start"), "item.servicedPeriod.start")
     val bp = a.schema("billablePeriod").dataType.asInstanceOf[StructType]
@@ -216,7 +216,7 @@ class FhirSpec extends AnyFunSuite with TimeLimits {
   }
 
   test("annotateNumeric: LIST path places __value_numeric beside each element's decimal (README.md:347-353)") {
-    val eob = SparkTestBase.golden("ExplanationOfBenefit")
+    val eob = SparkTestBase.fhir("ExplanationOfBenefit")
     // the input already carries total[].amount.__value_numeric — recompute
     // under a fresh name impossible (fixed annotation name), so strip via a
     // reduced frame: rebuild from the raw string values only
@@ -246,7 +246,7 @@ class FhirSpec extends AnyFunSuite with TimeLimits {
   }
 
   test("canonicalize: __<q>_canonical sibling group mirrors the Quantity shape (README.md:367-381,711-717)") {
-    val obs = SparkTestBase.golden("Observation")
+    val obs = SparkTestBase.fhir("Observation")
     val c = FhirAnnotations.canonicalize(obs, "valueQuantity")
     val g = c.schema("__valueQuantity_canonical").dataType.asInstanceOf[StructType]
     assert(g.fieldNames.toSeq == Seq("code", "system", "unit", "value", "__value_numeric"))
@@ -274,8 +274,8 @@ class FhirSpec extends AnyFunSuite with TimeLimits {
   }
 
   test("FhirWriter: strictParquetTypes emits int96 annotation timestamps (README.md:329-330), both modes round-trip") {
-    val base = s"${sys.props("java.io.tmpdir")}/graft_strict_${ProcessHandle.current().pid()}"
-    val p = FhirAnnotations.annotateRange(SparkTestBase.golden("Patient"), "birthDate")
+    val base = SparkTestBase.tempDir("graft_strict_").toString
+    val p = FhirAnnotations.annotateRange(SparkTestBase.fhir("Patient"), "birthDate")
       .select("id", "birthDate", "__birthDate_start", "__birthDate_end")
     for ((strict, dir) <- Seq((true, s"$base/strict"), (false, s"$base/native"))) {
       FhirWriter.write(p, dir, strictParquetTypes = strict)
@@ -300,7 +300,7 @@ class FhirSpec extends AnyFunSuite with TimeLimits {
 
   test("FhirWriter: strict mode floors sub-ms annotation bounds to MILLIS (README.md:325-330)") {
     import spark.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_strictms_${ProcessHandle.current().pid()}"
+    val base = SparkTestBase.tempDir("graft_strictms_").toString
     val df = FhirAnnotations.annotateRange(
       Seq(("a", "2014-06-01T12:05:00.123456Z")).toDF("id", "t"), "t")
     FhirWriter.write(df, s"$base/strict", strictParquetTypes = true)
@@ -318,7 +318,7 @@ class FhirSpec extends AnyFunSuite with TimeLimits {
   test("FhirWriter: a write leaves the session conf as it found it") {
     val key = "spark.sql.parquet.outputTimestampType"
     val dir = SparkTestBase.tempDir("graft_writer_conf_").toString
-    val p = SparkTestBase.golden("Patient").select("id")
+    val p = SparkTestBase.fhir("Patient").select("id")
     spark.conf.unset(key)
     val unset = spark.conf.getAll
     FhirWriter.write(p, s"$dir/a", strictParquetTypes = true)
@@ -361,7 +361,7 @@ class FhirSpec extends AnyFunSuite with TimeLimits {
     // twins, multi-arm choice elements (diagnosis[x], serviced[x],
     // location[x]), and three-deep backbones (item.adjudication.amount).
     for (r <- Seq("Patient", "Observation", "ExplanationOfBenefit")) {
-      val golden = graft.Tables.golden(spark, r).schema
+      val golden = graft.Tables.t(spark, graft.Tables.goldenDir, r).schema
       val requested = FhirSchema.leaves(golden)
         .map(_._1.replace("[]", ""))
         .filterNot(p => p.split('.').exists(_.startsWith("__")))
@@ -502,9 +502,9 @@ class FhirSpec extends AnyFunSuite with TimeLimits {
   test("annotation collisions: non-standard names pass, standard-name misuse is flagged (README.md:311-312)") {
     // the FHIR tables and our own annotated frames are collision-free
     for (r <- Seq("Patient", "Observation", "ExplanationOfBenefit"))
-      assert(FhirConformance.annotationCollisions(SparkTestBase.golden(r).schema).isEmpty, r)
+      assert(FhirConformance.annotationCollisions(SparkTestBase.fhir(r).schema).isEmpty, r)
     val annotated = FhirAnnotations.annotateRange(
-      SparkTestBase.golden("Patient"), "birthDate").schema
+      SparkTestBase.fhir("Patient"), "birthDate").schema
     assert(FhirConformance.annotationCollisions(annotated).isEmpty)
     // a non-standard annotation with a fresh name is permitted…
     val okExtra = StructType(Seq(
@@ -557,5 +557,37 @@ class FhirSpec extends AnyFunSuite with TimeLimits {
     assert(m.fieldNames.toSeq == Seq("birthDate", "gender", "id"))
     val conflict = StructType(Seq(StructField("id", IntegerType)))
     intercept[IllegalArgumentException](FhirSchema.mergeSchemas(Seq(a, conflict)))
+  }
+
+  // --- where a FHIR table lives (Tables.fhirDir) ---
+
+  test("Tables.fhirDir: <d>/fhir, then the golden files, then the fixture, staged once") {
+    val d = SparkTestBase.tempDir("graft_fhirdir_").toString
+    val golden = SparkTestBase.tempDir("graft_golden_").toString
+    spark.range(1).write.parquet(s"$d/fhir/Patient.parquet")
+    assert(graft.Tables.fhirDir(spark, d, "Patient", golden) == s"$d/fhir")
+    assert(graft.Tables.fhirDir(spark, d, "Observation", golden) == golden)
+    val fixture = graft.Tables.fhirDir(spark, d, "Observation", s"$golden/absent")
+    def stamps = org.apache.commons.io.FileUtils.listFiles(new java.io.File(fixture), null, true)
+      .toArray.map { case f: java.io.File => f.getPath -> f.lastModified }.toSet
+    val staged = stamps
+    assert(graft.Tables.fhirFixture(spark) == fixture && stamps == staged, "the fixture was staged again")
+    assert(Seq("Patient", "Observation", "ExplanationOfBenefit")
+      .map(r => graft.Tables.t(spark, fixture, r).count()) == Seq(16L, 124L, 23L))
+  }
+
+  test("Verify's oracle file: FHIR oracles name the golden files; Verify rewrites only those") {
+    val raw = graft.SparkEntry.oracleSql
+    val resolved = graft.Verify.oracleSql(spark, SparkTestBase.sf)
+    val table = """[\w/.-]*/(Patient|Observation|ExplanationOfBenefit)\.parquet""".r
+    assert(raw.filter(o => table.findFirstIn(o._2).isDefined).keySet ==
+      FhirQueries.defs.filter(_.oracle.exists(_.contains("read_parquet"))).map(_.key).toSet + "scan_projection_pushdown")
+    val fixture = Option.unless(SparkTestBase.goldenPresent)(graft.Tables.fhirFixture(spark))
+    for ((k, sql) <- raw) {
+      // the gate contract: perfbench's gate rewrites exactly this form
+      for (m <- table.findAllMatchIn(sql)) assert(m.matched == s"${graft.Tables.goldenDir}/${m.group(1)}.parquet", k)
+      // every other oracle stays byte-identical
+      assert(resolved(k) == fixture.fold(sql)(f => table.replaceAllIn(sql, m => s"$f/${m.group(1)}.parquet/*.parquet")), k)
+    }
   }
 }

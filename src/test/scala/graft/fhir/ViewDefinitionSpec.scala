@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SQL-on-FHIR v2 ViewDefinition evaluator (flattening subset):
-  * evaluation over the FHIR tables of `SparkTestBase.golden` plus
+  * evaluation over the FHIR tables of `SparkTestBase.fhir` plus
   * synthetic coverage of the semantics those tables cannot differentiate
   * (forEachOrNull on a missing element, where-filtering, Cartesian
   * sibling selects).
@@ -35,9 +35,9 @@ class ViewDefinitionSpec extends AnyFunSuite {
       ],
       "where": [{"path": "gender = 'female'"}]
     }"""
-    val got = ViewDefinition.evaluate(SparkTestBase.golden("Patient"), view)
+    val got = ViewDefinition.evaluate(SparkTestBase.fhir("Patient"), view)
       .orderBy("patient_id", "family")
-    val expected = SparkTestBase.golden("Patient")
+    val expected = SparkTestBase.fhir("Patient")
       .where(col("gender") === "female")
       .select(col("id").as("patient_id"),
         col("maritalStatus.text").as("marital"), explode(col("name")).as("nm"))
@@ -93,7 +93,7 @@ class ViewDefinitionSpec extends AnyFunSuite {
     assert(rows.map(_.getString(0)).toSeq == Seq("p1"))
   }
 
-  // --- round-17 slice: unionAll, constants, key functions, comparisons ---
+  // --- unionAll, constants, key functions, comparisons ---
 
   private val synth2Json = Seq(
     """{"resourceType":"Patient","id":"q1","gender":"female","score":5,"telecom":[{"system":"phone","value":"1"}],"name":[{"family":"A"}],"managingOrganization":{"reference":"Organization/o1"}}""",
@@ -112,7 +112,7 @@ class ViewDefinitionSpec extends AnyFunSuite {
       "where": [{"path": "telecom.exists()"}]
     }"""
     // q2's telecom is [] — an empty COLLECTION is exists()=false even
-    // though the array value itself is not null (round-16 advisor)
+    // though the array value itself is not null
     val rows = ViewDefinition.evaluate(synth2, view).collect()
     assert(rows.map(_.getString(0)).toSeq == Seq("q1"))
   }
@@ -195,9 +195,9 @@ class ViewDefinitionSpec extends AnyFunSuite {
           {"forEach": "coding", "column": [{"path": "code", "name": "cat_code"}]}]}
       ]
     }"""
-    val got = ViewDefinition.evaluate(SparkTestBase.golden("Observation"), view)
+    val got = ViewDefinition.evaluate(SparkTestBase.fhir("Observation"), view)
       .orderBy("obs_id", "cat_code")
-    val expected = SparkTestBase.golden("Observation")
+    val expected = SparkTestBase.fhir("Observation")
       .select(col("id").as("obs_id"),
         element_at(col("code.coding"), 1).getField("code").as("obs_code"),
         explode(col("category")).as("cat"))
@@ -220,9 +220,9 @@ class ViewDefinitionSpec extends AnyFunSuite {
           {"path": "value.ofType(string)", "name": "vstr"}]}
       ]
     }"""
-    val got = ViewDefinition.evaluate(SparkTestBase.golden("Observation"), view)
+    val got = ViewDefinition.evaluate(SparkTestBase.fhir("Observation"), view)
       .orderBy("obs_id")
-    val expected = SparkTestBase.golden("Observation")
+    val expected = SparkTestBase.fhir("Observation")
       .select(col("id").as("obs_id"),
         col("valueQuantity.value").as("qty"),
         element_at(col("valueCodeableConcept.coding"), 1).getField("code").as("vcode"),
@@ -242,7 +242,7 @@ class ViewDefinitionSpec extends AnyFunSuite {
           {"path": "value.ofType(CodeableConcept).text", "name": "ct"}]}
       ]
     }"""
-    val got = ViewDefinition.evaluate(SparkTestBase.golden("Observation"), view)
+    val got = ViewDefinition.evaluate(SparkTestBase.fhir("Observation"), view)
     // BP readings carry Quantity values; survey answers (golden files) and
     // posture (fixture) carry CodeableConcept text — both arms must be
     // populated
@@ -294,7 +294,7 @@ class ViewDefinitionSpec extends AnyFunSuite {
       ],
       "where": [{"path": "gender = 'female'"}]
     }"""
-    val plan = ViewDefinition.evaluate(SparkTestBase.golden("Patient"), view)
+    val plan = ViewDefinition.evaluate(SparkTestBase.fhir("Patient"), view)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"flattening view must not shuffle:\n$plan")
     // pruned scan: the wide Patient schema must not be read whole — the scan
