@@ -312,6 +312,17 @@ object Q {
   def dec4(c: Column): Column = c.cast(DecimalType(18, 4))
   /** Final-output normalizer: exact decimal rounded to 6 dp, then DOUBLE. */
   def out6(c: Column): Column = c.cast(DecimalType(38, 6)).cast(DoubleType)
+  /** Final-output mean of a DECIMAL(18,4) measure: the exact sum over the
+    * count, rounded HALF_UP to 6 dp in one step, then DOUBLE.
+    * `out6(avg(x))` rounds twice — avg keeps 8 places, the cast then 6 —
+    * so 253491 / 9942 = 25.49698249849… became 25.496983. Here the
+    * rounded mean·10⁶ is the truncated integer quotient of
+    * 2·10⁶·sum ± count over 2·count, exact in decimal and long arithmetic.
+    */
+  def mean6(x: Column): Column = {
+    val (s, n) = (sum(x), count(x))
+    call_function("div", s * 2000000 + when(s < 0, -n).otherwise(n), n * 2) / 1e6
+  }
   /** Final-output form of a raw measure rounded at 4 dp. */
   def out4(c: Column): Column = c.cast(DecimalType(18, 4)).cast(DoubleType)
   val one4: Column = lit(1).cast(DecimalType(18, 4))

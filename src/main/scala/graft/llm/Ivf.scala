@@ -27,14 +27,10 @@ object Ivf {
   private val NProbe = 2
   private val TopK = 3
 
-  /** Index dir named by a hash of the embeddings' fingerprint: changed
-    * data at the same path gets a new dir, so stale artifacts are
-    * abandoned, never overwritten mid-read.
+  /** The index's staging dir, one per dataset: [[Tables.stage]] rebuilds
+    * it in place when the embeddings' fingerprint changes.
     */
-  private[graft] def indexDir(d: String): String = {
-    val fp = Integer.toHexString(Tables.fingerprint(d, "embeddings").hashCode)
-    s"${sys.props("java.io.tmpdir")}/graft_ivf_$fp"
-  }
+  private[graft] def indexDir(d: String): String = Tables.stagingDir("graft_ivf", d)
 
   private def sqDist(a: Array[Double], b: Array[Double]): Double = {
     var acc = 0.0; var i = 0
@@ -156,7 +152,7 @@ object Ivf {
     * SAME sqDist/tie-break code the operators use; DuckDB then mirrors the
     * remaining exact math (cluster equi-joins + the shared-accumulation
     * cosine) over the staged tables. Fixed path because the oracle SQL is
-    * a static literal (the index dir itself is fingerprint-keyed).
+    * a static literal (the index dir itself is per dataset).
     */
   private val IvfOracleDir = s"${sys.props("java.io.tmpdir")}/graft_ivf_oracle"
 
@@ -164,8 +160,8 @@ object Ivf {
     * Assignment, nprobe probe selection and nAssign multi-assignment are
     * all RE-DERIVED by the oracle from the centroids and the base table
     * ([[duckAssignCtes]]), so the argmin arithmetic is cross-engine
-    * checked instead of trusted. The fingerprint is the one that names the
-    * index dir, so index artifact, staged oracle tables and the session
+    * checked instead of trusted. The fingerprint is the one the index is
+    * staged under, so index artifact, staged oracle tables and the session
     * memo invalidate together on in-place data regeneration; the
     * `centroids1` kernel tag names the centroids-only layout.
     */
@@ -293,7 +289,6 @@ object Ivf {
         import sp.implicits._
         val (_, centroids) = index(s, d)
         val tau = 0.35
-        val B = 4
         // multi-assignment (the SemDeDup recall lever): every vector joins
         // its nAssign nearest clusters' pair searches, so a τ-pair is
         // missed only when the two vectors share NONE of those clusters.
@@ -304,89 +299,38 @@ object Ivf {
         // pair, so drops ⊆ the exact drop set regardless of assignment.
         val nAssign = 3
         val bcC = s.sparkContext.broadcast(centroids)
-        // Exact-dup collapse BEFORE the cluster kernel (the cosinePairsFast
-        // discipline): identical embeddings probe identical clusters, every
-        // within-group pair is cosine 1 ≥ τ, and the pairwise drop rule
-        // ("drop the higher id") resolves to "drop every non-minimum member"
-        // — provable without a single kernel comparison, and a rep-level
-        // cross drop implies nothing further (that rep's members are already
-        // dropped within-group). Without the collapse, a G-sized duplicate
-        // group pays G² comparisons inside its cluster (exponent 1.26 on
-        // data replicated 100×). The
-        // drop SET is exactly the uncollapsed operator's (pair-by-pair
-        // case analysis: any cross pair's max is either a non-min member,
-        // caught within-group, or a representative, caught by the rep pair).
-        // Group key = xxhash64 + length/endpoint discriminators, as in
-        // cosinePairsFast.
-        val grouped = Tables.t(s, d, "embeddings")
-          .select(col("vec_id"), col("embedding"))
-          .groupBy(xxhash64(col("embedding")).as("eh"),
-            size(col("embedding")).as("en"),
-            try_element_at(col("embedding"), lit(1)).as("e0"),
-            try_element_at(col("embedding"), lit(-1)).as("e1"))
-          .agg(sort_array(collect_list(col("vec_id"))).as("members"),
-            first(col("embedding")).as("emb"))
-          .select(col("members"), col("emb"), col("members")(0).as("gid"))
+        // [[Collapse]] before the cluster kernel: identical embeddings probe
+        // identical clusters, every within-group pair is cosine 1 ≥ τ, and
+        // the pairwise drop rule ("drop the higher id") resolves to "drop
+        // every non-minimum member" — provable without a single kernel
+        // comparison. A rep-level cross drop implies nothing further (that
+        // rep's members are already dropped within-group), so the drop SET
+        // is exactly the uncollapsed operator's: any cross pair's max is
+        // either a non-min member, caught within-group, or a
+        // representative, caught by the rep pair.
+        val grouped = Collapse.groups(Tables.t(s, d, "embeddings"),
+          "vec_id", "embedding", Seq("embedding"))
         // Zero-norm guard: the uncollapsed kernel scores identical zero
         // vectors as 0/0 = NaN, and NaN >= τ is false — so it never dropped
         // them. The unconditional "drop every non-min member" rule must
         // therefore skip all-zero groups to reproduce that drop set exactly.
-        val memberDrops = grouped
-          .where(exists(col("emb"), e => e =!= lit(0.0f)))
-          .select(explode(col("members")).as("drop_id"), col("gid"))
-          .where(col("drop_id") > col("gid"))
-          .select("drop_id")
-        val reps = grouped.select(col("gid"), col("emb"))
+        val memberDrops = Collapse.members(
+            grouped.where(exists(col("embedding"), e => e =!= lit(0.0f))))
+          .where(col("m") > col("gid"))
+          .select(col("m").as("drop_id"))
+        // one rep row per probe cluster; the 4-block kernel then runs per
+        // cluster, and each verified pair drops its higher id
+        val probes = grouped.select(col("gid"), col("embedding"))
           .as[(Long, Array[Float])]
-        val repDrops = reps.flatMap { case (id, emb) =>
+          .flatMap { case (gid, emb) =>
             val cs = bcC.value
-            val v = new Array[Double](emb.length)
-            var k = 0
-            while (k < emb.length) { v(k) = emb(k).toDouble; k += 1 }
-            val near = cs.indices.map(c => (sqDist(v, cs(c)), c))
-              .sorted.take(nAssign).map(_._2)
-            val b = (id % B).toInt
-            for {
-              cl <- near
-              o <- 0 until B
-            } yield {
-              val (p, q) = if (b <= o) (b, o) else (o, b)
-              ((cl, p * B + q), id, emb)
-            }
+            val v = emb.map(_.toDouble)
+            cs.indices.map(c => (sqDist(v, cs(c)), c))
+              .sorted.take(nAssign).map(c => (c._2, gid, emb))
           }
-          .groupByKey(_._1)
-          .flatMapGroups { (key, it) =>
-            val p = key._2 / B
-            val q = key._2 % B
-            val rows = it.toArray.sortBy(_._2).map { case (_, id, emb) =>
-              val v = new Array[Double](emb.length)
-              var acc = 0.0; var k = 0
-              while (k < emb.length) { v(k) = emb(k).toDouble; acc += v(k) * v(k); k += 1 }
-              (id, v, math.sqrt(acc))
-            }
-            // diagonal group (p == q): all i < j in the block; off-diagonal:
-            // only cross-block pairs (ascending-id sort normalizes i < j) —
-            // each unordered within-cluster pair meets in exactly one task
-            val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-            var a = 0
-            while (a < rows.length) {
-              val (ia, va, na) = rows(a)
-              val ba = (ia % B).toInt
-              var bi = a + 1
-              while (bi < rows.length) {
-                val (ib, vb, nb) = rows(bi)
-                if (p == q || ba != (ib % B).toInt) {
-                  var dot = 0.0; var k = 0
-                  while (k < va.length) { dot += va(k) * vb(k); k += 1 }
-                  if (dot / (na * nb) >= tau) out += ib // drop the higher id
-                }
-                bi += 1
-              }
-              a += 1
-            }
-            out.iterator
-          }
-          .toDF("drop_id")
+        val repDrops = Collapse.blockPairs(probes, B = 4, tau)(
+            (e: Array[Float]) => Llm.normed(e.map(_.toDouble)), Llm.rawCosine)
+          .toDF("cluster", "ga", "gb", "cos").select(col("gb").as("drop_id"))
         repDrops.unionByName(memberDrops).distinct().orderBy("drop_id")
       })
   )

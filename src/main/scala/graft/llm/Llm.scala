@@ -30,7 +30,7 @@ object Llm {
 
   /** Per-source distinct-content cap for the declared-exact gram-pair
     * kernels (dedup_ngram_jaccard / dedup_containment) — see the
-    * quarantine note inside [[collapsedPairSim]].
+    * quarantine note on [[gramPairs]].
     */
   val GramPairMaxReps: Long = 16384L
 
@@ -150,10 +150,19 @@ object Llm {
     * with a sequential left fold — DuckDB's list_dot_product mirrors the
     * same accumulation order, so values agree bit-for-bit before rounding.
     */
-  private def cosCol(a: String, b: String): Column = {
-    def dot(x: String, y: String) = expr(
-      s"aggregate(zip_with($x, $y, (p, q) -> CAST(p AS DOUBLE) * CAST(q AS DOUBLE)), CAST(0 AS DOUBLE), (acc, v) -> acc + v)")
-    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
+  private def cosCol(a: String, b: String): Column =
+    dotCol(a, b) / (sqrt(dotCol(a, a)) * sqrt(dotCol(b, b)))
+
+  private def dotCol(x: String, y: String): Column = expr(
+    s"aggregate(zip_with($x, $y, (p, q) -> CAST(p AS DOUBLE) * CAST(q AS DOUBLE)), CAST(0 AS DOUBLE), (acc, v) -> acc + v)")
+
+  /** A vector's rounded cosine with itself, the within-group score of a
+    * collapsed embedding group: the [[cosCol]] arithmetic, so 1.0 for any
+    * non-zero vector, and NULL for the all-zero one, which never pairs.
+    */
+  private def selfCosCol(e: String): Column = {
+    val d = dotCol(e, e)
+    round(try_divide(d, sqrt(d) * sqrt(d)), 6)
   }
 
   private def duckCos(a: String, b: String): String =
@@ -182,148 +191,60 @@ object Llm {
     if (x.isNaN) x
     else java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
-  /** All-pairs cosine ≥ tau via a block-partitioned self-join: vectors hash
-    * into B blocks, each unordered block pair (p ≤ q) becomes one shuffle
-    * key, and a primitive-array kernel compares the two blocks inside that
-    * task. No driver collect anywhere — every vector is replicated B ways
-    * through a shuffle (B² /2 tasks of N/B vectors each), which is the
-    * standard way all-pairs survives 100 TB: pick B so two blocks fit an
-    * executor; parallelism grows as B². The interpreted higher-order-
-    * function form of the kernel is ~50× slower, hence the JVM loop.
-    * Double accumulation runs in ascending index order, matching DuckDB's
-    * list_dot_product, so values agree bit-for-bit before rounding; the dot
-    * loop is role-symmetric, so block orientation can't change the value.
-    *
-    * With sameLabelOnly the LABEL joins the shuffle key: tasks become
-    * (label, block-pair), so vectors of different labels are never shuffled
-    * into the same group (a label-blind key paid O(|task|²) label checks
-    * per task) and a hot label spreads across its
-    * own B² tasks instead of melting one; grow B when a group outgrows two
-    * blocks per executor.
+  /** A vector with its L2 norm, accumulated in ascending index order like
+    * DuckDB's list_dot_product.
     */
-  private def cosinePairsFast(
-      s: SparkSession, d: String, sameLabelOnly: Boolean, tau: Double): DataFrame = {
+  private[llm] def normed(v: Array[Double]): (Array[Double], Double) = {
+    var acc = 0.0
+    var k = 0
+    while (k < v.length) { acc += v(k) * v(k); k += 1 }
+    (v, math.sqrt(acc))
+  }
+
+  /** Cosine of two [[normed]] vectors. The dot loop is role-symmetric, so
+    * pair orientation cannot change the value; the all-zero vector scores
+    * NaN, which every `>= tau` drops.
+    */
+  private[llm] def rawCosine(a: (Array[Double], Double), b: (Array[Double], Double)): Double = {
+    val (va, vb) = (a._1, b._1)
+    var dot = 0.0
+    var k = 0
+    while (k < va.length) { dot += va(k) * vb(k); k += 1 }
+    dot / (a._2 * b._2)
+  }
+
+  private def cosine(a: (Array[Double], Double), b: (Array[Double], Double)): Double =
+    round6(rawCosine(a, b))
+
+  /** All-pairs cosine ≥ tau over the embeddings, within each label when
+    * `scope` is `Seq("label")`: [[Collapse]] to one representative per
+    * distinct vector, the 8-block all-pairs kernel over representatives,
+    * expansion back to (scope…, i, j, sim). The collapsed table feeds three
+    * consumers, so it is checkpointed once per run.
+    */
+  private def cosinePairs(s: SparkSession, d: String, scope: Seq[String], tau: Double): DataFrame = {
     val sp = s
     import sp.implicits._
-    val B = 8
-    // Exact-dup collapse first (same posture as [[collapsedPairSim]]): one
-    // representative per DISTINCT embedding (per label when the join is
-    // label-scoped), the block-partitioned kernel pays each dot product
-    // once per distinct pair, and matches expand back to vec_id pairs via
-    // gid-keyed joins bounded by output size. On distinct-content data
-    // this is still the declared quadratic exact baseline — the collapse
-    // only stops identical copies (the common case in any replicated
-    // corpus, and the 10x rehearsal's entire growth mode) from re-paying
-    // the kernel. Vector identity is xxhash64 over the float array PLUS
-    // structural discriminators (length, first/last element): a bare
-    // 64-bit hash makes birthday collisions expected at ~10^10 vectors,
-    // and a collision here silently merges DISTINCT vectors into one
-    // representative — false duplicate pairs and missed pairs, a far
-    // larger blast radius than a per-gram fnv64 collision. The extra key
-    // columns keep the shuffle key O(1) bytes (unlike grouping by the
-    // full array) while shrinking the collision surface to same-hash,
-    // same-length, same-endpoint arrays.
-    // Checkpointed once per run for the same four-consumer reason as
-    // [[collapsedPairSim]].
-    val grouped = Ckpt.slot(s"$d#cos#$sameLabelOnly#$tau", Tables.t(s, d, "embeddings")
-      .select(col("vec_id"), col("label"), col("embedding"))
-      .groupBy((if (sameLabelOnly) Seq(col("label").as("gl")) else Nil) ++
-        Seq(xxhash64(col("embedding")).as("eh"),
-          size(col("embedding")).as("en"),
-          try_element_at(col("embedding"), lit(1)).as("e0"),
-          try_element_at(col("embedding"), lit(-1)).as("e1")): _*)
-      .agg(sort_array(collect_list(struct(col("vec_id"), col("label")))).as("members"),
-        first(col("embedding")).as("emb"))
-      .select(col("members"), col("emb"),
-        col("members")(0)("vec_id").as("gid"),
-        col("members")(0)("label").as("glabel")))
-    // replicate each representative to the B block-pair groups it
-    // participates in: its own block's diagonal pair plus one per other
-    // block (normalized to p <= q, so each unordered pair meets in exactly
-    // one group)
-    val matched = grouped.select(col("gid"), col("glabel"), col("emb"))
-      .as[(Long, Int, Array[Float])]
-      .flatMap { case (gid, label, emb) =>
-        val b = (gid % B).toInt
-        (0 until B).map { o =>
-          val (p, q) = if (b <= o) (b, o) else (o, b)
-          ((if (sameLabelOnly) label else -1, p * B + q), gid, emb)
-        }
-      }
-      .groupByKey(_._1)
-      .flatMapGroups { (key, it) =>
-        val p = key._2 / B
-        val q = key._2 % B
-        val rows = it.toArray.sortBy(_._2).map { case (_, gid, emb) =>
-          val v = new Array[Double](emb.length)
-          var acc = 0.0
-          var k = 0
-          while (k < emb.length) { v(k) = emb(k).toDouble; acc += v(k) * v(k); k += 1 }
-          (gid, v, math.sqrt(acc))
-        }
-        // diagonal group (p == q): all pairs within the block; off-diagonal:
-        // only cross pairs between the two blocks
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-        var a = 0
-        while (a < rows.length) {
-          val (ia, va, na) = rows(a)
-          val ba = (ia % B).toInt
-          var bIdx = a + 1
-          while (bIdx < rows.length) {
-            val (ib, vb, nb) = rows(bIdx)
-            if (p == q || ba != (ib % B).toInt) {
-              var dot = 0.0
-              var k = 0
-              while (k < va.length) { dot += va(k) * vb(k); k += 1 }
-              val sim = round6(dot / (na * nb))
-              if (sim >= tau) out += ((ia, ib, sim))
-            }
-            bIdx += 1
-          }
-          a += 1
-        }
-        out
-      }
-      .toDF("ga", "gb", "sim")
-    val mem = grouped.select(col("gid"), explode(col("members")).as("m"))
-      .select(col("gid"), col("m.vec_id").as("v"), col("m.label").as("l"))
-    val cross = matched
-      .join(mem.select(col("gid").as("ga"), col("v").as("va"), col("l").as("la")), "ga")
-      .join(mem.select(col("gid").as("gb"), col("v").as("vb"), col("l").as("lb")), "gb")
-      .select(
-        when(col("va") < col("vb"), col("la")).otherwise(col("lb")).cast("long").as("label"),
-        least(col("va"), col("vb")).as("i"),
-        greatest(col("va"), col("vb")).as("j"), col("sim"))
-    // within-group pairs: identical vectors, self-cosine computed from the
-    // representative (round6 lands on 1.0 except the all-zero vector,
-    // whose NaN drops exactly like the per-pair form did)
-    val within = grouped
-      .select(col("members.vec_id").as("ids"), col("members.label").as("ls"), col("emb"))
-      .as[(Array[Long], Array[Int], Array[Float])]
-      .flatMap { case (ids, ls, emb) =>
-        if (ids.length < 2) Iterator.empty
-        else {
-          var dot = 0.0
-          var k = 0
-          while (k < emb.length) { val x = emb(k).toDouble; dot += x * x; k += 1 }
-          val n = math.sqrt(dot)
-          val sim = round6(dot / (n * n))
-          if (sim.isNaN || sim < tau) Iterator.empty
-          else ids.indices.iterator.flatMap(x =>
-            (x + 1 until ids.length).iterator.map(y => (ls(x).toLong, ids(x), ids(y), sim)))
-        }
-      }
-      .toDF("label", "i", "j", "sim")
-    cross.unionByName(within)
+    val grouped = Ckpt.slot(s"$d#cos#${scope.mkString}#$tau",
+      Collapse.groups(Tables.t(s, d, "embeddings"), "vec_id", "embedding",
+        Seq("embedding"), scope: _*))
+    val reps = grouped.select(scope.map(col).headOption.getOrElse(lit(0)),
+        col("gid"), col("embedding"))
+      .as[(Int, Long, Array[Float])]
+    val pairs = Collapse.blockPairs(reps, B = 8, tau)(
+        (e: Array[Float]) => normed(e.map(_.toDouble)), cosine)
+      .toDF("label", "ga", "gb", "sim")
+      .select((scope :+ "ga" :+ "gb" :+ "sim").map(col): _*)
+    Collapse.expand(grouped, pairs, "sim",
+      selfCosCol("embedding"), Some(tau), scope)
   }
 
   /** Word 5-gram shingle set over a pre-split token array column `w`
     * (documents with ≥5 tokens — callers filter `size(w) >= 5`). The split
     * array is staged ONCE as a column and the lambda indexes it with O(1)
-    * element_at: the previous form re-ran split(text) (O(L)) plus an O(i)
-    * slice copy INSIDE the per-position lambda — interpreted-HOF work
-    * quadratic in document length that dominated every corpus-gram key
-    * (measured 2.3-4x on the gram keys at sf0.1).
+    * element_at. Re-running split(text) (O(L)) plus an O(i) slice copy
+    * INSIDE the per-position lambda is interpreted-HOF work quadratic in
+    * document length, 2.3-4x slower on the gram keys at sf0.1.
     */
   private[llm] val gramsFromW =
     "transform(sequence(1, size(w) - 4), " +
@@ -374,24 +295,19 @@ object Llm {
   }
 
   /** L2's collapsed minhash state, shared by the pair query and the
-    * component-clustering step: one representative per distinct gram set
-    * (`grouped`: gid = min member id, sorted members, rep signature + gram
-    * hashes) and the verified near-dup pairs over REPRESENTATIVES only
-    * (`matched`: ga < gb, exact Jaccard ≥ 0.5). Both are checkpointed and
-    * memoized in the [[Memo]] slot `minhash:<d>` under the documents
-    * fingerprint, so the clustering query doesn't recompute the
-    * text→signature→band pipeline. The pair query itself always recomputes
-    * (`fresh`) — bench repeats stay honest — and swaps the fresh state in;
-    * the replaced entry's checkpoint blocks are released by id.
+    * component-clustering step: the [[Collapse]] groups of distinct gram
+    * sets (`grouped`: gid, members, rep signature + gram hashes) and the
+    * verified near-dup pairs over REPRESENTATIVES only (`matched`: ga < gb,
+    * exact Jaccard ≥ 0.5). Both are checkpointed and memoized in the
+    * [[Memo]] slot `minhash:<d>` under the documents fingerprint, so the
+    * clustering query doesn't recompute the text→signature→band pipeline.
+    * The pair query itself always recomputes (`fresh`) — bench repeats stay
+    * honest — and swaps the fresh state in; the replaced entry's checkpoint
+    * blocks are released by id.
     *
-    * Why collapse: uncollapsed, the pair key scales with exponent 1.20 and
-    * components with 1.30 from sf1 to sf10 — a G-member exact-dup group
-    * has identical signatures, so every band matches and the kernel
-    * verifies G²/2 identical candidate pairs, then propagates labels over
-    * a G²-edge clique. Banding distinct gram sets makes
-    * candidate work scale with distinct content; the expansion back to id
-    * pairs is bounded by the OUTPUT the all-pairs oracle semantics demand
-    * anyway (identical sets are Jaccard 1.0 ≥ τ by definition).
+    * A G-member duplicate group has identical signatures, so uncollapsed,
+    * every band matches and the kernel verifies G²/2 identical candidate
+    * pairs, then propagates labels over a G²-edge clique.
     */
   private final case class MinhashState(
       grouped: DataFrame, matched: DataFrame, ids: Seq[Int])
@@ -409,47 +325,11 @@ object Llm {
     * (p < 10⁻¹³ at 10³ grams/doc — and the candidate set is tiny anyway).
     */
   private def minhashStateUncached(s: SparkSession, d: String): MinhashState = {
-    // One fused per-document pass straight off `text`: tokenize, hash each
-    // 5-gram on the fly (never materializing shingle strings), fold the hash
-    // into the 64-perm MinHash signature, and keep the sorted distinct gram
-    // hashes for exact verification. Narrow (no shuffle), one text scan —
-    // materializing full shingle-string arrays and re-joining them twice
-    // measured 18 s.
-    val base = docsSigGrams(s, d).toDF("doc_id", "sig", "gh")
-    // Exact-dup collapse: one row per distinct gram set. The group key is
-    // xxhash64 over the sorted gram hashes plus length/endpoint
-    // discriminators (bare 64 bits would make collision-merges expected at
-    // ~10^10 distinct sets); sig is a pure function of the gram hash set so
-    // first() is deterministic, and the partial-agg first/collect_list ship
-    // one gram array per (group, partition) and 8-byte ids respectively.
-    val (grouped, gIds) = Ckpt(base
-      .groupBy(xxhash64(col("gh")).as("k"), size(col("gh")).as("kn"),
-        try_element_at(col("gh"), lit(1)).as("k0"),
-        try_element_at(col("gh"), lit(-1)).as("k1"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("members"),
-        first(col("sig")).as("sig"), first(col("gh")).as("gh"))
-      .withColumn("gid", col("members")(0))
-      .select(col("gid"), col("members"), col("sig"), col("gh")))
-    // Band key = the RAW 2-perm slice (band, s1, s2) rather than a hash of
-    // it: an engine-specific hash (xxhash64) can only ADD
-    // candidates via collisions, which a cross-engine banded oracle cannot
-    // reproduce — raw slices make the candidate set a pure function of the
-    // signatures, identical in both engines, at the cost of an 8-byte-wider
-    // shuffle key.
-    // First-match-only candidate dedup (as in sim_join_lsh_threshold):
-    // each band row carries the PREFIX of the
-    // raw signature strictly before its own band (avg 31 longs — half the
-    // full 64-perm payload), and a pair is emitted only from its lowest
-    // matching band: `first_match_band(pre, pre, 2) = -1` ⟺ no band < b
-    // also matched. Identical "shares ≥1 band" pair set as a global
-    // `.distinct()` — but with ZERO dedup state (a distinct is a hash
-    // aggregate holding the full candidate-pair set, which OOMs at the
-    // 32-thread/16 g gate config). The filter is a codegen long-compare loop
-    // per candidate row, no allocation.
-    val bands = grouped.select(col("gid"),
-      explode(expr("transform(sequence(0, 31), b -> struct(b AS band, element_at(sig, b*2+1) AS s1, element_at(sig, b*2+2) AS s2, slice(sig, 1, b*2) AS pre))")).as("bb"))
-      .select(col("gid"), col("bb.band").as("band"), col("bb.s1").as("s1"),
-        col("bb.s2").as("s2"), col("bb.pre").as("pre"))
+    // sig is a pure function of the gram hash set, so the representative's
+    // signature bands for the whole group
+    val (grouped, gIds) = Ckpt(Collapse.groups(
+      docsSigGrams(s, d).toDF("doc_id", "sig", "gh"), "doc_id", "gh", Seq("sig", "gh")))
+    val bands = Collapse.bands(grouped, "gid")
     val cand = bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.s1") === col("y.s1") &&
           col("x.s2") === col("y.s2") && col("x.gid") < col("y.gid"))
@@ -474,28 +354,11 @@ object Llm {
     MinhashState(grouped, matched, gIds ++ mIds)
   }
 
-  /** Expand the collapsed state back to the all-pairs (i < j, jac) the
-    * oracle semantics demand: cross-group matches through two gid-keyed
-    * membership joins, within-group pairs enumerated directly (identical
-    * gram sets are Jaccard exactly 1.0) — both bounded by the output size.
+  /** The all-pairs (i < j, jac) of the collapsed state; identical gram
+    * sets are Jaccard exactly 1.0.
     */
-  private def minhashNearPairsFromState(
-      s: SparkSession, st: MinhashState): DataFrame = {
-    val sp = s
-    import sp.implicits._
-    val mem = st.grouped.select(col("gid"), explode(col("members")).as("m"))
-    val cross = st.matched
-      .join(mem.select(col("gid").as("ga"), col("m").as("da")), "ga")
-      .join(mem.select(col("gid").as("gb"), col("m").as("db")), "gb")
-      .select(least(col("da"), col("db")).as("i"),
-        greatest(col("da"), col("db")).as("j"), col("jac"))
-    val within = st.grouped.where(size(col("members")) >= 2)
-      .select(col("members")).as[Array[Long]]
-      .flatMap(ms => ms.indices.iterator.flatMap(x =>
-        (x + 1 until ms.length).iterator.map(y => (ms(x), ms(y), 1.0))))
-      .toDF("i", "j", "jac")
-    cross.unionByName(within)
-  }
+  private def minhashNearPairs(st: MinhashState): DataFrame =
+    Collapse.expand(st.grouped, st.matched, "jac", lit(1.0))
 
   /** md5-derived signed-64 hash of a string: first 8 digest bytes
     * big-endian — the same two's-complement value DuckDB computes as
@@ -515,6 +378,9 @@ object Llm {
     * DuckDB oracle can recompute the ENTIRE pipeline — hashes, 64-perm
     * signature, banding, exact Jaccard — from the base table, which is
     * what makes a band-then-verify (sf0.1-tractable) oracle possible.
+    * One fused, narrow pass per document: each 5-gram is hashed on the fly
+    * and folded into the signature, never materialized as a shingle string
+    * (materializing shingle arrays and re-joining them measured 18 s).
     */
   private def docsSigGrams(
       s: SparkSession, d: String): org.apache.spark.sql.Dataset[(Long, Array[Long], Array[Long])] = {
@@ -595,23 +461,18 @@ object Llm {
     base.unionByName(twin)
   }
 
-  /** Banded threshold join kernel: exact-dup collapse → 16 band keys per
-    * representative (12-bit sign fold over the frozen planes, computed in
-    * an ascending-index JVM loop — the same sequential accumulation as
-    * list_dot_product, so band keys agree bit-for-bit with the oracle) →
-    * band equi-join candidates → exact cosine verify ≥ τ → expansion back
-    * to vec_id pairs (output-bounded), the collapsedPairSim discipline.
+  /** Banded threshold join kernel: [[Collapse]] to distinct vectors → 16
+    * band keys per representative (12-bit sign fold over the frozen planes,
+    * computed in an ascending-index JVM loop — the same sequential
+    * accumulation as list_dot_product, so band keys agree bit-for-bit with
+    * the oracle) → band equi-join candidates → exact cosine verify ≥ τ →
+    * expansion back to vec_id pairs.
     */
   private def lshJoinThreshold(s: SparkSession, d: String): DataFrame = {
     val sp = s
     import sp.implicits._
-    val grouped = Ckpt.slot(s"$d#lshjoin", lshJoinInput(s, d)
-      .groupBy(xxhash64(col("emb")).as("eh"), size(col("emb")).as("en"),
-        try_element_at(col("emb"), lit(1)).as("e0"),
-        try_element_at(col("emb"), lit(-1)).as("e1"))
-      .agg(sort_array(collect_list(col("vec_id"))).as("members"),
-        first(col("emb")).as("emb"))
-      .select(col("members"), col("emb"), col("members")(0).as("gid")))
+    val grouped = Ckpt.slot(s"$d#lshjoin",
+      Collapse.groups(lshJoinInput(s, d), "vec_id", "emb", Seq("emb")))
     val nBands = LshJoinBands
     val nR = LshJoinR
     // Each rep carries ALL 16 band keys (one JVM pass over the planes);
@@ -668,31 +529,8 @@ object Llm {
       .join(grouped.select(col("gid").as("gb"), col("emb").as("eb")), "gb")
       .withColumn("sim", round(cosCol("ea", "eb"), 6))
       .where(col("sim") >= LshJoinTau)
-    val mem = grouped.select(col("gid"), explode(col("members")).as("m"))
-    val cross = verified
-      .join(mem.select(col("gid").as("ga"), col("m").as("va")), "ga")
-      .join(mem.select(col("gid").as("gb"), col("m").as("vb")), "gb")
-      .select(least(col("va"), col("vb")).as("i"),
-        greatest(col("va"), col("vb")).as("j"), col("sim"))
-    // within-group pairs: identical vectors — self-cosine from the rep
-    // (1.0 unless all-zero, whose NaN drops like the per-pair form)
-    val within = grouped
-      .select(col("members"), col("emb")).as[(Array[Long], Array[Double])]
-      .flatMap { case (ids, emb) =>
-        if (ids.length < 2) Iterator.empty
-        else {
-          var dot = 0.0
-          var k = 0
-          while (k < emb.length) { dot += emb(k) * emb(k); k += 1 }
-          val n = math.sqrt(dot)
-          val sim = round6(dot / (n * n))
-          if (sim.isNaN || sim < LshJoinTau) Iterator.empty
-          else ids.indices.iterator.flatMap(x =>
-            (x + 1 until ids.length).iterator.map(y => (ids(x), ids(y), sim)))
-        }
-      }
-      .toDF("i", "j", "sim")
-    cross.unionByName(within).orderBy("i", "j")
+    Collapse.expand(grouped, verified.select(col("ga"), col("gb"), col("sim")), "sim",
+      selfCosCol("emb"), Some(LshJoinTau)).orderBy("i", "j")
   }
 
   /** Fully independent DuckDB mirror of [[lshJoinThreshold]]: jittered
@@ -728,38 +566,23 @@ object Llm {
       s"SELECT i, j, sim FROM p WHERE sim >= $LshJoinTau ORDER BY i, j"
   }
 
-  /** Exact set-similarity self-join with exact-duplicate collapse.
+  /** Exact per-source set-similarity self-join over sorted gram-hash
+    * sets: [[Collapse]] to one representative per distinct (source, gram
+    * set), the 4-block sorted-merge all-pairs kernel over representatives,
+    * expansion back to (source, i, j, `outCol`). `score(|A|, |B|, |A∩B|)`
+    * must be symmetric, with score(n, n, n) = 1 for n > 0. The collapsed table feeds three consumers and
+    * Catalyst does not reuse the exchange across them (the typed lambdas
+    * break subtree identity), so it is checkpointed once per run under
+    * `cacheKey`.
     *
-    * Production dedup pipelines run exact dedup BEFORE near-dup, and for
-    * good reason: replicated boilerplate makes identical gram sets the
-    * common case at corpus scale, and a pair kernel that re-verifies every
-    * identical copy does g² redundant merges per g-sized duplicate group —
-    * the 10× rehearsal measured exponents 1.62/1.39 on the two gram-set
-    * keys because pair work grew with raw row count, not distinct content.
-    * Here docs collapse to one representative per distinct
-    * (source, gram set) first (one map-side-combinable aggregation:
-    * `first(grams)` ships each partition's grams once, `collect_list` only
-    * the 8-byte ids), the block-partitioned sorted-merge kernel verifies
-    * DISTINCT pairs only, and matches expand back to id pairs through two
-    * gid-keyed equi joins plus an in-group pair enumeration — both bounded
-    * by the OUTPUT size, which the all-pairs oracle semantics demand
-    * anyway. Verify work scales with distinct content, not corpus size.
-    * Set identity is xxhash64 over the sorted gram-hash array plus
-    * length/endpoint discriminators — a bare 64-bit key would make
-    * collision-merges expected at ~10^10 distinct sets, with a far larger
-    * blast radius than the per-gram fnv64 collisions inside one pair.
-    *
-    * `score(|A|, |B|, |A∩B|)` must be symmetric; `B` spreads a giant
-    * source over B² kernel tasks (raise with cluster size).
-    *
-    * The collapsed table feeds FOUR consumers (rep kernel, two membership
-    * expansions, within-group pairs) and Catalyst does not reuse the
-    * exchange across them (the typed lambdas break subtree identity —
-    * measured 4 parquet scans + 4 gram aggregations per run without
-    * this), so it localCheckpoints once per run, releasing the previous
-    * run's blocks by id (`cacheKey` names the call site + dataset).
+    * On distinct content the kernel pays O(max_source_reps²) by design, so
+    * past [[GramPairMaxReps]] it fails fast, pointing at the banded
+    * production siblings, instead of silently melting at corpus scale. The
+    * cap admits the bench scales and a 10× distinct corpus (10⁴
+    * reps/source ≈ 15 s); the count is one tiny aggregate over the already
+    * checkpointed table.
     */
-  private def collapsedPairSim(
+  private def gramPairs(
       sp: SparkSession,
       docs: Dataset[(String, Long, Array[Long])],
       score: (Int, Int, Int) => Double,
@@ -767,93 +590,35 @@ object Llm {
       outCol: String,
       cacheKey: String): DataFrame = {
     import sp.implicits._
-    val B = 4
-    val grouped = Ckpt.slot(cacheKey, docs.toDF("source", "doc_id", "grams")
-      // gh alone is a 64-bit birthday hazard at corpus scale (see the
-      // cosine collapse): length + endpoint discriminators ride along in
-      // the group key so a hash collision can only merge same-hash,
-      // same-length, same-endpoint gram sets.
-      .groupBy(col("source"), xxhash64(col("grams")).as("gh"),
-        size(col("grams")).as("gn"),
-        try_element_at(col("grams"), lit(1)).as("g0"),
-        try_element_at(col("grams"), lit(-1)).as("g1"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("members"),
-        first(col("grams")).as("grams"))
-      .withColumn("gid", col("members")(0)))
-    // Quarantine (the distinct-content rehearsal measured exponents
-    // 1.32/1.21 on the two callers — collapse only absorbs
-    // string-identical replicas, so on DISTINCT content the rep kernel
-    // pays O(max_source_reps²) by declared-exact design): fail fast past
-    // the cap instead of silently melting at corpus scale, pointing at
-    // the banded production siblings. The cap admits the gate scales and
-    // the 10× distinct rehearsal (10⁴ reps/source ≈ 15 s); the count is
-    // one tiny aggregate over the ALREADY-materialized (eager
-    // localCheckpoint) collapsed table.
+    val grouped = Ckpt.slot(cacheKey, Collapse.groups(docs.toDF("source", "doc_id", "grams"),
+      "doc_id", "grams", Seq("grams"), "source"))
     val maxReps = grouped.groupBy(col("source")).count()
       .agg(max(col("count"))).collect()(0)
     val maxRepsL = if (maxReps.isNullAt(0)) 0L else maxReps.getLong(0)
     require(maxRepsL <= GramPairMaxReps,
-      s"collapsedPairSim($outCol) is a declared-exact all-pairs kernel " +
+      s"gramPairs($outCol) is a declared-exact all-pairs kernel " +
         s"over distinct gram sets ($maxRepsL distinct contents in one " +
         s"source > $GramPairMaxReps cap); use the banded near-dup family " +
         "(dedup_minhash_near / dedup_simhash) or substring winnowing " +
         "(dedup_substring_winnow) at scale")
     val reps = grouped.select(col("source"), col("gid"), col("grams"))
       .as[(String, Long, Array[Long])]
-      .flatMap { case (src, gid, grams) =>
-        val b = (gid % B).toInt
-        (0 until B).map { o =>
-          val (p, q) = if (b <= o) (b, o) else (o, b)
-          ((src, p * B + q), gid, grams)
-        }
-      }
-    val matched = reps.groupByKey(_._1)
-      .flatMapGroups { (grpKey, it) =>
-        val (src, key) = grpKey
-        val p = key / B
-        val q = key % B
-        val gs = it.toArray.sortBy(_._2)
-        val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long, Double)]
-        var a = 0
-        while (a < gs.length) {
-          val (_, ia, ga) = gs(a)
-          val ba = (ia % B).toInt
-          var bi = a + 1
-          while (bi < gs.length) {
-            val (_, ib, gb) = gs(bi)
-            if (p == q || ba != (ib % B).toInt) {
-              var x = 0; var y = 0; var shared = 0
-              while (x < ga.length && y < gb.length) {
-                if (ga(x) == gb(y)) { shared += 1; x += 1; y += 1 }
-                else if (ga(x) < gb(y)) x += 1
-                else y += 1
-              }
-              val sc = score(ga.length, gb.length, shared)
-              if (sc >= tau) out += ((src, ia, ib, sc))
-            }
-            bi += 1
+    val pairs = Collapse.blockPairs(reps, B = 4, tau)((g: Array[Long]) => g,
+        (ga: Array[Long], gb: Array[Long]) => {
+          var x = 0; var y = 0; var shared = 0
+          while (x < ga.length && y < gb.length) {
+            if (ga(x) == gb(y)) { shared += 1; x += 1; y += 1 }
+            else if (ga(x) < gb(y)) x += 1
+            else y += 1
           }
-          a += 1
-        }
-        out
-      }
+          score(ga.length, gb.length, shared)
+        })
       .toDF("source", "ga", "gb", outCol)
-    val mem = grouped.select(col("gid"), explode(col("members")).as("d"))
-    val cross = matched
-      .join(mem.select(col("gid").as("ga"), col("d").as("da")), "ga")
-      .join(mem.select(col("gid").as("gb"), col("d").as("db")), "gb")
-      .select(col("source"), least(col("da"), col("db")).as("i"),
-        greatest(col("da"), col("db")).as("j"), col(outCol))
-    val within = grouped.select(col("source"), col("members"), size(col("grams")).as("n"))
-      .as[(String, Array[Long], Int)]
-      .flatMap { case (src, ms, n) =>
-        val sc = score(n, n, n)
-        if (ms.length < 2 || sc.isNaN || sc < tau) Iterator.empty
-        else ms.indices.iterator.flatMap(x =>
-          (x + 1 until ms.length).iterator.map(y => (src, ms(x), ms(y), sc)))
-      }
-      .toDF("source", "i", "j", outCol)
-    cross.unionByName(within).orderBy("source", "i", "j")
+    // identical non-empty sets score 1.0 under a size-normalized set
+    // similarity; the empty set's 0/0 never pairs
+    val self = when(size(col("grams")) > 0, lit(1.0))
+    Collapse.expand(grouped, pairs, outCol, self, Some(tau), Seq("source"))
+      .orderBy("source", "i", "j")
   }
 
   /** Converged component labels, memoized in the [[Memo]] slot
@@ -978,9 +743,8 @@ object Llm {
     // expansion is checkpointed so the cached entry survives a later
     // minhash-state swap releasing `grouped`'s blocks.
     val gidLabels = s.createDataFrame(labels.rdd, labels.schema)
-    val mem = st.grouped.select(col("gid"), explode(col("members")).as("m"))
     val (expanded, expandedIds) = Ckpt(gidLabels
-      .join(mem.select(col("gid").as("node"), col("m")), "node")
+      .join(Collapse.members(st.grouped).withColumnRenamed("gid", "node"), "node")
       .select(col("m").as("node"), col("label")))
     Ckpt.release(s, labelIds)
     (expanded, expandedIds)
@@ -1016,7 +780,7 @@ object Llm {
       Some(
         s"WITH $duckBandedNearPairs " +
           "SELECT i, j, jac FROM p WHERE jac >= 0.5 ORDER BY i, j"),
-      (s, d) => minhashNearPairsFromState(s, minhashState(s, d, fresh = true)).orderBy("i", "j")),
+      (s, d) => minhashNearPairs(minhashState(s, d, fresh = true)).orderBy("i", "j")),
 
     // L2c — INCREMENTAL near-dup: a new ingest batch (doc_id %
     // 10 = 5 — a GenScale-stable split, 10⁹ ≡ 0 mod 10, chosen so the
@@ -1059,29 +823,12 @@ object Llm {
         val base = docsSigGrams(s, d).toDF("doc_id", "sig", "gh")
         val isBatch = pmod(col("doc_id"), lit(10)) === 5
         val batch = base.where(isBatch)
-        // collapsed index (batch excluded): the minhashState grouping shape
-        val grouped = base.where(!isBatch)
-          .groupBy(xxhash64(col("gh")).as("k"), size(col("gh")).as("kn"),
-            try_element_at(col("gh"), lit(1)).as("k0"),
-            try_element_at(col("gh"), lit(-1)).as("k1"))
-          .agg(sort_array(collect_list(col("doc_id"))).as("members"),
-            first(col("gh")).as("gh"), first(col("sig")).as("sig"))
-          .select(col("members")(0).as("gid"), col("members"),
-            col("sig"), col("gh"))
-        // First-match-only candidate dedup (same discipline as
-        // dedup_minhash_near): both the batch probe and the persisted index
-        // band rows carry the raw-signature prefix before their band; a
-        // (batch doc, index group) candidate is emitted only from its
-        // lowest matching band — no candidate `.distinct()` state.
-        val bandExpr = "transform(sequence(0, 31), b -> struct(b AS band, " +
-          "element_at(sig, b*2+1) AS s1, element_at(sig, b*2+2) AS s2, " +
-          "slice(sig, 1, b*2) AS pre))"
-        val ib = grouped.select(col("gid"), explode(expr(bandExpr)).as("bb"))
-          .select(col("gid"), col("bb.band").as("band"),
-            col("bb.s1").as("s1"), col("bb.s2").as("s2"), col("bb.pre").as("pre"))
-        val bb = batch.select(col("doc_id").as("b"), explode(expr(bandExpr)).as("bb"))
-          .select(col("b"), col("bb.band").as("band"),
-            col("bb.s1").as("s1"), col("bb.s2").as("s2"), col("bb.pre").as("pre"))
+        // collapsed index (batch excluded): the minhashState groups;
+        // batch probe and index band rows both keep a candidate only at its
+        // lowest matching band — no candidate `.distinct()` state
+        val grouped = Collapse.groups(base.where(!isBatch), "doc_id", "gh", Seq("gh", "sig"))
+        val ib = Collapse.bands(grouped, "gid")
+        val bb = Collapse.bands(batch.withColumnRenamed("doc_id", "b"), "b")
         val cand = bb.as("x").join(ib.as("y"),
             col("x.band") === col("y.band") && col("x.s1") === col("y.s1") &&
               col("x.s2") === col("y.s2"))
@@ -1188,22 +935,10 @@ object Llm {
           "FROM b a JOIN b c ON a.band = c.band AND a.bkey = c.bkey AND a.doc_id < c.doc_id) " +
           "SELECT i, j, hamming FROM p WHERE hamming <= 3 ORDER BY i, j"),
       (s, d) => {
-        val sp2 = s
-        import sp2.implicits._
         val sims = Tables.staged(s, s"$SimhashSigDir/data", stageSimhashSigs(s, d))
-        // Exact-dup collapse on the FULL 64-bit signature (the signature IS
-        // the content key for simhash semantics: identical sig ⟺ Hamming 0,
-        // so no secondary discriminator is needed — a "collision" is by
-        // definition a true Hamming-0 pair). Band join + Hamming verify run
-        // over DISTINCT signatures only; member pairs expand back through
-        // gid-keyed joins bounded by the output size, which the all-pairs
-        // semantics demand anyway. Without this, a G-sized duplicate group
-        // re-verifies G² identical comparisons inside one band bucket
-        // (exponent 1.85 on data replicated 100×); with it, verify work
-        // scales with distinct content (the collapsedPairSim discipline).
-        val grouped = sims.groupBy(col("sim"))
-          .agg(sort_array(collect_list(col("doc_id"))).as("members"))
-          .withColumn("gid", col("members")(0))
+        // collapse on the full 64-bit signature: band join + Hamming
+        // verify run over distinct signatures only
+        val grouped = Collapse.groups(sims, "doc_id", "sim", Seq("sim"))
         val bands = grouped.select(col("gid"), col("sim"),
           explode(expr("transform(sequence(0, 3), p -> struct(p AS band, shiftright(sim, p*16) & 65535 AS bkey))")).as("bb"))
           .select(col("gid"), col("sim"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
@@ -1226,19 +961,8 @@ object Llm {
           .select(col("x.gid").as("ga"), col("y.gid").as("gb"),
             expr("bit_count(x.sim ^ y.sim)").cast("long").as("hamming"))
           .where(col("hamming") <= 3)
-        val mem = grouped.select(col("gid"), explode(col("members")).as("d"))
-        val cross = repPairs
-          .join(mem.select(col("gid").as("ga"), col("d").as("da")), "ga")
-          .join(mem.select(col("gid").as("gb"), col("d").as("db")), "gb")
-          .select(least(col("da"), col("db")).as("i"),
-            greatest(col("da"), col("db")).as("j"), col("hamming"))
-        val within = grouped.select(col("members")).as[Array[Long]]
-          .flatMap { ms =>
-            ms.indices.iterator.flatMap(x =>
-              (x + 1 until ms.length).iterator.map(y => (ms(x), ms(y), 0L)))
-          }
-          .toDF("i", "j", "hamming")
-        cross.unionByName(within).orderBy("i", "j")
+        // identical signatures are Hamming 0
+        Collapse.expand(grouped, repPairs, "hamming", lit(0L)).orderBy("i", "j")
       }),
 
     // n-gram Jaccard dedup: char 3-grams, scoped per source, τ = 0.8
@@ -1253,9 +977,8 @@ object Llm {
           "FROM g a JOIN g b ON a.source = b.source AND a.doc_id < b.doc_id) " +
           "SELECT source, i, j, jac FROM p WHERE jac >= 0.8 ORDER BY source, i, j"),
       (s, d) => {
-        // Exact per-source all-pairs via exact-dup collapse + the
-        // block-partitioned self-join (the cosinePairsFast pattern) over
-        // DISTINCT gram sets — see [[collapsedPairSim]]. LSH banding is
+        // Exact per-source all-pairs over distinct gram sets
+        // ([[gramPairs]]). LSH banding is
         // the wrong pruner HERE: this corpus's background char-3-gram
         // similarity (~0.7) sits just under τ=0.8, so any recall-complete
         // banding admits nearly every within-source pair as a candidate —
@@ -1275,7 +998,7 @@ object Llm {
             while (gi.hasNext) { arr(k) = gi.next(); k += 1 }
             (src, id, arr)
           }
-        collapsedPairSim(s, grams,
+        gramPairs(s, grams,
           (na, nb, sh) => round6(sh.toDouble / (na + nb - sh).toDouble),
           tau = 0.8, outCol = "jac", cacheKey = s"$d#jac")
       }),
@@ -1283,9 +1006,8 @@ object Llm {
     // Containment dedup: |A∩B| / min(|A|,|B|) over word 3-grams — the
     // asymmetric cousin of Jaccard that catches a document EMBEDDED in a
     // larger one (quotes, boilerplate wrappers, concat-of-docs), which
-    // symmetric Jaccard dilutes below any usable τ. Same collapse-first
-    // block-partitioned kernel as dedup_ngram_jaccard ([[collapsedPairSim]]),
-    // over word 3-gram sets. τ = 0.5 (background containment on this
+    // symmetric Jaccard dilutes below any usable τ. Same kernel as
+    // dedup_ngram_jaccard ([[gramPairs]]), over word 3-gram sets. τ = 0.5 (background containment on this
     // corpus < 0.3, planted dups ≥ 0.9).
     QueryDef(
       "dedup_containment",
@@ -1321,7 +1043,7 @@ object Llm {
               Seq((src, id, arr))
             }
           }
-        collapsedPairSim(s, grams,
+        gramPairs(s, grams,
           (na, nb, sh) => round6(sh.toDouble / math.min(na, nb).toDouble),
           tau = 0.5, outCol = "cont", cacheKey = s"$d#cont")
       }),
@@ -1346,7 +1068,7 @@ object Llm {
           s"dedup_embed_cosine is the declared-exact O(N^2) oracle fixture " +
             s"($n rows > $ExactCosineMaxRows cap); use dedup_semdedup_cluster " +
             "at scale")
-        cosinePairsFast(s, d, sameLabelOnly = false, tau = 0.35)
+        cosinePairs(s, d, scope = Nil, tau = 0.35)
           .select(col("j").as("drop_id")).distinct()
           .orderBy("drop_id")
       }),
@@ -1401,8 +1123,8 @@ object Llm {
           s"sim_join_threshold is the declared-exact label-blocked O(d^2) " +
             s"oracle fixture ($n rows > $ExactCosineMaxRows cap); use " +
             "sim_join_lsh_threshold or dedup_semdedup_cluster at scale")
-        cosinePairsFast(s, d, sameLabelOnly = true, tau = 0.35)
-          .select(col("label"), col("i"), col("j"), col("sim"))
+        cosinePairs(s, d, scope = Seq("label"), tau = 0.35)
+          .select(col("label").cast("long").as("label"), col("i"), col("j"), col("sim"))
           .orderBy("label", "i", "j")
       }),
 

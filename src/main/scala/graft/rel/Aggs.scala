@@ -92,7 +92,7 @@ object Aggs {
             sumQty.as("sum_qty"),
             Q.out6(sum(Q.dec4(col("l_extendedprice")))).as("sum_base"),
             Q.out6(sum(Q.dec4(col("l_extendedprice")) * (Q.one4 - Q.dec4(col("l_discount"))))).as("sum_disc_price"),
-            Q.out6(avg(Q.dec4(col("l_quantity")))).as("avg_qty"),
+            Q.mean6(Q.dec4(col("l_quantity"))).as("avg_qty"),
             count(lit(1)).as("n"))
           .orderBy("l_returnflag", "l_linestatus")),
 
@@ -359,7 +359,7 @@ object Aggs {
           .agg(
             Q.out6(min(p4)).as("min_price"),
             Q.out6(max(p4)).as("max_price"),
-            Q.out6(avg(p4)).as("avg_price"),
+            Q.mean6(p4).as("avg_price"),
             round(
               sqrt(
                 (sum(p4 * p4).cast("double")

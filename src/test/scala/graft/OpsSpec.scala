@@ -1081,8 +1081,85 @@ class OpsSpec extends AnyFunSuite {
       "fixture must exercise the asymmetric containment pair")
   }
 
+  // D plus a verbatim copy of every row, ids shifted by an offset ≡ 0 mod
+  // 10 past every id: each copy pairs with its original (the within-group
+  // pair of a collapsed group) and with every partner of its original at
+  // the same score, and nothing else changes, so the pair keys' output on
+  // the doubled data is predicted exactly by their output on D.
+  private val CopyOff = 1000000000L
+  private lazy val copyDir: String = {
+    val dir = "target/tmp_collapse_copy"
+    Seq("documents" -> "doc_id", "embeddings" -> "vec_id").foreach { case (t, id) =>
+      val df = spark.read.parquet(s"$sf/$t.parquet")
+      df.unionByName(df.withColumn(id, col(id) + CopyOff))
+        .write.mode("overwrite").parquet(s"$dir/$t.parquet")
+    }
+    dir
+  }
+  private lazy val baseDocs: Seq[(Long, String, String)] =
+    spark.read.parquet(s"$sf/documents.parquet").select("doc_id", "source", "text")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
+  private lazy val baseVecs: Seq[(Long, Int, Seq[Float])] =
+    spark.read.parquet(s"$sf/embeddings.parquet").select("vec_id", "label", "embedding")
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getSeq[Float](2))).toSeq
+  private def words(t: String): Int = t.split(" ", -1).length
+  private def selfCos(v: Seq[Float]): Double = {
+    val dot = v.map(x => x.toDouble * x.toDouble).sum
+    r6(dot / (math.sqrt(dot) * math.sqrt(dot)))
+  }
+  private def sortedRows(key: String, d: String): Seq[Seq[Any]] =
+    SparkEntry.queries(key)(spark, d).collect().map(_.toSeq).toSeq.sortBy(_.mkString(","))
+
+  // per key: the (scope…, x, x + off, score) pair of each base row whose
+  // self-similarity passes the key's threshold
+  private val copyCases: Seq[(String, () => Seq[Seq[Any]])] = Seq(
+    "dedup_minhash_near" -> (() => baseDocs.collect {
+      case (id, _, t) if words(t) >= 5 => Seq[Any](id, id + CopyOff, 1.0) }),
+    "dedup_simhash" -> (() => baseDocs.map { case (id, _, _) => Seq[Any](id, id + CopyOff, 0L) }),
+    "dedup_ngram_jaccard" -> (() => baseDocs.collect {
+      case (id, src, t) if t.length >= 3 => Seq[Any](src, id, id + CopyOff, 1.0) }),
+    "dedup_containment" -> (() => baseDocs.collect {
+      case (id, src, t) if words(t) >= 3 => Seq[Any](src, id, id + CopyOff, 1.0) }),
+    "sim_join_threshold" -> (() => baseVecs.collect {
+      case (id, l, v) if v.exists(_ != 0f) => Seq[Any](l.toLong, id, id + CopyOff, selfCos(v)) }))
+
+  copyCases.foreach { case (key, selfPairs) =>
+    test(s"exact-dup collapse: $key on D plus a verbatim copy ≡ the pairs predicted from D") {
+      val base = sortedRows(key, sf)
+      val predicted = (base.flatMap { r =>
+        val (scope, Seq(i: Long, j: Long, v)) = r.splitAt(r.length - 3)
+        Seq(Seq(i, j), Seq(i + CopyOff, j + CopyOff), Seq(i, j + CopyOff), Seq(j, i + CopyOff))
+          .map(p => (scope ++ p) :+ v)
+      } ++ selfPairs()).sortBy(_.mkString(","))
+      val got = sortedRows(key, copyDir)
+      info(s"${base.size} pairs on D, ${got.size} on D plus its copy")
+      assert(got == predicted, s"first differences: ${got.diff(predicted).take(3)} " +
+        s"vs ${predicted.diff(got).take(3)}")
+    }
+  }
+
+  test("exact-dup collapse: dedup_embed_cosine on D plus a verbatim copy drops every copy") {
+    // the drop set keeps D's drops and adds the copy of every vector with a
+    // finite self-cosine (the zero vector's NaN never drops)
+    val base = sortedRows("dedup_embed_cosine", sf).map(_.head)
+    val predicted = (base ++ baseVecs.collect {
+      case (id, _, v) if v.exists(_ != 0f) => id + CopyOff }).sortBy(_.toString)
+    assert(sortedRows("dedup_embed_cosine", copyDir).map(_.head) == predicted)
+  }
+
+  test("Q.mean6 rounds the exact mean once: 253491 / 9942 = 25.496982") {
+    // 9941 rows of 25 and one of 4966: sum 253491 over 9942 rows. The exact
+    // mean 25.4969824985… rounds half-up to 25.496982; rounding first to 8
+    // places (25.49698250) and then to 6 gave 25.496983
+    val m = spark.range(9942)
+      .select(when(col("id") === 0, 4966).otherwise(25).as("x"))
+      .agg(Q.mean6(Q.dec4(col("x"))))
+      .head().getDouble(0)
+    assert(m == 25.496982)
+  }
+
   test("exact-dup collapse: cosine kernel ≡ naive all-pairs, labels and zero vectors") {
-    // Same contract for cosinePairsFast: identical vectors collapse to one
+    // Same contract for the cosine keys: identical vectors collapse to one
     // representative per distinct (label, vector) — identical vectors with
     // DIFFERENT labels must still pair in the unscoped mode but never in
     // the label-scoped one, the all-zero vector's NaN cosine must drop,
