@@ -83,6 +83,15 @@ object Tables {
   def staged(spark: SparkSession, dataDir: String, markerFp: String): DataFrame =
     Memo.get(spark, dataDir, markerFp)(spark.read.parquet(dataDir))
 
+  /** Table `name` of dataset `d`: `build` written once to
+    * `<`[[stagingDir]]`(name, d)>/data` under `fp` ([[stage]]), read
+    * through [[staged]].
+    */
+  def stagedTable(spark: SparkSession, name: String, d: String, fp: String)(build: => DataFrame): DataFrame = {
+    val dir = stagingDir(name, d)
+    staged(spark, s"$dir/data", stage(dir, fp)(build.write.mode("overwrite").parquet(s"$dir/data")))
+  }
+
   /** Parallelize an under-partitioned scan before a per-row compute kernel
     * (JVM mapPartitions, interpreted HOFs): local testdata tables are
     * single small parquet files — one row-group, one task — so without
@@ -194,7 +203,7 @@ object Tables {
     */
   private[graft] def fhirFixture(spark: SparkSession): String = {
     import spark.implicits._
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_fhir_fixture"
+    val dir = s"$tmp/graft_fhir_fixture"
     stage(dir, s"fhir-fixture-v1|${fixture.hashCode.toHexString}") {
       fixture.foreach { case (r, lines, paths) =>
         val text = spark.createDataset(lines)
@@ -236,12 +245,27 @@ object Tables {
       body.foldLeft(0xcbf29ce484222325L)((h, c) => (h ^ c) * 0x100000001b3L))
   }
 
-  /** Per-dataset staging dir `<java.io.tmpdir>/<name>_<hex hash of d>` for
-    * layouts a key writes once and then reads. Specs and oracle SQL compute
-    * the same path, so its form is part of the key's contract.
+  private def tmp: String = sys.props("java.io.tmpdir")
+
+  /** Per-dataset staging dir `<java.io.tmpdir>/<name>_<hex hash of d>`: the
+    * one place a layout a key writes once ([[stage]]) and then reads lives,
+    * so layouts of two datasets never share a path. Specs ask for the same
+    * path; oracle SQL names it through [[stagedPath]].
     */
   def stagingDir(name: String, d: String): String =
-    s"${sys.props("java.io.tmpdir")}/${name}_${Integer.toHexString(d.hashCode)}"
+    s"$tmp/${name}_${Integer.toHexString(d.hashCode)}"
+
+  /** File `rel` of the layout staged in [[stagingDir]]`(name, _)` as oracle
+    * SQL names it: `<java.io.tmpdir>/<name>/<rel>`, free of the dataset
+    * because oracle SQL is written before a dataset is known. Verify
+    * resolves exactly this form for its dataset ([[stagedPathForm]]).
+    */
+  def stagedPath(name: String, rel: String): String = s"$tmp/$name/$rel"
+
+  /** Regex of the [[stagedPath]] form up to its layout dir; group 1 is the
+    * layout's name.
+    */
+  private[graft] def stagedPathForm: String = java.util.regex.Pattern.quote(s"$tmp/") + """(\w+)/"""
 
   /** A fresh dir under `java.io.tmpdir`, deleted at JVM exit (symlinks in
     * it are removed, not followed).

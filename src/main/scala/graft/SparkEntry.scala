@@ -23,8 +23,9 @@ object SparkEntry {
     *     agg_weighted_median and the bucketed catalog tables
     *     (join_bucketed_colocated);
     *   - staged input layouts (a Spark write job runs once per dataset
-    *     fingerprint, `Tables.stage`; repeats time only the read path,
-    *     which IS the operator under test): manifest/lineage dirs,
+    *     fingerprint, `Tables.stage`, into the dataset's own
+    *     `Tables.stagingDir`; repeats time only the read path, which IS
+    *     the operator under test): manifest/lineage dirs,
     *     bloom/partitioned layouts, the fhir merge projections (keyed on
     *     the Patient table `Tables.fhirDir` resolves), the staged
     *     kernel tables, and the stream input staging — every stream key
@@ -75,7 +76,10 @@ object SparkEntry {
     * ONLY centroids and the oracle re-derives argmin assignment, probe
     * and multi-assignment via the bit-identical squared-distance fold
     * (only the Lloyd iteration stays kernel-only); eigensolve and the two
-    * HLL library estimates complete the flagged set.
+    * HLL library estimates complete the flagged set. The artifact lives in
+    * the `Tables.stagingDir` of the dataset it was built from; the oracle
+    * names it in the dataset-free `Tables.stagedPath` form, which Verify
+    * resolves for the dataset it checks.
     */
   private val stagedOracleKeys: Set[String] = Set(
     "multimodal_phash_neardup", "sim_ann_ivf",

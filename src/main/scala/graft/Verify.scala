@@ -30,19 +30,28 @@ object Verify {
     spark.stop()
   }
 
-  /** [[SparkEntry.oracleSql]] with each FHIR table's golden path (the form
-    * `Tables.fhirScan` writes) replaced by the table `Tables.fhirDir`
-    * resolves for `sfDir`, so Spark and DuckDB read the same files. Where
-    * the golden files exist nothing changes. A Spark-written table is a
+  /** [[SparkEntry.oracleSql]] resolved for `sfDir`, so Spark and DuckDB
+    * read the same files:
+    *   - each FHIR table's golden path (the form `Tables.fhirScan` writes)
+    *     becomes the table `Tables.fhirDir` resolves; where the golden files
+    *     exist nothing changes;
+    *   - each staged layout's dataset-free path (the form
+    *     `Tables.stagedPath` writes) becomes its `Tables.stagingDir` for
+    *     `sfDir`.
+    * Both run in one pass over the declared SQL, which names no dataset, so
+    * a resolved path is never rewritten again. A Spark-written table is a
     * dir of part files, which DuckDB reads through a glob.
     */
   def oracleSql(spark: SparkSession, sfDir: String): Map[String, String] = {
-    val fhirPath = (java.util.regex.Pattern.quote(Tables.goldenDir) + """/(\w+)\.parquet""").r
+    val path = (java.util.regex.Pattern.quote(Tables.goldenDir) + """/(\w+)\.parquet|""" +
+      Tables.stagedPathForm).r
     SparkEntry.oracleSql.map { case (k, sql) =>
-      k -> fhirPath.replaceAllIn(sql, m => {
-        val p = s"${Tables.fhirDir(spark, sfDir, m.group(1))}/${m.group(1)}.parquet"
-        Regex.quoteReplacement(if (Files.isDirectory(Paths.get(p))) s"$p/*.parquet" else p)
-      })
+      k -> path.replaceAllIn(sql, m => Regex.quoteReplacement(
+        if (m.group(1) == null) s"${Tables.stagingDir(m.group(2), sfDir)}/"
+        else {
+          val p = s"${Tables.fhirDir(spark, sfDir, m.group(1))}/${m.group(1)}.parquet"
+          if (Files.isDirectory(Paths.get(p))) s"$p/*.parquet" else p
+        }))
     }
   }
 }

@@ -27,10 +27,12 @@ object Ivf {
   private val NProbe = 2
   private val TopK = 3
 
+  private val IndexName = "graft_ivf"
+
   /** The index's staging dir, one per dataset: [[Tables.stage]] rebuilds
     * it in place when the embeddings' fingerprint changes.
     */
-  private[graft] def indexDir(d: String): String = Tables.stagingDir("graft_ivf", d)
+  private[graft] def indexDir(d: String): String = Tables.stagingDir(IndexName, d)
 
   private def sqDist(a: Array[Double], b: Array[Double]): Double = {
     var acc = 0.0; var i = 0
@@ -145,38 +147,11 @@ object Ivf {
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
   }
 
-  /** Fixed staging path for the IVF oracle tables (the staged-signature
-    * discipline): the float-sensitive steps — k-means assignment, nprobe=2
-    * query-probe selection, nAssign=3 multi-assignment — are staged once
-    * per (JVM, dataset), derived from the SAME persisted index and the
-    * SAME sqDist/tie-break code the operators use; DuckDB then mirrors the
-    * remaining exact math (cluster equi-joins + the shared-accumulation
-    * cosine) over the staged tables. Fixed path because the oracle SQL is
-    * a static literal (the index dir itself is per dataset).
-    */
-  private val IvfOracleDir = s"${sys.props("java.io.tmpdir")}/graft_ivf_oracle"
-
-  /** Stages ONLY the centroids — the genuinely iterative Lloyd output.
-    * Assignment, nprobe probe selection and nAssign multi-assignment are
-    * all RE-DERIVED by the oracle from the centroids and the base table
-    * ([[duckAssignCtes]]), so the argmin arithmetic is cross-engine
-    * checked instead of trusted. The fingerprint is the one the index is
-    * staged under, so index artifact, staged oracle tables and the session
-    * memo invalidate together on in-place data regeneration; the
-    * `centroids1` kernel tag names the centroids-only layout.
-    */
-  private def stageIvfOracle(s: SparkSession, d: String): String =
-    Tables.stage(IvfOracleDir, "centroids1|" + Tables.fingerprint(d, "embeddings")) {
-      val sp = s
-      import sp.implicits._
-      val (_, centroids) = index(s, d)
-      centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cluster", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$IvfOracleDir/centroids")
-    }
-
   /** DuckDB re-derivation of every k-means DOWNSTREAM arithmetic step from
-    * the staged centroids alone: squared distance computed as
+    * the index's own centroids table alone — the genuinely iterative Lloyd
+    * output, read in [[indexDir]] of the dataset Verify resolves, so
+    * assignment, probe selection and multi-assignment are cross-engine
+    * checked instead of trusted. Squared distance is computed as
     * `list_dot_product(diff, diff)` over the index-wise difference list —
     * the identical ascending subtract/multiply/add double fold as
     * [[sqDist]], so values are bit-identical — and ranks broken by cluster
@@ -187,7 +162,7 @@ object Ivf {
     * multi-assignment.
     */
   private def duckAssignCtes: String =
-    "ct AS (SELECT cluster, centroid FROM read_parquet('" + IvfOracleDir + "/centroids/*.parquet')), " +
+    s"ct AS (SELECT cluster, centroid FROM read_parquet('${Tables.stagedPath(IndexName, "centroids/*.parquet")}')), " +
       "ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings), " +
       "dst AS (SELECT vec_id, cluster, list_dot_product(df, df) AS d2 FROM " +
       "(SELECT ev.vec_id, ct.cluster, [ev.e[i] - ct.centroid[i] for i in generate_series(1, 64)] AS df FROM ev, ct)), " +
@@ -200,13 +175,13 @@ object Ivf {
     s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b)))"
 
   val defs: Seq[QueryDef] = Seq(
-    // ORACLED via the staged CENTROIDS alone: DuckDB re-derives the
+    // ORACLED via the index's CENTROIDS alone: DuckDB re-derives the
     // argmin assignment and the nprobe probe selection from the centroids
     // and the base table ([[duckAssignCtes]]) and then runs the identical
     // probe-cluster equi-join + 6-dp exact-cosine rank — only the Lloyd
     // iteration itself remains kernel-only. LlmSpec keeps checking recall
     // vs brute force and nprobe-bounded candidate sets. Key is memoized
-    // (index artifact + staged layout).
+    // (index artifact).
     QueryDef(
       "sim_ann_ivf",
       Some(
@@ -220,7 +195,6 @@ object Ivf {
           "SELECT qid, cid, sim, CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS BIGINT) AS rn " +
           "FROM sims QUALIFY rn <= 3 ORDER BY qid, rn"),
       (s, d) => {
-        stageIvfOracle(s, d)
         val (assigned, centroids) = index(s, d)
         val e = Tables.t(s, d, "embeddings")
         val withCluster = e.join(assigned, "vec_id")
@@ -265,7 +239,7 @@ object Ivf {
     // its τ=0.35 drop set at sf0.01.
     QueryDef(
       "dedup_semdedup_cluster",
-      // ORACLED via the staged centroids: the nAssign=3 multi-assignment
+      // ORACLED via the index's centroids: the nAssign=3 multi-assignment
       // is RE-DERIVED from them ([[duckAssignCtes]] rn <= 3), and DuckDB
       // states the UNCOLLAPSED semantics directly — drop j iff some i < j
       // shares a probe cluster and cosine(i, j) ≥ τ — which the collapsed
@@ -284,7 +258,6 @@ object Ivf {
           s"WHERE ${dCos("ea.emb", "eb.emb")} >= 0.35) " +
           "SELECT DISTINCT j AS drop_id FROM v ORDER BY drop_id"),
       (s, d) => {
-        stageIvfOracle(s, d)
         val sp = s
         import sp.implicits._
         val (_, centroids) = index(s, d)

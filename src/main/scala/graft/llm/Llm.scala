@@ -34,24 +34,6 @@ object Llm {
     */
   val GramPairMaxReps: Long = 16384L
 
-  /** Fixed staging path for the simhash signature table — a Spark-side
-    * PERFORMANCE artifact only: the per-doc signature kernel
-    * runs once per (JVM, dataset) and the query's banding reads it, but
-    * the ORACLE recomputes the md5-token-hash bit-vote signature from the
-    * base table independently. Fixed path (no dataset hash) because the
-    * query reads it within one process; its kernel-tagged fingerprint
-    * re-stages on data OR kernel change.
-    */
-    val SimhashSigDir = s"${sys.props("java.io.tmpdir")}/graft_simhash_sig"
-
-  /** Fixed staging path for the sign-LSH bucket table — a Spark-side
-    * PERFORMANCE artifact only (the fold runs once per (JVM, dataset); the
-    * query's bucket join reads it). The ORACLE does not read it: the
-    * seed-42 planes inline into the SQL and DuckDB recomputes the sign
-    * fold from the base table (see [[LshPlanes]]).
-    */
-  val LshBucketDir = s"${sys.props("java.io.tmpdir")}/graft_lshbuckets"
-
   /** The 8 signed hyperplanes of the LSH fold — a FIXED, seed-42 ±1
     * pattern shared verbatim by the Spark kernel (inlined literal array)
     * and the DuckDB oracle (inlined [±1.0,…] lists in
@@ -64,18 +46,23 @@ object Llm {
     Seq.fill(8)(Seq.fill(64)(if (rnd.nextBoolean()) 1.0 else -1.0))
   }
 
-  private def stageLshBuckets(s: SparkSession, d: String): String =
-    Tables.stage(LshBucketDir, Tables.fingerprint(d, "embeddings")) {
+  /** The staged sign-LSH bucket table — a Spark-side PERFORMANCE artifact
+    * only (the fold runs once per dataset fingerprint; the query's bucket
+    * join reads it). The ORACLE does not read it: the seed-42 planes
+    * inline into the SQL and DuckDB recomputes the sign fold from the base
+    * table (see [[LshPlanes]]).
+    */
+  private def lshBuckets(s: SparkSession, d: String): DataFrame =
+    Tables.stagedTable(s, "graft_lshbuckets", d, Tables.fingerprint(d, "embeddings")) {
       Tables.spread(s, Tables.t(s, d, "embeddings"))
         .withColumn("hp", typedLit(LshPlanes))
         .select(col("vec_id"), expr(
           "CAST(aggregate(sequence(0, 7), 0, (acc, p) -> acc + CASE WHEN " +
             "aggregate(zip_with(embedding, hp[p], (x, h) -> CAST(x AS DOUBLE) * h), CAST(0 AS DOUBLE), (a2, v) -> a2 + v) >= 0 " +
             "THEN CAST(shiftleft(1, p) AS INT) ELSE 0 END) AS INT)").as("bucket"))
-        .write.mode("overwrite").parquet(s"$LshBucketDir/data")
     }
 
-  /** Fixed staging path for the PHYSICAL Matryoshka prefix column:
+  /** Staging name of the PHYSICAL Matryoshka prefix column:
     * slicing the full 64-dim column in-flight would make sim_mrl_rerank's
     * coarse-pass 4× IO reduction semantic only — the scan would still read
     * every byte. The staged table carries ONLY (vec_id, emb16 = first 16
@@ -88,26 +75,24 @@ object Llm {
     * oracle derives the same prefix from the base table via embedding[1:16],
     * so verification stays fully independent.
     */
-  private val MrlPrefixDir = s"${sys.props("java.io.tmpdir")}/graft_mrl_prefix"
-  private[graft] def mrlPrefixDataDir: String = s"$MrlPrefixDir/data"
+  private[graft] val MrlPrefix = "graft_mrl_prefix"
 
-  private def stageMrlPrefix(s: SparkSession, d: String): String =
-    Tables.stage(MrlPrefixDir, Tables.fingerprint(d, "embeddings")) {
-      Tables.t(s, d, "embeddings")
-        .select(col("vec_id"), slice(col("embedding"), 1, 16).as("emb16"))
-        .write.mode("overwrite").parquet(s"$MrlPrefixDir/data")
+  private def mrlPrefix(s: SparkSession, d: String): DataFrame =
+    Tables.stagedTable(s, MrlPrefix, d, Tables.fingerprint(d, "embeddings")) {
+      Tables.t(s, d, "embeddings").select(col("vec_id"), slice(col("embedding"), 1, 16).as("emb16"))
     }
 
-  /** Compute and stage the (doc_id, sim) signature table once per (JVM,
-    * dataset): occurrence-weighted 64-bit simhash in a single-pass JVM
-    * kernel (set-based saturates on a small shared vocabulary; the
-    * nested-HOF form of this is ~100× slower than the primitive loop).
-    * This is the only non-SQL step of dedup_simhash — everything after it
-    * (banding, Hamming verify) runs in BOTH engines over this table. The
-    * `md5sim` kernel tag re-stages when the hash kernel changes.
+  /** The staged (doc_id, sim) signature table for `d` — a Spark-side
+    * PERFORMANCE artifact only: occurrence-weighted 64-bit simhash in a
+    * single-pass JVM kernel (set-based saturates on a small shared
+    * vocabulary; the nested-HOF form of this is ~100× slower than the
+    * primitive loop), run once per dataset fingerprint. The query's banding
+    * reads it, but the ORACLE recomputes the md5-token-hash bit-vote
+    * signature from the base table independently. The `md5sim` kernel tag
+    * re-stages when the hash kernel changes.
     */
-  private def stageSimhashSigs(s: SparkSession, d: String): String =
-    Tables.stage(SimhashSigDir, "md5sim|" + Tables.fingerprint(d, "documents")) {
+  private def simhashSigs(s: SparkSession, d: String): DataFrame =
+    Tables.stagedTable(s, "graft_simhash_sig", d, "md5sim|" + Tables.fingerprint(d, "documents")) {
       val simhashUdf = udf { (text: String) =>
         val cnt = new Array[Int](64)
         // md5-derived per-token 64-bit hash: the first 8 digest
@@ -143,7 +128,6 @@ object Llm {
       }
       Tables.spread(s, Tables.t(s, d, "documents"))
         .select(col("doc_id"), simhashUdf(col("text")).as("sim"))
-        .write.mode("overwrite").parquet(s"$SimhashSigDir/data")
     }
 
   /** Cosine similarity over two array<float> columns, computed in double
@@ -908,12 +892,12 @@ object Llm {
 
     // SimHash near-dup: 64-bit signature from token hashes, 4×16-bit band
     // join, Hamming ≤ 3 verification (the only threshold for which 4×16-bit
-    // banding guarantees full candidate recall by pigeonhole). ORACLED via
-    // the staged-signature pattern (scan_binaryfile_ingest discipline):
-    // the signature pass — the only non-SQL step (fnv64 kernel) — writes
-    // (doc_id, sim) parquet to a fixed done-marker path once per (JVM,
-    // dataset), and BOTH engines run banding + bit_count(xor) ≤ 3 over that
-    // table. The DuckDB side bands every doc (uncollapsed) — provably the
+    // banding guarantees full candidate recall by pigeonhole). FULLY
+    // INDEPENDENT oracle: DuckDB recomputes the md5-token bit-vote
+    // signature from the base table; the Spark-side signature pass — the
+    // only non-SQL step — is staged once per dataset fingerprint
+    // ([[simhashSigs]]), and both engines run banding + bit_count(xor) ≤ 3
+    // over the signatures. The DuckDB side bands every doc (uncollapsed) — provably the
     // same pair set as the collapsed Spark plan: identical signatures share
     // all 4 bands (Hamming 0 ⊆ ≤3), and a cross pair band-matches iff its
     // representatives do. Key is memoized (SparkEntry.memoizedKeys): timed
@@ -935,7 +919,7 @@ object Llm {
           "FROM b a JOIN b c ON a.band = c.band AND a.bkey = c.bkey AND a.doc_id < c.doc_id) " +
           "SELECT i, j, hamming FROM p WHERE hamming <= 3 ORDER BY i, j"),
       (s, d) => {
-        val sims = Tables.staged(s, s"$SimhashSigDir/data", stageSimhashSigs(s, d))
+        val sims = simhashSigs(s, d)
         // collapse on the full 64-bit signature: band join + Hamming
         // verify run over distinct signatures only
         val grouped = Collapse.groups(sims, "doc_id", "sim", Seq("sim"))
@@ -1160,7 +1144,7 @@ object Llm {
     // full-dim cosine, emit top-5 — the standard two-stage serving funnel
     // where the expensive metric touches only a constant-size candidate
     // set per query. The coarse pass reads a PHYSICALLY narrower staged
-    // prefix table (see [[MrlPrefixDir]]; slicing the wide column
+    // prefix table (see [[MrlPrefix]]; slicing the wide column
     // in-flight would make the 4× IO claim semantic only);
     // the rerank is O(20) per query against the wide base column. Both
     // stages rank on round-6 sims under total orders (the cross-engine
@@ -1182,8 +1166,7 @@ object Llm {
       (s, d) => {
         // Coarse stage: scans ONLY the staged 16-dim prefix table — the
         // 64-dim column physically never enters this (data-sized) pass.
-        val pfx = Tables.spread(s,
-          Tables.staged(s, s"$MrlPrefixDir/data", stageMrlPrefix(s, d)))
+        val pfx = Tables.spread(s, mrlPrefix(s, d))
         val q16 = pfx.where(col("vec_id") < 5)
           .select(col("vec_id").as("qid"), col("emb16").as("qe16"))
         val c16 = pfx.select(col("vec_id").as("cid"), col("emb16").as("ce16"))
@@ -1293,8 +1276,7 @@ object Llm {
     // measured end-to-end top-k recall ≈ 0.16 because near-tie background
     // sims crowd the top-3 cut). sign-LSH fundamentally tops out here;
     // sim_ann_ivf (k-means inverted file, recall ≈ 0.93) is the preferred
-    // scale path. FULLY INDEPENDENT oracle (upgraded from staged, round
-    // 12): the seed-42 hyperplanes inline into the SQL as [±1.0,…] lists,
+    // scale path. FULLY INDEPENDENT oracle: the seed-42 hyperplanes inline into the SQL as [±1.0,…] lists,
     // so DuckDB recomputes the 8-plane sign fold from the base table with
     // list_dot_product (bit-identical sequential accumulation — the
     // cosine discipline), then runs the same multi-probe xor join +
@@ -1320,7 +1302,7 @@ object Llm {
       },
       (s, d) => {
         val e = Tables.spread(s, Tables.t(s, d, "embeddings"))
-          .join(Tables.staged(s, s"$LshBucketDir/data", stageLshBuckets(s, d)), "vec_id")
+          .join(lshBuckets(s, d), "vec_id")
         val probeMasks = (0 until 256).filter(m => Integer.bitCount(m) <= 2)
         val q = e.where(col("vec_id") < 5)
           .select(col("vec_id").as("qid"), col("embedding").as("qe"),

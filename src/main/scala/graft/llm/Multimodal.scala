@@ -60,21 +60,19 @@ object Multimodal {
   private val oraW = "16 + doc_id % 32"
   private val oraH = "16 + (doc_id * 7) % 32"
 
-  /** Fixed staging path for the decoded dHash table — the
-    * scan_binaryfile_ingest / stageSimhashSigs discipline: the oracle's
-    * read_parquet glob is a static literal, [[Tables.stage]] re-stages on
-    * dataset change, single-process assumption. This IS the 100 TB
-    * "persist the hash column once" artifact the kernel comment always
-    * promised: decode runs once per (JVM, dataset); the banding + verify
-    * (exact integer math) runs in BOTH engines over the staged table.
+  /** Staging name of the decoded dHash table, one per dataset: this IS
+    * the 100 TB "persist the hash column once" artifact the kernel comment
+    * always promised — decode runs once per dataset fingerprint; the
+    * banding + verify (exact integer math) runs in BOTH engines over the
+    * staged table.
     */
-  val PhashDir = s"${sys.props("java.io.tmpdir")}/graft_phash"
+  private val Phash = "graft_phash"
 
   /** The `lumagrids1` kernel tag names the staging schema (luma grids
     * beside the hash): a table of an older schema must re-stage.
     */
-  private def stagePhash(s: org.apache.spark.sql.SparkSession, d: String): String =
-    Tables.stage(PhashDir, "lumagrids1|" + Tables.fingerprint(d, "documents")) {
+  private def phash(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
+    Tables.stagedTable(s, Phash, d, "lumagrids1|" + Tables.fingerprint(d, "documents")) {
       val sp = s
       import sp.implicits._
       // spread: PNG encode + decode + dHash per row is a pure JVM kernel
@@ -107,7 +105,6 @@ object Multimodal {
             (id, ImageKernel.foldDHash(sums, cnts), sums, cnts)
           }
         }.toDF("doc_id", "ph", "sums", "cnts")
-        .write.mode("overwrite").parquet(s"$PhashDir/data")
     }
 
   val defs: Seq[QueryDef] = Seq(
@@ -312,7 +309,7 @@ object Multimodal {
     // (second-decade rehearsal exponent 1.07); 2^16-value blocks keep
     // buckets sparse as N grows, and probe volume is a constant 68
     // entries per distinct hash. The (doc_id, ph) table — 16 B/row — is
-    // STAGED to parquet once per (JVM, dataset) (see [[stagePhash]]): the
+    // STAGED to parquet once per dataset (see [[phash]]): the
     // decode is the only non-SQL step, so staging it makes the whole
     // banding + verify stage ORACLE-CHECKABLE — the DuckDB mirror runs the
     // identical block join, multi-probe, bit_count(xor) ≤ 6 verify and
@@ -333,10 +330,10 @@ object Multimodal {
         // sums[cy,cx]·cnts[cy,cx+1] > sums[cy,cx+1]·cnts[cy,cx] — the exact
         // integer cross-multiplication of ImageKernel.foldDHash, summed as
         // HUGEINT powers and mapped to the signed-64 value (the
-        // stageQuantHash HUGEINT-mirror pattern). A fold bug in either
+        // Aggs.quantHash HUGEINT-mirror pattern). A fold bug in either
         // engine now hash-mismatches; only decode + area-average stay
         // kernel-only.
-        "WITH g AS (SELECT doc_id, sums, cnts FROM read_parquet('" + PhashDir + "/data/*.parquet')), " +
+        s"WITH g AS (SELECT doc_id, sums, cnts FROM read_parquet('${Tables.stagedPath(Phash, "data/*.parquet")}')), " +
           "hs AS (SELECT doc_id, sum(CASE WHEN sums[(i // 8) * 9 + (i % 8) + 1] * cnts[(i // 8) * 9 + (i % 8) + 2] " +
           "> sums[(i // 8) * 9 + (i % 8) + 2] * cnts[(i // 8) * 9 + (i % 8) + 1] " +
           "THEN CAST(1 AS HUGEINT) << (63 - i) ELSE CAST(0 AS HUGEINT) END) AS s " +
@@ -359,7 +356,7 @@ object Multimodal {
           "SELECT h.doc_id, lpad(hex(h.ph), 16, '0') AS phash, nn.n_neardup " +
           "FROM h JOIN nn ON h.ph = nn.ph ORDER BY doc_id"),
       (s, d) => {
-        val hashed = Tables.staged(s, s"$PhashDir/data", stagePhash(s, d))
+        val hashed = phash(s, d)
         // exact-dup collapse: the near-dup relation is a function of the
         // hash alone, so all pair work runs over distinct hashes with
         // multiplicity carried as a weight; checkpointed for the five

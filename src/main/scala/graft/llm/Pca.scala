@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *      inlines as literal arrays into zip_with/aggregate HOFs — no UDF, no
   *      broadcast variable, no shuffle.
   *
-  * ORACLED via the staged eigenvector matrix (see [[PcaDir]]) —
+  * ORACLED via the staged eigenvector matrix (see [[Evecs]]) —
   * the eigensolve itself stays driver-side, but its OUTPUT is a staged
   * artifact both engines project from, so the projection is exact-checked.
   * OpsSpec keeps orthonormality, variance-optimality vs every coordinate
@@ -143,31 +143,26 @@ object Pca {
     done.toArray
   }
 
-  /** Fixed staging path for the eigenvector matrix (the staged-signature
-    * oracle discipline): the covariance fold + driver eigensolve — the only
-    * non-SQL steps — run once per (JVM, dataset) and the k×dim matrix
-    * persists as parquet; BOTH engines then project from the SAME staged
-    * doubles (Spark inlines them as HOF literals, DuckDB as uncorrelated
-    * scalar subqueries over list_dot_product — identical sequential
-    * accumulation, see cosCol), so even the float-heavy PCA key gets an
-    * exact cross-engine value check.
+  /** Staging name of the eigenvector matrix (the staged-signature oracle
+    * discipline): the covariance fold + driver eigensolve — the only
+    * non-SQL steps — run once per dataset fingerprint and the k×dim matrix
+    * persists as parquet in its dataset's staging dir; BOTH engines
+    * then project from the SAME staged doubles (Spark inlines them as HOF
+    * literals, DuckDB as uncorrelated scalar subqueries over
+    * list_dot_product — identical sequential accumulation, see cosCol), so
+    * even the float-heavy PCA key gets an exact cross-engine value check.
     */
-  private val PcaDir = s"${sys.props("java.io.tmpdir")}/graft_pca_evecs"
+  private val Evecs = "graft_pca_evecs"
 
-  private def stagedEvecs(s: SparkSession, d: String): Array[Array[Double]] = {
-    Tables.stage(PcaDir, Tables.fingerprint(d, "embeddings")) {
-      val (cov, _) = covariance(s, d)
-      val evecs = topEigenvectors(cov, K)
+  private def stagedEvecs(s: SparkSession, d: String): Array[Array[Double]] =
+    Tables.stagedTable(s, Evecs, d, Tables.fingerprint(d, "embeddings")) {
       val sp = s
       import sp.implicits._
-      evecs.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
-        .toDF("kidx", "v")
-        .coalesce(1).write.mode("overwrite").parquet(s"$PcaDir/data")
-    }
-    s.read.parquet(s"$PcaDir/data").collect()
+      topEigenvectors(covariance(s, d)._1, K).zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
+        .toDF("kidx", "v").coalesce(1)
+    }.collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1).map(_._2)
-  }
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef(
@@ -176,7 +171,7 @@ object Pca {
         val cols = (0 until K).map(i =>
           s"round(list_dot_product(CAST(e.embedding AS DOUBLE[]), " +
             s"(SELECT v FROM pc WHERE kidx = $i)), 6) AS p$i").mkString(", ")
-        s"WITH pc AS (SELECT kidx, v FROM read_parquet('$PcaDir/data/*.parquet')) " +
+        s"WITH pc AS (SELECT kidx, v FROM read_parquet('${Tables.stagedPath(Evecs, "data/*.parquet")}')) " +
           s"SELECT e.vec_id, $cols FROM embeddings e ORDER BY vec_id"
       },
       (s, d) => {

@@ -63,22 +63,18 @@ object Pipeline {
           "ELSE array() END")).as("g"))
       .distinct()
 
-  /** Fixed staging path for the winnowed fingerprint table — a Spark-side
-    * PERFORMANCE artifact only (the selection pass runs once per (JVM,
-    * dataset); banding re-runs per invocation over the staged rows). The
-    * ORACLE does not read it: the md5 minimizer makes the whole selection
-    * recomputable in DuckDB, so the oracle rebuilds the winnow from the
-    * base table independently.
+  /** The staged winnowed fingerprint table — a Spark-side PERFORMANCE
+    * artifact only (the selection pass runs once per dataset fingerprint;
+    * banding re-runs per invocation over the staged rows). The ORACLE does
+    * not read it: the md5 minimizer makes the whole selection recomputable
+    * in DuckDB, so the oracle rebuilds the winnow from the base table
+    * independently. The `md5winnow` kernel tag names the md5 minimizer:
+    * grams selected by any other minimizer hash must re-stage on unchanged
+    * data.
     */
-  private val WinnowFpDir = s"${sys.props("java.io.tmpdir")}/graft_winnow_fp"
-
-  /** The `md5winnow` kernel tag names the md5 minimizer: grams selected
-    * by any other minimizer hash must re-stage on unchanged data.
-    */
-  private def stageWinnowFps(s: org.apache.spark.sql.SparkSession, d: String): String =
-    Tables.stage(WinnowFpDir, "md5winnow|" + Tables.fingerprint(d, "documents")) {
+  private def winnowFps(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
+    Tables.stagedTable(s, "graft_winnow_fp", d, "md5winnow|" + Tables.fingerprint(d, "documents")) {
       winnowGrams(Tables.spread(s, Tables.t(s, d, "documents").select("doc_id", "text")))
-        .write.mode("overwrite").parquet(s"$WinnowFpDir/data")
     }
 
   /** Deterministic split assignment: first hex char of md5(doc_id) —
@@ -727,7 +723,7 @@ object Pipeline {
     // FULLY INDEPENDENT oracle: the minimizer hash is md5, identical hex text in both engines, so
     // DuckDB rebuilds hashes → per-window leftmost-argmin (h, i) →
     // selection → banding entirely from the base table; the Spark-side
-    // staging remains as a per-(JVM, dataset) performance artifact only.
+    // staging remains as a per-dataset performance artifact only.
     QueryDef(
       "dedup_substring_winnow",
       Some(
@@ -745,7 +741,7 @@ object Pipeline {
           "SELECT d.doc_id, CAST(COALESCE(c.n_shared, 0) AS BIGINT) AS n_shared " +
           "FROM documents d LEFT JOIN c USING (doc_id) ORDER BY doc_id"),
       (s, d) => {
-        val grams = Tables.staged(s, s"$WinnowFpDir/data", stageWinnowFps(s, d))
+        val grams = winnowFps(s, d)
         val shared = grams.groupBy("g").agg(count(lit(1)).as("nd")).where(col("nd") >= 2)
         val counts = grams.join(shared.select("g"), Seq("g"), "left_semi")
           .groupBy("doc_id").agg(count(lit(1)).cast("long").as("n_shared"))

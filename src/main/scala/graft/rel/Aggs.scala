@@ -1,6 +1,7 @@
 package graft.rel
 
 import graft.{Memo, Q, QueryDef, Tables}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -16,7 +17,7 @@ object Aggs {
 
   private val sumQty = Q.out6(sum(Q.dec4(col("l_quantity"))))
 
-  /** Fixed staging path for the quantile-sketch hash table — a Spark-side
+  /** Staging name of the quantile-sketch hash table — a Spark-side
     * PERFORMANCE artifact only: the md5-derived rank column is
     * computable in BOTH engines, so the oracle mirrors the whole sketch
     * pipeline — per-group bottom-k, merge, percentile pick — directly
@@ -26,12 +27,12 @@ object Aggs {
     * its own group, so every group sketch retains its global-bottom
     * members.)
     */
-  private val QuantHashDir = s"${sys.props("java.io.tmpdir")}/graft_quanthash"
+  private val QuantHash = "graft_quanthash"
 
-  /** Fixed staging path for the HLL ESTIMATE tables — the staged-signature
+  /** Staging name of the HLL ESTIMATE tables — the staged-signature
     * oracle pattern applied to a BOUND instead of a value: sketch
     * estimates are engine-library internals no other engine reproduces,
-    * so the estimates themselves are staged once per (JVM, dataset) and
+    * so the estimates themselves are staged once per dataset and
     * the oracle check becomes exact math both engines share —
     * |estimate − exact| ≤ bound · exact, with each engine computing
     * `exact` INDEPENDENTLY from the base table (DuckDB thus verifies the
@@ -41,19 +42,23 @@ object Aggs {
     * rsd 0.05 ⇒ 2σ) and 5% for the merged global estimate
     * (hll_sketch_agg lgConfigK=12 ⇒ ~1.6% typical).
     */
-  private val HllEstDir = s"${sys.props("java.io.tmpdir")}/graft_hll_est"
+  private val HllEst = "graft_hll_est"
 
-  private def stageHllEstimates(s: org.apache.spark.sql.SparkSession, d: String): String =
-    Tables.stage(HllEstDir, Tables.fingerprint(d, "customer")) {
+  /** The staged HLL estimate table `part` (`approx` or `merge`) for `d`. */
+  private def hllEstimates(s: SparkSession, d: String, part: String): DataFrame = {
+    val dir = Tables.stagingDir(HllEst, d)
+    val fp = Tables.stage(dir, Tables.fingerprint(d, "customer")) {
       val cust = Tables.t(s, d, "customer")
       cust.groupBy("c_nationkey")
         .agg(approx_count_distinct(col("c_custkey")).as("approx_cust"))
-        .write.mode("overwrite").parquet(s"$HllEstDir/approx")
+        .write.mode("overwrite").parquet(s"$dir/approx")
       cust.groupBy("c_nationkey")
         .agg(expr("hll_sketch_agg(c_custkey)").as("sk"))
         .agg(expr("CAST(hll_sketch_estimate(hll_union_agg(sk)) AS BIGINT)").as("est_total"))
-        .write.mode("overwrite").parquet(s"$HllEstDir/merge")
+        .write.mode("overwrite").parquet(s"$dir/merge")
     }
+    Tables.staged(s, s"$dir/$part", fp)
+  }
 
   /** md5-derived signed-64 rank: both engines parse the first 16 hex
     * chars of md5(custkey-as-string) to the same unsigned value and
@@ -62,14 +67,13 @@ object Aggs {
     * Spark-side performance artifact only. The `md5rank` kernel tag names
     * the rank hash: a table ranked by any other hash must re-stage.
     */
-  private def stageQuantHash(s: org.apache.spark.sql.SparkSession, d: String): String =
-    Tables.stage(QuantHashDir, "md5rank|" + Tables.fingerprint(d, "customer")) {
+  private def quantHash(s: SparkSession, d: String): DataFrame =
+    Tables.stagedTable(s, QuantHash, d, "md5rank|" + Tables.fingerprint(d, "customer")) {
       val u = "CAST(conv(substring(md5(CAST(c_custkey AS STRING)), 1, 16), 16, 10) AS DECIMAL(20,0))"
       Tables.t(s, d, "customer")
         .select(col("c_nationkey"),
           expr(s"CAST($u - (CASE WHEN $u >= 9223372036854775808 THEN 18446744073709551616 ELSE 0 END) AS BIGINT)").as("h"),
           col("c_acctbal").cast("double").as("v"))
-        .write.mode("overwrite").parquet(s"$QuantHashDir/data")
     }
 
   val defs: Seq[QueryDef] = Seq(
@@ -133,8 +137,8 @@ object Aggs {
           .orderBy("l_returnflag")),
 
     // E4 — HyperLogLog approximate distinct, ORACLED via the staged-bound
-    // discipline (see [[HllEstDir]]): the per-nation estimates are staged
-    // once per (JVM, dataset); both engines then independently compute the
+    // discipline (see [[HllEst]]): the per-nation estimates are staged
+    // once per dataset; both engines then independently compute the
     // exact distinct count and emit whether the staged estimate honors the
     // declared 10% bound. The estimate values hash-match by construction
     // (both read the staged table); `within_bound` is the genuine
@@ -145,7 +149,7 @@ object Aggs {
     QueryDef(
       "agg_approx_distinct",
       Some(
-        s"""WITH est AS (SELECT * FROM read_parquet('$HllEstDir/approx/*.parquet')),
+        s"""WITH est AS (SELECT * FROM read_parquet('${Tables.stagedPath(HllEst, "approx/*.parquet")}')),
            | ex AS (SELECT c_nationkey, count(DISTINCT c_custkey) AS exact_cust,
            |   count(*) AS n FROM customer GROUP BY c_nationkey)
            |SELECT e.c_nationkey, e.approx_cust, x.n,
@@ -153,7 +157,6 @@ object Aggs {
            |FROM est e JOIN ex x ON e.c_nationkey = x.c_nationkey
            |ORDER BY e.c_nationkey""".stripMargin.replaceAll("\\s+", " ").trim),
       (s, d) => {
-        stageHllEstimates(s, d)
         val exact = Tables.t(s, d, "customer")
           .groupBy("c_nationkey")
           .agg(countDistinct(col("c_custkey")).as("exact_cust"),
@@ -161,7 +164,7 @@ object Aggs {
         // 10%/5% bounds in pure BIGINT arithmetic (10·|Δ| ≤ exact) — a
         // double 0.10·exact differs between engines when an estimate lands
         // exactly on the bound, integer compares cannot
-        s.read.parquet(s"$HllEstDir/approx")
+        hllEstimates(s, d, "approx")
           .join(exact, "c_nationkey")
           .select(col("c_nationkey"), col("approx_cust"), col("n"),
             (abs(col("approx_cust") - col("exact_cust")) * 10 <=
@@ -174,7 +177,7 @@ object Aggs {
     // touching the base table again — the pattern that makes rollups cheap
     // at 100 TB (per-partition sketch state is a few KB; only sketches
     // shuffle on re-aggregation). ORACLED via the staged-bound discipline
-    // (see [[HllEstDir]]): the merged estimate is staged; both engines
+    // (see [[HllEst]]): the merged estimate is staged; both engines
     // independently compute the exact global distinct count and check the
     // declared 5% bound (OpsSpec additionally asserts merged ≡ direct).
     QueryDef(
@@ -182,15 +185,14 @@ object Aggs {
       Some(
         s"""SELECT e.est_total, x.n_rows,
            | 20 * abs(e.est_total - x.exact_total) <= x.exact_total AS within_bound
-           |FROM read_parquet('$HllEstDir/merge/*.parquet') e,
+           |FROM read_parquet('${Tables.stagedPath(HllEst, "merge/*.parquet")}') e,
            | (SELECT count(DISTINCT c_custkey) AS exact_total, count(*) AS n_rows
            |  FROM customer) x""".stripMargin.replaceAll("\\s+", " ").trim),
       (s, d) => {
-        stageHllEstimates(s, d)
         val exact = Tables.t(s, d, "customer")
           .agg(countDistinct(col("c_custkey")).as("exact_total"),
             count(lit(1)).as("n_rows"))
-        s.read.parquet(s"$HllEstDir/merge")
+        hllEstimates(s, d, "merge")
           .crossJoin(exact)
           .select(col("est_total"), col("n_rows"),
             (abs(col("est_total") - col("exact_total")) * 20 <=
@@ -204,7 +206,7 @@ object Aggs {
     // shuffle. FULLY INDEPENDENT oracle: the rank hash is md5-derived — DuckDB
     // parses the same 16 hex chars to the same signed-64 value and mirrors
     // per-group bottom-256 → merged bottom-256 (≡ global bottom-256 by h, see
-    // [[stageQuantHash]]) → sorted-value percentile pick, all from the base
+    // [[quantHash]]) → sorted-value percentile pick, all from the base
     // table; every step exact ORDER BY math. OpsSpec additionally asserts
     // merged ≡ direct and bounds the rank error. Key is memoized (staged input
     // layout — a Spark-side performance artifact).
@@ -221,8 +223,7 @@ object Aggs {
           "vals[CAST(ceil(0.9 * len(vals)) AS INT)] AS est_p90 FROM a"),
       (s, d) => {
         import graft.udx.Udx
-        stageQuantHash(s, d)
-        val c = s.read.parquet(s"$QuantHashDir/data")
+        val c = quantHash(s, d)
         val perNation = c.groupBy("c_nationkey")
           .agg(Udx.bottomk(col("h"), col("v")).as("sk"), count(lit(1)).as("n"))
         perNation

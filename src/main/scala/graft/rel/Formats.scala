@@ -23,45 +23,36 @@ import graft.{Q, QueryDef, Tables}
   */
 object Formats {
 
-  /** FIXED staging path for the binaryFile ingestion corpus: the DuckDB
-    * oracle's read_blob glob is a static literal, so the path cannot carry
-    * the dataset hash — instead the [[Tables.stage]] marker records which
-    * dataset staged the current corpus and a mismatch triggers a re-stage
-    * (Verify/bench run one dataset at a time, and the oracle compare runs
-    * after the dump, so the fixed path always holds the right vintage when
-    * read).
-    */
-  private val BinFilesDir = s"${sys.props("java.io.tmpdir")}/graft_binfiles"
+  private val BinFiles = "graft_binfiles"
 
-  /** Stage every 97th document's UTF-8 bytes as doc_<id>.bin — bounded
-    * (≈ n/97 files), deterministic. Files are written EXECUTOR-SIDE via
-    * foreachPartition: a driver `.collect()` loop would materialize the
-    * selected rows on the driver, which at corpus scale OOMs the staging
-    * step itself even though it is 1/97 of documents and never on the
-    * timed read path. Each task writes its own partition's
-    * files; under local / local-cluster all executors share the host
-    * filesystem, which is the same single-box assumption the fixed staging
-    * path already makes. Single-process assumption: the fixed path is
-    * shared, so two JVMs staging different datasets concurrently would
-    * race (Verify and Bench are never run concurrently).
+  /** Stage every 97th document's UTF-8 bytes as doc_<id>.bin in
+    * `Tables.stagingDir(BinFiles, d)` — bounded (≈ n/97 files),
+    * deterministic. Files are written EXECUTOR-SIDE via foreachPartition: a
+    * driver `.collect()` loop would materialize the selected rows on the
+    * driver, which at corpus scale OOMs the staging step itself even though
+    * it is 1/97 of documents and never on the timed read path. Each task
+    * writes its own partition's files; under local / local-cluster all
+    * executors share the host filesystem. Returns the staged dir.
     */
-  private def stageBinFiles(s: org.apache.spark.sql.SparkSession, d: String): String =
-    Tables.stage(BinFilesDir, Tables.fingerprint(d, "documents")) {
+  private def stageBinFiles(s: org.apache.spark.sql.SparkSession, d: String): String = {
+    val dir = Tables.stagingDir(BinFiles, d)
+    Tables.stage(dir, Tables.fingerprint(d, "documents")) {
       import java.nio.file.{Files, Paths}
-      val dir = Files.createDirectories(Paths.get(BinFilesDir))
-      // capture the RESOLVED path: executor JVMs (local-cluster) carry their
-      // own java.io.tmpdir, so the closure must never re-derive BinFilesDir
-      val dirStr = dir.toAbsolutePath.toString
+      Files.createDirectories(Paths.get(dir))
+      // the closure captures the driver-resolved `dir`: executor JVMs
+      // (local-cluster) carry their own java.io.tmpdir
       Tables.t(s, d, "documents")
         .where(pmod(col("doc_id"), lit(97L)) === 0L)
         .select(col("doc_id"), col("text"))
         .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
           it.foreach { r =>
-            Files.write(Paths.get(dirStr, s"doc_${r.getLong(0)}.bin"),
+            Files.write(Paths.get(dir, s"doc_${r.getLong(0)}.bin"),
               r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
           }
         }
     }
+    dir
+  }
 
   def defs: Seq[QueryDef] = Seq(
 
@@ -205,11 +196,11 @@ object Formats {
     // (images, audio) enter Spark as (path, modificationTime, length,
     // content) rows before the first job packs them into parquet binary
     // columns (which the multimodal_* keys then process — this key is the
-    // step in front of them). The file corpus is staged per invocation
-    // from the documents table (every 97th doc's UTF-8 bytes as one .bin
-    // file — bounded, deterministic, re-staged when the dataset changes)
-    // to a FIXED path so the DuckDB oracle can read the very same files
-    // through read_blob. At 100 TB the small-files shape here is the
+    // step in front of them). The file corpus is staged once from the
+    // documents table (every 97th doc's UTF-8 bytes as one .bin file —
+    // bounded, deterministic, re-staged when the dataset changes) in the
+    // dataset's staging dir, whose files the DuckDB oracle reads through
+    // read_blob. At 100 TB the small-files shape here is the
     // acknowledged anti-pattern this scan exists to ESCAPE: list+read
     // parallelize across executors, and the output lands in parquet
     // immediately — exactly what multimodal_binary models downstream.
@@ -218,10 +209,9 @@ object Formats {
       Some(
         "SELECT regexp_extract(filename, '[^/]+$') AS fname, " +
           "CAST(size AS BIGINT) AS n_bytes, md5(hex(content)) AS content_md5 " +
-          s"FROM read_blob('$BinFilesDir/*.bin') ORDER BY fname"),
+          s"FROM read_blob('${Tables.stagedPath(BinFiles, "*.bin")}') ORDER BY fname"),
       (s, d) => {
-        stageBinFiles(s, d)
-        s.read.format("binaryFile").load(s"$BinFilesDir/*.bin")
+        s.read.format("binaryFile").load(s"${stageBinFiles(s, d)}/*.bin")
           .select(
             regexp_extract(col("path"), "[^/]+$", 0).as("fname"),
             col("length").cast("long").as("n_bytes"),

@@ -1,7 +1,7 @@
 package graft.udx
 
 import graft.{Q, QueryDef, Tables}
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -140,7 +140,7 @@ object Udx {
     def outputEncoder: Encoder[Array[(String, Long)]] = ExpressionEncoder[Array[(String, Long)]]()
   }
 
-  /** Fixed staging path for the minhash token-hash table — a Spark-side
+  /** The staged minhash token-hash table — a Spark-side
     * PERFORMANCE artifact only: one (source, h) row per distinct token per
     * document, where h is the md5-derived signed-64 token hash (first 16
     * hex chars parsed unsigned, re-centered at 2^63 in exact decimal
@@ -148,16 +148,13 @@ object Udx {
     * the token table from `documents` itself. The `md5tok` kernel tag
     * names that hash: tokens hashed any other way must re-stage.
     */
-  private val MinhashTokDir = s"${sys.props("java.io.tmpdir")}/graft_minhash_toks"
-
-  private def stageMinhashToks(s: org.apache.spark.sql.SparkSession, d: String): String =
-    Tables.stage(MinhashTokDir, "md5tok|" + Tables.fingerprint(d, "documents")) {
+  private def minhashToks(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
+    Tables.stagedTable(s, "graft_minhash_toks", d, "md5tok|" + Tables.fingerprint(d, "documents")) {
       val u = "CAST(conv(substring(md5(tok), 1, 16), 16, 10) AS DECIMAL(20,0))"
       Tables.t(s, d, "documents")
         .select(col("source"), explode(array_distinct(split(col("text"), " "))).as("tok"))
         .select(col("source"),
           expr(s"CAST($u - (CASE WHEN $u >= 9223372036854775808 THEN 18446744073709551616 ELSE 0 END) AS BIGINT)").as("h"))
-        .write.mode("overwrite").parquet(s"$MinhashTokDir/data")
     }
 
   /** FULLY INDEPENDENT DuckDB mirror:
@@ -254,8 +251,7 @@ object Udx {
       "udaf_imperative_minhash",
       Some(minhashOracle),
       (s, d) => {
-        stageMinhashToks(s, d)
-        s.read.parquet(s"$MinhashTokDir/data")
+        minhashToks(s, d)
           .groupBy("source")
           .agg(minhash(col("h")).as("sig_arr"))
           // CSV-serialized: the driver sorts even oracle-less Spark outputs,

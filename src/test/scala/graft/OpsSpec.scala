@@ -18,8 +18,7 @@ class OpsSpec extends AnyFunSuite {
   test("bloom-filter layout: written footer physically carries the l_orderkey filter") {
     import scala.jdk.CollectionConverters._
     run("scan_parquet_bloom_lookup").collect() // ensures the layout is written
-    val dir = new java.io.File(
-      s"${sys.props("java.io.tmpdir")}/graft_bloom_${Integer.toHexString(sf.hashCode)}/data")
+    val dir = new java.io.File(s"${Tables.stagingDir("graft_bloom", sf)}/data")
     val part = dir.listFiles().filter(_.getName.endsWith(".parquet")).minBy(_.getName)
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(part.getAbsolutePath),
@@ -37,7 +36,7 @@ class OpsSpec extends AnyFunSuite {
 
   test("permissive CSV: _corrupt preserves the raw malformed line for quarantine") {
     run("scan_csv_corrupt_permissive").collect() // materializes the scratch layout
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_csv_corrupt_${Integer.toHexString(sf.hashCode)}"
+    val dir = Tables.stagingDir("graft_csv_corrupt", sf)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("lang", org.apache.spark.sql.types.StringType),
@@ -96,6 +95,50 @@ class OpsSpec extends AnyFunSuite {
       s"unflagged staged-artifact oracles: ${readsTmp -- staged -- inputLayout}")
     assert((staged -- readsTmp).isEmpty,
       s"flagged keys whose oracle no longer reads a staged artifact: ${staged -- readsTmp}")
+  }
+
+  test("staged-layout oracles: Verify names the layouts of its own dataset") {
+    // Two datasets over the same tables: `sf` and a dir of symlinks to its
+    // tables. Staging the second must leave the first's layouts, and the
+    // oracle file Verify writes for the first, pointing at its own files.
+    import java.nio.file.{Files, Paths}
+    val keys = Seq("sim_ann_ivf", "dedup_semdedup_cluster", "embed_pca_project",
+      "multimodal_phash_neardup", "agg_approx_distinct", "agg_sketch_merge",
+      "scan_binaryfile_ingest")
+    val d2 = SparkTestBase.tempDir("graft_second_dataset")
+    new java.io.File(sf).listFiles().filter(_.getName.endsWith(".parquet"))
+      .foreach(f => Files.createSymbolicLink(d2.resolve(f.getName), f.toPath.toAbsolutePath))
+    val tmp = java.util.regex.Pattern.quote(sys.props("java.io.tmpdir"))
+    // every quoted path of each key's resolved oracle -> its layout dir
+    def layouts(d: String): Map[String, Seq[(String, String)]] = {
+      val sql = Verify.oracleSql(spark, d)
+      keys.map(k => k -> s"'($tmp/\\w+)/([^']*)'".r.findAllMatchIn(sql(k))
+        .map(m => (m.group(1), m.group(2))).toSeq).toMap
+    }
+    def marker(dir: String) = Files.readString(Paths.get(dir, "_done"))
+    keys.foreach(k => SparkEntry.queries(k)(spark, sf).collect())
+    val mine = layouts(sf)
+    val markers = mine.values.flatten.map(_._1).map(dir => dir -> marker(dir)).toMap
+    try {
+      keys.foreach(k => SparkEntry.queries(k)(spark, d2.toString).collect())
+      for ((k, paths) <- mine) {
+        assert(paths.nonEmpty, s"$k: its oracle names no staged layout")
+        val quoted = "'(/[^']*)'".r.findAllMatchIn(Verify.oracleSql(spark, sf)(k)).map(_.group(1)).toSeq
+        assert(quoted == paths.map { case (dir, rel) => s"$dir/$rel" }, s"$k names a path outside tmpdir")
+        for ((dir, rel) <- paths) {
+          val name = dir.split('/').last.stripSuffix("_" + Integer.toHexString(sf.hashCode))
+          assert(dir == Tables.stagingDir(name, sf), s"$k: $dir is not a staging dir of $sf")
+          val glob = Paths.get(dir, rel)
+          val files = Option(glob.getParent.toFile.listFiles()).toSeq.flatten
+          assert(files.exists(f => java.nio.file.FileSystems.getDefault
+            .getPathMatcher(s"glob:$glob").matches(f.toPath)), s"$k: no file matches $glob")
+          assert(marker(dir) == markers(dir) && marker(dir).contains(s"$sf|"),
+            s"$k: staging the second dataset replaced $dir")
+        }
+      }
+    } finally layouts(d2.toString).values.flatten.foreach { case (dir, _) =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
   }
 
   test("SURVEY §2 inventory and SparkEntry.queries agree key-for-key") {
@@ -341,7 +384,7 @@ class OpsSpec extends AnyFunSuite {
     // dataset dir whose embeddings table is one row over the cap
     val sp = spark
     import sp.implicits._
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_cosine_guard"
+    val dir = SparkTestBase.tempDir("graft_cosine_guard").toString
     spark.range(llm.Llm.ExactCosineMaxRows + 1)
       .select(col("id").as("vec_id"), lit(0).as("label"),
         array(lit(1.0f), lit(0.0f)).as("embedding"))
@@ -361,7 +404,7 @@ class OpsSpec extends AnyFunSuite {
     // fixture must fail FAST above the cap and name its production siblings.
     // Own fixture dir: Tables.t caches the reader per (session, path), so
     // overwriting another test's dir would hand that test a stale listing.
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_simjoin_guard"
+    val dir = SparkTestBase.tempDir("graft_simjoin_guard").toString
     spark.range(llm.Llm.ExactCosineMaxRows + 1)
       .select(col("id").as("vec_id"), lit(0).as("label"),
         array(lit(1.0f), lit(0.0f)).as("embedding"))
@@ -503,7 +546,7 @@ class OpsSpec extends AnyFunSuite {
     // "1111" have IDENTICAL char-3-gram SETS (so do all periodic digit
     // strings), and one such merge under the collapse lands exactly at the
     // cap instead of over it (found the hard way)
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_gram_guard"
+    val dir = SparkTestBase.tempDir("graft_gram_guard").toString
     spark.range(llm.Llm.GramPairMaxReps + 1)
       .select(col("id").as("doc_id"), lit("web").as("source"),
         concat(lit("guard text "), md5(col("id").cast("string"))).as("text"))
@@ -558,36 +601,21 @@ class OpsSpec extends AnyFunSuite {
     val sfDir = "/root/testdata/sf0.1"
     val K = 50
     val Off = 1000000000L
-    // The staged 50x replica is keyed by an INPUT FINGERPRINT (total size +
-    // max mtime of the source embeddings), not a bare name: a bare
-    // /tmp/graft_semdedup_scale dir survives testdata regeneration, and a
-    // stale replica would silently compare mixed vintages. A regenerated
-    // source changes the fingerprint, so the stale
-    // dir is simply never looked at again.
-    val srcFp = {
-      import scala.jdk.CollectionConverters._
-      val files = java.nio.file.Files
-        .walk(java.nio.file.Paths.get(s"$sfDir/embeddings.parquet"))
-        .iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).toSeq
-      val sz = files.map(java.nio.file.Files.size).sum
-      val mt = files.map(java.nio.file.Files.getLastModifiedTime(_).toMillis)
-        .maxOption.getOrElse(0L)
-      java.lang.Long.toHexString(sz * 31L + mt)
-    }
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_semdedup_scale_$srcFp"
+    // The 50x replica is staged once per source fingerprint and reused
+    // across runs; a regenerated source re-stages it in place, so a stale
+    // replica never compares mixed vintages.
+    val dir = Tables.stagingDir("graft_semdedup_scale", sfDir)
     // Only THIS run's record may feed the rehearsal artifact: a leftover
     // target/semdedup_scale.json from an aborted or older run must not be
     // folded into BENCH_sf1.json by scale_exponents.py.
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get("target/semdedup_scale.json"))
-    val done = java.nio.file.Paths.get(dir, "_done")
-    if (!java.nio.file.Files.exists(done)) {
+    Tables.stage(dir, Tables.fingerprint(sfDir, "embeddings")) {
       Tables.t(spark, sfDir, "embeddings")
         .withColumn("__rep", explode(lit((0 until K).toArray)))
         .withColumn("vec_id", col("vec_id") + col("__rep").cast("long") * Off)
         .drop("__rep")
         .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      java.nio.file.Files.writeString(done, "ok")
     }
     val t0 = System.nanoTime()
     val drops = SparkEntry.queries("dedup_semdedup_cluster")(spark, dir)
@@ -902,7 +930,7 @@ class OpsSpec extends AnyFunSuite {
       val ids = (0 until nDense).map(i => denseStart + i) ++
         (0 until (n - nDense)).map(j => denseStart + spread + j.toLong * (spread / 64 + 1))
       val docs = ids.map(id => (id, Seq.fill((id % 37 + 1).toInt)("w").mkString(" ")))
-      val dir = s"${sys.props("java.io.tmpdir")}/graft_shard_skew_$ci"
+      val dir = SparkTestBase.tempDir(s"graft_shard_skew_$ci").toString
       docs.toDF("doc_id", "text").repartition(4)
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
       val got = SparkEntry.queries("shard_balance_tokens")(spark, dir).collect()

@@ -161,7 +161,7 @@ class PlanSpec extends AnyFunSuite {
   test("partitioned sink: partition predicate prunes directories") {
     SparkEntry.queries("sink_partitioned_write")(spark, sf).count() // materialize layout
     val pruned = spark.read
-      .parquet(s"${sys.props("java.io.tmpdir")}/graft_part_orders_${Integer.toHexString(sf.hashCode)}")
+      .parquet(Tables.stagingDir("graft_part_orders", sf))
       .where(col("yr") === 1998)
     val p = pruned.queryExecution.executedPlan.toString
     assert(p.contains("PartitionFilters: [isnotnull(yr"), p)
@@ -201,7 +201,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("zorder layout: per-file z ranges are disjoint, so file stats prune 2-D boxes") {
     SparkEntry.queries("zorder_layout")(spark, sf).count() // materialize layout
-    val path = s"${sys.props("java.io.tmpdir")}/graft_zorder_${Integer.toHexString(sf.hashCode)}"
+    val path = Tables.stagingDir("graft_zorder", sf)
     val ranges = spark.read.parquet(path)
       .groupBy(input_file_name().as("f"))
       .agg(min(col("z")).as("lo"), max(col("z")).as("hi"))
@@ -494,7 +494,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("AnnotationRewrite: string-date predicate becomes annotation predicate") {
     opt.AnnotationRewrite.install(spark)
-    val tmp = s"${sys.props("java.io.tmpdir")}/graft_plan_annotated"
+    val tmp = SparkTestBase.tempDir("graft_plan_annotated").toString
     fhir.FhirAnnotations.annotateRange(SparkTestBase.fhir("Patient"), "birthDate")
       .write.mode("overwrite").parquet(tmp)
     val table = spark.read.parquet(tmp)
@@ -790,7 +790,7 @@ class PlanSpec extends AnyFunSuite {
     def dirBytes(p: java.io.File): Long =
       if (p.isFile) p.length
       else Option(p.listFiles()).map(_.map(dirBytes).sum).getOrElse(0L)
-    val pfxBytes = dirBytes(new java.io.File(llm.Llm.mrlPrefixDataDir))
+    val pfxBytes = dirBytes(new java.io.File(s"${Tables.stagingDir(llm.Llm.MrlPrefix, sf)}/data"))
     val baseBytes = dirBytes(new java.io.File(s"$sf/embeddings.parquet"))
     assert(pfxBytes > 0 && baseBytes > 0)
     assert(pfxBytes * 2 < baseBytes,

@@ -576,18 +576,24 @@ class FhirSpec extends AnyFunSuite with TimeLimits {
       .map(r => graft.Tables.t(spark, fixture, r).count()) == Seq(16L, 124L, 23L))
   }
 
-  test("Verify's oracle file: FHIR oracles name the golden files; Verify rewrites only those") {
+  test("Verify's oracle file: resolves golden FHIR paths and staged layouts only") {
     val raw = graft.SparkEntry.oracleSql
     val resolved = graft.Verify.oracleSql(spark, SparkTestBase.sf)
     val table = """[\w/.-]*/(Patient|Observation|ExplanationOfBenefit)\.parquet""".r
     assert(raw.filter(o => table.findFirstIn(o._2).isDefined).keySet ==
       FhirQueries.defs.filter(_.oracle.exists(_.contains("read_parquet"))).map(_.key).toSet + "scan_projection_pushdown")
+    // a staged layout is named as `Tables.stagedPath(name, rel)`
+    val staged = (java.util.regex.Pattern.quote(sys.props("java.io.tmpdir")) + """/(\w+)/""").r
+    assert(raw.filter(o => staged.findFirstIn(o._2).isDefined).keySet ==
+      graft.SparkEntry.stagedOracle.toSet + "scan_binaryfile_ingest")
     val fixture = Option.unless(SparkTestBase.goldenPresent)(graft.Tables.fhirFixture(spark))
     for ((k, sql) <- raw) {
       // the gate contract: perfbench's gate rewrites exactly this form
       for (m <- table.findAllMatchIn(sql)) assert(m.matched == s"${graft.Tables.goldenDir}/${m.group(1)}.parquet", k)
-      // every other oracle stays byte-identical
-      assert(resolved(k) == fixture.fold(sql)(f => table.replaceAllIn(sql, m => s"$f/${m.group(1)}.parquet/*.parquet")), k)
+      // the staged form becomes the layout's dir for the dataset, the FHIR
+      // paths the tables it resolves; every other oracle stays byte-identical
+      val layouts = staged.replaceAllIn(sql, m => s"${graft.Tables.stagingDir(m.group(1), SparkTestBase.sf)}/")
+      assert(resolved(k) == fixture.fold(layouts)(f => table.replaceAllIn(layouts, m => s"$f/${m.group(1)}.parquet/*.parquet")), k)
     }
   }
 }

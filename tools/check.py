@@ -8,10 +8,10 @@ Assumes `sbt "runMain graft.Verify <sfDir> <outDir>"` has been run: reads each
 oracle in DuckDB with views named after the sf tables, and compares the way
 the driver does: load BOTH sides into pandas (pyarrow for the Spark parquet,
 DuckDB .df() for the oracle), sort columns by name, sort_values over all
-columns, then compare the per-cell stringified frames. No value normalization
-(CORRECTNESS_r01 lesson: Decimal.normalize() here masked 27 driver hash-fails
-on decimal representation, and the arrow path masked 5 pandas sort crashes on
-array cells — both failure classes must surface locally).
+columns, then compare the per-cell stringified frames. No value normalization:
+Decimal.normalize() would hide the driver's hash failures on decimal
+representation, and an arrow-side compare would hide its pandas sort crashes
+on array cells — both failure classes must surface locally.
 """
 import json
 import sys
@@ -28,9 +28,9 @@ def canon(df):
     (raises on unhashable cells exactly like the driver), then pandas
     COLUMN-level stringification (to_csv). Per-cell str() is wrong here:
     to_csv prints all-midnight datetime64 columns as bare dates (making
-    spark date32-object vs duck datetime64 equal, as the r01 driver did)
+    spark date32-object vs duck datetime64 equal, as the driver does)
     and prints None/NaN both as empty — while still distinguishing
-    Decimal('1.500000') from float 1.5 (the r01 failure class)."""
+    Decimal('1.500000') from float 1.5, as the driver does."""
     cols = sorted(df.columns)
     df = df[cols].sort_values(cols).reset_index(drop=True)
     return cols, df.to_csv(index=False).splitlines()[1:]
@@ -53,7 +53,9 @@ def main():
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if Path(p).exists():
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+            # a Spark-written table (graft.GenScale) is a dir of part files
+            glob = f"{p}/*.parquet" if Path(p).is_dir() else p
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{glob}')")
     oracle = json.loads(Path(f"{out_dir}/oracle_sql.json").read_text())
     # oracle-less keys still get their Spark output sorted by the driver —
     # replicate that so array-typed outputs crash here too
