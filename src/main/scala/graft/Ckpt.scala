@@ -5,37 +5,34 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 /** Lineage-truncation backend for the iterative kernels (label
   * propagation, PageRank fixed point, triangle orientation, recursive
   * CTE rounds): every loop must cut its plan per round or driver-side
-  * analysis goes exponential. The default is eager `localCheckpoint()` —
-  * fast (executor-local blocks, no replication) but NOT executor-loss-
-  * safe: a lost executor takes its blocks and there is no lineage left to
-  * recompute them, so the job dies.
+  * analysis goes exponential. The backend follows the master:
+  *   - a `local[...]` master (one JVM, so no executor can be lost without
+  *     the driver) takes eager `localCheckpoint()`: executor-local blocks,
+  *     no replication, no file round-trip per round;
+  *   - any other master (`local-cluster`, a real cluster) takes reliable
+  *     `Dataset.checkpoint()`: round state goes to files under the
+  *     checkpoint dir, which survive executor death, so the scheduler
+  *     re-reads instead of aborting. Local checkpoint blocks die with their
+  *     executor and leave no lineage to recompute them. On a real cluster
+  *     the dir must be shared storage (HDFS/S3); under `local-cluster` the
+  *     executor JVMs share /tmp on one box. FaultDrill drills
+  *     dedup_cluster_components / graph_pagerank this way.
   *
-  * `GRAFT_RELIABLE_CKPT=1` switches every call site to reliable
-  * `Dataset.checkpoint()`: round state is materialized to files under the
-  * checkpoint dir, which survive executor death, so the scheduler re-reads
-  * instead of aborting — the mode a real cluster runs iterative jobs in
-  * (there the dir must be shared storage: HDFS/S3; here /tmp is shared
-  * across the local-cluster executor JVMs on one box). FaultDrill drills
-  * dedup_cluster_components / graph_pagerank under this flag. On the
-  * single-JVM bench the reliable path only adds a file round-trip per
-  * round for durability nothing can use.
-  *
-  * Returned ids are the persistent-RDD blocks the call created (empty in
-  * reliable mode — checkpoint files are freed with the checkpoint dir,
+  * Returned ids are the persistent-RDD blocks the call created (empty for
+  * reliable checkpoints, whose files are freed with the checkpoint dir,
   * not by block id); callers free superseded rounds' ids with [[release]],
   * never via ContextCleaner GC, whose timing is nondeterministic. Ids come
   * from diffing the context's persistent RDDs around the checkpoint, which
   * is sound because query bodies run serially on the driver.
   *
-  * Checkpoint FILES in reliable mode are only freed by the ContextCleaner
-  * when `spark.cleaner.referenceTracking.cleanCheckpoints=true` is set at
+  * Reliable checkpoint FILES are only freed by the ContextCleaner when
+  * `spark.cleaner.referenceTracking.cleanCheckpoints=true` is set at
   * context creation, which [[Session]] does. A session built WITHOUT it
   * (an embedding application's own) cannot be fixed post-hoc, so the
   * first checkpoint under such a context warns once with the bound: disk
   * grows by one round-state tree per loop round until app exit.
   */
 object Ckpt {
-  val reliable: Boolean = sys.env.contains("GRAFT_RELIABLE_CKPT")
   private val warnedNoCleaner = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** Checkpoints `df` and pins it in the [[Memo]] slot `ckpt:<key>`,
@@ -68,14 +65,14 @@ object Ckpt {
 
   def apply[T](df: Dataset[T]): (Dataset[T], Seq[Int]) = {
     val sc = df.sparkSession.sparkContext
-    if (reliable) {
+    if (!sc.isLocal) {
       this.synchronized {
         if (sc.getCheckpointDir.isEmpty)
           sc.setCheckpointDir(s"${sys.props("java.io.tmpdir")}/graft_reliable_ckpt")
       }
       if (!sc.getConf.getBoolean("spark.cleaner.referenceTracking.cleanCheckpoints",
           defaultValue = false) && warnedNoCleaner.compareAndSet(false, true))
-        Console.err.println("[graft.Ckpt] GRAFT_RELIABLE_CKPT is on but this " +
+        Console.err.println("[graft.Ckpt] reliable checkpoints under a non-local master, but this " +
           "SparkContext was built without spark.cleaner.referenceTracking." +
           "cleanCheckpoints=true: superseded checkpoint trees will accumulate " +
           "(one per loop round) until the application exits.")

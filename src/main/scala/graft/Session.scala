@@ -36,7 +36,8 @@ object Session {
     // events.parquet may carry TIMESTAMP(NANOS), unreadable without this
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     // lets the ContextCleaner free superseded reliable-checkpoint trees
-    // (Ckpt.scala); a no-op outside GRAFT_RELIABLE_CKPT
+    // (Ckpt.scala); a no-op under a local[...] master, which checkpoints
+    // locally
     "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true")
 
   /** Build (or join) the session. `tmpfsScratch` puts all scratch IO —

@@ -30,6 +30,56 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object FhirAnnotations {
 
+  // ---------------------------------------------------------- vocabulary
+  // The annotation format (README.md:301-381), written once: an annotation
+  // is a sibling field `__<element>_<kind>` of the element it derives from.
+  // Every writer, reader and checker of annotation fields names and types
+  // them through these definitions.
+
+  /** The range annotations' type (README.md:329-330). */
+  val RangeType: DataType = TimestampType
+
+  /** The numeric annotation's type (README.md:347-353). */
+  val NumericType: DecimalType = DecimalType(38, 6)
+
+  /** A standard annotation kind: its name suffix and the spec's type rule
+    * for it. Any other suffix is a non-standard annotation, which the spec
+    * allows when it does not collide with these (README.md:310-312).
+    */
+  sealed abstract class Kind(val suffix: String, val fits: DataType => Boolean)
+
+  object Kind {
+    case object Start extends Kind("start", _ == RangeType)
+    case object End extends Kind("end", _ == RangeType)
+    case object Numeric extends Kind("numeric", _.isInstanceOf[DecimalType])
+    case object Canonical extends Kind("canonical", _.isInstanceOf[StructType])
+    val all: Seq[Kind] = Seq(Start, End, Numeric, Canonical)
+  }
+
+  /** The field name of `element`'s annotation of `kind`. */
+  def annotationName(element: String, kind: Kind): String = s"__${element}_${kind.suffix}"
+
+  /** Whether `name` is in the annotation namespace, which the codec's
+    * decode leaves out of the FHIR JSON.
+    */
+  def isAnnotation(name: String): Boolean = name.startsWith("__")
+
+  /** An annotation field name split into the element it derives from and
+    * its suffix; `kind` is the standard kind the suffix names, if any.
+    */
+  final case class Annotation(base: String, suffix: String) {
+    def kind: Option[Kind] = Kind.all.find(_.suffix == suffix)
+  }
+
+  /** `__<base>_<suffix>` split at its last `_` (FHIR element names have no
+    * underscores); None outside the namespace or without a `_` after `__`.
+    */
+  def parseAnnotation(name: String): Option[Annotation] = {
+    val body = name.drop(2)
+    val cut = body.lastIndexOf('_')
+    Option.when(isAnnotation(name) && cut >= 0)(Annotation(body.take(cut), body.drop(cut + 1)))
+  }
+
   // ---------------------------------------------------------------- A6
   // Date-range annotation: earliest/latest instant included in a (possibly
   // partial-precision, possibly offset-bearing) FHIR date/dateTime, UTC
@@ -102,18 +152,18 @@ object FhirAnnotations {
   def annotateRange(df: DataFrame, path: String): DataFrame =
     reparse(df, path) { (leaf, _) =>
       Option.when(leaf.dataType == StringType)(
-        Seq(StructField(s"__${leaf.name}_start", TimestampType), StructField(s"__${leaf.name}_end", TimestampType)))
+        Seq(Kind.Start, Kind.End).map(k => StructField(annotationName(leaf.name, k), RangeType)))
     }.getOrElse {
       def start(c: Column) = call_function("fhir_dt_start", c)
       def end(c: Column) = call_function("fhir_dt_end", c)
       annotatePath(df, path)(
         leaf =>
-          df.withColumn(s"__${leaf}_start", start(col(leaf)))
-            .withColumn(s"__${leaf}_end", end(col(leaf))),
+          df.withColumn(annotationName(leaf, Kind.Start), start(col(leaf)))
+            .withColumn(annotationName(leaf, Kind.End), end(col(leaf))),
         (owner, leaf) =>
           owner
-            .withField(s"__${leaf}_start", start(owner.getField(leaf)))
-            .withField(s"__${leaf}_end", end(owner.getField(leaf))))
+            .withField(annotationName(leaf, Kind.Start), start(owner.getField(leaf)))
+            .withField(annotationName(leaf, Kind.End), end(owner.getField(leaf))))
     }
 
   /** The codec parse behind `df`, re-issued with `slots(leaf, ownerNullable)`
@@ -173,15 +223,15 @@ object FhirAnnotations {
     within(schema, owner = false, path.split('.').toList)
   }
 
-  /** Shared nested-path rebuild for annotation writers: applies `top` for a
-    * single-segment path (annotation lands beside a top-level column) or
-    * `group(owner, leaf)` at the owning struct for dotted paths, descending
-    * structs directly and LIST elements via `transform`.
+  /** The one nested-path rebuild, for the annotation writers and the
+    * strict writer's floor: applies `top` for a single-segment path (the
+    * leaf is a top-level column) or `group(owner, leaf)` at the owning
+    * struct for dotted paths, descending structs directly and LIST
+    * elements via `transform`.
     */
-  private def annotatePath(df: DataFrame, path: String)(
+  private[fhir] def annotatePath(df: DataFrame, path: String)(
       top: String => DataFrame,
       group: (Column, String) => Column): DataFrame = {
-    import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
     def rebuild(owner: Column, dt: DataType, rest: List[String]): Column = (dt, rest) match {
       case (_: StructType, leaf :: Nil) => group(owner, leaf)
       case (st: StructType, head :: tail) =>
@@ -210,8 +260,6 @@ object FhirAnnotations {
   // DECIMAL(38,6) twin of a decimal string, half-up (README.md:347-353;
   // golden behavior: "42.38090848315092" → 42.380908).
 
-  val NumericType: DecimalType = DecimalType(38, 6)
-
   def numeric(c: Column): Column = c.cast(NumericType)
 
   /** [[numeric]] as one Spark cast of input 0, for the codec: built on the
@@ -230,13 +278,13 @@ object FhirAnnotations {
     */
   def annotateNumeric(df: DataFrame, path: String): DataFrame =
     reparse(df, path) { (leaf, owner) =>
-      Option.when(leaf.dataType == StringType)(Seq(StructField(s"__${leaf.name}_numeric", NumericType,
+      Option.when(leaf.dataType == StringType)(Seq(StructField(annotationName(leaf.name, Kind.Numeric), NumericType,
         numericCast(df.sparkSession, owner || leaf.nullable).nullable)))
     }.getOrElse {
       annotatePath(df, path)(
-        leaf => df.withColumn(s"__${leaf}_numeric", numeric(col(leaf))),
+        leaf => df.withColumn(annotationName(leaf, Kind.Numeric), numeric(col(leaf))),
         (owner, leaf) =>
-          owner.withField(s"__${leaf}_numeric", numeric(owner.getField(leaf))))
+          owner.withField(annotationName(leaf, Kind.Numeric), numeric(owner.getField(leaf))))
     }
 
   // ---------------------------------------------------------------- A8
@@ -302,7 +350,7 @@ object FhirAnnotations {
         col(s"$path.system").as("system"),
         col("__ucum_canon").as("unit"),
         cv.cast("string").as("value"),
-        cv.as("__value_numeric")))
+        cv.as(annotationName("value", Kind.Numeric))))
   }
 
   /** Materialize the spec's `__<q>_canonical` sibling group for the Quantity
@@ -327,7 +375,7 @@ object FhirAnnotations {
         col("code").as("__ucum_code"), col("factor").as("__ucum_factor"),
         col("off").as("__ucum_off"), col("canon").as("__ucum_canon"))
       df.join(broadcast(u), col(s"$path.code") === col("__ucum_code"), "left")
-        .withColumn(s"__${path}_canonical", canonicalGroup(path))
+        .withColumn(annotationName(path, Kind.Canonical), canonicalGroup(path))
         .drop("__ucum_code", "__ucum_factor", "__ucum_off", "__ucum_canon")
     }
   }
@@ -357,7 +405,7 @@ object FhirAnnotations {
           StructField("__ucum_canon", StringType), StructField("__ucum_factor", FactorType),
           StructField("__ucum_off", OffsetType)))
         val frame = spark.createDataFrame(java.util.Collections.emptyList[Row](), inputs)
-        val group = frame.select(canonicalGroup(q.name).as(s"__${q.name}_canonical")).queryExecution.analyzed match {
+        val group = frame.select(canonicalGroup(q.name).as(annotationName(q.name, Kind.Canonical))).queryExecution.analyzed match {
           case p: Project => BindReferences.bindReference(p.projectList.head, p.child.output)
         }
         new CanonicalSlot(StructField(group.name, group.dataType, group.nullable), group, st.fieldIndex("code"), ucumUnits)

@@ -33,16 +33,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The parse also fills every spec annotation slot its schema declares,
   * while it reads the owning struct, by the rule `FhirAnnotations` applies
-  * in its Catalyst rebuild. A slot is a field of the owning struct named
-  * after a sibling, which is its source:
-  *   - `__<e>_start` / `__<e>_end`, `TIMESTAMP`, beside a string `<e>`: one
-  *     `FhirAnnotations.bounds` call fills both;
-  *   - `__<e>_numeric`, `DECIMAL(38,6)`, beside a string `<e>`: the Spark
-  *     cast `FhirAnnotations.numericCast`;
-  *   - `__<q>_canonical`, the canonical group's struct type, beside a
-  *     Quantity struct `<q>`: `FhirAnnotations.CanonicalSlot`.
-  * A slot is never read from the JSON. `FhirAnnotations` puts the slots in
-  * the schema and re-issues the parse through [[parse]].
+  * in its Catalyst rebuild. A slot is a standard annotation field, as the
+  * `FhirAnnotations` vocabulary names and types it, beside the sibling it
+  * is named after, which is its source: one `FhirAnnotations.bounds` call
+  * fills a range pair, `FhirAnnotations.numericCast` a numeric slot and
+  * `FhirAnnotations.CanonicalSlot` a canonical group. A slot is never read
+  * from the JSON. `FhirAnnotations` puts the slots in the schema and
+  * re-issues the parse through [[parse]].
   */
 object FhirCodec {
 
@@ -146,27 +143,31 @@ object FhirCodec {
     new StructIn(st, st.fields.indices.map(i => if (filled(i)) null else reader(spark, st(i).dataType)).toArray, fills)
   }
 
-  /** The annotation slots `st` declares, each with its source sibling. */
+  /** The annotation slots `st` declares, each with its source sibling: a
+    * standard annotation field named after a sibling, with the type this
+    * repo writes for its kind.
+    */
   private def slots(spark: SparkSession, st: StructType): Seq[Fill] = {
-    // the sibling a `__<e><suffix>` field is named after
-    def source(i: Int, suffix: String): Option[Int] = {
-      val name = st(i).name
-      if (name.length > 2 + suffix.length && name.startsWith("__") && name.endsWith(suffix))
-        Some(st.fieldNames.indexOf(name.substring(2, name.length - suffix.length))).filter(_ >= 0)
-      else None
+    import FhirAnnotations.Kind
+    val named = for {
+      i <- st.fields.indices
+      a <- FhirAnnotations.parseAnnotation(st(i).name)
+      kind <- a.kind
+      src = st.fieldNames.indexOf(a.base) if src >= 0
+    } yield (kind, src, i)
+    def ofString(kind: Kind, dt: DataType): Seq[(Int, Int)] = named.collect {
+      case (`kind`, src, i) if st(i).dataType == dt && st(src).dataType == StringType => src -> i
     }
-    def ofString(i: Int, suffix: String, dt: DataType): Option[Int] =
-      if (st(i).dataType == dt) source(i, suffix).filter(st(_).dataType == StringType) else None
-    def each[T](f: Int => Option[T]): Seq[T] = st.fields.indices.flatMap(f)
-    val starts = each(i => ofString(i, "_start", TimestampType).map(_ -> i)).toMap
-    val ends = each(i => ofString(i, "_end", TimestampType).map(_ -> i)).toMap
+    val starts = ofString(Kind.Start, FhirAnnotations.RangeType).toMap
+    val ends = ofString(Kind.End, FhirAnnotations.RangeType).toMap
     (starts.keySet ++ ends.keySet).toSeq.sorted.map(s => new RangeFill(s, starts.getOrElse(s, -1), ends.getOrElse(s, -1))) ++
-      each(i => ofString(i, "_numeric", FhirAnnotations.NumericType).map(
-        new NumericFill(_, i, FhirAnnotations.numericCast(spark, nullable = true)))) ++
-      each(i => source(i, "_canonical").flatMap { s =>
-        FhirAnnotations.canonicalSlot(spark, st(s)).filter(_.field.dataType == st(i).dataType)
-          .map(new CanonicalFill(s, i, _))
-      })
+      ofString(Kind.Numeric, FhirAnnotations.NumericType).map { case (src, i) =>
+        new NumericFill(src, i, FhirAnnotations.numericCast(spark, nullable = true))
+      } ++
+      named.collect { case (Kind.Canonical, src, i) =>
+        FhirAnnotations.canonicalSlot(spark, st(src)).filter(_.field.dataType == st(i).dataType)
+          .map(new CanonicalFill(src, i, _))
+      }.flatten
   }
 
   /** Computes annotation slots of a struct's values from their sources,
@@ -315,7 +316,7 @@ object FhirCodec {
 
   private final class StructOut(st: StructType) extends Out {
     private val width = st.length
-    private val kept = st.fields.indices.filterNot(st(_).name.startsWith("__")).toArray
+    private val kept = st.fields.indices.filterNot(i => FhirAnnotations.isAnnotation(st(i).name)).toArray
     private val names = kept.map(st(_).name)
     private val fields = kept.map { i => writer(st(i).dataType, FhirSchema.isDecimalField(st(i))) }
 

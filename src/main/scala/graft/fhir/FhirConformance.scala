@@ -1,6 +1,6 @@
 package graft.fhir
 
-import org.apache.spark.sql.types.{ArrayType, DataType, DecimalType, StructType, TimestampType}
+import org.apache.spark.sql.types.StructType
 
 /** FHIR R4 primitive value-format rules (reference README.md:84-86 defers to
   * hl7.org/fhir/datatypes.html — these are that page's published regex
@@ -61,57 +61,22 @@ object FhirConformance {
     "SupplyRequest", "Task", "TerminologyCapabilities", "TestReport",
     "TestScript", "ValueSet", "VerificationResult", "VisionPrescription")
 
-  /** Annotation names this specification defines (README.md:316-381):
-    * `start`/`end` (date ranges, timestamp-typed), `numeric` (decimal), and
-    * `canonical` (Quantity canonicalization, a group). A NON-standard
-    * annotation "can be included … provided [its name does] not collide
-    * with the annotations defined in this specification" (README.md:311-
-    * 312) — so a `__field_start` column that is not actually a range-start
-    * timestamp is a conformance violation, as is any annotation column
-    * whose base element is missing (an annotation is "a derived form of an
-    * element value", README.md:302-303).
+  /** The dotted paths of annotation fields that collide with the spec's
+    * annotation namespace (README.md:311-312): a standard kind whose type
+    * does not fit it (a `__field_start` that is not a timestamp), or any
+    * annotation whose base element is absent from the same group, since an
+    * annotation is "a derived form of an element value" (README.md:302-303).
+    * Names and type rules are the `FhirAnnotations` vocabulary's.
     */
-  private val standardAnnotations: Map[String, DataType => Boolean] = Map(
-    "start" -> (_.isInstanceOf[TimestampType]),
-    "end" -> (_.isInstanceOf[TimestampType]),
-    "numeric" -> (_.isInstanceOf[DecimalType]),
-    "canonical" -> (_.isInstanceOf[StructType]))
-
-  /** Walk a schema and return the dotted paths of annotation columns that
-    * collide with the spec's annotation namespace: a `__<base>_<name>`
-    * column where `name` is a standard annotation but the column's type is
-    * not that annotation's type, or where the `<base>` element it claims to
-    * derive from is absent from the same group. The element-name grammar
-    * has no underscores, so the LAST `_` splits base from annotation name.
-    */
-  def annotationCollisions(schema: StructType): Seq[String] = {
-    def walk(st: StructType, prefix: String): Seq[String] =
-      st.fields.toSeq.flatMap { f =>
-        val here = if (prefix.isEmpty) f.name else s"$prefix.${f.name}"
-        val own: Seq[String] =
-          if (f.name.startsWith("__") && f.name.drop(2).contains('_')) {
-            val body = f.name.drop(2)
-            val cut = body.lastIndexOf('_')
-            val (base, ann) = (body.take(cut), body.drop(cut + 1))
-            standardAnnotations.get(ann) match {
-              case Some(typeOk) =>
-                if (!typeOk(f.dataType)) Seq(s"$here: standard annotation '$ann' with non-conforming type ${f.dataType.simpleString}")
-                else if (!st.fieldNames.contains(base)) Seq(s"$here: annotation '$ann' has no base element '$base'")
-                else Nil
-              case None =>
-                if (!st.fieldNames.contains(base)) Seq(s"$here: annotation '$ann' has no base element '$base'")
-                else Nil
-            }
-          } else Nil
-        val children = f.dataType match {
-          case s: StructType => walk(s, here)
-          case ArrayType(s: StructType, _) => walk(s, s"$here[]")
-          case _ => Nil
-        }
-        own ++ children
+  def annotationCollisions(schema: StructType): Seq[String] =
+    FhirSchema.walk(schema).flatMap { case (path, f, owner) =>
+      FhirAnnotations.parseAnnotation(f.name).flatMap { a =>
+        a.kind.filterNot(_.fits(f.dataType))
+          .map(_ => s"$path: standard annotation '${a.suffix}' with non-conforming type ${f.dataType.simpleString}")
+          .orElse(Option.when(!owner.fieldNames.contains(a.base))(
+            s"$path: annotation '${a.suffix}' has no base element '${a.base}'"))
       }
-    walk(schema, "")
-  }
+    }
 
   /** (golden table, field path, FHIR primitive type) — every string-typed
     * primitive with a format rule present in the three golden tables.

@@ -415,7 +415,6 @@ object FhirQueries {
         s"SELECT id, birthDate FROM ${fhirScan("Patient")} " +
           "WHERE CAST(birthDate AS TIMESTAMP) >= TIMESTAMP '1990-01-01' ORDER BY id"),
       (s, d) => {
-        graft.opt.AnnotationRewrite.install(s)
         // materialize a spec table carrying its annotation columns — the
         // rule targets tables at rest, where __birthDate_start is a real
         // parquet column with min/max stats; the write stays inside the key
@@ -442,7 +441,6 @@ object FhirQueries {
           "WHERE CAST(valueQuantity.value AS DOUBLE) >= 40.0 " +
           "AND CAST(valueQuantity.value AS DOUBLE) < 80.0 ORDER BY id"),
       (s, d) => {
-        graft.opt.AnnotationRewrite.install(s)
         Tables.fhir(s, "Observation", d)
           .where(col("valueQuantity.value").cast("double") >= 40.0 &&
             col("valueQuantity.value").cast("double") < 80.0)

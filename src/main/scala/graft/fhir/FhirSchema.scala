@@ -106,19 +106,32 @@ object FhirSchema {
         case _ => f
       }
       if (isDecimalField(f) && f.dataType == StringType)
-        Seq(rewritten, StructField(s"__${f.name}_numeric", DecimalType(38, 6)))
+        Seq(rewritten, StructField(FhirAnnotations.annotationName(f.name, FhirAnnotations.Kind.Numeric),
+          FhirAnnotations.NumericType))
       else Seq(rewritten)
     })
+
+  /** The one schema walk: every field of `st`, depth first, with its dotted
+    * path and its owning struct. A struct's fields follow it, and so do the
+    * element fields of a LIST of structs, under a `[]` path segment.
+    */
+  def walk(st: StructType, prefix: String = ""): Seq[(String, StructField, StructType)] =
+    st.fields.toSeq.flatMap { f =>
+      val p = prefix + f.name
+      (p, f, st) +: (f.dataType match {
+        case s: StructType => walk(s, s"$p.")
+        case ArrayType(s: StructType, _) => walk(s, s"$p[].")
+        case _ => Nil
+      })
+    }
 
   /** Flatten a schema to (path, type) rows — used by the fhir_schema_derive
     * query and the golden-schema tests.
     */
-  def leaves(st: StructType, prefix: String = ""): Seq[(String, String)] =
-    st.fields.toSeq.flatMap { f =>
-      val p = if (prefix.isEmpty) f.name else s"$prefix.${f.name}"
+  def leaves(st: StructType): Seq[(String, String)] =
+    walk(st).flatMap { case (p, f, _) =>
       f.dataType match {
-        case s: StructType => leaves(s, p)
-        case ArrayType(s: StructType, _) => leaves(s, s"$p[]")
+        case _: StructType | ArrayType(_: StructType, _) => Nil
         case ArrayType(e, _) => Seq((s"$p[]", e.simpleString))
         case other => Seq((p, other.simpleString))
       }

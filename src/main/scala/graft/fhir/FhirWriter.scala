@@ -2,7 +2,8 @@ package graft.fhir
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, StructType, TimestampType}
+
+import FhirAnnotations.Kind
 
 /** Spec-conformant parquet writer (SURVEY §7.5).
   *
@@ -45,42 +46,16 @@ object FhirWriter {
   private def floorMs(c: Column): Column =
     timestamp_micros(unix_micros(c) - pmod(unix_micros(c), lit(1000L)))
 
-  private def isRangeAnnotation(name: String): Boolean =
-    name.startsWith("__") && (name.endsWith("_start") || name.endsWith("_end"))
-
-  /** Floor every timestamp range-annotation leaf (any nesting depth; LIST
-    * elements via transform) to ms precision.
+  /** Floor every timestamp range-annotation leaf, at any nesting depth, to
+    * ms precision, each through the annotation writers' nested-path rebuild.
     */
-  private[fhir] def floorAnnotationTimestamps(df: DataFrame): DataFrame = {
-    def leafPaths(dt: DataType, prefix: List[String]): Seq[List[String]] = dt match {
-      case st: StructType => st.fields.toSeq.flatMap { f =>
-        f.dataType match {
-          case TimestampType if isRangeAnnotation(f.name) => Seq(prefix :+ f.name)
-          case other => leafPaths(other, prefix :+ f.name)
-        }
-      }
-      case ArrayType(e, _) => leafPaths(e, prefix)
-      case _ => Seq.empty
+  private def floorAnnotationTimestamps(df: DataFrame): DataFrame =
+    FhirSchema.walk(df.schema).collect {
+      case (path, f, _) if FhirAnnotations.parseAnnotation(f.name).flatMap(_.kind).exists(k =>
+          (k == Kind.Start || k == Kind.End) && k.fits(f.dataType)) => path.replace("[]", "")
+    }.foldLeft(df) { (d, path) =>
+      FhirAnnotations.annotatePath(d, path)(
+        leaf => d.withColumn(leaf, floorMs(col(leaf))),
+        (owner, leaf) => owner.withField(leaf, floorMs(owner.getField(leaf))))
     }
-    def rebuild(owner: Column, dt: DataType, segs: List[String]): Column = (dt, segs) match {
-      case (_: StructType, leaf :: Nil) => owner.withField(leaf, floorMs(owner.getField(leaf)))
-      case (st: StructType, head :: tail) => st(head).dataType match {
-        case at: ArrayType =>
-          owner.withField(head, transform(owner.getField(head), e => rebuild(e, at.elementType, tail)))
-        case sdt => owner.withField(head, rebuild(owner.getField(head), sdt, tail))
-      }
-      case _ => owner
-    }
-    leafPaths(df.schema, Nil).foldLeft(df) { (d, path) =>
-      path match {
-        case leaf :: Nil => d.withColumn(leaf, floorMs(col(leaf)))
-        case head :: tail => d.schema(head).dataType match {
-          case at: ArrayType =>
-            d.withColumn(head, transform(col(head), e => rebuild(e, at.elementType, tail)))
-          case sdt => d.withColumn(head, rebuild(col(head), sdt, tail))
-        }
-        case Nil => d
-      }
-    }
-  }
 }

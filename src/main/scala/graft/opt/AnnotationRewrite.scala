@@ -1,11 +1,12 @@
 package graft.opt
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{Decimal, DecimalType, DoubleType, StringType, StructType, TimestampType}
+
+import graft.fhir.FhirAnnotations.{annotationName, isAnnotation, parseAnnotation, Kind, NumericType}
 
 /** SURVEY §4 — the one genuinely novel optimizer piece: rewrite string-date
   * predicates to use the spec's typed range-annotation columns
@@ -31,15 +32,15 @@ import org.apache.spark.sql.types.{Decimal, DecimalType, DoubleType, StringType,
 object AnnotationRewrite extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    // `f.resolved` guard: this rule also runs as an analyzer resolution rule
+    // `f.resolved` guard: this rule runs as an analyzer resolution rule
     // (see inject below), where partially-resolved Filters come through
     case f @ Filter(cond, child) if f.resolved =>
       val available: Map[String, Attribute] =
-        child.output.filter(a => a.name.startsWith("__") && a.dataType == TimestampType)
+        child.output.filter(a => isAnnotation(a.name) && Kind.Start.fits(a.dataType))
           .map(a => a.name -> a).toMap
       def startFor(e: Expression): Option[Attribute] = e match {
         case Cast(a: AttributeReference, TimestampType, _, _) if a.dataType == StringType =>
-          available.get(s"__${a.name}_start")
+          available.get(annotationName(a.name, Kind.Start))
         case _ => None
       }
       val newCond =
@@ -83,9 +84,9 @@ object AnnotationRewrite extends Rule[LogicalPlan] {
       gsf.child.dataType match {
         case st: StructType =>
           val leaf = st(gsf.ordinal).name
-          val sib = s"__${leaf}_numeric"
+          val sib = annotationName(leaf, Kind.Numeric)
           val i = st.fieldNames.indexOf(sib)
-          if (i >= 0 && st(i).dataType.isInstanceOf[DecimalType])
+          if (i >= 0 && Kind.Numeric.fits(st(i).dataType))
             Some(GetStructField(gsf.child, i, Some(sib)))
           else None
         case _ => None
@@ -98,7 +99,7 @@ object AnnotationRewrite extends Rule[LogicalPlan] {
     * margin.
     */
   private def decLit(v: BigDecimal, mode: BigDecimal.RoundingMode.Value): Literal =
-    Literal(Decimal(v.setScale(6, mode)), DecimalType(38, 6))
+    Literal(Decimal(v.setScale(6, mode)), NumericType)
 
   private def litValue(r: Expression): Option[BigDecimal] = r match {
     case lit: Literal if lit.foldable && lit.value != null =>
@@ -112,13 +113,12 @@ object AnnotationRewrite extends Rule[LogicalPlan] {
 
   private def addNumericPruning(cond: Expression): Expression = {
     // resolve the field name through the child's schema, NOT the node's
-    // optional name tag — optimizer rules can rebuild GetStructField with
-    // name=None, and a name-based guard then re-adds the conjunct when the
-    // rule also runs via experimental.extraOptimizations
+    // optional name tag: rules can rebuild GetStructField with name=None,
+    // and a name-based guard would then re-add the conjunct on the next
+    // analyzer fixpoint pass, which runs this rule again
     val already = cond.exists {
       case GetStructField(child, ord, _) => child.dataType match {
-        case st: StructType =>
-          st(ord).name.startsWith("__") && st(ord).name.endsWith("_numeric")
+        case st: StructType => parseAnnotation(st(ord).name).exists(_.kind.contains(Kind.Numeric))
         case _ => false
       }
       case _ => false
@@ -145,22 +145,10 @@ object AnnotationRewrite extends Rule[LogicalPlan] {
     conjuncts.foldLeft(cond)(And(_, _))
   }
 
-  /** Install into a LIVE session via the sanctioned experimental hook.
-    * Effective for the datetime replacement (top-level annotation columns
-    * survive into the optimizer), but NOT for the nested numeric pruning:
-    * extraOptimizations run after nested schema pruning has already dropped
-    * `__<f>_numeric` from the relation's struct. Sessions built with
-    * `inject` get both.
-    */
-  def install(s: SparkSession): Unit =
-    if (!s.experimental.extraOptimizations.contains(AnnotationRewrite)) {
-      s.experimental.extraOptimizations = s.experimental.extraOptimizations :+ AnnotationRewrite
-    }
-
   /** Session-builder integration (`withExtensions(AnnotationRewrite.inject)`,
-    * as [[graft.Session]] and the perfbench harness build every session):
-    * registers the rule as an analyzer
-    * resolution rule, which runs BEFORE nested schema pruning — so the
+    * as [[graft.Session]] and the perfbench harness build every session),
+    * the one way the rule enters a session: registers the rule as an
+    * analyzer resolution rule, which runs BEFORE nested schema pruning — so the
     * numeric conjunct keeps `__<f>_numeric` alive in the pruned schema and
     * reaches the parquet scan as a pushed nested predicate. The rule is
     * idempotent (replacement leaves nothing to re-match; augmentation is

@@ -126,7 +126,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   private lazy val audited: Seq[(String, String, Seq[String], Seq[String])] = {
     val skip = (k: String) => k.startsWith("stream_") ||
-      k == "opt_annotation_rewrite" || k == "opt_numeric_rewrite" || // install a session rule (+ temp table)
+      k == "opt_annotation_rewrite" || // writes its annotated table while it plans
       k == "sink_partitioned_write" || k == "sink_parquet_roundtrip" ||
       k == "join_bucketed_colocated" // saveAsTable side effects; plan asserted in PlanSpec
     SparkEntry.queries.keys.toSeq.sorted.filterNot(skip).map { k =>

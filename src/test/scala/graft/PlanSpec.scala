@@ -493,7 +493,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("AnnotationRewrite: string-date predicate becomes annotation predicate") {
-    opt.AnnotationRewrite.install(spark)
     val tmp = SparkTestBase.tempDir("graft_plan_annotated").toString
     fhir.FhirAnnotations.annotateRange(SparkTestBase.fhir("Patient"), "birthDate")
       .write.mode("overwrite").parquet(tmp)
@@ -569,7 +568,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("AnnotationRewrite: decimal-string predicate gains a typed __value_numeric pruning conjunct") {
-    opt.AnnotationRewrite.install(spark)
     val obs = SparkTestBase.fhir("Observation")
     val q = obs
       .where(col("valueQuantity.value").cast("double") >= 40.0)
@@ -580,9 +578,9 @@ class PlanSpec extends AnyFunSuite {
     assert(optimized.contains("__value_numeric"), optimized)
     // margin = 1e-6 + 2*ulp(40), quantized outward (floor) at 6 dp
     assert(optimized.contains("39.999998"), optimized)
-    // …and exactly once: the rule is installed BOTH as a resolution rule and
-    // in extraOptimizations here, and the schema-based guard must stop the
-    // second pass from re-adding the conjunct
+    // …and exactly once: each analyzer fixpoint pass re-runs the rule, and
+    // the schema-based guard must stop a later pass from re-adding the
+    // conjunct
     assert(optimized.sliding("39.999998".length).count(_ == "39.999998") == 1, optimized)
     assert(optimized.toLowerCase.contains("cast(valuequantity"), optimized)
     // a comparison inside OR must NOT spawn a conjunct (not implied)

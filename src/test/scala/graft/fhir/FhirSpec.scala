@@ -1,6 +1,7 @@
 package graft.fhir
 
 import graft.SparkTestBase
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
@@ -315,6 +316,39 @@ class FhirSpec extends AnyFunSuite with TimeLimits {
     assert(us(s"$base/strict", "__t_start") == us(s"$base/native", "__t_start") - 456)
   }
 
+  test("FhirWriter: strict mode floors nested and LIST-element range annotations to MILLIS, nothing else") {
+    // sub-ms fractions on both annotated paths, so the floor has work to do
+    def subMs(c: Column) = regexp_replace(c, "(T\\d{2}:\\d{2}:\\d{2})", "$1.123456")
+    val eob = SparkTestBase.fhir("ExplanationOfBenefit")
+      .withColumn("billablePeriod", col("billablePeriod").withField("start", subMs(col("billablePeriod.start"))))
+      .withColumn("item", transform(col("item"), i =>
+        i.withField("servicedPeriod.start", subMs(i.getField("servicedPeriod").getField("start")))))
+    val df = FhirAnnotations.annotateRange(
+      FhirAnnotations.annotateRange(eob, "billablePeriod.start"), "item.servicedPeriod.start")
+    val base = SparkTestBase.tempDir("graft_strict_nested_").toString
+    FhirWriter.write(df, s"$base/strict", strictParquetTypes = true)
+    FhirWriter.write(df, s"$base/native")
+    val (strict, native) = (spark.read.parquet(s"$base/strict"), spark.read.parquet(s"$base/native"))
+    // (id, annotation, µs) for every nested range bound, LIST elements by position
+    def bounds(t: DataFrame) = t.select(col("id"), posexplode_outer(col("item")).as(Seq("pos", "it")),
+        col("billablePeriod"))
+      .select(col("id"), col("pos"), expr("""stack(4,
+        'billablePeriod.__start_start', unix_micros(billablePeriod.__start_start),
+        'billablePeriod.__start_end', unix_micros(billablePeriod.__start_end),
+        'item.servicedPeriod.__start_start', unix_micros(it.servicedPeriod.__start_start),
+        'item.servicedPeriod.__start_end', unix_micros(it.servicedPeriod.__start_end)) AS (ann, us)"""))
+    val floored = bounds(native).select(col("id"), col("pos"), col("ann"), expr("us - pmod(us, 1000)").as("us"))
+    assert(bounds(native).where(expr("pmod(us, 1000) != 0")).count() > 0, "no sub-ms bound to floor")
+    assert(bounds(strict).where(col("us").isNotNull).count() > 0)
+    assert(bounds(strict).exceptAll(floored).isEmpty && floored.exceptAll(bounds(strict)).isEmpty)
+    // every other column reads back unchanged
+    def rest(t: DataFrame) = t
+      .withColumn("billablePeriod", col("billablePeriod").dropFields("__start_start", "__start_end"))
+      .withColumn("item", transform(col("item"), i =>
+        i.withField("servicedPeriod", i.getField("servicedPeriod").dropFields("__start_start", "__start_end"))))
+    assert(rest(strict).exceptAll(rest(native)).isEmpty && rest(native).exceptAll(rest(strict)).isEmpty)
+  }
+
   test("FhirWriter: a write leaves the session conf as it found it") {
     val key = "spark.sql.parquet.outputTimestampType"
     val dir = SparkTestBase.tempDir("graft_writer_conf_").toString
@@ -506,6 +540,13 @@ class FhirSpec extends AnyFunSuite with TimeLimits {
     val annotated = FhirAnnotations.annotateRange(
       SparkTestBase.fhir("Patient"), "birthDate").schema
     assert(FhirConformance.annotationCollisions(annotated).isEmpty)
+    // so are the benchmark ingest's range, numeric and canonical annotations
+    val kinds = SparkTestBase.ingestAnnotations.toSeq.flatMap { case (r, steps) =>
+      val schema = SparkTestBase.annotate(SparkTestBase.fhir(r), steps).schema
+      assert(FhirConformance.annotationCollisions(schema).isEmpty, r)
+      FhirSchema.walk(schema).flatMap { case (_, f, _) => FhirAnnotations.parseAnnotation(f.name).flatMap(_.kind) }
+    }
+    assert(kinds.toSet == FhirAnnotations.Kind.all.toSet)
     // a non-standard annotation with a fresh name is permitted…
     val okExtra = StructType(Seq(
       StructField("resourceType", StringType, nullable = false),
@@ -526,6 +567,18 @@ class FhirSpec extends AnyFunSuite with TimeLimits {
           StructField("__value_numeric", DecimalType(38, 6)))))))))))
     val hits = FhirConformance.annotationCollisions(orphan)
     assert(hits.exists(h => h.contains("no base element 'value'") && h.startsWith("item[].net")), hits)
+  }
+
+  test("FHIR keys leave the session's optimizer rules and conf as they found them") {
+    val rules = spark.experimental.extraOptimizations
+    val conf = spark.conf.getAll
+    for (q <- FhirQueries.defs) {
+      q.run(spark, SparkTestBase.sf).collect()
+      assert(spark.experimental.extraOptimizations == rules, s"${q.key} changed the extra optimizer rules")
+      assert(spark.conf.getAll == conf, s"${q.key} changed the session conf")
+    }
+    // AnnotationRewrite enters a session only as a resolution rule, through inject
+    assert(!rules.contains(graft.opt.AnnotationRewrite))
   }
 
   test("UCUM canonicalization: clinical units (mm[Hg], kPa, mg/dL, /min, %)") {

@@ -125,30 +125,6 @@ class PropertySpec extends AnyFunSuite {
 
   // --- one-pass ingest: codec-filled annotations equal the Catalyst rebuild ---
 
-  /** The annotations the benchmark ingest writes, per resource: (kind, path). */
-  private val ingestAnnotations: Map[String, Seq[(String, String)]] = Map(
-    "Patient" -> Seq(
-      "range" -> "birthDate",
-      "numeric" -> "extension.valueDecimal",
-      "numeric" -> "address.extension.extension.valueDecimal"),
-    "Observation" -> Seq(
-      "range" -> "effectiveDateTime",
-      "numeric" -> "valueQuantity.value",
-      "numeric" -> "component.valueQuantity.value",
-      "canonical" -> "valueQuantity"),
-    "ExplanationOfBenefit" -> Seq(
-      "range" -> "billablePeriod.start",
-      "numeric" -> "item.net.value",
-      "numeric" -> "item.adjudication.amount.value",
-      "numeric" -> "payment.amount.value",
-      "numeric" -> "total.amount.value"))
-
-  private def annotate(df: DataFrame, steps: Seq[(String, String)]): DataFrame = steps.foldLeft(df) {
-    case (d, ("range", p)) => FhirAnnotations.annotateRange(d, p)
-    case (d, ("numeric", p)) => FhirAnnotations.annotateNumeric(d, p)
-    case (d, (_, p)) => FhirAnnotations.canonicalize(d, p)
-  }
-
   private def encoded(lines: Dataset[String]): DataFrame =
     FhirCodec.encode(spark, lines, FhirSchema.deriveSchema(spark, lines))
 
@@ -175,8 +151,8 @@ class PropertySpec extends AnyFunSuite {
     * codec frame.
     */
   private def assertOnePassEqual(enc: DataFrame, steps: Seq[(String, String)]): DataFrame = {
-    val codec = annotate(enc, steps)
-    val catalyst = annotate(behindProject(enc), steps)
+    val codec = SparkTestBase.annotate(enc, steps)
+    val catalyst = SparkTestBase.annotate(behindProject(enc), steps)
     assert(FhirCodec.parseInput(codec).isDefined, "the annotated codec frame left the codec path")
     assert(FhirCodec.parseInput(catalyst).isEmpty)
     assert(codec.schema == catalyst.schema,
@@ -197,7 +173,7 @@ class PropertySpec extends AnyFunSuite {
     assertOnePassEqual(gen, genSteps)
     // re-annotating a path replaces its slots in place
     assertOnePassEqual(gen, genSteps ++ genSteps)
-    for ((r, steps) <- ingestAnnotations) {
+    for ((r, steps) <- SparkTestBase.ingestAnnotations) {
       val enc = encoded(fixture(r))
       val codec = assertOnePassEqual(enc, steps)
       assert(codec.count() == enc.count())
