@@ -148,10 +148,25 @@ object Tables {
     case _ => java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(epochSeconds))
   }
 
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    withEventTime(t(spark, dir, "events"))
-  }
+  /** `events` with its derived event-time columns. A TIMESTAMP(NANOS) `ts`
+    * reads as int64 nanos under the posture's
+    * `spark.sql.legacy.parquet.nanosAsLong` ([[Session.confs]]).
+    */
+  def events(spark: SparkSession, dir: String): DataFrame = withEventTime(t(spark, dir, "events"))
+
+  /** The one form of a SQL-text key: registers each of `tables` of dataset
+    * `d` as a temp view of its own name, runs `text` (binding the named
+    * parameters `args`, if any) and drops the views again, so no view
+    * outlives the call or binds a later query to this dataset. `spark.sql`
+    * analyzes eagerly, so the returned plan already holds the resolved
+    * relations and no longer needs the views. A temp view of the caller's
+    * that bears one of these table names is replaced, then dropped.
+    */
+  def sql(spark: SparkSession, d: String, tables: String*)(text: String, args: Map[String, Any] = Map.empty): DataFrame =
+    try {
+      tables.foreach(name => t(spark, d, name).createOrReplaceTempView(name))
+      if (args.isEmpty) spark.sql(text) else spark.sql(text, args)
+    } finally tables.foreach(spark.catalog.dropTempView)
 
   /** FHIR resource table `r` as every FHIR key reads it for dataset `d`,
     * from where [[fhirDir]] resolves it.
@@ -314,6 +329,20 @@ object Memo {
   def put[T](s: SparkSession, slot: String, fp: String, value: T, release: T => Unit): T = {
     Option(slots.put((s, slot), Entry(fp, value, () => release(value)))).foreach(_.release())
     value
+  }
+
+  /** Removes every entry held for `s`, running each one's release: for a
+    * session nothing uses again, such as a replaced [[Session.child]].
+    */
+  private[graft] def drop(s: SparkSession): Unit = {
+    import scala.jdk.CollectionConverters._
+    slots.keySet.asScala.filter(_._1 eq s).foreach(k => Option(slots.remove(k)).foreach(_.release()))
+  }
+
+  /** Test view: the sessions the memo holds entries for. */
+  private[graft] def sessions: Set[SparkSession] = {
+    import scala.jdk.CollectionConverters._
+    slots.keySet.asScala.map(_._1).toSet
   }
 
   /** Test view: slot -> fp of the entries held for `s`. */

@@ -9,6 +9,12 @@ import org.apache.spark.sql.SparkSession
   * (the `local-cluster` gate and FaultDrill launch that way), else
   * `local[cpus]`. cpus: `SPARK_GRAFT_CPUS`, else the JVM's available
   * processors.
+  *
+  * A key leaves its caller's session as it found it. SQL-text keys go
+  * through `Tables.sql`, which drops the temp views it registers. Confs
+  * read at execution time, after the key has returned its lazy plan, go
+  * on a [[child]] session. Scopes that run eagerly use [[withConf]]. No
+  * key writes its caller's conf.
   */
 object Session {
 
@@ -23,6 +29,8 @@ object Session {
     * [[apply]]).
     */
   def confs: Seq[(String, String)] = Seq(
+    // read only where AQE does not plan (stream micro-batches): with AQE
+    // coalescing on, every batch shuffle starts at initialPartitionNum
     "spark.sql.shuffle.partitions" -> cpus.toString,
     // Shuffle width scales with data, not cores: with shuffle partitions
     // pinned to cpus, a 10× larger input puts 10× the bytes into each
@@ -64,8 +72,8 @@ object Session {
     * would return the default, and setting that back would leave an
     * explicit entry behind). It scopes only the work that runs inside
     * `body`: a lazy DataFrame returned from `body` executes later, under
-    * the restored conf, which is why a loop that must plan under its own
-    * confs runs in a child session instead.
+    * the restored conf, which is why a key whose plan reads its confs at
+    * execution time runs in a [[child]] session instead.
     */
   def withConf[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
     val prev = s.conf.getAll
@@ -79,6 +87,21 @@ object Session {
       }
     }
   }
+
+  /** The child session `name` of `s` with `confs` set: it shares `s`'s
+    * SparkContext and cached data but has its own SQL conf and temp-view
+    * catalog, so confs that a lazy plan reads at execution time (join
+    * strategy thresholds, recursion limits) stay out of the caller's
+    * session. Memoized in [[Memo]] under `s`, so there is one child per
+    * (session, name) and the entries it holds stay bounded; a call with
+    * other `confs` replaces the child and drops its entries.
+    */
+  def child(s: SparkSession, name: String, confs: (String, String)*): SparkSession =
+    Memo.get(s, s"session:$name", confs.mkString(";"), Memo.drop(_)) {
+      val c = s.newSession()
+      confs.foreach { case (k, v) => c.conf.set(k, v) }
+      c
+    }
 
   /** Stop the session, then delete this process's tmpfs scratch dir (if
     * [[apply]] made one): tmpfs is memory, and every staged layout of the

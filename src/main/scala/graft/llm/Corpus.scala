@@ -32,9 +32,10 @@ object Corpus {
 
   /** Number of BPE merge rounds for tokenizer_train_bpe — small enough for
     * an unrolled CTE-chain oracle, enough rounds to exercise merged-symbol
-    * pairs (on the sf corpora round 6's winning pair is 'm er', containing
-    * round 1's merge — so the loop provably feeds merges back into the
-    * pair statistic, the property a single pair-count pass cannot show).
+    * pairs (on the sf corpora the sixth merge's winning pair is 'm er',
+    * containing the first merge's symbol — so the loop provably feeds
+    * merges back into the pair statistic, the property a single
+    * pair-count pass cannot show).
     */
   private val BpeMerges = 8
 

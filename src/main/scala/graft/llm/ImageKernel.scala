@@ -139,8 +139,8 @@ object ImageKernel {
   }
 
   /** The area-average accumulation step of [[dHash]], exposed separately
-    * (round-13 judge task #7) so the 9×8 (sum, count) grids can be STAGED
-    * and the final bit-fold recomputed in DuckDB SQL — the oracle then
+    * so the 9×8 (sum, count) grids can be STAGED and the final bit-fold
+    * recomputed in DuckDB SQL — the oracle then
     * cross-checks the kernel's last arithmetic mile instead of trusting
     * the finished hash. Row-major flattening: index cy * 9 + cx.
     */

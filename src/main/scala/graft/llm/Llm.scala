@@ -646,20 +646,13 @@ object Llm {
     * O(1) in rounds — left to the ContextCleaner they pile up across runs
     * (+38% bench time on this key) and the hygiene test races driver GC.
     *
-    * The loop runs on a CHILD session (`newSession`: shared context and
-    * block manager, isolated SQL conf) pinned to the session width
-    * (`Session.cpus` shuffle partitions) — each round is 4-5 shuffle stages
-    * over the tiny verified pair graph, where more partitions than cores
-    * would be pure task-launch overhead. The child session means the cap
-    * cannot bleed into a concurrently planned query in the caller's session.
-    * Edges enter and labels leave the loop as
-    * checkpointed-RDD transplants, so callers never touch a child-session
-    * Dataset.
+    * The loop runs in the caller's session and needs no conf of its own:
+    * each round is 4-5 shuffle stages over the tiny verified pair graph,
+    * and AQE coalesces each stage's `initialPartitionNum` reduce
+    * partitions down to what the bytes need, so no partition cap is set.
     */
   private def clusterLabelsUncached(s: SparkSession, d: String): (DataFrame, Seq[Int]) = {
-    // pair discovery (the expensive minhash pipeline) runs in the caller's
-    // session at full shuffle width; only the propagation loop is scoped
-    // down. The loop runs over the COLLAPSED graph — gid nodes and
+    // The loop runs over the COLLAPSED graph — gid nodes and
     // rep-verified edges — because every exact-dup group is a clique whose
     // members provably share their gid's converged label (gid = min member,
     // so min-reachable-doc_id over the expanded graph = min-reachable-gid);
@@ -671,12 +664,8 @@ object Llm {
     val gidPairs = st.matched.select(col("ga").as("i"), col("gb").as("j"))
     val cliqueNodes = st.grouped
       .where(size(col("members")) >= 2).select(col("gid").as("node"))
-    val loopS = s.newSession()
-    loopS.conf.set("spark.sql.shuffle.partitions", graft.Session.cpus.toString)
-    val undirected = gidPairs.union(gidPairs.select(col("j").as("i"), col("i").as("j")))
-    val (edges, edgeIds) = Ckpt(loopS.createDataFrame(undirected.rdd, undirected.schema))
-    val allNodes = edges.select(col("i").as("node"))
-      .union(loopS.createDataFrame(cliqueNodes.rdd, cliqueNodes.schema))
+    val (edges, edgeIds) = Ckpt(gidPairs.union(gidPairs.select(col("j").as("i"), col("i").as("j"))))
+    val allNodes = edges.select(col("i").as("node")).union(cliqueNodes)
     var (labels, labelIds) = Ckpt(
       allNodes.distinct().withColumn("label", col("node")))
     // One propagation step composed LINEAGE-ONLY (no action, no ckpt):
@@ -720,14 +709,11 @@ object Llm {
       labelIds = updatedIds
     }
     Ckpt.release(s, edgeIds)
-    // transplant the converged (checkpoint-backed) gid labels into the
-    // caller's session so downstream joins never mix Datasets across
-    // sessions, then expand to per-doc labels through the membership table
-    // (bounded by the number of documents that appear in any pair). The
-    // expansion is checkpointed so the cached entry survives a later
-    // minhash-state swap releasing `grouped`'s blocks.
-    val gidLabels = s.createDataFrame(labels.rdd, labels.schema)
-    val (expanded, expandedIds) = Ckpt(gidLabels
+    // expand the converged gid labels to per-doc labels through the
+    // membership table (bounded by the number of documents that appear in
+    // any pair). The expansion is checkpointed so the cached entry survives
+    // a later minhash-state swap releasing `grouped`'s blocks.
+    val (expanded, expandedIds) = Ckpt(labels
       .join(Collapse.members(st.grouped).withColumnRenamed("gid", "node"), "node")
       .select(col("m").as("node"), col("label")))
     Ckpt.release(s, labelIds)
@@ -1147,9 +1133,9 @@ object Llm {
     // prefix table (see [[MrlPrefix]]; slicing the wide column
     // in-flight would make the 4× IO claim semantic only);
     // the rerank is O(20) per query against the wide base column. Both
-    // stages rank on round-6 sims under total orders (the cross-engine
-    // tie discipline); the oracle derives the identical prefix from the
-    // base table via embedding[1:16] — fully independent.
+    // stages rank on sims rounded to 6 places under total orders (the
+    // cross-engine tie discipline); the oracle derives the identical
+    // prefix from the base table via embedding[1:16] — fully independent.
     QueryDef(
       "sim_mrl_rerank",
       Some(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Ckpt, Q, QueryDef, Tables}
+import graft.{Ckpt, Q, QueryDef, Session, Tables}
 
 /** Scale-pattern operators: the physical/pipeline
   * techniques a 100 TB warehouse deployment leans on daily.
@@ -422,10 +422,11 @@ object Advanced {
     // filter on l_orderkey that prunes lineitem rows before the join
     // shuffle — Spark's InjectRuntimeFilter, the semi-join reduction that
     // matters most at 100 TB (most fact rows never shuffle at all). Runs on
-    // a child session so disabling broadcast (to force the shuffle join the
-    // filter exists for) and the size thresholds can't leak into other
-    // queries. Bloom false positives only cost work — the equi-join still
-    // verifies exactly, so the oracle is the plain join.
+    // a child session (the confs are read when the lazy plan is planned)
+    // so disabling broadcast (to force the shuffle join the filter exists
+    // for) and the size thresholds can't leak into other queries. Bloom
+    // false positives only cost work — the equi-join still verifies
+    // exactly, so the oracle is the plain join.
     QueryDef(
       "join_runtime_bloom",
       Some(
@@ -435,10 +436,10 @@ object Advanced {
           "WHERE o_orderpriority = '1-URGENT' AND o_orderstatus = 'F' " +
           "GROUP BY l_returnflag ORDER BY l_returnflag"),
       (s, d) => {
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
+        val s2 = Session.child(s, "join_runtime_bloom",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+          "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0")
         val sel = Tables.t(s2, d, "orders")
           .where(col("o_orderpriority") === "1-URGENT" && col("o_orderstatus") === "F")
         Tables.t(s2, d, "lineitem")
@@ -526,134 +527,82 @@ object Advanced {
     QueryDef(
       "sql_api_q5",
       Some(q5Sql),
-      (s, d) => {
-        Seq("customer", "orders", "lineitem", "supplier", "nation", "region")
-          .foreach(t => Tables.t(s, d, t).createOrReplaceTempView(t))
-        s.sql(q5Sql)
-      }),
+      (s, d) => Tables.sql(s, d, "customer", "orders", "lineitem", "supplier", "nation", "region")(q5Sql)),
 
     // Dialect-portable Q7 shape (nation-pair volume): see q7Sql above.
     QueryDef(
       "sql_api_q7",
       Some(q7Sql),
-      (s, d) => {
-        Seq("supplier", "lineitem", "orders", "customer", "nation").foreach(t =>
-          Tables.t(s, d, t).createOrReplaceTempView(t))
-        s.sql(q7Sql)
-      }),
+      (s, d) => Tables.sql(s, d, "supplier", "lineitem", "orders", "customer", "nation")(q7Sql)),
 
     // Dialect-portable Q18 shape (HAVING semi-join): see q18Sql above.
     QueryDef(
       "sql_api_q18",
       Some(q18Sql),
-      (s, d) => {
-        Seq("customer", "orders", "lineitem")
-          .foreach(t => Tables.t(s, d, t).createOrReplaceTempView(t))
-        s.sql(q18Sql)
-      }),
+      (s, d) => Tables.sql(s, d, "customer", "orders", "lineitem")(q18Sql)),
 
     // Dialect-portable Q21 shape (EXISTS + NOT EXISTS decorrelation): see
     // q21Sql above.
     QueryDef(
       "sql_api_q21",
       Some(q21Sql),
-      (s, d) => {
-        Seq("supplier", "lineitem", "orders", "nation")
-          .foreach(t => Tables.t(s, d, t).createOrReplaceTempView(t))
-        s.sql(q21Sql)
-      }),
+      (s, d) => Tables.sql(s, d, "supplier", "lineitem", "orders", "nation")(q21Sql)),
 
     // Q13 shape: see q13Sql above.
     QueryDef(
       "sql_api_q13",
       Some(q13Sql),
-      (s, d) => {
-        Seq("customer", "orders")
-          .foreach(t => Tables.t(s, d, t).createOrReplaceTempView(t))
-        s.sql(q13Sql)
-      }),
+      (s, d) => Tables.sql(s, d, "customer", "orders")(q13Sql)),
 
     // Q4 shape (correlated EXISTS with date-arithmetic residual): q4Sql.
     QueryDef(
       "sql_api_q4",
       Some(q4Sql),
-      (s, d) => {
-        Seq("orders", "lineitem")
-          .foreach(t => Tables.t(s, d, t).createOrReplaceTempView(t))
-        s.sql(q4Sql)
-      }),
+      (s, d) => Tables.sql(s, d, "orders", "lineitem")(q4Sql)),
 
     // Q16 shape (NOT IN null-aware anti + count DISTINCT): q16Sql.
     QueryDef(
       "sql_api_q16",
       Some(q16Sql),
-      (s, d) => {
-        Seq("part", "lineitem", "supplier")
-          .foreach(t => Tables.t(s, d, t).createOrReplaceTempView(t))
-        s.sql(q16Sql)
-      }),
+      (s, d) => Tables.sql(s, d, "part", "lineitem", "supplier")(q16Sql)),
 
     // Q22 shape (scalar subquery + NOT EXISTS anti-join): q22Sql.
     QueryDef(
       "sql_api_q22",
       Some(q22Sql),
-      (s, d) => {
-        Seq("customer", "orders")
-          .foreach(t => Tables.t(s, d, t).createOrReplaceTempView(t))
-        s.sql(q22Sql)
-      }),
+      (s, d) => Tables.sql(s, d, "customer", "orders")(q22Sql)),
 
     // Q17 shape (correlated scalar-aggregate subquery decorrelation +
     // MergeScalarSubqueries): q17Sql.
     QueryDef(
       "sql_api_q17",
       Some(q17Sql),
-      (s, d) => {
-        Seq("lineitem", "part")
-          .foreach(t => Tables.t(s, d, t).createOrReplaceTempView(t))
-        s.sql(q17Sql)
-      }),
+      (s, d) => Tables.sql(s, d, "lineitem", "part")(q17Sql)),
 
     // Q15 shape (scalar max over a twice-referenced grouped CTE): q15Sql.
     QueryDef(
       "sql_api_q15",
       Some(q15Sql),
-      (s, d) => {
-        Seq("supplier", "lineitem")
-          .foreach(t => Tables.t(s, d, t).createOrReplaceTempView(t))
-        s.sql(q15Sql)
-      }),
+      (s, d) => Tables.sql(s, d, "supplier", "lineitem")(q15Sql)),
 
     // Q19 shape (disjunctive mixed-side join predicate): q19Sql.
     QueryDef(
       "sql_api_q19",
       Some(q19Sql),
-      (s, d) => {
-        Seq("lineitem", "part")
-          .foreach(t => Tables.t(s, d, t).createOrReplaceTempView(t))
-        s.sql(q19Sql)
-      }),
+      (s, d) => Tables.sql(s, d, "lineitem", "part")(q19Sql)),
 
     // Q20 shape (stacked semi-joins around an aggregate): q20Sql.
     QueryDef(
       "sql_api_q20",
       Some(q20Sql),
-      (s, d) => {
-        Seq("supplier", "lineitem", "part")
-          .foreach(t => Tables.t(s, d, t).createOrReplaceTempView(t))
-        s.sql(q20Sql)
-      }),
+      (s, d) => Tables.sql(s, d, "supplier", "lineitem", "part")(q20Sql)),
 
     // Q2 shape (argmin-by-equality: correlated scalar agg over a 4-way
     // join): q2Sql.
     QueryDef(
       "sql_api_q2",
       Some(q2Sql),
-      (s, d) => {
-        Seq("part", "supplier", "nation", "region", "lineitem")
-          .foreach(t => Tables.t(s, d, t).createOrReplaceTempView(t))
-        s.sql(q2Sql)
-      }),
+      (s, d) => Tables.sql(s, d, "part", "supplier", "nation", "region", "lineitem")(q2Sql)),
 
     // Named-parameter SQL: the injection-safe templating path — dashboard /
     // service queries bind :params as TYPED literals through the parser
@@ -668,18 +617,15 @@ object Advanced {
           s"CAST(CAST(sum(CAST(o_totalprice AS ${Q.D4})) AS ${Q.D6}) AS DOUBLE) AS sum_total " +
           "FROM orders WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderstatus = 'O' " +
           "GROUP BY o_orderpriority ORDER BY o_orderpriority"),
-      (s, d) => {
-        Tables.t(s, d, "orders").createOrReplaceTempView("orders")
-        s.sql(
-          "SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n, " +
-            "CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DECIMAL(38,6)) AS DOUBLE) AS sum_total " +
-            // CAST inside the query: a bound java.sql.Timestamp would parse
-            // in the JVM-default zone, but the cast uses the session's UTC
-            "FROM orders WHERE o_orderdate >= CAST(:cutoff AS TIMESTAMP) " +
-            "AND o_orderstatus = :status " +
-            "GROUP BY o_orderpriority ORDER BY o_orderpriority",
-          Map("cutoff" -> "1996-01-01", "status" -> "O"))
-      }),
+      (s, d) => Tables.sql(s, d, "orders")(
+        "SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n, " +
+          "CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DECIMAL(38,6)) AS DOUBLE) AS sum_total " +
+          // CAST inside the query: a bound java.sql.Timestamp would parse
+          // in the JVM-default zone, but the cast uses the session's UTC
+          "FROM orders WHERE o_orderdate >= CAST(:cutoff AS TIMESTAMP) " +
+          "AND o_orderstatus = :status " +
+          "GROUP BY o_orderpriority ORDER BY o_orderpriority",
+        Map("cutoff" -> "1996-01-01", "status" -> "O"))),
 
     // LATERAL correlated subquery: top-2 customers per nation written as
     // the SQL-standard LATERAL form (the shape ORMs and federated tools
@@ -690,38 +636,27 @@ object Advanced {
     QueryDef(
       "join_lateral_topn",
       Some(lateralSql),
-      (s, d) => {
-        Seq("nation", "customer")
-          .foreach(t => Tables.t(s, d, t).createOrReplaceTempView(t))
-        s.sql(lateralSql)
-      }),
+      (s, d) => Tables.sql(s, d, "nation", "customer")(lateralSql)),
 
     // Recursive CTE hierarchy traversal: see recursiveSql above.
     QueryDef(
       "hierarchy_recursive_cte",
       Some(recursiveSql),
       (s, d) => {
-        // The loosened recursion valve is scoped to a CHILD session (own
-        // SQLConf + temp-view catalog, shared SparkContext): setting it on
-        // the caller's session would leave the safety limit raised — up to
-        // Int.MaxValue — for every later query in a long-lived JVM. A
-        // finally-restore cannot work here:
-        // the conf is read at EXECUTION time, after this lazy plan is
-        // returned.
-        val cs = s.newSession()
-        val c = Tables.t(cs, d, "customer")
         // Spark's cteRecursionRowLimit is a safety valve with a fixed 10⁶
         // default; this traversal legitimately emits N·(⌊log₂ maxKey⌋+1)
         // rows (~5·10⁷ at the 10× rehearsal scale — found by the sf1
         // rehearsal, where the default aborted the query). Size it from
         // table stats, exactly as a production job would from catalog
         // stats, instead of hoping the default fits.
-        val st = c.agg(count(lit(1)), max(col("c_custkey"))).head()
+        val st = Tables.t(s, d, "customer").agg(count(lit(1)), max(col("c_custkey"))).head()
         val depth = 66 - java.lang.Long.numberOfLeadingZeros(math.max(st.getLong(1), 1L))
         val rows = math.min(Int.MaxValue.toLong, st.getLong(0) * depth + 1000L)
-        cs.conf.set("spark.sql.cteRecursionRowLimit", rows.toString)
-        c.createOrReplaceTempView("customer")
-        cs.sql(recursiveSql)
+        // The limit is read at EXECUTION time, after this lazy plan is
+        // returned, so it goes on a child session: set on the caller's,
+        // it would stay raised (up to Int.MaxValue) for every later query.
+        val cs = Session.child(s, "hierarchy_recursive_cte", "spark.sql.cteRecursionRowLimit" -> rows.toString)
+        Tables.sql(cs, d, "customer")(recursiveSql)
       }),
 
     // Incremental aggregate merge: per-key partial state (count + exact

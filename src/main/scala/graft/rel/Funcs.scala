@@ -101,7 +101,7 @@ object Funcs {
           "CAST(len(list_filter(string_split(text, ' '), x -> length(x) > 4)) AS BIGINT) AS n_long " +
           "FROM documents ORDER BY doc_id"),
       (s, d) => {
-        // Sort-first (r17): the array HOFs are the expensive part, so run
+        // Sort-first: the array HOFs are the expensive part, so run
         // the range sort over the raw (doc_id, text) rows — the sampling
         // pass then re-executes only the scan, and the HOF projection runs
         // exactly once, post-sort, at explicit cluster width.
@@ -132,7 +132,7 @@ object Funcs {
         // Sort BEFORE parsing: a global sort's range exchange executes its
         // child twice (bound-sampling pass + real pass), so ordering the
         // narrow scan output first means the sampler pays a 2-column
-        // parquet scan instead of 2× the JSON parse + explode (r17 sf10
+        // parquet scan instead of 2× the JSON parse + explode (sf10
         // decomposition: the parse-then-sort shape cost 154-169 s vs 64 s
         // for the same child under a sample-free hash exchange). event_id
         // is unique, so sorting rows by event_id and exploding each map's
@@ -158,7 +158,7 @@ object Funcs {
           "json_extract_string(props, '$.missing') AS missing " +
           "FROM events ORDER BY event_id"),
       (s, d) =>
-        // Sort-first (r17, same reasoning as func_map): the global sort's
+        // Sort-first (same reasoning as func_map): the global sort's
         // sampling pass re-executes a shuffle-free child, so ordering the
         // narrow scan first means bounds are sampled off a 2-column
         // parquet read and the JSON extraction runs exactly once. Using
@@ -186,7 +186,7 @@ object Funcs {
           "json_extract_string(props, '$.missing') IS NULL AS missing_null " +
           "FROM events ORDER BY event_id"),
       (s, d) =>
-        // Sort-first (r17): sample the sort bounds off the narrow scan,
+        // Sort-first: sample the sort bounds off the narrow scan,
         // parse into the variant encoding once above the sort.
         Tables.events(s, d)
           .select(col("event_id"), col("props"))
@@ -212,13 +212,13 @@ object Funcs {
           "TRY_CAST(CASE WHEN event_id % 2 = 0 THEN '2024-01-0' ELSE '2024-01-02' END AS DATE) AS maybe_date " +
           "FROM events ORDER BY event_id"),
       (s, d) =>
-        // Sort-first (r17, replacing the round-16 spread): the range sort
-        // itself redistributes the narrow scan across the cluster, so the
+        // Sort-first, not spread-first: the range sort itself
+        // redistributes the narrow scan across the cluster, so the
         // parse-heavy projection runs once, post-sort, at the sort's
-        // output width — where the old shape paid the projection twice
-        // (range-bound sampling re-executes a shuffle-free... and even a
-        // spread child re-runs everything above the materialized
-        // exchange).
+        // output width. A projection below the sort would run twice:
+        // range-bound sampling re-executes a shuffle-free child, and even
+        // a spread child re-runs everything above the materialized
+        // exchange.
         Tables.events(s, d)
           .select(col("event_id"), col("event_type"))
           .repartitionByRange(s.sparkContext.defaultParallelism, col("event_id"))

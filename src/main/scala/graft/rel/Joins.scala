@@ -22,12 +22,12 @@ object Joins {
     * `e` must carry (event_id, user_id, ts_ts, ts_ms); `o` is the orders
     * table. Grouped by event_id ALONE — ts_ms travels inside the picked
     * struct and closes the ordering, so duplicate event_ids with divergent
-    * ts values still collapse to one deterministic row per event (round-8
-    * advisor finding). Exposed so the spec can drive it with a
-    * dup-event_id input the real events table never exhibits.
+    * ts values still collapse to one deterministic row per event. Exposed
+    * so the spec can drive it with a dup-event_id input the real events
+    * table never exhibits.
     */
   private[graft] def asofPick(e: DataFrame, o: DataFrame): DataFrame =
-    // PACKED-ordering hash aggregation (round 12): the natural
+    // PACKED-ordering hash aggregation: the natural
     // max_by(payload, struct(ordering)) plans as SortAggregate — struct
     // agg buffers are not UnsafeRow-mutable, so Spark SORTED the entire
     // per-user join fan-out before the partial agg (measured decade
@@ -42,16 +42,16 @@ object Joins {
     // is non-negative and inside its digit budget — the packing contract:
     // 0 ≤ days < 10^5 (through year 2243), 0 ≤ o_orderkey < 10^15,
     // 0 ≤ ts_ms < 10^13 (through year 2286).
-    // Digit budgets are a RUNTIME-GUARDED contract (round-12 advisor: with
-    // ANSI off, a budget violation NULLs the CAST/multiply and max() then
+    // Digit budgets are a RUNTIME-GUARDED contract (with ANSI off, a
+    // budget violation NULLs the CAST/multiply and max() then
     // silently drops that candidate — a wrong pick with no error). The CASE
     // raises loudly on the first out-of-budget row instead; the guard is a
     // codegen-friendly range check, and the agg buffer stays the
     // fixed-width DECIMAL(38,0) that keeps the partial a HASH aggregate.
     //
-    // r17 (guide §1.2 "per-task work", §2.6): the guard + packing
-    // arithmetic used to run per JOIN FAN-OUT row (~10 orders × every
-    // event). The order-side prefix (days·10^28 + orderkey·10^13) and the
+    // Per-side precompute: run per JOIN FAN-OUT row (~10 orders × every
+    // event), the guard + packing arithmetic would dominate the stage. The
+    // order-side prefix (days·10^28 + orderkey·10^13) and the
     // event-side ts_ms guard each depend on ONE side only, so they are
     // precomputed per side — per-side guards raise on the same violations
     // — and the per-pair work collapses to one decimal add feeding max().
@@ -91,7 +91,7 @@ object Joins {
     */
   private[graft] def asofNearestPick(e: DataFrame, o: DataFrame): DataFrame = {
     // Same runtime budget guard as [[asofPick]] — min() must never see a
-    // silently-NULLed packed value. r17: the distance term is the only
+    // silently-NULLed packed value. The distance term is the only
     // genuinely per-PAIR component, so only its guard + one multiply + two
     // adds run on the join fan-out; the orderkey tail (o side) and the
     // ts_ms guard (e side) are precomputed per side, and the orders scan
@@ -288,8 +288,8 @@ object Joins {
     // inside the picked struct, so a duplicate event_id with divergent ts
     // values still collapses to one output row per event, exactly like the
     // oracle's PARTITION BY event_id (grouping by (event_id, ts_ms) would
-    // silently assume ts is functionally dependent on event_id — round-8
-    // advisor finding). ts_ms closes the ordering struct so the pick stays
+    // silently assume ts is functionally dependent on event_id). ts_ms
+    // closes the ordering struct so the pick stays
     // total-ordered even then; o_orderkey alone already breaks all ties
     // when event_id is unique.
     QueryDef(

@@ -47,11 +47,7 @@ object Scale {
     QueryDef(
       "sql_api_q3",
       Some(q3Sql),
-      (s, d) => {
-        Seq("customer", "orders", "lineitem").foreach(t =>
-          Tables.t(s, d, t).createOrReplaceTempView(t))
-        s.sql(q3Sql)
-      }),
+      (s, d) => Tables.sql(s, d, "customer", "orders", "lineitem")(q3Sql)),
 
     // Parquet bloom-filter layout: point lookups on a key that is neither
     // sorted nor partitioned. Row-group min/max stats are useless when the

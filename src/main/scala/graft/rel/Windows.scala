@@ -26,7 +26,7 @@ object Windows {
       (s, d) => {
         val w = Window.partitionBy(col("o_custkey"))
           .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        // Full sort elision (the r17 range-window pattern): rn is
+        // Full sort elision (the range-window pattern): rn is
         // row_number over (price desc, orderkey), so ORDER BY (custkey, rn)
         // is row-identical to ORDER BY (custkey, price desc, orderkey) —
         // the window's own sort. Expressing the presentation sort in those
@@ -58,7 +58,7 @@ object Windows {
       (s, d) => {
         val wBase = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
         val w = wBase.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        // Range-partition into the window (r17): the presentation sort's
+        // Range-partition into the window: the presentation sort's
         // inner key (event_id) differs from the window order (ts, event_id)
         // so a per-partition SortExec remains, but RangePartitioning(user_id)
         // prefix-satisfies its OrderedDistribution — the full-output range
@@ -84,7 +84,7 @@ object Windows {
       (s, d) => {
         val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
           .rowsBetween(-2, Window.currentRow)
-        // same exchange elision as window_analytic (r17)
+        // same exchange elision as window_analytic
         Tables.events(s, d)
           .repartitionByRange(col("user_id"))
           .select(col("user_id"), col("event_id"),
@@ -104,7 +104,7 @@ object Windows {
       (s, d) => {
         val w = Window.partitionBy(col("o_custkey")).orderBy(col("o_orderdate"))
           .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-        // same exchange elision as window_analytic (r17): the o_orderkey
+        // same exchange elision as window_analytic: the o_orderkey
         // tie-break keeps a local SortExec, the range exchange goes
         Tables.t(s, d, "orders")
           .repartitionByRange(col("o_custkey"))
@@ -270,7 +270,7 @@ object Windows {
         val w = Window.partitionBy(col("user_id")).orderBy(col("bucket"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         // Range-partition into the window so the final global ORDER BY is
-        // free (the resample_interpolate sort-elision pattern, r17):
+        // free (the resample_interpolate sort-elision pattern):
         // RangePartitioning(user_id) satisfies the window's clustering AND
         // — equal keys co-locating — prefixes OrderedDistribution(user_id,
         // bucket), so with the window's own (user_id, bucket asc) sort as
@@ -420,7 +420,7 @@ object Windows {
         val byDay = Window.partitionBy("user_id").orderBy("day")
         // range partitioning feeds the window, BOTH groupBys (subset-key
         // clustering) and the final ORDER BY user_id — the presentation
-        // range exchange is elided (r17 pattern)
+        // range exchange is elided (the range-window pattern)
         days
           .repartitionByRange(col("user_id"))
           .withColumn("grp", col("day") - row_number().over(byDay))
@@ -463,7 +463,7 @@ object Windows {
           / (col("k7") - 1))
         // The window's own (user_id, day) sort IS the presentation order,
         // so on a range-partitioned stage the final ORDER BY elides fully
-        // — sort and exchange (r17 pattern); the daily rollup (the tiny
+        // — sort and exchange (the range-window pattern); the daily rollup (the tiny
         // side) pays the one range exchange instead of a hash one.
         Tables.events(s, d)
           .groupBy(col("user_id"), expr("ts_ms div 86400000").as("day"))

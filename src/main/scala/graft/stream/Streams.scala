@@ -148,7 +148,6 @@ object Streams {
     * file's. The `_done` marker sits beside `in/`, never inside the glob.
     */
   private def eventSource(s: SparkSession, dir: String, sentinels: Seq[String]): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val r = root(dir)
     val ev = Tables.t(s, dir, "events")
     val split = s"$r/split"

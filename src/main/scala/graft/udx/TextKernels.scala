@@ -7,12 +7,12 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-document text-scoring kernels as thin codegen expressions over
-  * static JVM helpers (round 16).
+  * static JVM helpers.
   *
-  * The bench-v5.3 fullmat correction exposed the real cost of the
-  * `aggregate(sequence(...), ...)` / `transform(sequence(...), ...)` HOF
-  * forms these keys used: Catalyst higher-order functions evaluate their
-  * lambda INTERPRETED, once per element — ~40M interpreted steps with 2-3
+  * They replace `aggregate(sequence(...), ...)` /
+  * `transform(sequence(...), ...)` HOF forms, which are costly because
+  * Catalyst higher-order functions evaluate their lambda INTERPRETED,
+  * once per element — ~40M interpreted steps with 2-3
   * UTF8String substring allocations each across the sf0.1 corpus
   * (quality_perplexity_trigram 10.8 s, quality_perplexity_proxy 7.2 s,
   * text_fingerprint 4.4 s). Each kernel is one tight byte loop per
@@ -33,9 +33,9 @@ object TextKernels {
     * digit is rk(c - minC) - 1 when `rk` is non-null (rank-compressed
     * cube) or c - minC when null (dense span cube); index composes digits
     * base-`base`. Mirrors the element_at(typedlit(q), ...) aggregate form
-    * 1:1, including 0-based q indexing — and including its null tolerance
-    * (round-16 advisor): a character outside [minC, minC+span) or with
-    * rank 0 in the rk table made the old element_at lookup null and the
+    * 1:1, including 0-based q indexing — and including its null tolerance:
+    * a character outside [minC, minC+span) or with rank 0 in the rk table
+    * made the old element_at lookup null and the
     * HOF sum null with it; here any out-of-range gram returns null (boxed)
     * instead of indexing q out of bounds. Hot path unchanged: in-range
     * corpora never box anything but the single return value.

@@ -699,9 +699,9 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("cluster loop isolation: parent session conf never mutates mid-loop") {
-    // the label-propagation loop caps shuffle partitions on a CHILD session
-    // (spark.newSession); poll the PARENT's conf from another thread for the
-    // whole run — with the old shared-conf mutation this observes "4"
+    // the label-propagation loop runs in the caller's session and sets no
+    // conf; poll that session's conf from another thread for the whole run,
+    // so a loop that scoped a conf by writing it would show here
     val key = "spark.sql.shuffle.partitions"
     val before = spark.conf.get(key)
     @volatile var done = false
@@ -715,6 +715,20 @@ class OpsSpec extends AnyFunSuite {
     assert(observed == Set(before),
       s"parent-session shuffle conf changed mid-loop: saw $observed, expected only $before")
     assert(spark.conf.get(key) == before)
+  }
+
+  test("child-session keys hold one child session each, however often they run") {
+    // join_runtime_bloom and hierarchy_recursive_cte plan under confs of
+    // their own on a Session.child; the memo keeps one child per (session,
+    // key), so repeated runs add no sessions (and no reader entries) to it
+    Seq("join_runtime_bloom", "hierarchy_recursive_cte").foreach { k =>
+      val before = Memo.sessions
+      (1 to 3).foreach(_ => run(k).collect())
+      val added = Memo.sessions -- before
+      assert(added.size <= 1, s"$k: ${added.size} new sessions in the memo after 3 runs")
+    }
+    val children = Memo.fingerprints(spark).keySet.filter(_.startsWith("session:"))
+    assert(children == Set("session:join_runtime_bloom", "session:hierarchy_recursive_cte"), children)
   }
 
   test("ImageKernel decodes a real PNG: dims, magic sniff, luma histogram") {

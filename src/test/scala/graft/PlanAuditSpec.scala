@@ -17,6 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * allowlist is self-pruning: an entry whose plan no longer contains the
   * shape fails the suite so stale entries can't mask future regressions.
   *
+  * The same sweep checks session hygiene: building and planning a key
+  * leaves the session's temp views and conf as they were.
+  *
   * Streaming keys are excluded: their QueryDef.run executes the stream and
   * returns a collected result table, so the interesting plan is the
   * streaming one (covered by StreamSpec behavior tests), not the result's.
@@ -124,21 +127,43 @@ class PlanAuditSpec extends AnyFunSuite {
     // pure builtins (OpsSpec's brute-force equivalence test pins the
     // verify kernel).
 
-  private lazy val audited: Seq[(String, String, Seq[String], Seq[String])] = {
+  /** The session state a key must leave as it found it: its temp-view
+    * names and its conf.
+    */
+  private def sessionState(): (Set[String], Map[String, String]) =
+    (spark.sessionState.catalog.getTempViewNames().toSet, spark.conf.getAll)
+
+  /** Per key: (key, executed plan, global windows, Scala function nodes,
+    * what the session's temp views and conf differ by after the key was
+    * built and planned).
+    */
+  private lazy val audited: Seq[(String, String, Seq[String], Seq[String], Seq[String])] = {
     val skip = (k: String) => k.startsWith("stream_") ||
       k == "opt_annotation_rewrite" || // writes its annotated table while it plans
       k == "sink_partitioned_write" || k == "sink_parquet_roundtrip" ||
       k == "join_bucketed_colocated" // saveAsTable side effects; plan asserted in PlanSpec
     SparkEntry.queries.keys.toSeq.sorted.filterNot(skip).map { k =>
+      val (views, confs) = sessionState()
       val qe =
         try SparkEntry.queries(k)(spark, sf).queryExecution
         catch { case e: Throwable => fail(s"$k failed to plan: ${e.getMessage}") }
-      (k, qe.executedPlan.toString, globalWindows(qe.executedPlan), scalaFuncNodes(qe.executedPlan))
+      val plan = qe.executedPlan
+      val (viewsAfter, confsAfter) = sessionState()
+      val leaks = (viewsAfter -- views).toSeq.sorted.map(v => s"temp view $v") ++
+        (views -- viewsAfter).toSeq.sorted.map(v => s"dropped temp view $v") ++
+        (confs.keySet ++ confsAfter.keySet).filter(c => confs.get(c) != confsAfter.get(c)).toSeq.sorted
+          .map(c => s"conf $c: ${confs.getOrElse(c, "<unset>")} -> ${confsAfter.getOrElse(c, "<unset>")}")
+      (k, plan.toString, globalWindows(plan), scalaFuncNodes(plan), leaks)
     }
   }
 
+  test("every key leaves the session's temp views and conf as it found them") {
+    val leaks = audited.flatMap { case (k, _, _, _, l) => l.map(x => s"$k: $x") }
+    assert(leaks.isEmpty, s"\nsession state left behind:\n${leaks.mkString("\n")}")
+  }
+
   test("no accidental CartesianProduct, BroadcastNestedLoopJoin, or global window anywhere") {
-    val offenders = audited.flatMap { case (k, plan, gw, _) =>
+    val offenders = audited.flatMap { case (k, plan, gw, _, _) =>
       (if (plan.contains("CartesianProduct") && !cartesianOk(k)) Seq(s"$k: CartesianProduct") else Nil) ++
         (if (plan.contains("BroadcastNestedLoopJoin") && !bnljOk(k)) Seq(s"$k: BroadcastNestedLoopJoin") else Nil) ++
         (if (gw.size > globalWindowOk.getOrElse(k, 0))
@@ -158,7 +183,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("no Scala UDF/UDAF outside the declared surface; no Python eval anywhere") {
-    val offenders = audited.flatMap { case (k, plan, _, fns) =>
+    val offenders = audited.flatMap { case (k, plan, _, fns, _) =>
       val extra = fns.toSet -- scalaFuncOk.getOrElse(k, Set.empty)
       (if (extra.nonEmpty) Seq(s"$k: ${extra.toSeq.sorted.mkString(",")}") else Nil) ++
         (if (plan.contains("BatchEvalPython") || plan.contains("ArrowEvalPython"))
