@@ -2,7 +2,7 @@ package graft.fhir
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{AbstractDataType, DataType, StringType, TimestampType}
+import org.apache.spark.sql.types.{DataType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Java-callable bounds helpers for codegen (static forwarders). */

@@ -1,6 +1,6 @@
 package graft.fhir
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.types._
 
 import scala.jdk.CollectionConverters._

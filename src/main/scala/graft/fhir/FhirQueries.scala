@@ -1,10 +1,9 @@
 package graft.fhir
 
-import graft.{Q, QueryDef, Tables}
+import graft.{QueryDef, Tables}
 import graft.Tables.fhirScan
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** SURVEY §2.A — the reference's own surface as queries over the FHIR
   * resource tables of the dataset dir, read where `Tables.fhirDir` resolves
@@ -349,7 +348,7 @@ object FhirQueries {
       "fhir_annotate_quantity_canonical",
       Some(
         "SELECT id, valueQuantity.code AS code, valueQuantity.value AS val_str, ucum.canon AS canon_code, " +
-          "CAST(CAST(valueQuantity.value AS DECIMAL(18,6)) * ucum.factor + ucum.off AS DECIMAL(38,6))::DOUBLE AS canon_value " +
+          "CAST(ROUND(CAST(valueQuantity.value AS DECIMAL(18,6)) * ucum.factor + ucum.off, 6) AS DECIMAL(38,6))::DOUBLE AS canon_value " +
           s"FROM ${fhirScan("Observation")} LEFT JOIN ${FhirAnnotations.ucumValuesSql} " +
           "ON valueQuantity.code = ucum.code WHERE valueQuantity.value IS NOT NULL ORDER BY id"),
       (s, d) =>

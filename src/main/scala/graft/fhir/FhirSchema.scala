@@ -69,7 +69,6 @@ object FhirSchema {
     schemas.reduce(mergeStruct)
 
   private def mergeStruct(a: StructType, b: StructType): StructType = {
-    val byName = a.fields.map(f => f.name -> f).toMap
     val merged = scala.collection.mutable.LinkedHashMap[String, StructField]()
     a.fields.foreach(f => merged(f.name) = f)
     b.fields.foreach { f =>

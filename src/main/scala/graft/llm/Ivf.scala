@@ -1,8 +1,8 @@
 package graft.llm
 
 import graft.{Memo, QueryDef, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import graft.llm.Vectors.Duck
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** IVF (inverted-file) approximate nearest neighbour — the scale path for
@@ -34,10 +34,26 @@ object Ivf {
     */
   private[graft] def indexDir(d: String): String = Tables.stagingDir(IndexName, d)
 
-  private def sqDist(a: Array[Double], b: Array[Double]): Double = {
-    var acc = 0.0; var i = 0
-    while (i < a.length) { val d = a(i) - b(i); acc += d * d; i += 1 }
-    acc
+  /** The cluster nearest to `v`: the strict-less ascending argmin, so the
+    * lowest cluster wins a tie.
+    */
+  private def nearest(v: Array[Double], cs: Array[Array[Double]]): Int = {
+    var best = 0; var bestD = Double.MaxValue; var c = 0
+    while (c < cs.length) {
+      val dd = Vectors.sqDist(v, cs(c)); if (dd < bestD) { bestD = dd; best = c }; c += 1
+    }
+    best
+  }
+
+  /** The [[NProbe]] clusters nearest to `v`, ascending by (squared
+    * distance, cluster), as builtin expressions over the inlined centroid
+    * matrix (Pca's projection posture): k×dim literals in the plan, no UDF.
+    */
+  private def probe(v: Column, centroids: Array[Array[Double]]): Column = {
+    val byDist = centroids.zipWithIndex.map { case (c, i) =>
+      struct(Vectors.sqDist(v, typedLit(c)).as("d2"), lit(i).as("cluster"))
+    }
+    transform(slice(sort_array(array(byDist.toIndexedSeq: _*)), 1, NProbe), _.getField("cluster"))
   }
 
   /** (vec_id, cluster) assignment DataFrame + final centroids. The IVF
@@ -77,9 +93,11 @@ object Ivf {
   private def buildIndex(s: SparkSession, d: String, dir: String): Unit = {
     val sp = s
     import sp.implicits._
-    val vecs = Tables.t(s, d, "embeddings")
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
+    val rows = Tables.t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
+    val n = rows.count()
+    require(n > 0, s"sim_ann_ivf and dedup_semdedup_cluster need a non-empty embeddings " +
+      s"table to build their IVF index: $d/embeddings.parquet has no rows")
+    val vecs = rows.as[(Long, Array[Float])]
       .map { case (id, v) => (id, v.map(_.toDouble)) }
       .cache()
     // cluster count scales with the corpus (k ≈ N/10⁴, floor K): bounded
@@ -87,9 +105,9 @@ object Ivf {
     // Σn_c² ≪ N² as data grows — a CONSTANT k would let clusters grow
     // linearly and quietly re-quadratize the sibling. At test scales
     // (N ≤ 5·10⁴) the floor keeps k = 8, so ANN probe/recall tests stay
-    // anchored to a fixed geometry. This count() is also the action that
-    // materializes the vector cache — one pass, not two.
-    val k = math.max(K, (vecs.count() / 10000L).toInt)
+    // anchored to a fixed geometry. The seed collect below materializes
+    // the vector cache.
+    val k = math.max(K, (n / 10000L).toInt)
     var centroids: Array[Array[Double]] =
       vecs.filter(_._1 < k).collect().sortBy(_._1).map(_._2)
     for (_ <- 1 to Iters) {
@@ -107,10 +125,7 @@ object Ivf {
           val sums = Array.fill(cs.length)(new Array[Double](64))
           val ns = new Array[Long](cs.length)
           it.foreach { case (_, v) =>
-            var best = 0; var bestD = Double.MaxValue; var c = 0
-            while (c < cs.length) {
-              val dd = sqDist(v, cs(c)); if (dd < bestD) { bestD = dd; best = c }; c += 1
-            }
+            val best = nearest(v, cs)
             val sm = sums(best)
             var i = 0; while (i < v.length) { sm(i) += v(i); i += 1 }
             ns(best) += 1L
@@ -132,14 +147,8 @@ object Ivf {
     // materialization pass (the search side then reads the parquet, probe
     // build + candidate sweep both pruned by the cluster partition key);
     // release the cached vectors after — raw vectors must not stay pinned.
-    vecs.map { case (id, v) =>
-        val cs = bc.value
-        var best = 0; var bestD = Double.MaxValue; var c = 0
-        while (c < cs.length) {
-          val dd = sqDist(v, cs(c)); if (dd < bestD) { bestD = dd; best = c }; c += 1
-        }
-        (id, best)
-      }.toDF("vec_id", "cluster")
+    vecs.map { case (id, v) => (id, nearest(v, bc.value)) }
+      .toDF("vec_id", "cluster")
       .write.mode("overwrite").partitionBy("cluster").parquet(s"$dir/assign")
     vecs.unpersist(blocking = false)
     centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
@@ -151,28 +160,22 @@ object Ivf {
     * the index's own centroids table alone — the genuinely iterative Lloyd
     * output, read in [[indexDir]] of the dataset Verify resolves, so
     * assignment, probe selection and multi-assignment are cross-engine
-    * checked instead of trusted. Squared distance is computed as
-    * `list_dot_product(diff, diff)` over the index-wise difference list —
-    * the identical ascending subtract/multiply/add double fold as
-    * [[sqDist]], so values are bit-identical — and ranks broken by cluster
-    * id, matching both the kernel's strict-less ascending argmin (nearest:
-    * first best kept ⇒ lowest cluster on a tie) and the probe/multi-assign
-    * kernels' (distance, cluster) tuple sort. Exposes `rk(vec_id, cluster, rn)`:
-    * rn=1 is the assignment, rn ≤ nprobe the probe set, rn ≤ nAssign the
+    * checked instead of trusted. Squared distance is the [[Duck.dot]] of
+    * the index-wise difference list with itself — the identical ascending
+    * subtract/multiply/add double fold as [[Vectors.sqDist]], so values are
+    * bit-identical — and ranks broken by cluster id, matching both the
+    * kernel's strict-less ascending argmin ([[nearest]]: first best kept ⇒
+    * lowest cluster on a tie) and the probe/multi-assign kernels'
+    * (distance, cluster) sort. Exposes `rk(vec_id, cluster, rn)`: rn=1 is
+    * the assignment, rn ≤ nprobe the probe set, rn ≤ nAssign the
     * multi-assignment.
     */
   private def duckAssignCtes: String =
     s"ct AS (SELECT cluster, centroid FROM read_parquet('${Tables.stagedPath(IndexName, "centroids/*.parquet")}')), " +
       "ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings), " +
-      "dst AS (SELECT vec_id, cluster, list_dot_product(df, df) AS d2 FROM " +
+      s"dst AS (SELECT vec_id, cluster, ${Duck.dot("df", "df")} AS d2 FROM " +
       "(SELECT ev.vec_id, ct.cluster, [ev.e[i] - ct.centroid[i] for i in generate_series(1, 64)] AS df FROM ev, ct)), " +
       "rk AS (SELECT vec_id, cluster, row_number() OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rn FROM dst)"
-
-  /** DuckDB cosine with the kernels' accumulation order (see Llm.duckCos —
-    * list_dot_product matches the sequential fold bit-for-bit).
-    */
-  private def dCos(a: String, b: String): String =
-    s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b)))"
 
   val defs: Seq[QueryDef] = Seq(
     // ORACLED via the index's CENTROIDS alone: DuckDB re-derives the
@@ -187,38 +190,24 @@ object Ivf {
       Some(
         s"WITH $duckAssignCtes, " +
           s"asg AS (SELECT vec_id, cluster FROM rk WHERE rn = 1), " +
-          s"pr AS (SELECT vec_id AS qid, cluster FROM rk WHERE rn <= $NProbe AND vec_id < 5), " +
-          "q AS (SELECT pr.qid, CAST(e.embedding AS DOUBLE[]) AS qe, pr.cluster FROM pr JOIN embeddings e ON e.vec_id = pr.qid), " +
-          "c AS (SELECT asg.vec_id AS cid, CAST(e.embedding AS DOUBLE[]) AS ce, asg.cluster FROM asg JOIN embeddings e USING (vec_id)), " +
-          s"sims AS (SELECT q.qid, c.cid, round(${dCos("q.qe", "c.ce")}, 6) AS sim " +
+          s"pr AS (SELECT vec_id AS qid, cluster FROM rk WHERE rn <= $NProbe AND ${Duck.isQuery("vec_id")}), " +
+          "q AS (SELECT pr.qid, e.embedding AS qe, pr.cluster FROM pr JOIN embeddings e ON e.vec_id = pr.qid), " +
+          "c AS (SELECT asg.vec_id AS cid, e.embedding AS ce, asg.cluster FROM asg JOIN embeddings e USING (vec_id)), " +
+          s"sims AS (SELECT q.qid, c.cid, ${Duck.sim("q.qe", "c.ce")} AS sim " +
           "FROM c JOIN q USING (cluster) WHERE q.qid != c.cid) " +
-          "SELECT qid, cid, sim, CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS BIGINT) AS rn " +
-          "FROM sims QUALIFY rn <= 3 ORDER BY qid, rn"),
+          Duck.topK("qid, cid, sim", "sims", "sim", TopK) + " ORDER BY qid, rn"),
       (s, d) => {
         val (assigned, centroids) = index(s, d)
         val e = Tables.t(s, d, "embeddings")
         val withCluster = e.join(assigned, "vec_id")
-        val bc = s.sparkContext.broadcast(centroids)
-        val probeUdf = udf { (v: Seq[Float]) =>
-          val vd = v.map(_.toDouble).toArray
-          val cs = bc.value
-          cs.indices.map(c => (sqDist(vd, cs(c)), c)).sorted.take(NProbe).map(_._2)
-        }
-        val q = withCluster.where(col("vec_id") < 5)
+        val q = withCluster.where(Vectors.isQuery(col("vec_id")))
           .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-            explode(probeUdf(col("embedding"))).as("cluster"))
+            explode(probe(col("embedding"), centroids)).as("cluster"))
         val cand = withCluster
           .select(col("vec_id").as("cid"), col("embedding").as("ce"), col("cluster"))
-        val dot = expr(
-          "aggregate(zip_with(qe, ce, (p, q) -> CAST(p AS DOUBLE) * CAST(q AS DOUBLE)), CAST(0 AS DOUBLE), (acc, v) -> acc + v)")
-        def nrm(c: String) = sqrt(expr(
-          s"aggregate($c, CAST(0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))"))
-        val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-        cand.join(broadcast(q), "cluster")
-          .where(col("qid") =!= col("cid"))
-          .withColumn("sim", round(dot / (nrm("qe") * nrm("ce")), 6))
-          .select(col("qid"), col("cid"), col("sim"), row_number().over(w).cast("long").as("rn"))
-          .where(col("rn") <= TopK)
+        Vectors.topK(cand.join(broadcast(q), "cluster")
+            .where(col("qid") =!= col("cid"))
+            .select(col("qid"), col("cid"), Vectors.sim(col("qe"), col("ce")).as("sim")), "sim", TopK)
           .orderBy("qid", "rn")
       }),
 
@@ -252,10 +241,9 @@ object Ivf {
           "ma AS (SELECT vec_id, cluster FROM rk WHERE rn <= 3), " +
           "cand AS (SELECT DISTINCT a.vec_id AS i, b.vec_id AS j FROM ma a " +
           "JOIN ma b ON a.cluster = b.cluster AND a.vec_id < b.vec_id), " +
-          "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings), " +
-          "v AS (SELECT cand.j FROM cand JOIN e ea ON ea.vec_id = cand.i " +
-          "JOIN e eb ON eb.vec_id = cand.j " +
-          s"WHERE ${dCos("ea.emb", "eb.emb")} >= 0.35) " +
+          "v AS (SELECT cand.j FROM cand JOIN embeddings ea ON ea.vec_id = cand.i " +
+          "JOIN embeddings eb ON eb.vec_id = cand.j " +
+          s"WHERE ${Duck.cos("ea.embedding", "eb.embedding")} >= 0.35) " +
           "SELECT DISTINCT j AS drop_id FROM v ORDER BY drop_id"),
       (s, d) => {
         val sp = s
@@ -298,11 +286,11 @@ object Ivf {
           .flatMap { case (gid, emb) =>
             val cs = bcC.value
             val v = emb.map(_.toDouble)
-            cs.indices.map(c => (sqDist(v, cs(c)), c))
+            cs.indices.map(c => (Vectors.sqDist(v, cs(c)), c))
               .sorted.take(nAssign).map(c => (c._2, gid, emb))
           }
         val repDrops = Collapse.blockPairs(probes, B = 4, tau)(
-            (e: Array[Float]) => Llm.normed(e.map(_.toDouble)), Llm.rawCosine)
+            (e: Array[Float]) => Vectors.normed(e.map(_.toDouble)), Vectors.rawCosine)
           .toDF("cluster", "ga", "gb", "cos").select(col("gb").as("drop_id"))
         repDrops.unionByName(memberDrops).distinct().orderBy("drop_id")
       })

@@ -1,8 +1,9 @@
 package graft.llm
 
-import graft.{Ckpt, Memo, Q, QueryDef, Tables}
+import graft.{Ckpt, Memo, QueryDef, Tables}
 import graft.udx.Udx
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import graft.llm.Vectors.Duck
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -35,15 +36,13 @@ object Llm {
   val GramPairMaxReps: Long = 16384L
 
   /** The 8 signed hyperplanes of the LSH fold — a FIXED, seed-42 ±1
-    * pattern shared verbatim by the Spark kernel (inlined literal array)
-    * and the DuckDB oracle (inlined [±1.0,…] lists in
-    * list_dot_product), so both engines compute the bucket fold
-    * independently — the identical sequential double accumulation as the
-    * cosine discipline (see cosCol/duckCos).
+    * pattern shared verbatim by the Spark kernel and the DuckDB oracle
+    * (inlined [±1.0,…] lists), so both engines compute the bucket fold
+    * independently with the one fold order of [[Vectors]].
     */
-  private val LshPlanes: Seq[Seq[Double]] = {
+  private val LshPlanes: Array[Array[Double]] = {
     val rnd = new scala.util.Random(42)
-    Seq.fill(8)(Seq.fill(64)(if (rnd.nextBoolean()) 1.0 else -1.0))
+    Array.fill(8)(Array.fill(64)(if (rnd.nextBoolean()) 1.0 else -1.0))
   }
 
   /** The staged sign-LSH bucket table — a Spark-side PERFORMANCE artifact
@@ -54,12 +53,13 @@ object Llm {
     */
   private def lshBuckets(s: SparkSession, d: String): DataFrame =
     Tables.stagedTable(s, "graft_lshbuckets", d, Tables.fingerprint(d, "embeddings")) {
+      val sp = s
+      import sp.implicits._
       Tables.spread(s, Tables.t(s, d, "embeddings"))
-        .withColumn("hp", typedLit(LshPlanes))
-        .select(col("vec_id"), expr(
-          "CAST(aggregate(sequence(0, 7), 0, (acc, p) -> acc + CASE WHEN " +
-            "aggregate(zip_with(embedding, hp[p], (x, h) -> CAST(x AS DOUBLE) * h), CAST(0 AS DOUBLE), (a2, v) -> a2 + v) >= 0 " +
-            "THEN CAST(shiftleft(1, p) AS INT) ELSE 0 END) AS INT)").as("bucket"))
+        .select(col("vec_id"), col("embedding"))
+        .as[(Long, Array[Float])]
+        .map { case (id, v) => (id, Vectors.signBits(v.map(_.toDouble), LshPlanes).toInt) }
+        .toDF("vec_id", "bucket")
     }
 
   /** Staging name of the PHYSICAL Matryoshka prefix column:
@@ -130,30 +130,6 @@ object Llm {
         .select(col("doc_id"), simhashUdf(col("text")).as("sim"))
     }
 
-  /** Cosine similarity over two array<float> columns, computed in double
-    * with a sequential left fold — DuckDB's list_dot_product mirrors the
-    * same accumulation order, so values agree bit-for-bit before rounding.
-    */
-  private def cosCol(a: String, b: String): Column =
-    dotCol(a, b) / (sqrt(dotCol(a, a)) * sqrt(dotCol(b, b)))
-
-  private def dotCol(x: String, y: String): Column = expr(
-    s"aggregate(zip_with($x, $y, (p, q) -> CAST(p AS DOUBLE) * CAST(q AS DOUBLE)), CAST(0 AS DOUBLE), (acc, v) -> acc + v)")
-
-  /** A vector's rounded cosine with itself, the within-group score of a
-    * collapsed embedding group: the [[cosCol]] arithmetic, so 1.0 for any
-    * non-zero vector, and NULL for the all-zero one, which never pairs.
-    */
-  private def selfCosCol(e: String): Column = {
-    val d = dotCol(e, e)
-    round(try_divide(d, sqrt(d) * sqrt(d)), 6)
-  }
-
-  private def duckCos(a: String, b: String): String =
-    s"list_dot_product(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[])) / " +
-      s"(sqrt(list_dot_product(CAST($a AS DOUBLE[]), CAST($a AS DOUBLE[]))) * " +
-      s"sqrt(list_dot_product(CAST($b AS DOUBLE[]), CAST($b AS DOUBLE[]))))"
-
   /** FNV-1a 64-bit over UTF-8 bytes — deterministic token/gram hashing for
     * the JVM-kernel dedup paths (no RNG, no engine-specific hash).
     */
@@ -175,31 +151,6 @@ object Llm {
     if (x.isNaN) x
     else java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
-  /** A vector with its L2 norm, accumulated in ascending index order like
-    * DuckDB's list_dot_product.
-    */
-  private[llm] def normed(v: Array[Double]): (Array[Double], Double) = {
-    var acc = 0.0
-    var k = 0
-    while (k < v.length) { acc += v(k) * v(k); k += 1 }
-    (v, math.sqrt(acc))
-  }
-
-  /** Cosine of two [[normed]] vectors. The dot loop is role-symmetric, so
-    * pair orientation cannot change the value; the all-zero vector scores
-    * NaN, which every `>= tau` drops.
-    */
-  private[llm] def rawCosine(a: (Array[Double], Double), b: (Array[Double], Double)): Double = {
-    val (va, vb) = (a._1, b._1)
-    var dot = 0.0
-    var k = 0
-    while (k < va.length) { dot += va(k) * vb(k); k += 1 }
-    dot / (a._2 * b._2)
-  }
-
-  private def cosine(a: (Array[Double], Double), b: (Array[Double], Double)): Double =
-    round6(rawCosine(a, b))
-
   /** All-pairs cosine ≥ tau over the embeddings, within each label when
     * `scope` is `Seq("label")`: [[Collapse]] to one representative per
     * distinct vector, the 8-block all-pairs kernel over representatives,
@@ -216,11 +167,12 @@ object Llm {
         col("gid"), col("embedding"))
       .as[(Int, Long, Array[Float])]
     val pairs = Collapse.blockPairs(reps, B = 8, tau)(
-        (e: Array[Float]) => normed(e.map(_.toDouble)), cosine)
+        (e: Array[Float]) => Vectors.normed(e.map(_.toDouble)),
+        (a: (Array[Double], Double), b: (Array[Double], Double)) => round6(Vectors.rawCosine(a, b)))
       .toDF("label", "ga", "gb", "sim")
       .select((scope :+ "ga" :+ "gb" :+ "sim").map(col): _*)
     Collapse.expand(grouped, pairs, "sim",
-      selfCosCol("embedding"), Some(tau), scope)
+      Vectors.selfCos(col("embedding")), Some(tau), scope)
   }
 
   /** Word 5-gram shingle set over a pre-split token array column `w`
@@ -412,18 +364,19 @@ object Llm {
   private val LshJoinR = 12
   private val LshJoinTau = 0.9
 
-  /** Frozen ±1 hyperplanes for the banded threshold join: component (p, k)
-    * is +1 iff the first hex char of md5("pl<p>:<k>") is even — a seedless,
-    * engine-portable derivation the JVM kernel and the DuckDB oracle
-    * compute identically (md5 is bit-identical cross-engine; the first hex
-    * char is the high nibble of digest byte 0).
+  /** Frozen ±1 hyperplanes for the banded threshold join, 12 per band:
+    * component (p, k) of plane p = band·12 + r is +1 iff the first hex char
+    * of md5("pl<p>:<k>") is even — a seedless, engine-portable derivation
+    * the JVM kernel and the DuckDB oracle compute identically (md5 is
+    * bit-identical cross-engine; the first hex char is the high nibble of
+    * digest byte 0).
     */
-  private lazy val lshJoinPlanes: Array[Array[Double]] = {
+  private lazy val lshJoinPlanes: Array[Array[Array[Double]]] = {
     val md = java.security.MessageDigest.getInstance("MD5")
     Array.tabulate(LshJoinBands * LshJoinR, 64) { (p, k) =>
       val dg = md.digest(s"pl$p:$k".getBytes(java.nio.charset.StandardCharsets.UTF_8))
       if (((dg(0) >>> 4) & 1) == 0) 1.0 else -1.0
-    }
+    }.grouped(LshJoinR).toArray
   }
 
   /** embeddings ∪ jittered twins as (vec_id, emb DOUBLE[]): twin id =
@@ -446,48 +399,27 @@ object Llm {
   }
 
   /** Banded threshold join kernel: [[Collapse]] to distinct vectors → 16
-    * band keys per representative (12-bit sign fold over the frozen planes,
-    * computed in an ascending-index JVM loop — the same sequential
-    * accumulation as list_dot_product, so band keys agree bit-for-bit with
-    * the oracle) → band equi-join candidates → exact cosine verify ≥ τ →
-    * expansion back to vec_id pairs.
+    * band keys per representative (the 12-bit [[Vectors.signBits]] fold
+    * over each band's frozen planes, bit-identical to the oracle's) → band
+    * equi-join candidates → exact cosine verify ≥ τ → expansion back to
+    * vec_id pairs.
     */
   private def lshJoinThreshold(s: SparkSession, d: String): DataFrame = {
     val sp = s
     import sp.implicits._
     val grouped = Ckpt.slot(s"$d#lshjoin",
       Collapse.groups(lshJoinInput(s, d), "vec_id", "emb", Seq("emb")))
-    val nBands = LshJoinBands
-    val nR = LshJoinR
     // Each rep carries ALL 16 band keys (one JVM pass over the planes);
     // band rows then explode one (band, bkey) per band WITH the full key
     // vector as payload. This is what lets the candidate dedup below be
     // stateless.
     val keyed = grouped.select(col("gid"), col("emb"))
       .as[(Long, Array[Double])]
-      .map { case (gid, emb) =>
-        val ps = lshJoinPlanes
-        val keys = new Array[Long](nBands)
-        var b = 0
-        while (b < nBands) {
-          var key = 0L
-          var r = 0
-          while (r < nR) {
-            val pl = ps(b * nR + r)
-            var dot = 0.0
-            var k = 0
-            while (k < emb.length) { dot += emb(k) * pl(k); k += 1 }
-            if (dot >= 0.0) key |= (1L << r)
-            r += 1
-          }
-          keys(b) = key
-          b += 1
-        }
-        (gid, keys)
-      }.toDF("gid", "keys")
+      .map { case (gid, emb) => (gid, lshJoinPlanes.map(Vectors.signBits(emb, _))) }
+      .toDF("gid", "keys")
     val bandRows = keyed
       .select(col("gid"), col("keys"),
-        explode(expr(s"sequence(0, ${nBands - 1})")).as("band"))
+        explode(expr(s"sequence(0, ${LshJoinBands - 1})")).as("band"))
       .select(col("band"), expr("keys[band]").as("bkey"), col("gid"), col("keys"))
     // FIRST-MATCH-ONLY candidate dedup: a `.distinct()` would be a hash
     // aggregate holding EVERY candidate pair — ~2e-3·N² rows at the
@@ -511,10 +443,10 @@ object Llm {
     val verified = cand
       .join(grouped.select(col("gid").as("ga"), col("emb").as("ea")), "ga")
       .join(grouped.select(col("gid").as("gb"), col("emb").as("eb")), "gb")
-      .withColumn("sim", round(cosCol("ea", "eb"), 6))
+      .withColumn("sim", Vectors.sim(col("ea"), col("eb")))
       .where(col("sim") >= LshJoinTau)
     Collapse.expand(grouped, verified.select(col("ga"), col("gb"), col("sim")), "sim",
-      selfCosCol("emb"), Some(LshJoinTau)).orderBy("i", "j")
+      Vectors.selfCos(col("emb")), Some(LshJoinTau)).orderBy("i", "j")
   }
 
   /** Fully independent DuckDB mirror of [[lshJoinThreshold]]: jittered
@@ -526,13 +458,8 @@ object Llm {
     * band-matches iff its representatives do).
     */
   private def lshJoinOracle: String = {
-    def planeList(p: Int): String =
-      lshJoinPlanes(p).map(v => if (v > 0) "1.0" else "-1.0").mkString("[", ",", "]")
-    val keyCols = (0 until LshJoinBands).map { b =>
-      val fold = (0 until LshJoinR).map { r =>
-        s"(CASE WHEN list_dot_product(emb, ${planeList(b * LshJoinR + r)}) >= 0 THEN ${1L << r} ELSE 0 END)"
-      }.mkString(" + ")
-      s"CAST($fold AS BIGINT) AS k$b"
+    val keyCols = lshJoinPlanes.zipWithIndex.map { case (planes, b) =>
+      s"CAST(${Duck.signBits("emb", planes)} AS BIGINT) AS k$b"
     }.mkString(", ")
     val caseB = (0 until LshJoinBands).map(b => s"WHEN $b THEN k$b")
       .mkString("CASE r.b ", " ", " END")
@@ -545,7 +472,7 @@ object Llm {
       s"bd AS (SELECT vec_id, r.b AS band, $caseB AS bkey FROM kk, range($LshJoinBands) r(b)), " +
       "cd AS (SELECT DISTINCT a.vec_id AS i, c.vec_id AS j FROM bd a JOIN bd c " +
       "ON a.band = c.band AND a.bkey = c.bkey AND a.vec_id < c.vec_id), " +
-      s"p AS (SELECT i, j, round(${duckCos("a.emb", "c.emb")}, 6) AS sim " +
+      s"p AS (SELECT i, j, ${Duck.sim("a.emb", "c.emb")} AS sim " +
       "FROM cd JOIN u a ON a.vec_id = cd.i JOIN u c ON c.vec_id = cd.j) " +
       s"SELECT i, j, sim FROM p WHERE sim >= $LshJoinTau ORDER BY i, j"
   }
@@ -1029,7 +956,7 @@ object Llm {
       "dedup_embed_cosine",
       Some(
         "WITH p AS (SELECT a.vec_id AS i, b.vec_id AS j, " +
-          s"round(${duckCos("a.embedding", "b.embedding")}, 6) AS sim " +
+          s"${Duck.sim("a.embedding", "b.embedding")} AS sim " +
           "FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id) " +
           "SELECT DISTINCT j AS drop_id FROM p WHERE sim >= 0.35 ORDER BY drop_id"),
       (s, d) => {
@@ -1049,21 +976,17 @@ object Llm {
       "sim_cosine_topk",
       Some(
         "WITH sims AS (SELECT q.vec_id AS qid, c.vec_id AS cid, " +
-          s"round(${duckCos("q.embedding", "c.embedding")}, 6) AS sim " +
-          "FROM embeddings q JOIN embeddings c ON q.vec_id < 5 AND c.vec_id != q.vec_id) " +
-          "SELECT qid, cid, sim, CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS BIGINT) AS rn " +
-          "FROM sims QUALIFY rn <= 5 ORDER BY qid, rn"),
+          s"${Duck.sim("q.embedding", "c.embedding")} AS sim " +
+          s"FROM embeddings q JOIN embeddings c ON ${Duck.isQuery("q.vec_id")} AND c.vec_id != q.vec_id) " +
+          Duck.topK("qid, cid, sim", "sims", "sim", 5) + " ORDER BY qid, rn"),
       (s, d) => {
         // spread: the per-pair interpreted cosine runs on the candidate
         // side — parallelize it off the single-row-group local scan
         val e = Tables.spread(s, Tables.t(s, d, "embeddings"))
-        val q = e.where(col("vec_id") < 5).select(col("vec_id").as("qid"), col("embedding").as("qe"))
+        val q = e.where(Vectors.isQuery(col("vec_id"))).select(col("vec_id").as("qid"), col("embedding").as("qe"))
         val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"))
-        val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-        c.join(broadcast(q), col("qid") =!= col("cid"))
-          .withColumn("sim", round(cosCol("qe", "ce"), 6))
-          .select(col("qid"), col("cid"), col("sim"), row_number().over(w).cast("long").as("rn"))
-          .where(col("rn") <= 5)
+        Vectors.topK(c.join(broadcast(q), col("qid") =!= col("cid"))
+            .select(col("qid"), col("cid"), Vectors.sim(col("qe"), col("ce")).as("sim")), "sim", 5)
           .orderBy("qid", "rn")
       }),
 
@@ -1083,9 +1006,9 @@ object Llm {
       "sim_join_threshold",
       Some(
         "SELECT CAST(a.label AS BIGINT) AS label, a.vec_id AS i, b.vec_id AS j, " +
-          s"round(${duckCos("a.embedding", "b.embedding")}, 6) AS sim " +
+          s"${Duck.sim("a.embedding", "b.embedding")} AS sim " +
           "FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id " +
-          s"WHERE round(${duckCos("a.embedding", "b.embedding")}, 6) >= 0.35 " +
+          s"WHERE ${Duck.sim("a.embedding", "b.embedding")} >= 0.35 " +
           "ORDER BY label, i, j"),
       (s, d) => {
         val n = Tables.t(s, d, "embeddings").count()
@@ -1139,44 +1062,36 @@ object Llm {
     QueryDef(
       "sim_mrl_rerank",
       Some(
-        "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb, CAST(embedding[1:16] AS DOUBLE[]) AS emb16 FROM embeddings), " +
-          "q AS (SELECT vec_id AS qid, emb AS qe, emb16 AS qe16 FROM e WHERE vec_id < 5), " +
-          s"coarse AS (SELECT q.qid, c.vec_id AS cid, round(${duckCos("q.qe16", "c.emb16")}, 6) AS sim_coarse, " +
+        "WITH e AS (SELECT vec_id, embedding AS emb, embedding[1:16] AS emb16 FROM embeddings), " +
+          s"q AS (SELECT vec_id AS qid, emb AS qe, emb16 AS qe16 FROM e WHERE ${Duck.isQuery("vec_id")}), " +
+          s"coarse AS (SELECT q.qid, c.vec_id AS cid, ${Duck.sim("q.qe16", "c.emb16")} AS sim_coarse, " +
           "c.emb AS ce, q.qe AS qe FROM q JOIN e c ON c.vec_id != q.qid), " +
-          "top20 AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY sim_coarse DESC, cid) AS rc " +
-          "FROM coarse QUALIFY rc <= 20), " +
-          s"rr AS (SELECT qid, cid, sim_coarse, round(${duckCos("qe", "ce")}, 6) AS sim_full FROM top20) " +
-          "SELECT qid, cid, sim_coarse, sim_full, " +
-          "CAST(row_number() OVER (PARTITION BY qid ORDER BY sim_full DESC, cid) AS BIGINT) AS rn " +
-          "FROM rr QUALIFY rn <= 5 ORDER BY qid, rn"),
+          s"top20 AS (${Duck.topK("*", "coarse", "sim_coarse", 20)}), " +
+          s"rr AS (SELECT qid, cid, sim_coarse, ${Duck.sim("qe", "ce")} AS sim_full FROM top20) " +
+          Duck.topK("qid, cid, sim_coarse, sim_full", "rr", "sim_full", 5) + " ORDER BY qid, rn"),
       (s, d) => {
         // Coarse stage: scans ONLY the staged 16-dim prefix table — the
         // 64-dim column physically never enters this (data-sized) pass.
         val pfx = Tables.spread(s, mrlPrefix(s, d))
-        val q16 = pfx.where(col("vec_id") < 5)
+        val q16 = pfx.where(Vectors.isQuery(col("vec_id")))
           .select(col("vec_id").as("qid"), col("emb16").as("qe16"))
         val c16 = pfx.select(col("vec_id").as("cid"), col("emb16").as("ce16"))
-        val wc = Window.partitionBy(col("qid")).orderBy(col("sim_coarse").desc, col("cid"))
-        val top20 = c16.join(broadcast(q16), col("qid") =!= col("cid"))
-          .withColumn("sim_coarse", round(cosCol("qe16", "ce16"), 6))
-          .withColumn("rc", row_number().over(wc))
-          .where(col("rc") <= 20)
+        val top20 = Vectors.topK(c16.join(broadcast(q16), col("qid") =!= col("cid"))
+            .select(col("qid"), col("cid"), Vectors.sim(col("qe16"), col("ce16")).as("sim_coarse")),
+            "sim_coarse", 20)
           .select(col("qid"), col("cid"), col("sim_coarse"))
         // Fine rerank: the wide column is read only for the ≤ 20·|Q|
         // surviving candidates (+ |Q| query vectors) — both tiny sides
         // broadcast against the base scan, so the rerank's wide-column IO
         // is bounded by the funnel width at any corpus size.
         val e = Tables.t(s, d, "embeddings")
-        val qf = e.where(col("vec_id") < 5)
+        val qf = e.where(Vectors.isQuery(col("vec_id")))
           .select(col("vec_id").as("qid"), col("embedding").as("qe"))
         val cf = e.select(col("vec_id").as("cid"), col("embedding").as("ce"))
-        val wf = Window.partitionBy(col("qid")).orderBy(col("sim_full").desc, col("cid"))
-        cf.join(broadcast(top20), "cid")
-          .join(broadcast(qf), "qid")
-          .withColumn("sim_full", round(cosCol("qe", "ce"), 6))
-          .select(col("qid"), col("cid"), col("sim_coarse"), col("sim_full"),
-            row_number().over(wf).cast("long").as("rn"))
-          .where(col("rn") <= 5)
+        Vectors.topK(cf.join(broadcast(top20), "cid")
+            .join(broadcast(qf), "qid")
+            .select(col("qid"), col("cid"), col("sim_coarse"),
+              Vectors.sim(col("qe"), col("ce")).as("sim_full")), "sim_full", 5)
           .orderBy("qid", "rn")
       }),
 
@@ -1204,7 +1119,7 @@ object Llm {
           "lr AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY lscore DESC, doc_id) AS BIGINT) AS r_lex " +
           "FROM lex WHERE lscore > 0 QUALIFY r_lex <= 50), " +
           "vs AS (SELECT c.vec_id AS doc_id, " +
-          s"round(${duckCos("q.embedding", "c.embedding")}, 6) AS sim " +
+          s"${Duck.sim("q.embedding", "c.embedding")} AS sim " +
           "FROM embeddings c JOIN embeddings q ON q.vec_id = 0 AND c.vec_id <> 0), " +
           "vr AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY sim DESC, doc_id) AS BIGINT) AS r_vec " +
           "FROM vs QUALIFY r_vec <= 50) " +
@@ -1236,7 +1151,7 @@ object Llm {
         val vecTop = e.where(col("vec_id") =!= 0)
           .withColumn("k", when(col("vec_id") >= 0, 0L))
           .join(broadcast(q.withColumn("k", when(size(col("qe")) >= 0, 0L))), "k")
-          .withColumn("sim", round(cosCol("qe", "embedding"), 6))
+          .withColumn("sim", Vectors.sim(col("qe"), col("embedding")))
           .select(col("vec_id").as("doc_id"), col("sim"))
           .orderBy(col("sim").desc, col("doc_id"))
           .limit(50)
@@ -1273,34 +1188,28 @@ object Llm {
       "sim_ann_lsh",
       Some {
         val masks = (0 until 256).filter(m => Integer.bitCount(m) <= 2).mkString(", ")
-        val fold = LshPlanes.zipWithIndex.map { case (pl, p) =>
-          s"(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), [${pl.mkString(",")}]) >= 0 THEN ${1 << p} ELSE 0 END)"
-        }.mkString(" + ")
+        val fold = Duck.signBits(Duck.doubles("embedding"), LshPlanes)
         s"WITH bk AS (SELECT vec_id, CAST($fold AS INT) AS bucket FROM embeddings), " +
           "e AS (SELECT emb.vec_id, emb.embedding, bk.bucket FROM embeddings emb JOIN bk USING (vec_id)), " +
           s"q AS (SELECT e.vec_id AS qid, e.embedding AS qe, CAST(xor(e.bucket, t.m) AS INT) AS bucket " +
-          s"FROM e, unnest([$masks]) AS t(m) WHERE e.vec_id < 5), " +
+          s"FROM e, unnest([$masks]) AS t(m) WHERE ${Duck.isQuery("e.vec_id")}), " +
           "sims AS (SELECT q.qid, c.vec_id AS cid, " +
-          s"round(${duckCos("q.qe", "c.embedding")}, 6) AS sim " +
+          s"${Duck.sim("q.qe", "c.embedding")} AS sim " +
           "FROM q JOIN e c ON q.bucket = c.bucket AND q.qid != c.vec_id) " +
-          "SELECT qid, cid, sim, CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS BIGINT) AS rn " +
-          "FROM sims QUALIFY rn <= 3 ORDER BY qid, rn"
+          Duck.topK("qid, cid, sim", "sims", "sim", 3) + " ORDER BY qid, rn"
       },
       (s, d) => {
         val e = Tables.spread(s, Tables.t(s, d, "embeddings"))
           .join(lshBuckets(s, d), "vec_id")
         val probeMasks = (0 until 256).filter(m => Integer.bitCount(m) <= 2)
-        val q = e.where(col("vec_id") < 5)
+        val q = e.where(Vectors.isQuery(col("vec_id")))
           .select(col("vec_id").as("qid"), col("embedding").as("qe"),
             explode(expr(s"transform(array(${probeMasks.mkString(",")}), " +
               "m -> CAST(bucket ^ m AS INT))")).as("bucket"))
         val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"), col("bucket"))
-        val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-        c.join(broadcast(q), "bucket")
-          .where(col("qid") =!= col("cid"))
-          .withColumn("sim", round(cosCol("qe", "ce"), 6))
-          .select(col("qid"), col("cid"), col("sim"), row_number().over(w).cast("long").as("rn"))
-          .where(col("rn") <= 3)
+        Vectors.topK(c.join(broadcast(q), "bucket")
+            .where(col("qid") =!= col("cid"))
+            .select(col("qid"), col("cid"), Vectors.sim(col("qe"), col("ce")).as("sim")), "sim", 3)
           .orderBy("qid", "rn")
       }),
 
@@ -1365,36 +1274,32 @@ object Llm {
       "sim_topk_int8",
       Some(
         "WITH n AS (SELECT vec_id, list_transform(embedding, " +
-          "x -> CAST(x AS DOUBLE) / sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[])))) AS nv " +
+          s"x -> CAST(x AS DOUBLE) / sqrt(${Duck.dot(Duck.doubles("embedding"), Duck.doubles("embedding"))})) AS nv " +
           "FROM embeddings), " +
           "q8 AS (SELECT vec_id, list_transform(nv, v -> CAST(round(v * 127 / amax) AS BIGINT)) AS q, amax / 127 AS scale " +
           "FROM (SELECT vec_id, nv, list_aggregate(list_transform(nv, v -> abs(v)), 'max') AS amax FROM n)), " +
           "sims AS (SELECT a.vec_id AS qid, b.vec_id AS cid, " +
-          "round(CAST(list_dot_product(a.q, b.q) AS BIGINT) * a.scale * b.scale, 6) AS score " +
-          "FROM q8 a JOIN q8 b ON a.vec_id < 5 AND b.vec_id != a.vec_id) " +
-          "SELECT qid, cid, score, CAST(row_number() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS BIGINT) AS rn " +
-          "FROM sims QUALIFY rn <= 5 ORDER BY qid, rn"),
+          s"round(CAST(${Duck.dot("a.q", "b.q")} AS BIGINT) * a.scale * b.scale, 6) AS score " +
+          s"FROM q8 a JOIN q8 b ON ${Duck.isQuery("a.vec_id")} AND b.vec_id != a.vec_id) " +
+          Duck.topK("qid, cid, score", "sims", "score", 5) + " ORDER BY qid, rn"),
       (s, d) => {
         // spread: the normalize/quantize HOF chain is interpreted per-row
         // work — parallelize it off the single-row-group local scan
+        val emb = col("embedding")
         val q8 = Tables.spread(s, Tables.t(s, d, "embeddings"))
           .select(col("vec_id"),
-            expr("transform(embedding, x -> CAST(x AS DOUBLE) / " +
-              "sqrt(aggregate(zip_with(embedding, embedding, (p, r) -> CAST(p AS DOUBLE) * CAST(r AS DOUBLE)), CAST(0 AS DOUBLE), (acc, v) -> acc + v)))").as("nv"))
+            transform(emb, x => x.cast("double") / sqrt(Vectors.dot(emb, emb))).as("nv"))
           .withColumn("amax", expr("array_max(transform(nv, v -> abs(v)))"))
           .select(col("vec_id"),
             expr("transform(nv, v -> CAST(round(v * 127 / amax) AS BIGINT))").as("q"),
             (col("amax") / 127).as("scale"))
         val q = q8.select(col("vec_id").as("qid"), col("q").as("qq"), col("scale").as("qs"))
-          .where(col("qid") < 5)
+          .where(Vectors.isQuery(col("qid")))
         val c = q8.select(col("vec_id").as("cid"), col("q").as("cq"), col("scale").as("cs"))
-        val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("cid"))
-        c.join(broadcast(q), col("qid") =!= col("cid"))
-          .withColumn("score", round(
-            expr("aggregate(zip_with(qq, cq, (a, b) -> a * b), CAST(0 AS BIGINT), (acc, v) -> acc + v)")
-              * col("qs") * col("cs"), 6))
-          .select(col("qid"), col("cid"), col("score"), row_number().over(w).cast("long").as("rn"))
-          .where(col("rn") <= 5)
+        Vectors.topK(c.join(broadcast(q), col("qid") =!= col("cid"))
+            .select(col("qid"), col("cid"),
+              round(Vectors.dotLong(col("qq"), col("cq")) * col("qs") * col("cs"), 6).as("score")),
+            "score", 5)
           .orderBy("qid", "rn")
       }),
 
@@ -1403,9 +1308,9 @@ object Llm {
       "knn_label_vote",
       Some(
         "WITH sims AS (SELECT q.vec_id AS qid, c.vec_id AS cid, CAST(c.label AS BIGINT) AS label, " +
-          s"round(${duckCos("q.embedding", "c.embedding")}, 6) AS sim " +
-          "FROM embeddings q JOIN embeddings c ON q.vec_id < 5 AND c.vec_id != q.vec_id), " +
-          "top5 AS (SELECT * FROM sims QUALIFY row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) <= 5), " +
+          s"${Duck.sim("q.embedding", "c.embedding")} AS sim " +
+          s"FROM embeddings q JOIN embeddings c ON ${Duck.isQuery("q.vec_id")} AND c.vec_id != q.vec_id), " +
+          s"top5 AS (${Duck.topK("*", "sims", "sim", 5)}), " +
           "votes AS (SELECT qid, label, CAST(count(*) AS BIGINT) AS n FROM top5 GROUP BY qid, label) " +
           "SELECT qid, label AS pred_label, n FROM votes " +
           "QUALIFY row_number() OVER (PARTITION BY qid ORDER BY n DESC, label) = 1 ORDER BY qid"),
@@ -1413,14 +1318,11 @@ object Llm {
         // spread: the per-pair interpreted cosine runs on the candidate
         // side — parallelize it off the single-row-group local scan
         val e = Tables.spread(s, Tables.t(s, d, "embeddings"))
-        val q = e.where(col("vec_id") < 5).select(col("vec_id").as("qid"), col("embedding").as("qe"))
+        val q = e.where(Vectors.isQuery(col("vec_id"))).select(col("vec_id").as("qid"), col("embedding").as("qe"))
         val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"), col("label").cast("long").as("label"))
-        val wTop = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
         val wVote = Window.partitionBy(col("qid")).orderBy(col("n").desc, col("label"))
-        c.join(broadcast(q), col("qid") =!= col("cid"))
-          .withColumn("sim", round(cosCol("qe", "ce"), 6))
-          .withColumn("rn", row_number().over(wTop))
-          .where(col("rn") <= 5)
+        Vectors.topK(c.join(broadcast(q), col("qid") =!= col("cid"))
+            .select(col("qid"), col("cid"), col("label"), Vectors.sim(col("qe"), col("ce")).as("sim")), "sim", 5)
           .groupBy("qid", "label").agg(count(lit(1)).as("n"))
           .withColumn("vr", row_number().over(wVote))
           .where(col("vr") === 1)

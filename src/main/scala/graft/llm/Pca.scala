@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.{QueryDef, Tables}
+import graft.llm.Vectors.Duck
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -16,8 +17,8 @@ import org.apache.spark.sql.functions._
   *   2. covariance eigendecomposition on the driver: dim×dim doubles of
   *      bounded metadata (the IVF-centroid posture), deterministic power
   *      iteration with reorthogonalization, sign-canonicalized.
-  *   3. projection as a narrow codegen pass: the k×dim projection matrix
-  *      inlines as literal arrays into zip_with/aggregate HOFs — no UDF, no
+  *   3. projection as one narrow pass: the k×dim projection matrix
+  *      inlines as literal arrays into [[Vectors.dot]] — no UDF, no
   *      broadcast variable, no shuffle.
   *
   * ORACLED via the staged eigenvector matrix (see [[Evecs]]) —
@@ -100,7 +101,10 @@ object Pca {
         }
       width = groups
     }
-    val (dim, n, sxy, sx) = cur.map(_._2).collect().head
+    val parts = cur.map(_._2).collect()
+    require(parts.nonEmpty, "embed_pca_project needs a non-empty embeddings table " +
+      s"for its eigen-solve: $d/embeddings.parquet has no rows")
+    val (dim, n, sxy, sx) = parts.head
     // centering: cov = sxy/n - mean·meanᵀ (upper triangle mirrored)
     val cov = Array.tabulate(dim, dim) { (i, j) =>
       val s2 = if (i <= j) sxy(i * dim + j) else sxy(j * dim + i)
@@ -147,9 +151,9 @@ object Pca {
     * discipline): the covariance fold + driver eigensolve — the only
     * non-SQL steps — run once per dataset fingerprint and the k×dim matrix
     * persists as parquet in its dataset's staging dir; BOTH engines
-    * then project from the SAME staged doubles (Spark inlines them as HOF
-    * literals, DuckDB as uncorrelated scalar subqueries over
-    * list_dot_product — identical sequential accumulation, see cosCol), so
+    * then project from the SAME staged doubles (Spark inlines them as
+    * literals, DuckDB reads them as uncorrelated scalar subqueries, and
+    * both take [[Vectors]]' dot product with its one fold order), so
     * even the float-heavy PCA key gets an exact cross-engine value check.
     */
   private val Evecs = "graft_pca_evecs"
@@ -169,21 +173,16 @@ object Pca {
       "embed_pca_project",
       Some {
         val cols = (0 until K).map(i =>
-          s"round(list_dot_product(CAST(e.embedding AS DOUBLE[]), " +
-            s"(SELECT v FROM pc WHERE kidx = $i)), 6) AS p$i").mkString(", ")
+          s"round(${Duck.dot(Duck.doubles("e.embedding"), s"(SELECT v FROM pc WHERE kidx = $i)")}, 6) AS p$i")
+          .mkString(", ")
         s"WITH pc AS (SELECT kidx, v FROM read_parquet('${Tables.stagedPath(Evecs, "data/*.parquet")}')) " +
           s"SELECT e.vec_id, $cols FROM embeddings e ORDER BY vec_id"
       },
       (s, d) => {
         val evecs = stagedEvecs(s, d)
-        // projection matrix inlined as literals → pure codegen HOF pass
+        // projection matrix inlined as literals → one narrow HOF pass
         val projCols = evecs.zipWithIndex.map { case (row, kIdx) =>
-          val litRow = array(row.map(lit).toIndexedSeq: _*)
-          round(
-            aggregate(
-              zip_with(col("embedding").cast("array<double>"), litRow, (x, y) => x * y),
-              lit(0.0), (acc, x) => acc + x),
-            6).as(s"p$kIdx")
+          round(Vectors.dot(col("embedding"), typedLit(row)), 6).as(s"p$kIdx")
         }
         Tables.t(s, d, "embeddings")
           .select(col("vec_id") +: projCols.toIndexedSeq: _*)

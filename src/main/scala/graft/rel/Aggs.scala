@@ -4,7 +4,6 @@ import graft.{Memo, Q, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** SURVEY §2.E — aggregation shapes.
   *

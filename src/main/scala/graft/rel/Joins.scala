@@ -1,7 +1,6 @@
 package graft.rel
 
 import graft.{Q, QueryDef, Tables}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** SURVEY §2.D — every join shape.

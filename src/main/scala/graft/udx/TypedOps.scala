@@ -3,7 +3,6 @@ package graft.udx
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions._
 
 /** Typed Dataset[T] boundary (SURVEY §1.5): case-class rows + a typed
   * Aggregator through groupByKey — compile-time field checks where the

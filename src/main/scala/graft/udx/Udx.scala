@@ -1,6 +1,6 @@
 package graft.udx
 
-import graft.{Q, QueryDef, Tables}
+import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator

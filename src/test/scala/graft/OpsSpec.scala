@@ -566,7 +566,7 @@ class OpsSpec extends AnyFunSuite {
     // declared-exact oracle fixture, semdedup the production path — run at
     // the driver's correctness scale so the bound is load-bearing, not a
     // toy-corpus artifact
-    val sf01 = "/root/testdata/sf0.01"
+    val sf01 = SparkTestBase.sf01
     val clustered = SparkEntry.queries("dedup_semdedup_cluster")(spark, sf01)
       .collect().map(_.getLong(0)).toSet
     val exact = SparkEntry.queries("dedup_embed_cosine")(spark, sf01)
@@ -1763,6 +1763,57 @@ class OpsSpec extends AnyFunSuite {
     } finally {
       Seq("lineitem", "orders").foreach(t => spark.sql(s"DROP TABLE IF EXISTS graft_bkt_${t}_$suffix"))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(Tables.stagingDir("graft_bkt_marker", dir)))
+    }
+  }
+
+  test("Vectors: the Spark cosine column and the JVM kernel give the same doubles on sf0.01") {
+    // the rule the embedding family and its oracles rest on: one fold
+    // order, so both spellings of cosine are bit-identical on every
+    // (query, candidate) pair
+    import spark.implicits._
+    val e = Tables.t(spark, SparkTestBase.sf01, "embeddings")
+    val pairs = e.where(llm.Vectors.isQuery(col("vec_id")))
+      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+      .crossJoin(e.select(col("vec_id").as("cid"), col("embedding").as("ce")))
+      .where(col("qid") =!= col("cid"))
+      .select(col("qe"), col("ce"), llm.Vectors.cos(col("qe"), col("ce")).as("cos"))
+      .as[(Array[Float], Array[Float], Double)].collect()
+    assert(pairs.length == llm.Vectors.NQueries * (e.count() - 1))
+    val normed = (v: Array[Float]) => llm.Vectors.normed(v.map(_.toDouble))
+    val differ = pairs.count { case (q, c, sparkCos) =>
+      val jvmCos = llm.Vectors.rawCosine(normed(q), normed(c))
+      java.lang.Double.doubleToLongBits(jvmCos) != java.lang.Double.doubleToLongBits(sparkCos)
+    }
+    assert(differ == 0, s"$differ of ${pairs.length} pairs differ between the Spark and JVM cosine")
+  }
+
+  test("embedding-family keys on an empty embeddings table: empty result or a named error") {
+    // every key that reads embeddings alone (rank_rrf_fusion also ranks
+    // documents, so it has a lexical answer on empty embeddings)
+    val keys = Seq("dedup_embed_cosine", "sim_cosine_topk", "sim_join_threshold",
+      "sim_join_lsh_threshold", "sim_mrl_rerank", "sim_ann_lsh", "embed_label_centroid",
+      "embed_quantize_int8", "sim_topk_int8", "knn_label_vote", "sim_ann_ivf",
+      "dedup_semdedup_cluster", "embed_pca_project")
+    val dir = SparkTestBase.tempDir("graft_empty_embeddings").toString
+    spark.read.parquet(s"${SparkTestBase.sf01}/embeddings.parquet").limit(0)
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    // the staging dirs of this dataset share the suffix of stagingDir("", dir)
+    val staging = new java.io.File(Tables.stagingDir("", dir))
+    try {
+      val bad = keys.flatMap { k =>
+        try {
+          val n = SparkEntry.queries(k)(spark, dir).collect().length
+          if (n == 0) Nil else Seq(s"$k: $n rows")
+        } catch {
+          case e: IllegalArgumentException
+            if e.getMessage.contains(k) && e.getMessage.contains("embeddings") => Nil
+          case e: Throwable => Seq(s"$k: $e")
+        }
+      }
+      assert(bad.isEmpty, s"\n${bad.mkString("\n")}")
+    } finally {
+      staging.getParentFile.listFiles().filter(_.getName.endsWith(staging.getName))
+        .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
     }
   }
 }

@@ -114,10 +114,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // bottom-k KMV sketch and a space-saving frequency map as typed
     // Aggregators (mergeable partial state is the point of the operator)
     "agg_quantile_merge" -> Set("ScalaAggregator"),
-    "agg_freq_topk" -> Set("ScalaAggregator"),
-    // broadcast-object kernel with no expression equivalent: IVF centroid
-    // probe (driver-held k-means state).
-    "sim_ann_ivf" -> Set("ScalaUDF"))
+    "agg_freq_topk" -> Set("ScalaAggregator"))
     // Not listed, because their plans carry no such node: the bloom probes
     // of dedup_incremental_bloom and graph_triangle_count run through
     // Catalyst's codegen'd BloomFilterMightContain (asserted in PlanSpec);
@@ -125,7 +122,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // write, and dedup_minhash_near's Jaccard verify inside the eagerly
     // checkpointed minhash state build, so both audited query plans are
     // pure builtins (OpsSpec's brute-force equivalence test pins the
-    // verify kernel).
+    // verify kernel); sim_ann_ivf's centroid probe is builtin expressions
+    // over the inlined centroid matrix.
 
   /** The session state a key must leave as it found it: its temp-view
     * names and its conf.

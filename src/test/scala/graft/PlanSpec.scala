@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-import org.apache.spark.sql.execution.window.WindowExecBase
+import org.apache.spark.sql.execution.window.{Final => FinalLimit, Partial => PartialLimit,
+  WindowExecBase, WindowGroupLimitExec, WindowGroupLimitMode}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,6 +18,13 @@ class PlanSpec extends AnyFunSuite {
   private val sf = SparkTestBase.sf
   private def plan(key: String, d: String = sf): String =
     SparkEntry.queries(key)(spark, d).queryExecution.executedPlan.toString
+
+  /** Every node of an executed plan, descending into AQE stages. */
+  private def nodes(n: SparkPlan): Seq[SparkPlan] = n +: (n match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case q: QueryStageExec => Seq(q.plan)
+    case other => other.children
+  }).flatMap(nodes)
 
   test("B2: nested schema pruning reaches the golden-file scan") {
     val p = plan("scan_projection_pushdown")
@@ -433,11 +442,6 @@ class PlanSpec extends AnyFunSuite {
     // the v-ordered cumulative window runs only over the crossing slice:
     // the broadcast crossing join lies beneath it, so it never spans the
     // whole (rf, v) vocabulary
-    def nodes(n: SparkPlan): Seq[SparkPlan] = n +: (n match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec => Seq(q.plan)
-      case other => other.children
-    }).flatMap(nodes)
     val cumWindows = nodes(root).collect {
       case w: WindowExecBase if w.orderSpec.exists(_.child.references.exists(_.name == "v")) => w
     }
@@ -771,7 +775,7 @@ class PlanSpec extends AnyFunSuite {
     val lp = df.queryExecution.optimizedPlan
     val coarse = lp.collect {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window
-        if w.windowExpressions.exists(_.name == "rc") => w
+        if w.orderSpec.exists(_.child.references.exists(_.name == "sim_coarse")) => w
     }
     assert(coarse.nonEmpty, "coarse top-20 window not found in optimized plan")
     // a leaf relation's schema identifies it: the staged prefix table IS
@@ -793,5 +797,29 @@ class PlanSpec extends AnyFunSuite {
     assert(pfxBytes > 0 && baseBytes > 0)
     assert(pfxBytes * 2 < baseBytes,
       s"staged prefix not materially narrower: $pfxBytes vs $baseBytes bytes")
+  }
+
+  test("per-query top-k keys: each top-k step keeps a Partial WindowGroupLimit below its exchange") {
+    // (key, the score its step ranks by): the Partial limit keeps k rows
+    // per query in every partition before the shuffle, and the Final one
+    // above the exchange merges them (llm.Vectors.topK)
+    val steps = Seq(
+      "sim_cosine_topk" -> "sim", "sim_ann_lsh" -> "sim", "sim_topk_int8" -> "score",
+      "knn_label_vote" -> "sim", "sim_mrl_rerank" -> "sim_coarse",
+      "sim_mrl_rerank" -> "sim_full", "sim_ann_ivf" -> "sim")
+    def limits(p: SparkPlan, mode: WindowGroupLimitMode, score: String): Seq[SparkPlan] =
+      nodes(p).collect {
+        case w: WindowGroupLimitExec if w.mode == mode &&
+          w.orderSpec.headOption.exists(_.child.references.exists(_.name == score)) => w
+      }
+    val plans = steps.map(_._1).distinct
+      .map(k => k -> SparkEntry.queries(k)(spark, sf).queryExecution.executedPlan).toMap
+    val missing = steps.filterNot { case (key, score) =>
+      limits(plans(key), FinalLimit, score).exists(f => nodes(f).exists {
+        case e: ShuffleExchangeExec => limits(e, PartialLimit, score).nonEmpty
+        case _ => false
+      })
+    }
+    assert(missing.isEmpty, s"top-k steps without a Partial limit below their exchange: $missing")
   }
 }

@@ -12,6 +12,8 @@ import graft.fhir.FhirAnnotations
 object SparkTestBase {
   lazy val spark: SparkSession = Session()
   val sf: String = "/root/testdata/sf0.001"
+  /** The sf0.01 dataset next to [[sf]]: the oracle's correctness scale. */
+  val sf01: String = Paths.get(sf).resolveSibling("sf0.01").toString
 
   /** The spec's own golden Parquet files (`Tables.goldenDir`) are present. */
   lazy val goldenPresent: Boolean = Files.isDirectory(Paths.get(Tables.goldenDir))
